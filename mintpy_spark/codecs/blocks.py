@@ -13,10 +13,15 @@ The storage analog of the reference's chunked HDF5 layout (stack.py:352-355
   text, which contributes no bytes), so text — including NULLs —
   round-trips **byte-identically** (the input_hint invariant)
 
-Packing/unpacking run inside applyInPandas / mapInPandas — Arrow batches,
-numpy inside, no per-row Python. At 100 TB the block table is the cold
-tier: ~100-1000x fewer rows than raw obs, partitioned by hash(key), and
-range queries prune on (key, window_start) before any decode happens.
+Packing runs on the sorted-group seam (``operators.seqstate.
+map_sorted_groups``): one shuffle on key, rows sorted by (key, window,
+ts), and each Arrow chunk packed as a whole — its (key, window) runs are
+found with numpy break indices and encoded slice by slice, so the cost per
+block is the encoders, not a pandas frame. Unpacking is a mapInPandas over
+the block rows. Numpy inside; the text channel alone loops per row. At
+100 TB the block table is the cold tier: ~100-1000x fewer rows than raw
+obs, partitioned by hash(key), and range queries prune on
+(key, window_start) before any decode happens.
 """
 
 from __future__ import annotations
@@ -37,6 +42,7 @@ from mintpy_spark.codecs.gorilla import (
     encode_timestamps,
 )
 from mintpy_spark.functions.timefn import bucket_start
+from mintpy_spark.operators.seqstate import map_sorted_groups
 
 BLOCK_SCHEMA = T.StructType(
     [
@@ -60,18 +66,27 @@ def pack_blocks(
     ts: str = "warc_ts",
     value_dtype: str = "float32",
 ) -> DataFrame:
-    """Series -> one compressed row per (key, window)."""
+    """Series -> one compressed row per (key, window).
+
+    A NULL ``key`` raises ``ValueError`` from ``map_sorted_groups``."""
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_ts_us", kind="mergesort")
+        # pdf holds whole key groups in (key, _win, _ts_us) order, so each
+        # block is the contiguous run of rows between two break indices
+        keys = pdf[key].to_numpy()
+        wins = pdf["_win"].to_numpy()
+        brk = np.flatnonzero((keys[1:] != keys[:-1]) | (wins[1:] != wins[:-1])) + 1
+        starts = np.concatenate(([0], brk))
+        ends = np.concatenate((brk, [len(pdf)]))
         ts_us = pdf["_ts_us"].to_numpy(dtype=np.int64)
         vals = pdf[value_col].to_numpy(dtype=value_dtype)
-        row = {
-            "key": [pdf[key].iloc[0]],
-            "window_start": [pdf["_win"].iloc[0]],
-            "n": [len(pdf)],
-            "ts_blob": [encode_timestamps(ts_us)],
-            "val_blob": [encode_floats(vals)],
+        runs = list(zip(starts.tolist(), ends.tolist()))
+        out = {
+            "key": keys[starts],
+            "window_start": wins[starts],
+            "n": (ends - starts).astype(np.int32),
+            "ts_blob": [encode_timestamps(ts_us[a:b]) for a, b in runs],
+            "val_blob": [encode_floats(vals[a:b]) for a, b in runs],
         }
         if text_col is not None:
             # bytes, never str dtype: byte-identity (SURVEY.md §7.3 #4).
@@ -86,14 +101,17 @@ def pack_blocks(
             lens = np.array(
                 [-1 if t is None else len(t) for t in texts], dtype=np.int64
             )
-            row["txt_blob"] = [
-                zlib.compress(b"".join(t for t in texts if t is not None), 6)
+            out["txt_blob"] = [
+                zlib.compress(
+                    b"".join(t for t in texts[a:b] if t is not None), 6
+                )
+                for a, b in runs
             ]
-            row["txt_lens"] = [lens.tobytes()]
+            out["txt_lens"] = [lens[a:b].tobytes() for a, b in runs]
         else:
-            row["txt_blob"] = [None]
-            row["txt_lens"] = [None]
-        return pd.DataFrame(row)
+            out["txt_blob"] = [None] * len(runs)
+            out["txt_lens"] = [None] * len(runs)
+        return pd.DataFrame(out)
 
     prepped = obs.select(
         F.col(key).alias(key),
@@ -104,7 +122,7 @@ def pack_blocks(
         bucket_start(F.col(ts), window).alias("_win"),
         *( [F.col(value_col)] if text_col is None else [F.col(value_col), F.col(text_col)] ),
     )
-    return prepped.groupBy(key, "_win").applyInPandas(pack, BLOCK_SCHEMA)
+    return map_sorted_groups(prepped, key, ("_win", "_ts_us"), pack, BLOCK_SCHEMA)
 
 
 def unpack_blocks(blocks: DataFrame, with_text: bool = False) -> DataFrame:

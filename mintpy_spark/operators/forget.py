@@ -94,16 +94,6 @@ def forget_keys(
             )
         removed[table] = before - after
         if ckpt is not None:
-            counts = dict.fromkeys(present, 0)
-            if written:
-                for r in (
-                    store.read(spark, table)
-                    .where(F.col("part_id").isin(written))
-                    .groupBy("part_id")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                ):
-                    counts[r.part_id] = r.n
             ckpt.append(
                 [
                     {
@@ -111,7 +101,7 @@ def forget_keys(
                         "stage": table,
                         "part_id": int(p),
                         "input_fp": "forget",
-                        "row_count": int(counts.get(p, 0)),
+                        "row_count": int(written.get(p, 0)),
                         "wall_ms": 0,
                         "status": "forgotten",
                     }

@@ -14,7 +14,10 @@ Execution contract per stage:
 * run_stage() consults the checkpoint table: partitions already complete
   for this (stage, input_fp) are **not recomputed** — the input is filtered
   to the missing buckets only, written partition-atomically, and each
-  written partition's row count is committed to the checkpoint,
+  written partition's row count is committed to the checkpoint. The
+  counts are what ``TableStore.write_partitions`` returns, summed from the
+  Parquet footers of the files it just staged: counting a stage costs no
+  second read of its output,
 * a run killed mid-stage therefore resumes exactly where it stopped
   (partition rename is atomic; un-renamed partitions are recomputed),
   mirroring the reference's partial-write detection
@@ -23,6 +26,17 @@ Execution contract per stage:
 input_fp is a config/upstream fingerprint: changing it invalidates every
 partition, like the reference's config-attr comparison (run_or_skip,
 utils/utils1.py:691-746).
+
+NULL url policy: a NULL ``url`` in ``pages`` is an input error, and the run
+raises rather than drop or invent a series. obs and the three tiers carry
+the NULL row (a NULL group is legal in a rollup); the blocks stage is the
+first to refuse it, because a block is addressed by its key: the packer's
+sorted-group seam raises ``ValueError("map_sorted_groups: NULL key in
+'url' ...")`` (``operators/seqstate.py``), and no partition of that stage
+is published. The stages committed before it stay committed under the same
+``config_fp``, so a rerun on cleaned input must also change ``config_fp``
+(``jobs/rollup_job.py`` folds the input's snapshot fingerprint into it,
+which cleaning the input changes).
 """
 
 from __future__ import annotations
@@ -60,14 +74,6 @@ def run_stage(
             df = df.where(F.col("part_id").isin(missing))
         written = store.write_partitions(df, stage)
         wall = int((time.time() - t0) * 1000)
-        counts = {
-            r["part_id"]: r["cnt"]
-            for r in store.read(spark, stage)
-            .where(F.col("part_id").isin(written))
-            .groupBy("part_id")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        }
         ckpt.append(
             [
                 {
@@ -75,11 +81,11 @@ def run_stage(
                     "stage": stage,
                     "part_id": int(p),
                     "input_fp": input_fp,
-                    "row_count": int(counts.get(p, 0)),
+                    "row_count": int(n),
                     "wall_ms": wall,
                     "status": "complete",
                 }
-                for p in written
+                for p, n in written.items()
             ]
         )
     return store.read(spark, stage)

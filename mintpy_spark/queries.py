@@ -408,59 +408,9 @@ def _ensure_ext() -> None:
 # after each round's CORRECTNESS file lands (tests/test_registry.py fails
 # if it goes stale).
 # --- DRIVER_PRIORITY generated by tools/rebuild_priority.py ---
-# 147 entries: 0 red-in-latest-driver-check first, then 147 never
-# driver-checked (registry minus 163 keys across CORRECTNESS_r*.json).
+# 97 entries: 0 red-in-latest-driver-check first, then 97 never
+# driver-checked (registry minus 213 keys across CORRECTNESS_r*.json).
 DRIVER_PRIORITY: tuple[str, ...] = (
-    "downsample_ltob_1d",
-    "drift_shingle_jaccard",
-    "drift_tvd_weekly",
-    "embedding_centroid_shift",
-    "embedding_dim_variance_topk",
-    "embedding_jl_distortion",
-    "embedding_label_silhouette",
-    "embedding_norm_census",
-    "embedding_top_eigen",
-    "engagement_wau_daily",
-    "event_pattern_census",
-    "event_transition_top",
-    "fk_orphan_audit",
-    "forecast_holt_mase",
-    "forecast_snaive_mase",
-    "funnel_3step",
-    "gini_user_concentration",
-    "graph_pagerank_bipartite",
-    "graph_triangle_count",
-    "growth_accounting_daily",
-    "hll_merge_30d_distinct",
-    "holt_winters_realtime_check",
-    "holt_winters_weekly",
-    "hurst_rs_daily",
-    "index_bm25_topk",
-    "index_postings_stats",
-    "index_search_topk",
-    "interval_join_session_errors",
-    "ivm_segment_revenue_delta",
-    "kalman_em_step",
-    "kalman_level_adaptive",
-    "kalman_level_filter",
-    "kalman_qr_moments",
-    "kalman_realtime_check",
-    "kmv_anotb_audience",
-    "kmv_audience_intersection",
-    "knn_label_accuracy",
-    "ks_drift_weekly",
-    "langid_confusion_matrix",
-    "langid_top_confusions",
-    "ljung_box_daily",
-    "ltv_decay_user",
-    "mann_kendall_daily",
-    "mannwhitney_wkday_wkend",
-    "olap_custdist",
-    "olap_disjunctive_pushdown",
-    "olap_excess_supply_suppliers",
-    "olap_idle_rich_customers",
-    "olap_important_parts",
-    "olap_large_volume_orders",
     "olap_last_shipper_blame",
     "olap_local_supplier_revenue",
     "olap_market_share",

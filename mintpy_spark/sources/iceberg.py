@@ -107,20 +107,26 @@ class IcebergTableStore:
 
     def write_partitions(
         self, df: DataFrame, table: str, col: str = "part_id"
-    ) -> list[int]:
+    ) -> dict[int, int]:
         """Dynamic partition overwrite: partitions present in ``df`` are
         replaced atomically in ONE snapshot commit; others untouched —
         exactly tables.py's per-directory rename semantics, minus the
-        window where some renames have landed and others haven't."""
+        window where some renames have landed and others haven't.
+        Returns {partition id: rows written}, read from the record counts
+        of the data files that commit added (the manifest analog of
+        tables.py's Parquet footers), so ``df`` is not recomputed."""
         q = self.qualified(table)
         if not self.exists(table):
             df.writeTo(q).partitionedBy(F.col(col)).create()
         else:
             df.writeTo(q).overwritePartitions()
-        return sorted(
-            int(r["p"])
-            for r in df.select(F.col(col).alias("p")).distinct().collect()
-        )
+        rows = self.spark.sql(
+            f"SELECT data_file.partition.{col} AS p, "
+            "sum(data_file.record_count) AS n "
+            f"FROM {q}.entries WHERE status = 1 "
+            f"AND snapshot_id = {self.latest(table)} GROUP BY 1"
+        ).collect()
+        return {int(r["p"]): int(r["n"]) for r in sorted(rows, key=lambda r: r["p"])}
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.table(self.qualified(table))

@@ -18,6 +18,7 @@ import os
 import shutil
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,24 +47,35 @@ class TableStore:
 
     def write_partitions(
         self, df: DataFrame, table: str, col: str = "part_id"
-    ) -> list[int]:
+    ) -> dict[int, int]:
         """Write df (must contain ``col``) as one directory per partition,
-        atomically per partition. Returns the partition ids written."""
+        atomically per partition. Returns {partition id: rows written},
+        summed from the Parquet footers of the staged files, so counting
+        what was written costs no Spark job."""
         tmp = os.path.join(self.root, f"_tmp_{table.replace('/', '_')}_{uuid.uuid4().hex[:8]}")
-        df.write.mode("overwrite").partitionBy(col).parquet(tmp)
-        dest = self.path(table)
-        os.makedirs(dest, exist_ok=True)
-        written = []
-        for d in sorted(os.listdir(tmp)):
-            if not d.startswith(f"{col}="):
-                continue
-            target = os.path.join(dest, d)
-            if os.path.isdir(target):
-                shutil.rmtree(target)  # partition overwrite
-            os.rename(os.path.join(tmp, d), target)
-            written.append(int(d.split("=", 1)[1]))
-        shutil.rmtree(tmp, ignore_errors=True)
-        return written
+        try:
+            df.write.mode("overwrite").partitionBy(col).parquet(tmp)
+            dest = self.path(table)
+            os.makedirs(dest, exist_ok=True)
+            written = {}
+            for d in sorted(os.listdir(tmp)):
+                if not d.startswith(f"{col}="):
+                    continue
+                staged = os.path.join(tmp, d)
+                rows = sum(
+                    pq.ParquetFile(os.path.join(staged, f)).metadata.num_rows
+                    for f in os.listdir(staged)
+                    if f.endswith(".parquet") and not f.startswith(("_", "."))
+                )
+                target = os.path.join(dest, d)
+                if os.path.isdir(target):
+                    shutil.rmtree(target)  # partition overwrite
+                os.rename(staged, target)
+                written[int(d.split("=", 1)[1])] = rows
+        finally:
+            # a failed write leaves no staging directory behind
+            shutil.rmtree(tmp, ignore_errors=True)
+        return dict(sorted(written.items()))
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.option("basePath", self.path(table)).parquet(

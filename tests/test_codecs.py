@@ -178,3 +178,84 @@ def test_block_timestamps_roundtrip_exact_microseconds(spark):
     blocks = pack_blocks(spark.createDataFrame(pdf), "v", value_dtype="float64")
     back = unpack_blocks(blocks).orderBy("warc_ts").collect()
     assert [r.warc_ts for r in back] == sorted(ts)
+
+
+@pytest.mark.parametrize("with_text", [False, True])
+def test_pack_blocks_across_arrow_batches(spark, with_text):
+    """With 7-row Arrow batches every url's windows span several batches,
+    so the sorted-group seam's carry buffer must reassemble them: each
+    block equals the encoders applied to its (key, window)'s
+    timestamp-sorted slice, and unpacking gives the input back."""
+    import zlib
+
+    from pyspark.sql import functions as F
+
+    from mintpy_spark.codecs.blocks import pack_blocks, unpack_blocks
+    from mintpy_spark.functions.timefn import bucket_start
+
+    n = 240
+    # 5 urls; 97 is coprime to n, so the timestamps are a permutation of
+    # a 15 h grid over ~150 days (about five 30d windows), plus id
+    # microseconds so every timestamp is distinct
+    obs = (
+        spark.range(n)
+        .select(
+            F.concat(F.lit("https://s"), F.col("id") % 5, F.lit(".example/")).alias("url"),
+            F.timestamp_micros(
+                F.lit(1_672_531_200_000_000)
+                + (F.col("id") * 97 % n) * F.lit(54_000_000_000)
+                + F.col("id")
+            ).alias("warc_ts"),
+            ((F.col("id") % 50) * 0.25).alias("v"),
+            F.when(
+                F.col("id") % 6 != 0, F.encode(F.concat(F.lit("doc-"), F.col("id")), "UTF-8")
+            ).alias("txt"),
+        )
+        .repartition(3)
+    )
+    text_col = "txt" if with_text else None
+    rows = obs.select(
+        "url", F.unix_micros("warc_ts").alias("us"),
+        bucket_start(F.col("warc_ts"), "30d").alias("win"), "v", "txt",
+    ).toPandas()
+
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        blocks = pack_blocks(obs, "v", text_col=text_col).cache()
+        got = {(r.key, r.window_start): r for r in blocks.collect()}
+        back = unpack_blocks(blocks, with_text=with_text).select(
+            "key", F.unix_micros("warc_ts").alias("us"), "value",
+            *(["text"] if with_text else []),
+        ).collect()
+        blocks.unpersist()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+
+    groups = rows.sort_values("us").groupby(["url", "win"], sort=False)
+    assert len(got) == groups.ngroups
+    assert max(r.n for r in got.values()) > 7
+    for (url, win), g in groups:
+        b = got[(url, win.to_pydatetime())]
+        assert b.n == len(g)
+        assert bytes(b.ts_blob) == encode_timestamps(g["us"].to_numpy(np.int64))
+        assert bytes(b.val_blob) == encode_floats(g["v"].to_numpy(np.float32))
+        if with_text:
+            texts = g["txt"].tolist()
+            assert bytes(b.txt_blob) == zlib.compress(
+                b"".join(bytes(t) for t in texts if t is not None), 6
+            )
+            lens = [-1 if t is None else len(t) for t in texts]
+            assert bytes(b.txt_lens) == np.array(lens, dtype=np.int64).tobytes()
+        else:
+            assert b.txt_blob is None and b.txt_lens is None
+
+    want = sorted(
+        (r.url, r.us, r.v) + ((None if r.txt is None else bytes(r.txt),) if with_text else ())
+        for r in rows.itertuples()
+    )
+    have = sorted(
+        (r.key, r.us, r.value) + ((None if r.text is None else bytes(r.text),) if with_text else ())
+        for r in back
+    )
+    assert have == want

@@ -85,6 +85,19 @@ def test_every_curation_stage_fires(spark, root):
     assert all(0 <= r.part_id < 4 for r in rows)
 
 
+def test_lineage_counts_match_stored_rows(spark, root):
+    """The shards stage's committed per-partition row counts (from the
+    written files' Parquet footers) equal a count of the stored table."""
+    from mintpy_spark.plans.checkpoint import CheckpointTable
+
+    out = _run(spark, root)
+    stored = {
+        r["part_id"]: r["count"]
+        for r in out["shards"].groupBy("part_id").count().collect()
+    }
+    assert CheckpointTable(f"{root}/_checkpoint").stage_metrics("shards") == stored
+
+
 def _fingerprint(df):
     cols = sorted(df.columns)
     return sorted(tuple(str(x) for x in row) for row in df.select(cols).collect())

@@ -54,6 +54,16 @@ def test_forget_erases_everywhere_and_only_there(spark, built):
         if r["status"] == "forgotten"
     }
     assert {("tier_1d", p) for p in parts} <= forgotten
+    # ... carrying the partition's row count after erasure
+    after = {
+        r["part_id"]: r["count"]
+        for r in store.read(spark, "obs").groupBy("part_id").count().collect()
+    }
+    assert all(
+        r["row_count"] == after.get(r["part_id"], 0)
+        for r in log
+        if r["status"] == "forgotten" and r["stage"] == "obs"
+    )
 
 
 def F_col(name):

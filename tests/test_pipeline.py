@@ -3,12 +3,17 @@
 
 from __future__ import annotations
 
+import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from mintpy_spark.plans.checkpoint import CheckpointTable
 from mintpy_spark.plans.pipeline import run_pipeline
+from mintpy_spark.sources.tables import TableStore
+
+STAGES = ("obs", "tier_1h", "tier_1d", "tier_30d", "blocks", "velocity")
 
 
 def fingerprint(df, cols=None):
@@ -17,6 +22,19 @@ def fingerprint(df, cols=None):
         F.expr(f"bit_xor(xxhash64({', '.join(cols)}))").alias("h"),
         F.count("*").alias("n"),
     ).collect()[0]
+
+
+def assert_lineage_counts(spark, root, stages=STAGES):
+    """The committed per-partition row counts (taken from the written
+    files' Parquet footers) equal a count of the stored table."""
+    ckpt = CheckpointTable(f"{root}/_checkpoint")
+    store = TableStore(root)
+    for stage in stages:
+        stored = {
+            r["part_id"]: r["count"]
+            for r in store.read(spark, stage).groupBy("part_id").count().collect()
+        }
+        assert ckpt.stage_metrics(stage) == stored, stage
 
 
 def test_pipeline_end_to_end(spark, pages, tmp_path):
@@ -29,6 +47,7 @@ def test_pipeline_end_to_end(spark, pages, tmp_path):
     metrics = ckpt.stage_metrics("tier_1h")
     assert sum(metrics.values()) == out["tier_1h"].count()
     assert len(metrics) == 8
+    assert_lineage_counts(spark, root)
 
 
 def test_resume_skips_completed(spark, pages, tmp_path):
@@ -49,8 +68,6 @@ def test_resume_after_partial_failure(spark, pages, tmp_path):
     (as if their rename never happened) and their checkpoint rows; the rerun
     rebuilds exactly the missing partitions and converges to identical
     output."""
-    import os
-
     root = str(tmp_path / "pipe3")
     out1 = run_pipeline(spark, pages, root, buckets=4)
     full_fp = fingerprint(out1["tier_1h"], ["url", "bucket_start", "cnt", "vsum"])
@@ -83,6 +100,26 @@ def test_resume_after_partial_failure(spark, pages, tmp_path):
     fp2 = fingerprint(out2["tier_1h"], ["url", "bucket_start", "cnt", "vsum"])
     assert (full_fp.h, full_fp.n) == (fp2.h, fp2.n)
     assert ckpt.complete_parts("tier_1h", "v1") == {0, 1, 2, 3}
+    assert_lineage_counts(spark, root)
+
+
+def test_null_url_is_a_named_error(spark, pages, tmp_path):
+    """NULL url policy (plans/pipeline.py docstring): the blocks stage
+    refuses a NULL key with the seam's named ValueError, not a JVM
+    NullPointerException, and publishes nothing; the stages before it
+    stay committed."""
+    first = pages.select("url").orderBy("url").first()["url"]
+    bad = pages.withColumn(
+        "url", F.when(F.col("url") != first, F.col("url"))
+    )
+    root = str(tmp_path / "pipe_null")
+    with pytest.raises(Exception, match="map_sorted_groups: NULL key in 'url'") as exc:
+        run_pipeline(spark, bad, root, buckets=4)
+    assert "NullPointerException" not in str(exc.value)
+    store = TableStore(root)
+    assert all(store.exists(t) for t in ("obs", "tier_1h", "tier_1d", "tier_30d"))
+    assert not store.exists("blocks")
+    assert not [d for d in os.listdir(root) if d.startswith("_tmp_")]
 
 
 def test_config_change_invalidates(spark, pages, tmp_path):

@@ -1,5 +1,5 @@
 """Regenerate DRIVER_PRIORITY in mintpy_spark/queries.py from the
-CORRECTNESS_r*.json history.
+git-tracked CORRECTNESS_r*.json history.
 
 The driver's correctness gate samples a bounded prefix (50) of
 ``__spark_entry__.queries()`` per round, so the ordering decides which
@@ -21,10 +21,10 @@ reordering. Run from the repo root:
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
+import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -34,11 +34,22 @@ BEGIN = "# --- DRIVER_PRIORITY generated by tools/rebuild_priority.py ---"
 END = "# --- end generated DRIVER_PRIORITY ---"
 
 
+def correctness_files() -> list[str]:
+    """The git-tracked CORRECTNESS_r*.json files, in round order. An
+    untracked snapshot dropped into the checkout is not history yet: the
+    committed DRIVER_PRIORITY must not depend on it."""
+    out = subprocess.run(
+        ["git", "ls-files", "--", "CORRECTNESS_r*.json"],
+        cwd=REPO, check=True, capture_output=True, text=True,
+    ).stdout
+    return sorted(os.path.join(REPO, f) for f in out.split())
+
+
 def correctness_history() -> tuple[set[str], list[str]]:
     """Return (all keys ever driver-checked, keys red in their latest check)."""
     checked: set[str] = set()
     latest: dict[str, bool] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
+    for path in correctness_files():
         with open(path) as f:
             rec = json.load(f)
         for name, res in rec.items():
