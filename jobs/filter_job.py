@@ -2,13 +2,22 @@
 
 The sequential-state sibling of jobs/maintain_job.py: each invocation
 folds ONLY the observation files that arrived since the last run through
-the streaming Kalman local-level filter (streaming/kalman_stream.py,
-applyInPandasWithState; O(1) state per key in the stream state store)
-and appends the filtered levels to the output table. Re-running after a
-crash is safe: the stream checkpoint replays unconsumed files, the
-replay guard (ts <= state watermark) drops redelivered rows, and the
-emitted levels are bit-identical to the batch filter over the full
-replayed history (tests/test_kalman_stream.py).
+the streaming Kalman local-level filter (streaming/kalman_stream.py) and
+appends the filtered levels, (key, rn, ts, level), to the output table.
+
+The per-key state (last_ts_us, rn, m, p) lives in a versioned table
+under ``<checkpoint>/kalman_state``, outside Spark's own ``state/``
+subdirectory, and each micro-batch is one foreachBatch fold on the
+sorted-group seam, committed with the tier store's ``_commits`` marker
+protocol. It replaced an applyInPandasWithState twin whose per-key
+frames and GroupState round trip cost about 4.2 ms of Python worker CPU
+per touched key and batch (a 2 000-row delta over 2 000 keys: ~10 CPU s).
+
+Re-running after a crash is safe: the stream checkpoint replays
+unconsumed files, a committed batch is never folded twice, rows at or
+behind a key's watermark are skipped and counted (the ``kalman_late``
+lineage row), and the emitted levels are bit-identical to the batch
+filter over the full replayed history (tests/test_kalman_stream.py).
 
 Deployment (north_rule):
 
@@ -47,18 +56,12 @@ def run_filter(
     q: float,
     r: float,
 ) -> None:
-    from mintpy_spark.streaming.kalman_stream import streaming_kalman_level
+    from mintpy_spark.streaming.kalman_stream import run_kalman_fold
 
-    src = spark.readStream.schema(schema).parquet(input_path)
-    qy = (
-        streaming_kalman_level(src, value_col, key=key, ts=ts, q=q, r=r)
-        .writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    run_kalman_fold(
+        spark, input_path, output_path, checkpoint, schema, value_col,
+        key=key, ts=ts, q=q, r=r,
     )
-    qy.awaitTermination()
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -26,8 +26,9 @@ mapInPandas over key-clustered partitions — one Arrow frame per chunk,
 NOT one per key: grouped applyInPandas pays pandas frame construction
 per key, which dominated wall time 6.8x at sf0.1 (5.0 s -> 0.73 s) and
 dominates harder at production shape (10^9 keys x ~10^2 rows). The
-per-key pass is O(n) with O(1) state, the same access pattern the
-streaming variant carries in its state store.
+per-key pass is O(n) with O(1) state; the recursion itself
+(``LocalLevel``) is shared with the streaming fold, which carries that
+state in a versioned table (streaming/kalman_stream.py).
 """
 
 from __future__ import annotations
@@ -35,6 +36,61 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+class LocalLevel:
+    """The local-level recursion, defined once for the batch filter
+    (``kalman_level``) and the streaming fold
+    (``streaming.kalman_stream``), so stream == batch holds by
+    construction.
+
+    A key's state after ``rn`` observations is (rn, m, p). For a fresh
+    key the variance p and the gain depend only on the position, not on
+    the data, so they are computed once per position and shared by every
+    key of a batch; a carried key continues from its own p, so its cost
+    is proportional to its new values, not to its history. Both forms
+    run the same operations in the same order as the model above: values
+    are identical.
+    """
+
+    def __init__(self, q: float, r: float) -> None:
+        self.q, self.r = float(q), float(r)
+        self._p = [self.r]  # _p[n - 1]: variance after n observations
+        self._k: list[float] = []  # _k[n - 2]: gain applied at position n
+
+    def _extend(self, n: int) -> None:
+        ps, ks = self._p, self._k
+        while len(ps) < n:
+            pp = ps[-1] + self.q
+            k = pp / (pp + self.r)
+            ks.append(k)
+            ps.append((1.0 - k) * pp)
+
+    def fold(
+        self, ys: list[float], rn: int = 0, m: float = 0.0, p: float = 0.0
+    ) -> tuple[list[float], float, float]:
+        """Fold one key's next values ``ys`` (in order) into the state
+        (rn, m, p). Returns (the level after each value, m, p)."""
+        levels: list[float] = []
+        if rn:
+            q, r = self.q, self.r
+            for y in ys:
+                pp = p + q
+                k = pp / (pp + r)
+                m = m + k * (y - m)
+                p = (1.0 - k) * pp
+                levels.append(m)
+            return levels, m, p
+        n = len(ys)
+        if not n:
+            return levels, m, p
+        self._extend(n)
+        m = ys[0]
+        levels.append(m)
+        for y, k in zip(ys[1:], self._k):
+            m = m + k * (y - m)
+            levels.append(m)
+        return levels, m, self._p[n - 1]
 
 
 def kalman_level(
@@ -52,7 +108,6 @@ def kalman_level(
     timestamps deterministic (ADVICE r3 ordering convention) — and level
     the filtered mean after seeing observation rn. NULL observations are
     dropped before ranking (they carry no update)."""
-    qq, rr = float(q), float(r)
     src = df.where(F.col(value_col).isNotNull()).select(
         F.col(key).alias("k"),
         F.col(ts).alias("t"),
@@ -62,29 +117,7 @@ def kalman_level(
     order = ["t", "y", *order_cols]
     schema = f"k {dict(src.dtypes)['k']}, rn long, level double"
 
-    # the variance/gain recursion is data-independent, so the gain
-    # sequence is shared by every key of the same length — cache it per
-    # executor (values are IDENTICAL to inline computation: same ops,
-    # same order, just computed once)
-    gain_cache: dict[int, list[float]] = {}
-
-    def gains(n: int) -> list[float]:
-        ks = gain_cache.get(n)
-        if ks is None:
-            base = max(gain_cache, default=0)
-            if base and base < n:
-                ks = gain_cache[base][:]
-                p = gain_cache[-base]  # trailing variance of the prefix
-            else:
-                ks, p = [], rr
-            for _ in range(len(ks), n - 1):
-                pp = p + qq
-                k = pp / (pp + rr)
-                p = (1.0 - k) * pp
-                ks.append(k)
-            gain_cache[n] = ks
-            gain_cache[-n] = p
-        return ks
+    model = LocalLevel(q, r)
 
     def run_sorted(pdf: pd.DataFrame) -> pd.DataFrame:
         """One or more WHOLE key groups, already in (k, t, y) order."""
@@ -92,14 +125,9 @@ def kalman_level(
         out_rn: list[int] = []
         out_lv: list[float] = []
         for kval, g in pdf.groupby("k", sort=False):
-            ys = g["y"].tolist()
-            m = ys[0]
-            levels = [m]
-            for y, k in zip(ys[1:], gains(len(ys))):
-                m = m + k * (y - m)
-                levels.append(m)
-            out_k.extend([kval] * len(ys))
-            out_rn.extend(range(1, len(ys) + 1))
+            levels, _m, _p = model.fold(g["y"].tolist())
+            out_k.extend([kval] * len(levels))
+            out_rn.extend(range(1, len(levels) + 1))
             out_lv.extend(levels)
         return pd.DataFrame({"k": out_k, "rn": out_rn, "level": out_lv})
 

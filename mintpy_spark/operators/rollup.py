@@ -314,7 +314,12 @@ def refresh_tiers_incremental(
     delta into EVERY stored tier — partial-wise merge at the finest tier,
     then dirty-bucket cascade refresh upward. The whole update reads the
     delta plus the touched cells; raw history is never re-read and
-    untouched tier cells are never recomputed."""
+    untouched tier cells are never recomputed.
+
+    Eager: the delta aggregation and each refreshed tier are materialized
+    (localCheckpoint) as they are built, so every coarser tier is built
+    from its materialized finer tier — computing the 30d tier re-runs
+    neither the 1h and 1d merges nor the delta aggregation."""
     finest = tiers[0]
     # ONE aggregation of the delta serves both roles: the dirty-set
     # driver for the cascade refreshes AND the partial frame the finest
@@ -323,15 +328,17 @@ def refresh_tiers_incremental(
     with_sq = "vsumsq" in stored[finest].columns
     touched = rollup_from_obs(
         delta_obs, value_col, finest, key=key, ts=ts, with_sq=with_sq
-    )
+    ).localCheckpoint(eager=True)
     out: dict[str, DataFrame] = {}
     out[finest] = merge_tier_delta(
         stored[finest], delta_obs, value_col, finest, key=key, ts=ts,
         delta_partials=touched,
-    )
+    ).localCheckpoint(eager=True)
     prev = out[finest]
     for t in tiers[1:]:
-        out[t] = cascade_refresh(stored[t], prev, touched, t, key=key)
+        out[t] = cascade_refresh(
+            stored[t], prev, touched, t, key=key
+        ).localCheckpoint(eager=True)
         prev = out[t]
     return out
 

@@ -1498,8 +1498,8 @@ def ks_drift_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =========================================================================
-# round 5: streaming Kalman — the applyInPandasWithState leg of the
-# sequential-state family, driver-hashed like tier_realtime_read_check
+# round 5: streaming Kalman — the streaming leg of the sequential-state
+# family, oracle-hashed like tier_realtime_read_check
 # =========================================================================
 
 
@@ -1531,10 +1531,11 @@ def ks_drift_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kalman_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING Kalman filter under the batch oracle: replay the
     events table through a real Structured Streaming query
-    (applyInPandasWithState, parquet source, availableNow) in TWO
-    RESTARTS split at the median timestamp — state restored from the
-    checkpoint between them — and hash the union of emitted rows against
-    the same recursive-CTE oracle that certifies the batch filter
+    (streaming/kalman_stream.run_kalman_fold: parquet source,
+    availableNow, a foreachBatch fold over a versioned state table) in
+    TWO RESTARTS split at the median timestamp — state restored from the
+    committed version between them — and hash the union of emitted rows
+    against the same recursive-CTE oracle that certifies the batch filter
     (kalman_level_filter). Equality proves the state carry (last_ts, rn,
     m, p), the restart recovery, and the per-micro-batch fold reproduce
     the batch recursion bit-for-bit.
@@ -1543,11 +1544,11 @@ def kalman_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     (smallbaselineApp run_or_skip) — new epochs fold into stored state,
     never re-reading history.
 
-    Scale: O(1) state per key; each micro-batch costs one key-partition
-    shuffle of the delta only. The bounded .collect() pulls one median
+    Scale: O(1) state per key; each micro-batch shuffles the delta plus
+    its keys' state rows. The bounded .collect() pulls one median
     timestamp.
     """
-    from mintpy_spark.streaming.kalman_stream import streaming_kalman_level
+    from mintpy_spark.streaming.kalman_stream import run_kalman_fold
 
     ev = load(spark, sf_dir, "events")
     us = F.expr("unix_micros(cast(ts as timestamp))")
@@ -1559,16 +1560,9 @@ def kalman_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = "user_id long, ts timestamp, value double"
 
     def run_once():
-        src = spark.readStream.schema(schema).parquet(inp)
-        q = (
-            streaming_kalman_level(src, "value", key="user_id", ts="ts")
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_kalman_fold(
+            spark, inp, outp, ckpt, schema, "value", key="user_id", ts="ts"
         )
-        q.awaitTermination()
 
     half = ev.select("user_id", "ts", "value")
     half.where(us <= mid).write.mode("append").parquet(inp)

@@ -39,8 +39,10 @@ the merge joins co-locate.
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from mintpy_spark.operators.rollup import build_tiers, refresh_tiers_incremental
 from mintpy_spark.plans.checkpoint import CheckpointTable
@@ -202,11 +204,19 @@ class TierMaintainer:
             return  # replay of a committed batch: already folded
         if delta_obs.isEmpty():
             return
+        import time as _time
+
+        t0 = _time.time()
+        # materialize before writing: the plans read the committed version
+        # (never overwritten here, so a crashed partial write of v{N}
+        # cannot corrupt what a replay reads). The refresh materializes
+        # each tier as it builds the next one from it.
         if committed is None:
             new = build_tiers(
                 delta_obs, self.value_col, tiers=self.tiers,
                 key=self.key, ts=self.ts, with_sq=with_sq,
             )
+            new = {t: new[t].localCheckpoint(eager=True) for t in self.tiers}
         else:
             stored = {
                 t: spark.read.parquet(self._version_path(committed, t))
@@ -216,17 +226,8 @@ class TierMaintainer:
                 stored, delta_obs, self.value_col, tiers=self.tiers,
                 key=self.key, ts=self.ts,
             )
-        import time as _time
-
-        t0 = _time.time()
-        # materialize before writing: the plans read the committed version
-        # (never overwritten here, so a crashed partial write of v{N}
-        # cannot corrupt what a replay reads)
-        materialized = {t: new[t].localCheckpoint(eager=True) for t in self.tiers}
         for t in self.tiers:
-            materialized[t].write.mode("overwrite").parquet(
-                self._version_path(batch_id, t)
-            )
+            new[t].write.mode("overwrite").parquet(self._version_path(batch_id, t))
         self._commit(spark, batch_id)
         self._gc(spark)
         wall_ms = int((_time.time() - t0) * 1000)
@@ -237,12 +238,22 @@ class TierMaintainer:
                     "stage": f"maintain_{t}",
                     "part_id": int(batch_id),
                     "input_fp": "delta",
-                    "row_count": int(materialized[t].count()),
+                    "row_count": self._written_rows(batch_id, t),
                     "wall_ms": wall_ms,
                     "status": "complete",
                 }
                 for t in self.tiers
             ]
+        )
+
+    def _written_rows(self, version: int, tier: str) -> int:
+        """Rows of a written tier version, summed from its Parquet footers
+        (no Spark job; the lineage table is local, so the store is too)."""
+        path = self._version_path(version, tier)
+        return sum(
+            pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+            for f in os.listdir(path)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
         )
 
     def foreach_batch(self):

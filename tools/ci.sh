@@ -1,12 +1,14 @@
 #!/usr/bin/env bash
-# One-command verification gate: full pytest suite, the ingest benchmark's
-# smoke self-test (its output checks: text_sha == sha1(text), cnt/vsum per
-# tier, n over blocks), then the full-registry oracle sweep at sf0.01.
+# One-command verification gate: full pytest suite, the ingest and serve
+# benchmarks' smoke self-tests (their output checks: text_sha == sha1(text),
+# cnt/vsum per tier, n over blocks; stored tiers == build_tiers, streaming
+# Kalman levels == batch kalman_level, 0 rows dropped), then the
+# full-registry oracle sweep at sf0.01.
 # Run before stamping closing numbers in BASELINE.md — "N/N green" claims
 # must cite this script's output.
 #
 #   bash tools/ci.sh            # everything (~25 min on local[32])
-#   bash tools/ci.sh --fast     # pytest + ingest self-test only
+#   bash tools/ci.sh --fast     # pytest + ingest and serve self-tests only
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -15,6 +17,9 @@ python -m pytest tests/ -q
 
 echo "== ingest benchmark self-test (smoke) =="
 python3 perfbench/selftest.py ingest
+
+echo "== serve benchmark self-test (smoke) =="
+python3 perfbench/selftest.py serve
 
 if [[ "${1:-}" != "--fast" ]]; then
   echo "== full-registry oracle sweep (sf0.01) =="
