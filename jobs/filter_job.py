@@ -2,8 +2,9 @@
 
 The sequential-state sibling of jobs/maintain_job.py: each invocation
 folds ONLY the observation files that arrived since the last run through
-the streaming Kalman local-level filter (streaming/kalman_stream.py) and
-appends the filtered levels, (key, rn, ts, level), to the output table.
+the streaming Kalman local-level filter (``operators.kalman.LocalLevel``
+on the generic sequential fold, streaming/seqfold.py) and appends the
+filtered levels, (key, rn, ts, level), to the output table.
 
 The per-key state (last_ts_us, rn, m, p) lives in a versioned table
 under ``<checkpoint>/kalman_state``, outside Spark's own ``state/``
@@ -17,7 +18,8 @@ Re-running after a crash is safe: the stream checkpoint replays
 unconsumed files, a committed batch is never folded twice, rows at or
 behind a key's watermark are skipped and counted (the ``kalman_late``
 lineage row), and the emitted levels are bit-identical to the batch
-filter over the full replayed history (tests/test_kalman_stream.py).
+filter over the full replayed history (tests/test_seqfold.py,
+tests/test_kalman_stream.py).
 
 Deployment (north_rule):
 
@@ -56,11 +58,12 @@ def run_filter(
     q: float,
     r: float,
 ) -> None:
-    from mintpy_spark.streaming.kalman_stream import run_kalman_fold
+    from mintpy_spark.operators.kalman import LocalLevel
+    from mintpy_spark.streaming.seqfold import run_seq_fold
 
-    run_kalman_fold(
-        spark, input_path, output_path, checkpoint, schema, value_col,
-        key=key, ts=ts, q=q, r=r,
+    run_seq_fold(
+        spark, LocalLevel(q, r), input_path, output_path, checkpoint, schema,
+        value_col, key=key, ts=ts,
     )
 
 

@@ -6,7 +6,10 @@ The web recast's operational layer around the crawl-budget allocator
 (queries_r3ff.crawl_frontier_topk): WHEN each queued fetch actually runs
 under a per-host minimum delay, and HOW OFTEN a page should be revisited
 given its observed change history. Both are closed-form column plans —
-no iteration, no UDFs.
+no iteration, no UDFs. The third, token-bucket admission, is what a live
+fetcher consults per request: an exact-integer sequential recursion
+(``TokenBucket``) run by ``token_bucket`` on the sorted-group seam and by
+the streaming fold (streaming/seqfold.py).
 
 Reference analog: MintPy sequences its per-pixel work through explicit
 box scheduling (`split2boxes`, ifgram_inversion.py:795-860) and derives
@@ -16,8 +19,11 @@ a fetch and the cadence signal is the page's own change process.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+US_PER_HOUR = 3_600_000_000
 
 
 def politeness_schedule(
@@ -156,4 +162,86 @@ def change_rate_estimate(
         "num_changes",
         "span_days",
         F.when(x < m, lam).alias("lambda_per_day"),
+    )
+
+
+class TokenBucket:
+    """Per-key token-bucket admission in exact integer milli-tokens:
+    seeded full, each event costs ``cost_mt``, refill is
+    (dt_us * rate) // us_per_hour capped at ``cap_mt``, and an event is
+    admitted when the refilled level covers its cost. Shared by
+    ``token_bucket`` and the streaming fold (``streaming.seqfold``, whose
+    recursion protocol this implements); integer state, so stream ==
+    batch cannot even ulp-drift."""
+
+    name, emits, drop_nulls = "token_bucket", "decisions", False
+    state = ("last_ts_us long", "n long", "admitted long", "tokens long")
+    out = ("rn long", "ts timestamp", "admitted boolean", "tokens_mt long")
+
+    def __init__(
+        self, cap_mt: int = 3000, cost_mt: int = 1000, rate_mt_per_hour: int = 1000
+    ) -> None:
+        self.cap, self.cost, self.rate = int(cap_mt), int(cost_mt), int(rate_mt_per_hour)
+
+    def fold(self, ts_us, _values, state: tuple | None):
+        """One key's next event times: ((rn, ts, admitted, tokens_mt)
+        columns, new state)."""
+        cap, cost, rate = self.cap, self.cost, self.rate
+        last, n, adm, tokens = state or (None, 0, 0, 0)
+        rn0 = n
+        oks, levels = [], []
+        for t in ts_us:
+            if n == 0:
+                tokens = cap - cost  # the first event admits from a full bucket
+                ok = True
+            else:
+                tokens = min(cap, tokens + (t - last) * rate // US_PER_HOUR)
+                ok = tokens >= cost
+                if ok:
+                    tokens -= cost
+            n += 1
+            adm += ok
+            last = t
+            oks.append(ok)
+            levels.append(tokens)
+        return (range(rn0 + 1, n + 1), ts_us, oks, levels), (last, n, adm, tokens)
+
+
+def token_bucket(
+    events: DataFrame,
+    key: str = "user_id",
+    ts: str = "ts",
+    cap_mt: int = 3000,
+    cost_mt: int = 1000,
+    rate_mt_per_hour: int = 1000,
+) -> DataFrame:
+    """Per-key token-bucket simulation over events in ts order: (key,
+    n_events, n_admitted, n_rejected, final_tokens_mt). Refill between
+    equal timestamps is 0, so these aggregates do not depend on how tied
+    events are ordered. One shuffle into the sorted-group seam, O(1)
+    integer state per key."""
+    from mintpy_spark.operators.seqstate import map_sorted_groups
+
+    src = events.select(
+        F.col(key).alias("k"),
+        F.unix_micros(F.col(ts).cast("timestamp")).alias("t"),
+    )
+    schema = (
+        f"k {dict(src.dtypes)['k']}, n_events long, n_admitted long,"
+        " n_rejected long, final_tokens_mt long"
+    )
+    model = TokenBucket(cap_mt, cost_mt, rate_mt_per_hour)
+
+    def run_sorted(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = []
+        for kval, g in pdf.groupby("k", sort=False):
+            _out, (_t, n, adm, tokens) = model.fold(g["t"].tolist(), None, None)
+            rows.append((kval, n, adm, n - adm, tokens))
+        return pd.DataFrame(rows, columns=[
+            "k", "n_events", "n_admitted", "n_rejected", "final_tokens_mt"
+        ])
+
+    return map_sorted_groups(src, "k", ("t",), run_sorted, schema).select(
+        F.col("k").alias(key), "n_events", "n_admitted", "n_rejected",
+        "final_tokens_mt",
     )

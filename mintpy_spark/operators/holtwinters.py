@@ -24,8 +24,10 @@ integer cents cast to double so the daily pre-aggregation is
 order-independent too.
 
 Scale: one shuffle into the per-key Arrow seam; state is P + 2 doubles
-per key (the streaming twin would keep the rotating profile in its state
-store).
+per key. ``HoltWinters`` is the one definition of the recursion: the
+batch pass below and the streaming fold (streaming/seqfold.py, which
+carries the rotating profile in its per-key state table) both call its
+``fold``.
 """
 
 from __future__ import annotations
@@ -33,6 +35,55 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+class HoltWinters:
+    """The additive Holt-Winters recursion over one key's rows, shared by
+    ``holt_winters_additive`` and the streaming fold
+    (``streaming.seqfold``, whose recursion protocol this implements).
+    State: (last_ts_us, rn, level, trend, s0..s{P-1})."""
+
+    name, emits, drop_nulls = "holt_winters", "levels", True
+    out = ("rn long", "ts timestamp", "level double", "trend double",
+           "seasonal double")
+
+    def __init__(
+        self, period: int = 7, alpha: float = 0.3, beta: float = 0.1,
+        gamma: float = 0.2,
+    ) -> None:
+        self.p = int(period)
+        self.a, self.b, self.g = float(alpha), float(beta), float(gamma)
+        self.state = (
+            "last_ts_us long", "rn long", "level double", "trend double",
+            *(f"s{j} double" for j in range(self.p)),
+        )
+
+    def fold(self, ts_us, ys: list[float], state: tuple | None):
+        """One key's next values: ((rn, ts, level, trend, seasonal)
+        columns, new state)."""
+        a, b_, g, p = self.a, self.b, self.g, self.p
+        if state is None:
+            rn, lev, tr, season = 0, 0.0, 0.0, [0.0] * p
+        else:
+            _last, rn, lev, tr, *season = state
+        rns, out_l, out_b, out_s = [], [], [], []
+        for y in ys:
+            if rn == 0:
+                lev, tr, s_new = y, 0.0, 0.0
+            else:
+                i = rn % p  # rn == this row's 0-based position
+                s_old = season[i]
+                l_new = a * (y - s_old) + (1.0 - a) * (lev + tr)
+                tr = b_ * (l_new - lev) + (1.0 - b_) * tr
+                s_new = g * (y - l_new) + (1.0 - g) * s_old
+                season[i] = s_new
+                lev = l_new
+            rn += 1
+            rns.append(rn)
+            out_l.append(lev)
+            out_b.append(tr)
+            out_s.append(s_new)
+        return (rns, ts_us, out_l, out_b, out_s), (ts_us[-1], rn, lev, tr, *season)
 
 
 def holt_winters_additive(
@@ -48,8 +99,6 @@ def holt_winters_additive(
     """Per-key causal Holt-Winters pass over an already-bucketed series
     (one row per (key, bucket)). Returns (key, rn, level, trend,
     seasonal) after each observation in bucket order."""
-    a, b_, g = float(alpha), float(beta), float(gamma)
-    p = int(period)
     src = df.where(F.col(value_col).isNotNull()).select(
         F.col(key).alias("k"),
         F.col(ts).alias("t"),
@@ -59,41 +108,19 @@ def holt_winters_additive(
         f"k {dict(src.dtypes)['k']}, rn long, level double, trend double,"
         " seasonal double"
     )
+    model = HoltWinters(period, alpha, beta, gamma)
 
     def run_sorted(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_k: list = []
-        out_rn: list[int] = []
-        out_l: list[float] = []
-        out_b: list[float] = []
-        out_s: list[float] = []
+        names = ("rn", "level", "trend", "seasonal")
+        cols: dict[str, list] = {c: [] for c in ("k", *names)}
         for kval, grp in pdf.groupby("k", sort=False):
-            ys = grp["y"].tolist()
-            season = [0.0] * p
-            lev, tr = ys[0], 0.0
-            out_k.extend([kval] * len(ys))
-            out_rn.extend(range(1, len(ys) + 1))
-            out_l.append(lev)
-            out_b.append(tr)
-            out_s.append(0.0)
-            for i, y in enumerate(ys[1:], start=1):
-                s_old = season[i % p]
-                l_new = a * (y - s_old) + (1.0 - a) * (lev + tr)
-                tr = b_ * (l_new - lev) + (1.0 - b_) * tr
-                s_new = g * (y - l_new) + (1.0 - g) * s_old
-                season[i % p] = s_new
-                lev = l_new
-                out_l.append(lev)
-                out_b.append(tr)
-                out_s.append(s_new)
-        return pd.DataFrame(
-            {
-                "k": out_k,
-                "rn": out_rn,
-                "level": out_l,
-                "trend": out_b,
-                "seasonal": out_s,
-            }
-        )
+            (rn, _ts, *vals), _state = model.fold(
+                grp["t"].to_numpy(), grp["y"].tolist(), None
+            )
+            cols["k"].extend([kval] * len(rn))
+            for c, v in zip(names, (rn, *vals)):
+                cols[c].extend(v)
+        return pd.DataFrame(cols)
 
     from mintpy_spark.operators.seqstate import map_sorted_groups
 

@@ -28,7 +28,7 @@ per key, which dominated wall time 6.8x at sf0.1 (5.0 s -> 0.73 s) and
 dominates harder at production shape (10^9 keys x ~10^2 rows). The
 per-key pass is O(n) with O(1) state; the recursion itself
 (``LocalLevel``) is shared with the streaming fold, which carries that
-state in a versioned table (streaming/kalman_stream.py).
+state in a versioned table (streaming/seqfold.py).
 """
 
 from __future__ import annotations
@@ -40,9 +40,9 @@ from pyspark.sql import functions as F
 
 class LocalLevel:
     """The local-level recursion, defined once for the batch filter
-    (``kalman_level``) and the streaming fold
-    (``streaming.kalman_stream``), so stream == batch holds by
-    construction.
+    (``kalman_level``) and the streaming fold (``streaming.seqfold``,
+    whose recursion protocol ``name``/``state``/``out``/``fold`` this
+    implements), so stream == batch holds by construction.
 
     A key's state after ``rn`` observations is (rn, m, p). For a fresh
     key the variance p and the gain depend only on the position, not on
@@ -52,6 +52,10 @@ class LocalLevel:
     run the same operations in the same order as the model above: values
     are identical.
     """
+
+    name, emits, drop_nulls = "kalman", "levels", True
+    state = ("last_ts_us long", "rn long", "m double", "p double")
+    out = ("rn long", "ts timestamp", "level double")
 
     def __init__(self, q: float, r: float) -> None:
         self.q, self.r = float(q), float(r)
@@ -66,7 +70,14 @@ class LocalLevel:
             ks.append(k)
             ps.append((1.0 - k) * pp)
 
-    def fold(
+    def fold(self, ts_us, ys: list[float], state: tuple | None):
+        """One key's next values: ((rn, ts, level) columns, new state)."""
+        _last, rn, m, p = state or (None, 0, 0.0, 0.0)
+        levels, m, p = self.levels(ys, rn, m, p)
+        n = rn + len(ys)
+        return (range(rn + 1, n + 1), ts_us, levels), (ts_us[-1], n, m, p)
+
+    def levels(
         self, ys: list[float], rn: int = 0, m: float = 0.0, p: float = 0.0
     ) -> tuple[list[float], float, float]:
         """Fold one key's next values ``ys`` (in order) into the state
@@ -125,7 +136,7 @@ def kalman_level(
         out_rn: list[int] = []
         out_lv: list[float] = []
         for kval, g in pdf.groupby("k", sort=False):
-            levels, _m, _p = model.fold(g["y"].tolist())
+            levels, _m, _p = model.levels(g["y"].tolist())
             out_k.extend([kval] * len(levels))
             out_rn.extend(range(1, len(levels) + 1))
             out_lv.extend(levels)

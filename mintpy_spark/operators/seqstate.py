@@ -1,12 +1,14 @@
 """Shared seam for per-key sequential passes over sorted groups.
 
-Callers: the Kalman filters and smoother (``operators.kalman``) and the
-streaming Kalman fold (``streaming.kalman_stream``, one call per
-micro-batch, each key's committed state row sorted first),
-Holt-Winters (``operators.holtwinters``), the per-key time-function fit
+Callers: the Kalman filters and smoother (``operators.kalman``),
+Holt-Winters (``operators.holtwinters``), the Welford moments
+(``operators.stats``), the token bucket (``operators.crawlsched``), the
+streaming sequential fold (``streaming.seqfold``, one call per
+micro-batch for any of those recursions or the gap sessions, each key's
+committed state row sorted first), the per-key time-function fit
 (``operators.timefunc``), the inversion sigma path (``operators.invert``),
-``operators.forecast``, the token-bucket and audit folds in
-``queries_tiers``, and the cold-tier block packer
+``operators.forecast``, the audit folds in ``queries_tiers``, and the
+cold-tier block packer
 (``codecs.blocks.pack_blocks``, keyed on the series key and ordered by
 (window, ts), which splits each delivered frame into its (key, window)
 blocks).
@@ -17,7 +19,7 @@ filter at sf0.1: 5.0 s -> 0.73 s; at production shape 10^9 keys x ~10^2
 rows it is the difference between a usable and an unusable plan), and
 ``applyInPandasWithState`` adds a GroupState round trip on top (about
 4.2 ms of Python worker CPU per touched key and micro-batch, which is
-why the streaming Kalman fold left it for this seam). This
+why the streaming folds left it for this seam). This
 helper keeps the identical per-key semantics but runs ``mapInPandas``
 over key-clustered, key-sorted partitions — one Arrow frame per chunk —
 with a carry buffer for the key that spans adjacent chunks.

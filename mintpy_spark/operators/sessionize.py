@@ -15,7 +15,9 @@ Two equivalent implementations:
   formulation.
 
 Both produce identical session boundaries: a session extends while the
-next event arrives within ``gap`` of the previous one.
+next event arrives within ``gap`` of the previous one. ``GapSessions`` is
+the same rule as a per-key recursion for the streaming fold
+(streaming/seqfold.py).
 """
 
 from __future__ import annotations
@@ -53,6 +55,47 @@ def sessionize(
             "vsum",
         )
     )
+
+
+class GapSessions:
+    """The gap-session step over one key's rows, for the streaming fold
+    (``streaming.seqfold``, whose recursion protocol this implements).
+    State is the key's one OPEN session (last_ts_us, start_us, n, vsum).
+    A row within ``gap_seconds`` of the last one extends it — an event
+    EXACTLY gap after its predecessor still merges, the boundary rule of
+    ``sessionize_oracle_sql`` — and a larger gap emits the closed session
+    and opens a new one. So the sessions emitted over any micro-batch
+    split are the batch sessions minus each key's final, still-open one.
+    A NULL value extends a session but is not counted (batch
+    count(value)/sum(value)); a NaN value counts and poisons vsum, as in
+    batch."""
+
+    name, emits, drop_nulls = "sessions", "closed", False
+    state = ("last_ts_us long", "start_us long", "n long", "vsum double")
+    out = ("session_start timestamp", "session_end timestamp",
+           "duration_us long", "n_events long", "vsum double")
+
+    def __init__(self, gap_seconds: int = 1800) -> None:
+        self.gap_us = int(gap_seconds) * 1_000_000
+
+    def fold(self, ts_us, values, state: tuple | None):
+        """One key's next rows: (closed-session columns, new state)."""
+        last, start, n, vsum = state or (None, None, 0, 0.0)
+        out: tuple[list, ...] = ([], [], [], [], [])
+        for t, y in zip(ts_us, values):
+            if start is not None and t - last > self.gap_us:
+                # an uncounted session sums to NULL, as sum(value) does
+                closed = (start, last, last - start, n, vsum if n else None)
+                for col, v in zip(out, closed):
+                    col.append(v)
+                start = None
+            if start is None:
+                start, n, vsum = t, 0, 0.0
+            last = t
+            if y is not None:
+                n += 1
+                vsum += y
+        return out, (last, start, n, vsum)
 
 
 def sessionize_oracle_sql(

@@ -8,11 +8,15 @@ Reference analogs (SURVEY.md §2.4):
 * residual-RMS reference-date selection + MAD outlier exclusion
   (timeseries_rms.py:35-72; MAD utils/utils0.py:1166-1221).
 
-All pure Catalyst aggregates: partial+final hash agg, one shuffle each.
+All pure Catalyst aggregates (partial+final hash agg, one shuffle each),
+except the sequential Welford moments: ``Welford`` is the one definition
+of that recursion, run by ``welford_moments`` on the sorted-group seam
+and by the streaming fold (streaming/seqfold.py).
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -245,4 +249,65 @@ def heartbeat_gaps(
                 F.when(F.col("_gap") > F.lit(thresh), 1).otherwise(0)
             ).alias("n_dead_intervals"),
         )
+    )
+
+
+class Welford:
+    """Welford's single-pass (n, mean, M2) update over one key's values,
+    shared by ``welford_moments`` and the streaming fold
+    (``streaming.seqfold``, whose recursion protocol this implements).
+    Each output row is the running state after one accepted value; the
+    last one per key is the batch answer."""
+
+    name, emits, drop_nulls = "welford", "moments", True
+    state = ("last_ts_us long", "n long", "mean double", "m2 double")
+    out = ("n long", "ts timestamp", "mean double", "m2 double")
+
+    def fold(self, ts_us, ys: list[float], state: tuple | None):
+        """One key's next values: ((n, ts, mean, m2) columns, new state)."""
+        _last, n, mean, m2 = state or (None, 0, 0.0, 0.0)
+        ns, means, m2s = [], [], []
+        for y in ys:
+            if n == 0:
+                n, mean, m2 = 1, y, 0.0
+            else:
+                n2 = n + 1
+                delta = y - mean
+                mean_new = mean + delta / float(n2)
+                m2 = m2 + delta * (y - mean_new)
+                mean = mean_new
+                n = n2
+            ns.append(n)
+            means.append(mean)
+            m2s.append(m2)
+        return (ns, ts_us, means, m2s), (ts_us[-1], n, mean, m2)
+
+
+def welford_moments(
+    df: DataFrame, value_col: str = "value", key: str = "user_id", ts: str = "ts"
+) -> DataFrame:
+    """Per-key (n, mean, m2) after Welford's update over the non-NULL
+    values in (ts, value) order: one shuffle into the sorted-group seam,
+    three doubles of state per key."""
+    from mintpy_spark.operators.seqstate import map_sorted_groups
+
+    src = df.where(F.col(value_col).isNotNull()).select(
+        F.col(key).alias("k"),
+        F.unix_micros(F.col(ts).cast("timestamp")).alias("t"),
+        F.col(value_col).cast("double").alias("y"),
+    )
+    schema = f"k {dict(src.dtypes)['k']}, n long, mean double, m2 double"
+    model = Welford()
+
+    def run_sorted(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = []
+        for kval, g in pdf.groupby("k", sort=False):
+            _out, (_t, n, mean, m2) = model.fold(
+                g["t"].to_numpy(), g["y"].tolist(), None
+            )
+            rows.append((kval, n, mean, m2))
+        return pd.DataFrame(rows, columns=["k", "n", "mean", "m2"])
+
+    return map_sorted_groups(src, "k", ("t", "y"), run_sorted, schema).select(
+        F.col("k").alias(key), "n", "mean", "m2"
     )

@@ -848,8 +848,8 @@ def kalman_level_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(1) state per key, no look-ahead.
 
     Scale: one shuffle into the per-key Arrow seam; state is two doubles
-    per key, which is exactly what the streaming twin would keep in the
-    state store at 10^9 keys.
+    per key, which is what the streaming fold (streaming/seqfold.py,
+    kalman_realtime_check) keeps in its per-key state table.
     """
     from mintpy_spark.operators.kalman import kalman_level
 
@@ -1049,49 +1049,15 @@ def token_bucket_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-host pacing a priori; the token bucket is the posterior
     admission-control form every crawl frontier actually deploys.
 
-    Scale: one shuffle into the per-key Arrow seam, O(1) integer state —
-    the streaming twin is applyInPandasWithState with two BIGINTs.
+    Scale: one shuffle into the per-key Arrow seam, O(1) integer state;
+    the recursion is ``operators.crawlsched.TokenBucket``, which the
+    streaming fold (token_bucket_realtime_check) runs too.
     """
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-        "event_id",
-    )
-    schema = (
-        "user_id long, n_events long, n_admitted long, n_rejected long,"
-        " final_tokens_mt long"
-    )
+    from mintpy_spark.operators.crawlsched import token_bucket
 
-    def run_sorted(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for uid, grp in pdf.groupby("user_id", sort=False):
-            ts = grp["t"].tolist()
-            tokens = _CAP - _COST  # first event admits from a full bucket
-            admitted = 1
-            last = ts[0]
-            for t in ts[1:]:
-                tokens = min(
-                    _CAP,
-                    tokens + (t - last) * _RATE_MT_PER_HOUR // _US_PER_HOUR,
-                )
-                if tokens >= _COST:
-                    tokens -= _COST
-                    admitted += 1
-                last = t
-            n = len(ts)
-            rows.append((uid, n, admitted, n - admitted, tokens))
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "user_id", "n_events", "n_admitted", "n_rejected",
-                "final_tokens_mt",
-            ],
-        )
-
-    from mintpy_spark.operators.seqstate import map_sorted_groups
-
-    return map_sorted_groups(
-        ev, "user_id", ("t", "event_id"), run_sorted, schema
+    return token_bucket(
+        load(spark, sf_dir, "events"), "user_id", "ts",
+        _CAP, _COST, _RATE_MT_PER_HOUR,
     )
 
 
@@ -1255,6 +1221,22 @@ agree with (the planted test cross-checks both).
 _MEAN_NEW = "(rec.mean + (s.y - rec.mean) / CAST(rec.n + 1 AS DOUBLE))"
 
 
+def _welford_e6(moments: DataFrame) -> DataFrame:
+    """(user_id, n, mean, m2) -> the oracle's floor-quantized columns."""
+    return moments.select(
+        "user_id",
+        "n",
+        F.floor(F.col("mean") * 1000000).cast("long").alias("mean_e6"),
+        F.floor(F.col("m2") * 1000000).cast("long").alias("m2_e6"),
+        F.when(
+            F.col("n") > 1,
+            F.floor(
+                F.col("m2") / (F.col("n") - 1).cast("double") * 1000000
+            ).cast("long"),
+        ).alias("var_e6"),
+    )
+
+
 @_q(
     "welford_online_var",
     f"""
@@ -1298,46 +1280,12 @@ def welford_online_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key state.
 
     Scale: one shuffle into the shared seqstate seam; three doubles of
-    state per key.
+    state per key. The recursion is ``operators.stats.Welford``, which
+    the streaming fold (welford_realtime_check) runs too.
     """
-    from mintpy_spark.operators.seqstate import map_sorted_groups
+    from mintpy_spark.operators.stats import welford_moments
 
-    ev = load(spark, sf_dir, "events")
-    src = ev.where(F.col("value").isNotNull()).select(
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-        F.col("value").cast("double").alias("y"),
-    )
-    schema = "user_id long, n long, mean double, m2 double"
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for uid, g in pdf.groupby("user_id", sort=False):
-            ys = g["y"].tolist()
-            n, mean, m2 = 1, ys[0], 0.0
-            for y in ys[1:]:
-                n2 = n + 1
-                delta = y - mean
-                mean_new = mean + delta / float(n2)
-                m2 = m2 + delta * (y - mean_new)
-                mean = mean_new
-                n = n2
-            rows.append((uid, n, mean, m2))
-        return pd.DataFrame(rows, columns=["user_id", "n", "mean", "m2"])
-
-    out = map_sorted_groups(src, "user_id", ("t", "y"), fold, schema)
-    return out.select(
-        "user_id",
-        "n",
-        F.floor(F.col("mean") * 1000000).cast("long").alias("mean_e6"),
-        F.floor(F.col("m2") * 1000000).cast("long").alias("m2_e6"),
-        F.when(
-            F.col("n") > 1,
-            F.floor(
-                F.col("m2") / (F.col("n") - 1).cast("double") * 1000000
-            ).cast("long"),
-        ).alias("var_e6"),
-    )
+    return _welford_e6(welford_moments(load(spark, sf_dir, "events"), "value"))
 
 
 # =========================================================================
@@ -1503,6 +1451,36 @@ def ks_drift_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =========================================================================
 
 
+def _fold_in_two_restarts(
+    spark: SparkSession, rows: DataFrame, ts: str, recursion,
+    value_col: str | None, post,
+) -> DataFrame:
+    """Replay ``rows`` (user_id, ts[, value]) through the streaming fold
+    (streaming/seqfold.run_seq_fold: parquet source, availableNow, a
+    foreachBatch fold over a versioned state table) in TWO RESTARTS split
+    at the median timestamp, state restored from the committed version
+    between them. Returns ``post`` of the emitted rows, materialized
+    before the scratch directory goes. The bounded .collect() pulls one
+    median timestamp."""
+    from mintpy_spark.streaming.seqfold import run_seq_fold
+
+    us = F.unix_micros(F.col(ts).cast("timestamp"))
+    mid = rows.select(
+        F.percentile_approx(us, 0.5, 10000).alias("m")
+    ).collect()[0]["m"]
+    root = tempfile.mkdtemp(prefix=f"{recursion.name}_rt_check_")
+    inp, outp, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
+    for half in (us <= mid, us > mid):
+        rows.where(half).write.mode("append").parquet(inp)
+        run_seq_fold(
+            spark, recursion, inp, outp, ckpt, rows.schema, value_col,
+            key="user_id", ts=ts,
+        )
+    out = post(spark.read.parquet(outp)).localCheckpoint(eager=True)
+    shutil.rmtree(root, ignore_errors=True)
+    return out
+
+
 @_q(
     "kalman_realtime_check",
     """
@@ -1531,9 +1509,8 @@ def ks_drift_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kalman_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING Kalman filter under the batch oracle: replay the
     events table through a real Structured Streaming query
-    (streaming/kalman_stream.run_kalman_fold: parquet source,
-    availableNow, a foreachBatch fold over a versioned state table) in
-    TWO RESTARTS split at the median timestamp — state restored from the
+    (streaming/seqfold.run_seq_fold over ``operators.kalman.LocalLevel``)
+    in TWO RESTARTS split at the median timestamp — state restored from the
     committed version between them — and hash the union of emitted rows
     against the same recursive-CTE oracle that certifies the batch filter
     (kalman_level_filter). Equality proves the state carry (last_ts, rn,
@@ -1545,42 +1522,19 @@ def kalman_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     never re-reading history.
 
     Scale: O(1) state per key; each micro-batch shuffles the delta plus
-    its keys' state rows. The bounded .collect() pulls one median
-    timestamp.
+    its keys' state rows.
     """
-    from mintpy_spark.streaming.kalman_stream import run_kalman_fold
+    from mintpy_spark.operators.kalman import LocalLevel
 
-    ev = load(spark, sf_dir, "events")
-    us = F.expr("unix_micros(cast(ts as timestamp))")
-    mid = ev.select(
-        F.percentile_approx(us, 0.5, 10000).alias("m")
-    ).collect()[0]["m"]
-    root = tempfile.mkdtemp(prefix="kalman_rt_check_")
-    inp, outp, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
-    schema = "user_id long, ts timestamp, value double"
-
-    def run_once():
-        run_kalman_fold(
-            spark, inp, outp, ckpt, schema, "value", key="user_id", ts="ts"
-        )
-
-    half = ev.select("user_id", "ts", "value")
-    half.where(us <= mid).write.mode("append").parquet(inp)
-    run_once()
-    half.where(us > mid).write.mode("append").parquet(inp)
-    run_once()
-
-    out = (
-        spark.read.parquet(outp)
-        .select(
+    return _fold_in_two_restarts(
+        spark, load(spark, sf_dir, "events").select("user_id", "ts", "value"),
+        "ts", LocalLevel(0.04, 1.0), "value",
+        lambda out: out.select(
             "user_id",
             "rn",
             F.floor(F.col("level") * F.lit(10000)).cast("long").alias("level_e4"),
-        )
-        .localCheckpoint(eager=True)
+        ),
     )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 @_q(
@@ -1604,7 +1558,8 @@ def kalman_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sessionize_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING sessionizer under the batch oracle: replay events
     through a real two-restart Structured Streaming run
-    (streaming/session_stream.py, gap = 1 day) and hash the emitted
+    (streaming/seqfold.run_seq_fold over
+    ``operators.sessionize.GapSessions``, gap = 1 day) and hash the emitted
     CLOSED sessions against the batch lag/cumsum sessionization MINUS
     each key's final session (still open in the stream's state — by
     construction the only difference between the two answers). Certifies
@@ -1612,52 +1567,19 @@ def sessionize_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovery, and NULL-value semantics (extend but don't count) across
     micro-batch splits.
 
-    Scale: 32 bytes of state per key; micro-batch cost is one
-    key-partition shuffle of the delta. The bounded .collect() pulls one
-    median timestamp.
+    Scale: 32 bytes of state per key; each micro-batch shuffles the
+    delta plus its keys' state rows.
     """
-    from mintpy_spark.streaming.session_stream import streaming_sessionize
+    from mintpy_spark.operators.sessionize import GapSessions
 
-    ev = load(spark, sf_dir, "events")
-    us = F.expr("unix_micros(cast(ts as timestamp))")
-    mid = ev.select(
-        F.percentile_approx(us, 0.5, 10000).alias("m")
-    ).collect()[0]["m"]
-    root = tempfile.mkdtemp(prefix="session_rt_check_")
-    inp, outp, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
-    schema = "user_id long, ts timestamp, value double"
-
-    def run_once():
-        src = spark.readStream.schema(schema).parquet(inp)
-        q = (
-            streaming_sessionize(
-                src, key="user_id", ts="ts", value_col="value",
-                gap_seconds=86400,
-            )
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    half = ev.select("user_id", "ts", "value")
-    half.where(us <= mid).write.mode("append").parquet(inp)
-    run_once()
-    half.where(us > mid).write.mode("append").parquet(inp)
-    run_once()
-
-    out = (
-        spark.read.parquet(outp)
-        .select(
+    return _fold_in_two_restarts(
+        spark, load(spark, sf_dir, "events").select("user_id", "ts", "value"),
+        "ts", GapSessions(86400), "value",
+        lambda out: out.select(
             "user_id", "session_start", "session_end", "duration_us",
             "n_events", F.round("vsum", 2).alias("vsum"),
-        )
-        .localCheckpoint(eager=True)
+        ),
     )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 @_q(
@@ -1703,21 +1625,19 @@ def holt_winters_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING Holt-Winters smoother under the batch oracle:
     finalized daily cent-sum buckets (the watermark-finalized 1d tier's
     output contract) replay through a real two-restart Structured
-    Streaming run (streaming/holtwinters_stream.py) split at the median
-    day — state (level, trend, 7 seasonal slots) restored from the
-    checkpoint between restarts — and the union of emitted rows is
+    Streaming run (streaming/seqfold.run_seq_fold over
+    ``operators.holtwinters.HoltWinters``) split at the median day —
+    state (level, trend, 7 seasonal slots) restored from the committed
+    version between restarts — and the union of emitted rows is
     hashed against the same recursive-CTE oracle that certifies the
     batch pass (holt_winters_weekly). The daily pre-aggregation is
     integer-cents, so computing it in batch before the split is
     order-free and legitimate.
 
-    Scale: P + 2 doubles of state per key; micro-batch cost is one
-    key-partition shuffle of the delta. The bounded .collect() pulls one
-    median day.
+    Scale: P + 2 doubles of state per key; each micro-batch shuffles
+    the delta plus its keys' state rows.
     """
-    from mintpy_spark.streaming.holtwinters_stream import (
-        streaming_holt_winters,
-    )
+    from mintpy_spark.operators.holtwinters import HoltWinters
 
     ev = load(spark, sf_dir, "events")
     daily = (
@@ -1729,48 +1649,17 @@ def holt_winters_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("y")
         )
     )
-    us = F.expr("unix_micros(cast(bucket_start as timestamp))")
-    mid = daily.select(
-        F.percentile_approx(us, 0.5, 10000).alias("m")
-    ).collect()[0]["m"]
-    root = tempfile.mkdtemp(prefix="hw_rt_check_")
-    inp, outp, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
-    schema = "user_id long, bucket_start timestamp, y double"
-
-    def run_once():
-        src = spark.readStream.schema(schema).parquet(inp)
-        q = (
-            streaming_holt_winters(
-                src, "y", key="user_id", ts="bucket_start",
-                alpha=_A, beta=_B, gamma=_G,
-            )
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    daily.where(us <= mid).write.mode("append").parquet(inp)
-    run_once()
-    daily.where(us > mid).write.mode("append").parquet(inp)
-    run_once()
-
-    out = (
-        spark.read.parquet(outp)
-        .select(
+    return _fold_in_two_restarts(
+        spark, daily, "bucket_start", HoltWinters(7, _A, _B, _G), "y",
+        lambda out: out.select(
             "user_id",
             "rn",
             F.floor(F.col("level") * 10000).cast("long").alias("level_e4"),
             F.floor(F.col("trend") * 10000).cast("long").alias("trend_e4"),
             F.floor(F.col("seasonal") * 10000).cast("long")
             .alias("seasonal_e4"),
-        )
-        .localCheckpoint(eager=True)
+        ),
     )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 @_q(
@@ -1806,69 +1695,26 @@ def holt_winters_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 def welford_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING Welford moments under the batch oracle: replay
     events through a real two-restart Structured Streaming run
-    (streaming/welford_stream.py) split at the median timestamp — state
-    (n, mean, M2) restored from the checkpoint between restarts — then
-    take each key's final state row (max n) and hash it against the same
-    recursive-CTE oracle that certifies the batch pass
-    (welford_online_var). The fourth sequential-state streaming twin
-    after Kalman, Holt-Winters and the gap sessionizer.
+    (streaming/seqfold.run_seq_fold over ``operators.stats.Welford``)
+    split at the median timestamp — state (n, mean, M2) restored from
+    the committed version between restarts — then take each key's final
+    row (max n) and hash it against the same recursive-CTE oracle that
+    certifies the batch pass (welford_online_var).
 
-    Scale: three doubles of state per key; micro-batch cost is one
-    key-partition shuffle of the delta. The bounded .collect() pulls one
-    median timestamp.
+    Scale: three doubles of state per key; each micro-batch shuffles the
+    delta plus its keys' state rows.
     """
-    from mintpy_spark.streaming.welford_stream import streaming_welford
+    from mintpy_spark.operators.stats import Welford
 
-    ev = load(spark, sf_dir, "events")
-    us = F.expr("unix_micros(cast(ts as timestamp))")
-    mid = ev.select(
-        F.percentile_approx(us, 0.5, 10000).alias("m")
-    ).collect()[0]["m"]
-    root = tempfile.mkdtemp(prefix="welford_rt_check_")
-    inp, outp, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
-    schema = "user_id long, ts timestamp, value double"
-
-    def run_once():
-        src = spark.readStream.schema(schema).parquet(inp)
-        q = (
-            streaming_welford(src, "value", key="user_id", ts="ts")
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    half = ev.select("user_id", "ts", "value")
-    half.where(us <= mid).write.mode("append").parquet(inp)
-    run_once()
-    half.where(us > mid).write.mode("append").parquet(inp)
-    run_once()
-
-    final = (
-        spark.read.parquet(outp)
-        .groupBy("user_id")
-        .agg(
+    return _fold_in_two_restarts(
+        spark, load(spark, sf_dir, "events").select("user_id", "ts", "value"),
+        "ts", Welford(), "value",
+        lambda out: _welford_e6(out.groupBy("user_id").agg(
             F.max("n").alias("n"),
             F.max_by("mean", "n").alias("mean"),
             F.max_by("m2", "n").alias("m2"),
-        )
+        )),
     )
-    out = final.select(
-        "user_id",
-        "n",
-        F.floor(F.col("mean") * 1000000).cast("long").alias("mean_e6"),
-        F.floor(F.col("m2") * 1000000).cast("long").alias("m2_e6"),
-        F.when(
-            F.col("n") > 1,
-            F.floor(
-                F.col("m2") / (F.col("n") - 1).cast("double") * 1000000
-            ).cast("long"),
-        ).alias("var_e6"),
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 @_q(
@@ -1913,57 +1759,29 @@ def welford_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 def token_bucket_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING token bucket under the batch oracle: events replay
     through a real two-restart Structured Streaming run
-    (streaming/bucket_stream.py) split at the median timestamp — integer
-    bucket state restored from the checkpoint — and the per-key
+    (streaming/seqfold.run_seq_fold over
+    ``operators.crawlsched.TokenBucket``) split at the median
+    timestamp — integer bucket state restored from the committed
+    version — and the per-key
     aggregate of emitted decisions is hashed against the same
     recursive-CTE oracle as the batch simulation
     (token_bucket_admission). Exact integer state, so stream == batch
     cannot even ulp-drift; the check certifies the state carry, restart
     recovery, and replay skip.
 
-    Scale: four longs of state per key; micro-batch cost is one
-    key-partition shuffle of the delta.
+    Scale: four longs of state per key; each micro-batch shuffles the
+    delta plus its keys' state rows.
     """
-    from mintpy_spark.streaming.bucket_stream import streaming_token_bucket
+    from mintpy_spark.operators.crawlsched import TokenBucket
 
-    ev = load(spark, sf_dir, "events")
-    us = F.expr("unix_micros(cast(ts as timestamp))")
-    mid = ev.select(
-        F.percentile_approx(us, 0.5, 10000).alias("m")
-    ).collect()[0]["m"]
-    root = tempfile.mkdtemp(prefix="bucket_rt_check_")
-    inp, outp, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
-    schema = "user_id long, ts timestamp"
-
-    def run_once():
-        src = spark.readStream.schema(schema).parquet(inp)
-        q = (
-            streaming_token_bucket(src, key="user_id", ts="ts")
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    half = ev.select("user_id", "ts")
-    half.where(us <= mid).write.mode("append").parquet(inp)
-    run_once()
-    half.where(us > mid).write.mode("append").parquet(inp)
-    run_once()
-
-    out = (
-        spark.read.parquet(outp)
-        .groupBy("user_id")
-        .agg(
+    return _fold_in_two_restarts(
+        spark, load(spark, sf_dir, "events").select("user_id", "ts"), "ts",
+        TokenBucket(_CAP, _COST, _RATE_MT_PER_HOUR), None,
+        lambda out: out.groupBy("user_id").agg(
             F.max("rn").alias("n_events"),
             F.sum(F.col("admitted").cast("long")).alias("n_admitted"),
             (F.max("rn") - F.sum(F.col("admitted").cast("long")))
             .alias("n_rejected"),
             F.max_by("tokens_mt", "rn").alias("final_tokens_mt"),
-        )
-        .localCheckpoint(eager=True)
+        ),
     )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
