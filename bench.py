@@ -139,14 +139,14 @@ def _rollup_job(spark, pages_path: str) -> tuple[int, float]:
         production ingest cannot prune the body copy) -> obs projection ->
         repartition(hash(url)) -> 1h -> 1d -> 30d
 
-    The length-only marker-arithmetic variant (pages_to_obs_lengths,
-    ~1.45x faster end-to-end) is correct when the rollup consumes only
-    text_length, but it is NOT the job the north rule scores: leaner
-    per-byte CPU makes the job memory-bandwidth-bound on this
-    single-socket box and the 8->32-core efficiency drops 0.83 -> 0.71
-    (bandwidth doesn't scale with cores; a real cluster adds memory
-    channels with every executor). The scaling evidence measures the
-    byte-identity ingest.
+    extract_text cuts the body on the payload's bytes and decodes it only
+    when it is not valid UTF-8, so materializing the body costs less CPU
+    than a length-only marker-arithmetic projection would. A leaner
+    per-byte extract once made this job memory-bandwidth-bound on a
+    single-socket 32-core box, where the 8->32-core efficiency fell
+    0.83 -> 0.71 (bandwidth doesn't scale with cores; a real cluster adds
+    memory channels with every executor): re-measure the scaling figure
+    on such a box after an extract change.
 
     The explicit repartition on the narrow projection is the engine's one
     shuffle: hash-partitioning on url satisfies the clustering requirement

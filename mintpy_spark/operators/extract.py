@@ -10,19 +10,21 @@ arbitrary (possibly non-UTF8) bytes. ``extract_text`` must recover the text
 **byte-for-byte** (`BASELINE.json` input_hint: "byte-identical extracted
 text per url").
 
-Execution model — two implementations, same semantics:
+Execution model — two implementations, same output bytes:
 
-* ``extract_text`` (default): pure Catalyst expressions. The binary
-  payload is viewed through the byte-preserving ISO-8859-1 charset
-  (every byte maps to one char, losslessly), the markers are located with
-  ``locate``/``reverse`` string ops, the slice is re-encoded to bytes and
-  UTF-8 decoded. Everything stays inside whole-stage codegen — measured
-  ~10x faster than the Arrow path at local[32] because no bytes ever
-  cross the JVM/Python boundary.
+* ``extract_text`` (default): pure Catalyst expressions on the payload's
+  bytes. The payload is viewed as a string without copying it, the markers
+  are located on that view and measured in bytes, the body is cut as a
+  binary slice and decoded (malformed UTF-8 -> U+FFFD) only when it is not
+  valid UTF-8. Nothing but the body is ever converted, and everything
+  stays inside whole-stage codegen: no bytes cross the JVM/Python
+  boundary.
 * ``extract_text_arrow``: Arrow-batched ``mapInPandas`` doing the same
   marker scan with ``bytes.find`` — kept as the template for payload
   transforms that genuinely need Python (see operators/multimodal.py) and
-  as an independent implementation for parity tests.
+  as an independent implementation for parity tests. It decodes with the
+  ``jvm-replace`` error handler, which replaces malformed input exactly as
+  the JVM's UTF-8 decoder does.
 
 At 100 TB this is the one stage that must touch every payload byte, so it
 is embarrassingly parallel by design: no shuffle, runs at scan parallelism,
@@ -32,6 +34,7 @@ text flows onward.
 
 from __future__ import annotations
 
+import codecs
 from collections.abc import Iterator
 
 import pandas as pd
@@ -40,6 +43,27 @@ from pyspark.sql import functions as F
 
 BODY_OPEN = b"<body>"
 BODY_CLOSE = b"</body>"
+JVM_REPLACE = "jvm-replace"
+
+
+def _jvm_replace(exc: UnicodeError) -> tuple[str, int]:
+    """Decode error handler: ``errors="replace"`` as the JVM's UTF-8
+    decoder does it. The two differ on one shape only: an encoded surrogate
+    lead ``ED [A0-BF]`` (plus its continuation byte ``[80-BF]`` when one
+    follows). Python rejects the ``ED`` alone and then each continuation
+    byte, writing up to three U+FFFD; the JVM reads the sequence as one
+    malformed character and writes one U+FFFD."""
+    if isinstance(exc, UnicodeDecodeError):
+        b, i = exc.object, exc.start
+        if b[i] == 0xED and i + 1 < len(b) and 0xA0 <= b[i + 1] <= 0xBF:
+            j = i + 2
+            if j < len(b) and 0x80 <= b[j] <= 0xBF:
+                j += 1
+            return "\ufffd", j
+    return codecs.replace_errors(exc)
+
+
+codecs.register_error(JVM_REPLACE, _jvm_replace)
 
 
 def extract_text_bytes(html: bytes) -> bytes | None:
@@ -60,122 +84,57 @@ def extract_text_bytes(html: bytes) -> bytes | None:
     return html[i + len(BODY_OPEN): j]
 
 
-def extract_text_expr(html_col: str = "html"):
-    """Catalyst column expression recovering the body bytes as a UTF-8
-    string (NULL when malformed).
-
-    ISO-8859-1 is byte-preserving (all 256 bytes map 1:1 to chars), so
-    string ops on the decoded proxy index *bytes*; the slice re-encodes to
-    the original bytes exactly, then decodes as UTF-8 (malformed sequences
-    -> U+FFFD, same as the Arrow path's errors='replace').
-
-    Strategy: ONE charset conversion (UTF-8 decode with replacement — the
-    markers are ASCII, and a malformed byte sequence can never swallow a
-    following ASCII byte, so marker positions survive decoding), then pure
-    length arithmetic on ``substring_index`` prefixes/suffixes:
-
-        pre  = text before the FIRST <body>   (whole string if absent)
-        tail = text after  the LAST  </body>  (whole string if absent)
-        body = substring(s, len(pre)+7, len(s)-len(pre)-len(tail)-13)
-
-    Invalid UTF-8 *inside* the body becomes U+FFFD — identical to the
-    Arrow path's errors='replace'. An earlier variant round-tripped through
-    ISO-8859-1 (byte-exact view) with reverse+locate; the single-decode
-    form is ~8x faster (charset conversions and reverse dominated).
-    """
-    s = F.decode(F.col(html_col), "UTF-8")
-    pre = F.substring_index(s, "<body>", 1)
-    tail = F.substring_index(s, "</body>", -1)
-    ls, lp, lt = F.length(s), F.length(pre), F.length(tail)
-    has_open = lp < ls
-    has_close = lt < ls
-    body_len = ls - lp - lt - F.lit(len(BODY_OPEN) + len(BODY_CLOSE))
-    body = F.substring(s, lp + F.lit(len(BODY_OPEN) + 1), F.greatest(body_len, F.lit(0)))
-    ok = has_open & has_close & (body_len >= 0)
-    return F.when(ok, body).otherwise(F.lit(None))
-
-
 def extract_text(
     pages: DataFrame,
     html_col: str = "html",
     out_col: str = "extracted_text",
     keep_html: bool = False,
 ) -> DataFrame:
-    """pages -> pages + ``out_col`` via the JVM-side expression (default,
+    """pages -> pages + ``out_col`` via JVM-side expressions (default,
     whole-stage-codegen path). NULL on malformed payloads — the
     reference's no-data convention (unreadable -> NaN, readfile.py nodata
     remap): one bad crawl record cannot kill a 100 TB scan.
 
-    The decode / substring_index intermediates are staged through separate
-    projections on purpose: they are referenced several times downstream,
-    and staging keeps CollapseProject from inlining (= re-evaluating) the
-    expensive payload-width expressions — measured ~4x on the ingest bench.
+    Works on the payload's bytes; only the body is ever decoded:
+
+        view = cast(html as string)     -- wraps the bytes, no copy/check
+        lp   = octet_length(text before the FIRST <body> in view)
+        lt   = octet_length(text after  the LAST  </body> in view)
+        ls   = octet_length(html)
+        body = substring(html, lp + 7, ls - lp - lt - 13)   -- binary
+        text = cast(body as string)   if is_valid_utf8(body)
+               decode(body, 'UTF-8')  otherwise (malformed -> U+FFFD)
+
+    A marker is absent exactly when its ``substring_index`` returns the
+    whole view (``lp == ls`` / ``lt == ls``). The output equals a decode of
+    the whole payload followed by the same cut: the markers are ASCII, a
+    malformed sequence never swallows a following ASCII byte and U+FFFD
+    holds no ASCII byte, so the markers sit at the same places in the raw
+    and the decoded payload; valid UTF-8 decodes to itself. The invalid
+    branch needs ``spark.sql.legacy.codingErrorAction=true``
+    (``session.RUNTIME_SQL_CONF``) to replace rather than raise.
+
+    The offsets and the body are staged through separate projections on
+    purpose: each is referenced several times downstream, and staging
+    keeps CollapseProject from inlining (= re-evaluating) the
+    payload-width marker scans.
     """
     cols = [c for c in pages.columns if keep_html or c != html_col]
+    html = F.col(html_col)
+    view = html.cast("string")
     staged = (
-        pages.withColumn("_x_s", F.decode(F.col(html_col), "UTF-8"))
-        .withColumn("_x_lp", F.length(F.substring_index("_x_s", BODY_OPEN.decode(), 1)))
-        .withColumn("_x_lt", F.length(F.substring_index("_x_s", BODY_CLOSE.decode(), -1)))
-        .withColumn("_x_ls", F.length("_x_s"))
-    )
-    lp, lt, ls = F.col("_x_lp"), F.col("_x_lt"), F.col("_x_ls")
-    body_len = ls - lp - lt - F.lit(len(BODY_OPEN) + len(BODY_CLOSE))
-    body = F.substring(
-        F.col("_x_s"), lp + F.lit(len(BODY_OPEN) + 1), F.greatest(body_len, F.lit(0))
-    )
-    ok = (lp < ls) & (lt < ls) & (body_len >= 0)
-    return staged.select(*cols, F.when(ok, body).otherwise(F.lit(None)).alias(out_col))
-
-
-def extract_text_length(
-    pages: DataFrame,
-    html_col: str = "html",
-    out_col: str = "text_length",
-) -> DataFrame:
-    """Projection-pruned extraction: the *byte length* of the extracted
-    text, without ever materializing the body string.
-
-    A tier rollup over ``text_length`` (the engine's headline ingest path)
-    consumes only the length, yet ``octet_length(extract_text(...))``
-    still copies the body substring out of every payload — a copy Catalyst
-    cannot eliminate (no ``length(substring(..)) -> arithmetic`` rewrite).
-    This operator is that missing rewrite, done by hand: view the payload
-    through ISO-8859-1 (every byte maps 1:1 to one char, so char positions
-    ARE byte positions), locate the FIRST ``<body>`` / LAST ``</body>``
-    markers exactly as :func:`extract_text` does, and emit
-
-        text_length = total_bytes - prefix_bytes - tail_bytes - 12
-
-    NULL on malformed pages under the *identical* condition as
-    ``extract_text`` (marker presence/order is view-independent: ASCII
-    subsequences survive both decodings). Equality with
-    ``octet_length(extract_text(...))`` holds whenever the body bytes are
-    valid UTF-8 — the crawl contract (noise bytes live OUTSIDE the body
-    markers); a body with invalid UTF-8 would differ because the
-    materializing path re-encodes U+FFFD replacements (3 bytes each). The
-    parity test pins the equality corpus-wide.
-
-    Measured ~3.4x faster than the materializing path at local[32]
-    (12.2 s vs 41.2 s over 30 M pages): still touches every payload byte
-    (decode + marker scans) but skips the body copy and the UTF-8
-    re-encode. This is the path the ingest bench and any length-only
-    rollup should use; text-consuming operators (sha, dedup, langid) keep
-    :func:`extract_text`.
-    """
-    cols = [c for c in pages.columns if c != html_col]
-    staged = (
-        pages.withColumn("_x_s", F.decode(F.col(html_col), "ISO-8859-1"))
-        .withColumn("_x_lp", F.length(F.substring_index("_x_s", BODY_OPEN.decode(), 1)))
-        .withColumn("_x_lt", F.length(F.substring_index("_x_s", BODY_CLOSE.decode(), -1)))
-        .withColumn("_x_ls", F.length("_x_s"))
+        pages.withColumn("_x_lp", F.octet_length(F.substring_index(view, BODY_OPEN.decode(), 1)))
+        .withColumn("_x_lt", F.octet_length(F.substring_index(view, BODY_CLOSE.decode(), -1)))
+        .withColumn("_x_ls", F.octet_length(html))
     )
     lp, lt, ls = F.col("_x_lp"), F.col("_x_lt"), F.col("_x_ls")
     body_len = ls - lp - lt - F.lit(len(BODY_OPEN) + len(BODY_CLOSE))
     ok = (lp < ls) & (lt < ls) & (body_len >= 0)
-    return staged.select(
-        *cols,
-        F.when(ok, body_len.cast("long")).otherwise(F.lit(None).cast("long")).alias(out_col),
-    )
+    body = F.col("_x_b")
+    text = F.when(F.is_valid_utf8(body), body.cast("string")).otherwise(F.decode(body, "UTF-8"))
+    return staged.withColumn(
+        "_x_b", F.when(ok, F.substring(html, lp + F.lit(len(BODY_OPEN) + 1), body_len))
+    ).select(*cols, text.alias(out_col))
 
 
 def extract_text_arrow(
@@ -196,7 +155,7 @@ def extract_text_arrow(
             texts = []
             for h in raw:
                 b = extract_text_bytes(bytes(h) if h is not None else None)
-                texts.append(b.decode("utf-8", errors="replace") if b is not None else None)
+                texts.append(b.decode("utf-8", errors=JVM_REPLACE) if b is not None else None)
             out = pdf[keep_cols].copy()
             out[out_col] = pd.Series(texts, index=pdf.index, dtype="object")
             yield out

@@ -38,16 +38,3 @@ def pages_to_obs_extracted(pages: DataFrame) -> DataFrame:
 
     return pages_to_obs(extract_text(pages), text_col="extracted_text")
 
-
-def pages_to_obs_lengths(pages: DataFrame) -> DataFrame:
-    """Length-only stage 1: obs(url, warc_ts, text_length, lang) straight
-    from the raw payload via :func:`operators.extract.extract_text_length`
-    — no body materialization, no sha. The hand-done projection pushdown
-    for rollups that aggregate ``text_length`` only (the headline ingest
-    bench); provably equal to
-    ``pages_to_obs_extracted(pages).drop("text_sha")`` on valid-UTF8
-    bodies (parity-tested). Use ``pages_to_obs_extracted`` when the stored
-    obs table must carry ``text_sha`` (byte-identity invariant)."""
-    from mintpy_spark.operators.extract import extract_text_length
-
-    return extract_text_length(pages).select("url", "warc_ts", "text_length", "lang")

@@ -4,10 +4,90 @@ contract (utils/readfile.py:319-388 returns stored values unaltered)."""
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import functions as F
 
 from mintpy_spark.datagen import gen_pages
-from mintpy_spark.operators.extract import extract_text, extract_text_bytes
+from mintpy_spark.operators.extract import (
+    BODY_CLOSE,
+    BODY_OPEN,
+    extract_text,
+    extract_text_arrow,
+    extract_text_bytes,
+)
+
+
+def whole_payload_decode(html_col: str = "html"):
+    """Reference extractor: decode the WHOLE payload as UTF-8 (malformed
+    sequences -> U+FFFD), then cut between the first ``<body>`` and the
+    last ``</body>`` with character arithmetic on ``substring_index``
+    prefixes/suffixes. NULL when malformed. ``extract_text`` must match it
+    byte for byte while decoding only the body."""
+    s = F.decode(F.col(html_col), "UTF-8")
+    ls = F.length(s)
+    lp = F.length(F.substring_index(s, BODY_OPEN.decode(), 1))
+    lt = F.length(F.substring_index(s, BODY_CLOSE.decode(), -1))
+    body_len = ls - lp - lt - F.lit(len(BODY_OPEN) + len(BODY_CLOSE))
+    body = F.substring(s, lp + F.lit(len(BODY_OPEN) + 1), F.greatest(body_len, F.lit(0)))
+    ok = (lp < ls) & (lt < ls) & (body_len >= 0)
+    return F.when(ok, body)
+
+
+# Byte fragments that stress the decoders: encoded surrogates (whole,
+# truncated), overlongs, 5- and 6-byte leads, truncated multi-byte
+# sequences, stray continuations, BOM-like noise, valid multi-byte text
+# and marker look-alikes.
+_INVALID = [
+    b"\xed\xa0\x80", b"\xed\xbf\xbf", b"\xed\xa0", b"\xed\xbf\x41",
+    b"\xc0\xaf", b"\xc1\xbf", b"\xe0\x80\xaf", b"\xf0\x80\x80\xaf",
+    b"\xf8\x88\x80\x80\x80", b"\xfc\x84\x80\x80\x80\x80",
+    b"\xe2\x82", b"\xf0\x9f\x98", b"\xf4\x90\x80\x80", b"\x80", b"\xbf",
+    b"\xff", b"\xfe", b"\xff\xfe",
+]
+_VALID = [v.encode() for v in ("é", "✓", "😀", "ü", "€", "abc", " ", "<", "<bod", "/body>")]
+
+
+def _fragments(rng: random.Random, n: int, pool: list[bytes]) -> bytes:
+    return b"".join(rng.choice(pool) for _ in range(n))
+
+
+def adversarial_payloads(n: int, seed: int) -> list[tuple[int, bytes | None]]:
+    """``n`` seeded random payloads (every one with a body; a third with
+    invalid bytes at both body boundaries) after the hand-picked edge
+    cases."""
+    fixed = [
+        None,
+        b"",
+        b"</body><body>",
+        b"<body>",
+        b"</body>",
+        b"<body></body>",
+        b"<body>a<body>b</body>c</body>",
+        b"<body>\xe2\x82</body>",
+        b"<body>\xf0\x9f\x98</body>",
+        b"<body>\xed\xa0</body>",
+        b"<body>\x80abc</body>",
+        b"<body>\xbf\xbf</body>",
+        b"<body>\xed\xa0\x80</body>",
+        b"<body>\xed\xa0\x80\xed\xb0\x80</body>",
+        b"<body>\xc0\xaf\xe0\x80\xaf\xf0\x80\x80\xaf</body>",
+        b"<body>\xf8\x88\x80\x80\x80\xfc\x84\x80\x80\x80\x80</body>",
+        b"\xff\xfe<body>ok</body>\xff\xfe",
+        b"\xe2<body>\xed</body>\x82",
+        b"\xf0\x9f<body>x</body>",
+    ]
+    rng = random.Random(seed)
+    pool = _INVALID + _VALID * 2
+    rows = list(fixed)
+    for i in range(n):
+        pre = _fragments(rng, rng.randint(0, 4), _INVALID + _VALID + [BODY_CLOSE])
+        post = _fragments(rng, rng.randint(0, 4), _INVALID + _VALID + [BODY_OPEN])
+        body = _fragments(rng, rng.randint(0, 8), pool + [BODY_OPEN, BODY_CLOSE])
+        if i % 3 == 0:
+            body = rng.choice(_INVALID) + body + rng.choice(_INVALID)
+        rows.append(pre + BODY_OPEN + body + BODY_CLOSE + post)
+    return list(enumerate(rows))
 
 
 def test_extract_bytes_roundtrip_unit():
@@ -48,8 +128,6 @@ def test_extract_drops_html_column(spark):
 
 
 def test_jvm_and_arrow_extractors_agree(spark):
-    from mintpy_spark.operators.extract import extract_text_arrow
-
     pages = gen_pages(spark, num_urls=40)
     jvm = extract_text(pages).select("url", "warc_ts", "extracted_text")
     arrow = extract_text_arrow(pages).select(
@@ -60,32 +138,10 @@ def test_jvm_and_arrow_extractors_agree(spark):
     assert j.where(F.col("extracted_text") != F.col("arrow_text")).count() == 0
 
 
-def test_length_pruned_path_matches_materializing_path(spark):
-    """extract_text_length == octet_length(extract_text) row-for-row on
-    the correctness corpus — the equality that lets the ingest bench skip
-    the body copy."""
-    from mintpy_spark.operators.extract import extract_text, extract_text_length
-
-    pages = gen_pages(spark, num_urls=80)
-    slow = extract_text(pages).select(
-        "url", "warc_ts", F.octet_length("extracted_text").cast("long").alias("slow_len")
-    )
-    fast = extract_text_length(pages).select("url", "warc_ts", "text_length")
-    j = slow.join(fast, ["url", "warc_ts"])
-    assert j.count() > 0
-    assert (
-        j.where(
-            ~(F.col("slow_len").eqNullSafe(F.col("text_length")))
-        ).count()
-        == 0
-    )
-
-
-def test_length_pruned_path_null_semantics(spark):
-    """Malformed pages NULL out under the identical condition as
-    extract_text (marker presence/order is decode-view-independent)."""
-    from mintpy_spark.operators.extract import extract_text_length
-
+def test_extracted_length_null_semantics(spark):
+    """octet_length(extract_text(...)) NULLs out exactly on malformed
+    pages (no body, close before open, NULL payload) and counts body
+    bytes otherwise."""
     rows = [
         (1, b"<html><body>plain ascii</body></html>"),
         (2, b"<html>\xff\xfe<body>" + "ünïcode ✓".encode() + b"</body>\x80</html>"),
@@ -96,7 +152,12 @@ def test_length_pruned_path_null_semantics(spark):
         (7, None),
     ]
     df = spark.createDataFrame(rows, "id long, html binary")
-    got = {r.id: r.text_length for r in extract_text_length(df).collect()}
+    got = {
+        r.id: r.text_length
+        for r in extract_text(df).select(
+            "id", F.octet_length("extracted_text").alias("text_length")
+        ).collect()
+    }
     assert got[1] == len(b"plain ascii")
     assert got[2] == len("ünïcode ✓".encode())
     assert got[3] is None and got[4] is None and got[7] is None
@@ -104,14 +165,22 @@ def test_length_pruned_path_null_semantics(spark):
     assert got[6] == 0
 
 
-def test_obs_lengths_matches_obs_extracted(spark):
-    from mintpy_spark.operators.observe import pages_to_obs_extracted, pages_to_obs_lengths
+def test_extractors_agree_bytewise_on_adversarial_payloads(spark):
+    """extract_text == extract_text_arrow == whole_payload_decode, byte
+    for byte (hex of the UTF-8 output, NULLs included), on seeded payloads
+    full of invalid UTF-8 inside and around the body."""
+    df = spark.createDataFrame(adversarial_payloads(3000, seed=5), "id long, html binary")
 
-    pages = gen_pages(spark, num_urls=50)
-    a = pages_to_obs_extracted(pages).drop("text_sha")
-    b = pages_to_obs_lengths(pages)
-    assert a.columns == b.columns
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    def hexed(frame):
+        return frame.select("id", F.hex(F.col("extracted_text").cast("binary")).alias("h"))
+
+    jvm = hexed(extract_text(df))
+    arrow = hexed(extract_text_arrow(df))
+    ref = hexed(df.select("id", whole_payload_decode().alias("extracted_text")))
+    assert ref.count() == df.count()
+    assert ref.where(F.col("h").isNull()).count() == 5
+    for got in (jvm, arrow):
+        assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
 
 
 def test_jvm_extractor_malformed_and_unicode(spark):

@@ -1,10 +1,10 @@
 #!/usr/bin/env bash
-# One-command verification gate: full pytest suite, the ingest and serve
-# benchmarks' smoke self-tests (their output checks: text_sha == sha1(text),
-# cnt/vsum per tier, n over blocks; stored tiers == build_tiers, streaming
-# Kalman levels == batch kalman_level, 0 rows dropped), then the
-# full-registry oracle sweep at sf0.01 (--fast: only the five streaming
-# sequential folds' *_realtime_check queries).
+# One-command verification gate: full pytest suite, the cascade, ingest and
+# serve benchmarks' smoke self-tests (their output checks: sum(cnt) at 30d ==
+# pages; text_sha == sha1(text), cnt/vsum per tier, n over blocks; stored
+# tiers == build_tiers, streaming Kalman levels == batch kalman_level, 0 rows
+# dropped), then the full-registry oracle sweep at sf0.01 (--fast: only the
+# five streaming sequential folds' *_realtime_check queries).
 # Run before stamping closing numbers in BASELINE.md — "N/N green" claims
 # must cite this script's output.
 #
@@ -15,6 +15,9 @@ cd "$(dirname "$0")/.."
 
 echo "== pytest =="
 python -m pytest tests/ -q
+
+echo "== cascade benchmark self-test (smoke) =="
+python3 perfbench/selftest.py cascade
 
 echo "== ingest benchmark self-test (smoke) =="
 python3 perfbench/selftest.py ingest
