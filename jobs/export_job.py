@@ -15,8 +15,9 @@ Deployment (north_rule):
 Stages (plans/export_pipeline.py): exact dedup + Gopher quality +
 benchmark decontamination -> MinHash near-dup keeper resolution ->
 next-fit sequence packing -> deterministic shard assignment. Every
-stage writes partition-atomically with per-partition lineage rows, so
-re-submitting with the same --run-id/--output resumes mid-stage.
+stage commits its partitions with one manifest rename and records
+per-partition lineage rows, so re-submitting with the same
+--run-id/--output resumes mid-stage.
 """
 
 from __future__ import annotations
@@ -54,6 +55,7 @@ def main(argv: list[str] | None = None) -> None:
 
     from mintpy_spark.plans.export_pipeline import run_export
     from mintpy_spark.session import apply_engine_conf
+    from mintpy_spark.sources.iceberg import open_table_store
 
     spark = apply_engine_conf(
         SparkSession.builder.appName("mintpy_spark_export").getOrCreate()
@@ -76,7 +78,9 @@ def main(argv: list[str] | None = None) -> None:
         n_shards=args.shards,
         quality_flags=qflags,
     )
-    counts = {k: df.count() for k, df in out.items()}
+    # committed row counts, from the store's metadata: no Spark job
+    store = open_table_store(spark, args.output)
+    counts = {k: store.rows(k) for k in out}
     print(json.dumps({
         "run_id": args.run_id,
         "rows": counts,

@@ -9,8 +9,8 @@ filtered levels, (key, rn, ts, level), to the output table.
 The per-key state (last_ts_us, rn, m, p) lives in a versioned table
 under ``<checkpoint>/kalman_state``, outside Spark's own ``state/``
 subdirectory, and each micro-batch is one foreachBatch fold on the
-sorted-group seam, committed with the tier store's ``_commits`` marker
-protocol. It replaced an applyInPandasWithState twin whose per-key
+sorted-group seam, committed as one manifest-committed version of the
+engine's table store (sources/tables.py). It replaced an applyInPandasWithState twin whose per-key
 frames and GroupState round trip cost about 4.2 ms of Python worker CPU
 per touched key and batch (a 2 000-row delta over 2 000 keys: ~10 CPU s).
 

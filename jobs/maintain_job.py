@@ -19,10 +19,10 @@ Deployment (north_rule):
         --checkpoint /path/to/stream_ckpt
 
 Re-running after a crash is safe: the stream checkpoint replays the
-unconsumed files; the fold is idempotent (versioned snapshots + atomic
-commit markers — a replayed committed batch is skipped, a crashed one is
-recomputed from the last committed version). --store and --checkpoint are
-a PAIR: batch ids from the checkpoint drive the store's version numbers,
+unconsumed files; the fold is idempotent (one manifest-committed store
+version per batch — a replayed committed batch is skipped, a crashed one
+is recomputed from the last committed version). --store and --checkpoint
+are a PAIR: batch ids from the checkpoint drive the store's version numbers,
 so never point a fresh checkpoint at an existing store.
 """
 
@@ -70,7 +70,8 @@ def main(argv: list[str] | None = None) -> None:
     if m.committed_version(spark) is None:
         rows = {}
     else:
-        rows = {t: m.read_tier(spark, t).count() for t in m.tiers}
+        # committed row counts, from the store's manifest: no Spark job
+        rows = {t: m.store.rows(m.table(t)) for t in m.tiers}
     print(json.dumps({"wall_sec": round(time.time() - t0, 2), "tier_rows": rows}))
     spark.stop()
 

@@ -67,9 +67,9 @@ def main(argv: list[str] | None = None) -> None:
     t_start = time.time()
     m = TierMaintainer(args.store, value_col=args.value_col,
                        key=args.key, ts=args.ts)
-    tiers = {
-        t: m.read_tier(spark, t, version=args.version) for t in m.tiers
-    }
+    # one version for every tier: a fold committing meanwhile cannot mix two
+    version = args.version if args.version is not None else m.committed_version(spark)
+    tiers = {t: m.read_tier(spark, t, version=version) for t in m.tiers}
     if args.tail:
         tail = spark.read.parquet(args.tail)
     else:
@@ -136,8 +136,7 @@ def main(argv: list[str] | None = None) -> None:
     ).first()
     print(json.dumps({
         "t0": args.t0, "t1": args.t1,
-        "version": args.version if args.version is not None
-        else m.committed_version(spark),
+        "version": version,
         "cover": [list(c) for c in cover],
         "n_keys": n_keys,
         "total_obs": int(stats["total_obs"] or 0),

@@ -13,10 +13,10 @@ Deployment (north_rule):
         --run-id run42 [--buckets 256] [--resume]
 
 The job is the checkpointed pipeline (plans/pipeline.py): every stage
-writes partition-atomically and commits per-partition lineage + row counts
-to the checkpoint table, so re-submitting with the same --run-id/--output
-after a mid-tier failure resumes exactly where it stopped (the
-run_or_skip analog, reference utils/utils1.py:691).
+commits its partitions with one manifest rename and records per-partition
+lineage + row counts in the checkpoint table, so re-submitting with the
+same --run-id/--output after a mid-tier failure resumes exactly where it
+stopped (the run_or_skip analog, reference utils/utils1.py:691).
 
 Sandbox note: with no cluster manager available this runs under
 ``--master local[N]``; everything else (partitioning, checkpointing,
@@ -47,6 +47,7 @@ def main(argv: list[str] | None = None) -> None:
 
     from mintpy_spark.plans.pipeline import run_pipeline
     from mintpy_spark.session import apply_engine_conf
+    from mintpy_spark.sources.iceberg import open_table_store
 
     spark = apply_engine_conf(
         SparkSession.builder.appName("mintpy_spark_rollup").getOrCreate()
@@ -69,7 +70,9 @@ def main(argv: list[str] | None = None) -> None:
         buckets=args.buckets,
         value_col=args.value_col,
     )
-    stats = {name: df.count() for name, df in out.items()}
+    # committed row counts, from the store's metadata: no Spark job
+    store = open_table_store(spark, args.output)
+    stats = {name: store.rows(name) for name in out}
     print(json.dumps({
         "run_id": args.run_id,
         "wall_sec": round(time.time() - t0, 2),

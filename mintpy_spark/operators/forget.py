@@ -9,11 +9,19 @@ The pipeline's tables are hash-bucketed on the series key
 (``with_part_id``: part_id = pmod(xxhash64(key), buckets),
 sources/tables.py), so a key's rows live in exactly ONE partition per
 table. Erasure therefore touches |keys' buckets| partitions per table:
-each affected partition is re-read (partition-pruned scan), filtered,
-and atomically re-published via the same rename protocol as the
-pipeline writes — unaffected partitions are never opened, which is the
-whole point at 10^12 rows. A partition whose rows are ALL erased is
-deleted outright (write_partitions only republishes non-empty ones).
+each affected partition is re-read (the manifest's files of those
+partitions only), filtered, and staged as new files; unaffected
+partitions are never opened, which is the whole point at 10^12 rows.
+
+Crash safety: ONE manifest rename (the store's commit) then replaces the
+touched partitions of every table at once, so a reader sees the store
+before the erasure or after it, never a table erased and another not. A
+partition whose rows are ALL erased is dropped by that same commit. The
+manifest entries of untouched partitions are carried over unchanged; the
+replaced files are deleted by the store's expiry, once no retained
+version lists them. A run killed before the rename erases nothing and a
+rerun redoes it; one killed after it has erased everything, and a rerun
+finds nothing left to erase.
 
 Every touched partition gets a lineage row (stage, part_id, op=forget,
 row_count AFTER erasure) in the same checkpoint table the pipeline
@@ -22,15 +30,13 @@ uses, so an auditor can reconstruct what was erased when.
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mintpy_spark.plans.checkpoint import CheckpointTable
-from mintpy_spark.sources.tables import TableStore
+from mintpy_spark.sources.tables import TableStore, part_rows
 
 #: table -> series-key column for the rollup pipeline's layout
 PIPELINE_KEY_COLS = {
@@ -70,42 +76,40 @@ def forget_keys(
     tables = dict(tables or PIPELINE_KEY_COLS)
     parts = affected_parts(spark, keys, buckets)
     removed: dict[str, int] = {}
+    commit: dict[str, dict] = {}
+    lineage = []
     for table, key_col in tables.items():
         if not store.exists(table):
             continue
+        removed[table] = 0
         present = sorted(set(parts) & set(store.partitions(table)))
         if not present:
-            removed[table] = 0
             continue
         df = store.read(spark, table).where(F.col("part_id").isin(present))
-        before = df.count()
-        kept = df.where(~F.col(key_col).isin(list(keys)))
-        after = kept.count()
-        if after == before:  # nothing to erase here: leave bytes untouched
-            removed[table] = 0
+        erased = df.where(F.col(key_col).isin(list(keys))).count()
+        if not erased:  # nothing to erase here: leave bytes untouched
             continue
-        written = store.write_partitions(kept, table)
-        # a partition whose rows were all erased is republished by
-        # DELETION (write_partitions only renames non-empty dirs)
-        for p in set(present) - set(written):
-            shutil.rmtree(
-                os.path.join(store.path(table), f"part_id={p}"),
-                ignore_errors=True,
-            )
-        removed[table] = before - after
+        staged = store.stage(
+            df.where(~F.col(key_col).isin(list(keys))), table, "part_id"
+        )
+        commit[table] = store.replaced(table, staged, present)
+        removed[table] = erased
+        written = part_rows(staged)
+        lineage += [
+            {
+                "run_id": run_id,
+                "stage": table,
+                "part_id": int(p),
+                "input_fp": "forget",
+                "row_count": int(written.get(p, 0)),
+                "wall_ms": 0,
+                "status": "forgotten",
+            }
+            for p in present
+        ]
+    if commit:
+        store.commit(commit)
+        store.expire()
         if ckpt is not None:
-            ckpt.append(
-                [
-                    {
-                        "run_id": run_id,
-                        "stage": table,
-                        "part_id": int(p),
-                        "input_fp": "forget",
-                        "row_count": int(written.get(p, 0)),
-                        "wall_ms": 0,
-                        "status": "forgotten",
-                    }
-                    for p in present
-                ]
-            )
+            ckpt.append(lineage)
     return removed

@@ -123,8 +123,11 @@ def compact_raw(
     the old directory is renamed to ``<raw>.__old``, tmp renamed into
     place, old removed.  A crash between the two renames leaves
     ``.__old`` intact — recovery is renaming it back; the tier store is
-    never touched.  The compaction is recorded in the maintainer's
-    lineage metrics table (north-rule checkpoint discipline).
+    never touched.  The raw input is a plain Parquet directory on any
+    Hadoop filesystem, not a table of the engine's store, so this swap
+    stays outside the store's manifest commit.  The compaction is
+    recorded in the maintainer's lineage metrics table (north-rule
+    checkpoint discipline).
     """
     from mintpy_spark.functions.timefn import TIER_SECONDS, iso_to_epoch_sec
 
@@ -209,9 +212,9 @@ def compact_raw(
     # row count from the just-written parquet footers — not a dedicated
     # kept.count() action that re-scans the full raw table a 4th time
     kept_cnt = spark.read.parquet(tmp).count()
-    fs, raw_p = maintainer._fs(spark, raw_path)
-    _, tmp_p = maintainer._fs(spark, tmp)
-    _, old_p = maintainer._fs(spark, old)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    raw_p, tmp_p, old_p = hpath(raw_path), hpath(tmp), hpath(old)
+    fs = raw_p.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(old_p):
         fs.delete(old_p, True)
     fs.rename(raw_p, old_p)

@@ -14,7 +14,10 @@ entry automatically, exactly like the reference's config-attr comparison.
 Storage is a directory of small parquet files (one per commit, written
 atomically via temp+rename) — driver-side pyarrow, no Spark job needed for
 metadata. At cluster scale this becomes an Iceberg table; the API is the
-seam.
+seam. It stays outside the manifest-committed table store
+(sources/tables.py): each append is its own file rename, so a
+writer killed between a store commit and its lineage append leaves that
+commit unrecorded, and a resumed pipeline recomputes it.
 """
 
 from __future__ import annotations

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from mintpy_spark.plans.checkpoint import CheckpointTable
 from mintpy_spark.plans.pipeline import run_stage
-from mintpy_spark.sources.tables import TableStore
+from mintpy_spark.sources.iceberg import open_table_store
 
 
 def clean_docs(
@@ -128,14 +128,14 @@ def run_export(
     val_pct: int = 10,
     quality_flags: tuple[str, ...] | None = None,
 ) -> dict[str, DataFrame]:
-    """documents -> clean -> kept -> packed -> shards, each stage written
-    partition-atomically with lineage rows; re-running with the same
+    """documents -> clean -> kept -> packed -> shards, each stage committed
+    by one manifest rename of the table store, with lineage rows; re-running with the same
     run_id/root resumes at the first incomplete partition."""
     from mintpy_spark.operators.packing import pack_next_fit
     from mintpy_spark.operators.sampling import stable_bucket, with_split
     from mintpy_spark.sources.tables import with_part_id
 
-    store = TableStore(root)
+    store = open_table_store(spark, root)
     ckpt = CheckpointTable(f"{root}/_checkpoint")
     out: dict[str, DataFrame] = {}
     fp = config_fp

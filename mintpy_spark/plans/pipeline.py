@@ -13,15 +13,20 @@ Execution contract per stage:
   already carries ``part_id`` (stable hash(key) % B bucketing),
 * run_stage() consults the checkpoint table: partitions already complete
   for this (stage, input_fp) are **not recomputed** — the input is filtered
-  to the missing buckets only, written partition-atomically, and each
-  written partition's row count is committed to the checkpoint. The
-  counts are what ``TableStore.write_partitions`` returns, summed from the
-  Parquet footers of the files it just staged: counting a stage costs no
-  second read of its output,
-* a run killed mid-stage therefore resumes exactly where it stopped
-  (partition rename is atomic; un-renamed partitions are recomputed),
-  mirroring the reference's partial-write detection
-  (ifgram_inversion.py:48-55) at partition rather than file granularity.
+  to the missing buckets only, written as one partition overwrite of the
+  stage's table, and each written partition's row count is committed to
+  the checkpoint. The counts are what ``write_partitions`` returns, summed
+  from the Parquet footers of the files it just staged: counting a stage
+  costs no second read of its output. The stage's output is then read
+  back planned from the store's manifest, which costs no Spark job,
+* the store commits each stage write with one manifest rename
+  (``sources/tables.py``): a run killed before the rename leaves the
+  previous version of the table and no checkpoint rows, one killed after
+  it leaves the new version committed but unrecorded, and either way the
+  rerun recomputes exactly the partitions the checkpoint does not list
+  (tests/test_store_faults.py kills a stage at both points). This mirrors
+  the reference's partial-write detection (ifgram_inversion.py:48-55) at
+  partition rather than file granularity.
 
 input_fp is a config/upstream fingerprint: changing it invalidates every
 partition, like the reference's config-attr comparison (run_or_skip,
@@ -48,12 +53,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mintpy_spark.plans.checkpoint import CheckpointTable
-from mintpy_spark.sources.tables import TableStore, with_part_id
+from mintpy_spark.sources.iceberg import open_table_store
+from mintpy_spark.sources.tables import with_part_id
 
 
 def run_stage(
     spark: SparkSession,
-    store: TableStore,
+    store,
     ckpt: CheckpointTable,
     run_id: str,
     stage: str,
@@ -62,7 +68,8 @@ def run_stage(
     buckets: int = 32,
 ) -> DataFrame:
     """Execute one stage with per-partition skip/resume; returns the full
-    stage output (reading back what exists on disk)."""
+    stage output as ``store`` commits it (a ``TableStore`` or an
+    ``IcebergTableStore``)."""
     done = ckpt.complete_parts(stage, input_fp)
     missing = sorted(set(range(buckets)) - done)
     if missing:
@@ -106,7 +113,7 @@ def run_pipeline(
     from mintpy_spark.operators.rollup import cascade, rollup_from_obs
     from mintpy_spark.operators.timefunc import linear_velocity
 
-    store = TableStore(root)
+    store = open_table_store(spark, root)
     ckpt = CheckpointTable(f"{root}/_checkpoint")
     out: dict[str, DataFrame] = {}
 

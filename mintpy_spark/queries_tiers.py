@@ -9,8 +9,6 @@ from __future__ import annotations
 from mintpy_spark.functions.timefn import decimal_year
 from mintpy_spark.operators import dedup as D
 from mintpy_spark.queries import _DY_SQL, _q, _round4, load
-from mintpy_spark.queries import _q, load
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 import numpy as np
@@ -316,8 +314,8 @@ def props_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tier_realtime_read_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming-maintenance path under an oracle: fold the events table
     into stored tier versions in TWO micro-batches via
-    TierMaintainer.apply_delta (the foreachBatch body: versioned write +
-    atomic commit marker + incremental cascade refresh), leave the last
+    TierMaintainer.apply_delta (the foreachBatch body: incremental cascade
+    refresh + one manifest-committed store version per batch), leave the last
     third of days UNFOLDED, then answer through read_realtime — committed
     1d partials unioned with an on-the-fly aggregation of the tail,
     merged partial-wise (TimescaleDB materialized_only=false semantics).
@@ -1147,7 +1145,7 @@ def checkpoint_lineage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 """Round-4 batch l: the streaming near-dup INDEX under the driver
 oracle — the dedup sibling of tier_realtime_read_check (queries_r4a.py).
 The documents table is folded into DedupIndexMaintainer in two
-micro-batches (signature shard + atomic commit marker per batch,
+micro-batches (signature shard + pairs appended by one manifest commit per batch,
 new-vs-new and new-vs-stored band probes, shared signature_verify
 estimator); the union of emitted pairs must equal the one-shot batch
 operator, whose generated SQL oracle (operators/dedup.minhash_oracle_sql)

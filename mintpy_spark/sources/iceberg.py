@@ -2,10 +2,10 @@
 
 The north rule names Iceberg as the table format for the 10^12-document
 corpus. The sandbox has no Iceberg runtime jar, so the engine ships a
-faithful file-backed stand-in (tables.py: atomic per-partition renames;
-snapshots.py: manifest commits, time travel, MERGE, compaction). This
-module is the REAL adapter behind the same narrow contract, so the swap
-is configuration, not code:
+file-backed stand-in (tables.py: immutable data files committed by one
+atomic manifest rename, reads planned from the manifest, time travel over
+the retained versions, expiry). This module is the REAL adapter behind the
+same narrow contract, so the swap is configuration, not code:
 
     store = open_table_store(spark, root)   # Iceberg iff the jar is on
                                             # the classpath, else parquet
@@ -23,13 +23,18 @@ full read/write/time-travel path whenever a jar IS present and skips
 otherwise):
 
     write_partitions  <- df.writeTo(t).overwritePartitions()   (dynamic,
-                         same semantics as tables.py's per-dir rename)
+                         one snapshot commit, as tables.py's manifest)
     partitions        <- SELECT partition.{col} FROM t.partitions
     read              <- spark.table(t)
+    rows              <- SELECT sum(record_count) FROM t.files
     versions          <- SELECT snapshot_id FROM t.snapshots
     read_version      <- spark.read.option('snapshot-id', v)   (time travel)
-    upsert            <- MERGE INTO (snapshots.py:119 analog)
-    expire            <- CALL system.expire_snapshots (snapshots.py:167)
+    upsert            <- MERGE INTO
+    expire            <- CALL system.expire_snapshots (tables.py's expire)
+
+Crash safety is the table format's: every write below is one snapshot
+commit, atomic and serializable, so a reader sees the snapshot before a
+killed write or the one after it.
 
 Reference analog: MintPy keeps its stack in writable HDF5 with dataset-
 level overwrite (writefile.py:late layout_hdf5 / ifgram_inversion.py:48-55
@@ -64,7 +69,7 @@ def catalog_configured(spark: SparkSession, catalog: str = "local") -> bool:
 
 
 class IcebergTableStore:
-    """Same narrow surface as tables.TableStore + snapshots.SnapshotStore,
+    """Same narrow surface as tables.TableStore, plus MERGE and rollback,
     over a configured Iceberg catalog. All operations are table-format
     commits — atomic, serializable, resume-safe by construction."""
 
@@ -110,11 +115,10 @@ class IcebergTableStore:
     ) -> dict[int, int]:
         """Dynamic partition overwrite: partitions present in ``df`` are
         replaced atomically in ONE snapshot commit; others untouched —
-        exactly tables.py's per-directory rename semantics, minus the
-        window where some renames have landed and others haven't.
-        Returns {partition id: rows written}, read from the record counts
-        of the data files that commit added (the manifest analog of
-        tables.py's Parquet footers), so ``df`` is not recomputed."""
+        tables.py's manifest commit semantics. Returns {partition id: rows
+        written}, read from the record counts of the data files that
+        commit added (tables.py reads the same counts from its staged
+        files' footers), so ``df`` is not recomputed."""
         q = self.qualified(table)
         if not self.exists(table):
             df.writeTo(q).partitionedBy(F.col(col)).create()
@@ -134,7 +138,16 @@ class IcebergTableStore:
     def drop(self, table: str) -> None:
         self.spark.sql(f"DROP TABLE IF EXISTS {self.qualified(table)}")
 
-    # -- SnapshotStore contract (time travel / MERGE / retention) --------
+    def rows(self, table: str) -> int:
+        """Committed rows, from the data files' record counts."""
+        if not self.exists(table):
+            return 0
+        n = self.spark.sql(
+            f"SELECT sum(record_count) AS n FROM {self.qualified(table)}.files"
+        ).first()["n"]
+        return int(n or 0)
+
+    # -- snapshots (time travel / MERGE / retention) --------------------
     def versions(self, table: str) -> list[int]:
         rows = self.spark.sql(
             f"SELECT snapshot_id FROM {self.qualified(table)}.snapshots "
@@ -160,8 +173,7 @@ class IcebergTableStore:
         )
 
     def upsert(self, df: DataFrame, table: str, keys: list[str]) -> None:
-        """MERGE INTO on ``keys``: update matched rows, insert new ones —
-        the tier-refresh write path (snapshots.py:119 twin)."""
+        """MERGE INTO on ``keys``: update matched rows, insert new ones."""
         q = self.qualified(table)
         if not self.exists(table):
             df.writeTo(q).create()

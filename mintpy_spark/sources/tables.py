@@ -1,89 +1,298 @@
-"""Partitioned-table store with partition-level overwrite.
+"""The engine's table store: Parquet tables committed by manifest.
 
-The production design is Iceberg (`df.writeTo(t).overwritePartitions()`,
-snapshot ids as input fingerprints — SURVEY.md §1.3). The sandbox has no
-Iceberg runtime jar, so this wrapper exposes the same narrow API over
-hive-partitioned Parquet directories; swapping the backend touches only
-this module.
+The production design is Iceberg (``sources/iceberg.py`` exposes the same
+narrow API, and ``open_table_store`` picks the backend). This module is the
+local-filesystem stand-in, and the one commit protocol of every table the
+engine writes with Spark: the pipelines' stages, the maintained tiers and
+sketches, the sequential folds' state and staged output, the dedup index
+and forget's rewrites.
 
-Write protocol (crash-safe, mirrors the reference's partial-write detection
-ifgram_inversion.py:48-55): each partition directory is written to a temp
-dir then atomically renamed into place; a partition is visible iff its
-rename completed, so re-runs see exactly the completed partition set.
+Layout under ``root``::
+
+    <table>/[part_id=<p>/]part-*.parquet   immutable data files
+    _manifests/v<N>.json                   one manifest per committed version
+
+Write protocol (crash safety):
+
+* a write *stages* its rows: Spark appends them as new files, under unique
+  names, to the table's directory (``part_id=<p>/`` subdirectories for a
+  partitioned write). No manifest lists them yet, so no reader sees them,
+  and staging renames nothing;
+* one ``os.rename`` of ``_manifests/v<N>.json`` commits. The manifest holds,
+  per table, its schema and every data file with its ``part_id`` and its
+  footer row count. One commit may replace several tables (a tier fold's
+  three tiers, a sequential fold's state and output, forget's rewrites);
+  a partition overwrite lists the table's files minus those of the
+  replaced partitions, plus the new ones;
+* a crash before the rename leaves the previous version authoritative and
+  the staged files unreferenced; a crash after it leaves the new version
+  committed. A reader plans from one manifest and data files are never
+  rewritten, so it sees exactly one version: never a mix, never a gap;
+* ``expire`` keeps the newest manifests and deletes every data file in the
+  tables' directories that none of them lists: files a commit replaced and
+  files a crashed writer staged. A reader planned on an expired version
+  loses its files, so expiry keeps the previous version too.
+
+Reads are planned from the manifest: its schema and file list go to
+``spark.read.schema(..).parquet(*files)`` with ``basePath`` at the table
+directory, so a read lists no directory, infers no schema and discovers no
+partitions (above 32 files Spark checks the files in one listing job).
+
+One writer per store (the engine's writers are driver-scheduled).
+Partition values are integers. The store is local-filesystem only and
+refuses a ``://`` root, as ``CheckpointTable`` does; a cluster uses
+``IcebergTableStore``.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import shutil
+import re
 import uuid
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+_MANIFEST = re.compile(r"v(\d+)\.json")
+_INT32 = range(-(2**31), 2**31)
+
+
+def _data_files(table_dir: str) -> list[str]:
+    """Paths, relative to ``table_dir``, of the Parquet data files under it
+    (a crashed Spark write's ``_temporary`` directory is not searched)."""
+    out = []
+    for dirpath, dirs, files in os.walk(table_dir):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        out += [
+            os.path.relpath(os.path.join(dirpath, f), table_dir)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+    return out
+
+
+def part_rows(entry: dict) -> dict[int, int]:
+    """{partition id: rows} of a manifest entry, in partition order."""
+    out: dict[int, int] = {}
+    for f in entry["files"]:
+        out[f["part_id"]] = out.get(f["part_id"], 0) + f["rows"]
+    return dict(sorted(out.items()))
 
 
 class TableStore:
     def __init__(self, root: str):
+        if "://" in root:
+            raise NotImplementedError(
+                f"TableStore is the local-filesystem stand-in; got remote root "
+                f"{root!r} — use IcebergTableStore on a cluster (module docstring)"
+            )
         self.root = root
-        os.makedirs(root, exist_ok=True)
+        self._manifests = os.path.join(root, "_manifests")
+        os.makedirs(self._manifests, exist_ok=True)
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
+    # -- versions -----------------------------------------------------------
+    def versions(self) -> list[int]:
+        """Committed, still retained versions, oldest first. Only
+        ``v<digits>.json`` names count: a stray entry (``v6.json.bak``, an
+        unfinished ``.tmp`` manifest) is not a version."""
+        return sorted(
+            int(m.group(1))
+            for m in map(_MANIFEST.fullmatch, os.listdir(self._manifests))
+            if m
+        )
+
+    def latest(self) -> int | None:
+        vs = self.versions()
+        return vs[-1] if vs else None
+
+    def manifest(self, version: int | None = None) -> dict:
+        """The manifest of ``version`` (default: the latest; an empty one
+        before the first commit). A version that was never committed or
+        has expired raises FileNotFoundError."""
+        if version is None:
+            version = self.latest()
+            if version is None:
+                return {"version": None, "tables": {}}
+        with open(os.path.join(self._manifests, f"v{version}.json")) as fh:
+            return json.load(fh)
+
+    def entry(self, table: str, version: int | None = None) -> dict | None:
+        """``table``'s manifest entry, {"schema", "files": [{"path",
+        "part_id", "rows"}]}, or None when the version has no such table."""
+        return self.manifest(version)["tables"].get(table)
+
+    # -- the narrow contract (shared with IcebergTableStore) ----------------
     def exists(self, table: str) -> bool:
-        return os.path.isdir(self.path(table)) and bool(self.partitions(table))
+        e = self.entry(table)
+        return bool(e and e["files"])
 
     def partitions(self, table: str, col: str = "part_id") -> list[int]:
-        """Visible (completed) partition ids."""
-        p = self.path(table)
-        if not os.path.isdir(p):
-            return []
-        out = []
-        for d in os.listdir(p):
-            if d.startswith(f"{col}="):
-                out.append(int(d.split("=", 1)[1]))
-        return sorted(out)
+        """Committed partition ids."""
+        e = self.entry(table)
+        return sorted({f["part_id"] for f in e["files"]}) if e else []
+
+    def rows(self, table: str) -> int:
+        """Committed rows of ``table``, summed from its manifest entry."""
+        e = self.entry(table)
+        return sum(f["rows"] for f in e["files"]) if e else 0
 
     def write_partitions(
         self, df: DataFrame, table: str, col: str = "part_id"
     ) -> dict[int, int]:
-        """Write df (must contain ``col``) as one directory per partition,
-        atomically per partition. Returns {partition id: rows written},
-        summed from the Parquet footers of the staged files, so counting
-        what was written costs no Spark job."""
-        tmp = os.path.join(self.root, f"_tmp_{table.replace('/', '_')}_{uuid.uuid4().hex[:8]}")
-        try:
-            df.write.mode("overwrite").partitionBy(col).parquet(tmp)
-            dest = self.path(table)
-            os.makedirs(dest, exist_ok=True)
-            written = {}
-            for d in sorted(os.listdir(tmp)):
-                if not d.startswith(f"{col}="):
-                    continue
-                staged = os.path.join(tmp, d)
-                rows = sum(
-                    pq.ParquetFile(os.path.join(staged, f)).metadata.num_rows
-                    for f in os.listdir(staged)
-                    if f.endswith(".parquet") and not f.startswith(("_", "."))
-                )
-                target = os.path.join(dest, d)
-                if os.path.isdir(target):
-                    shutil.rmtree(target)  # partition overwrite
-                os.rename(staged, target)
-                written[int(d.split("=", 1)[1])] = rows
-        finally:
-            # a failed write leaves no staging directory behind
-            shutil.rmtree(tmp, ignore_errors=True)
-        return dict(sorted(written.items()))
+        """Overwrite the partitions ``df`` holds (``df`` must contain
+        ``col``) in one commit; other partitions are carried over. Returns
+        {partition id: rows written}, from the staged files' footers, so
+        counting what was written costs no Spark job."""
+        staged = self.stage(df, table, col)
+        written = part_rows(staged)
+        self.commit({table: self.replaced(table, staged, written)})
+        self.expire()
+        return written
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.option("basePath", self.path(table)).parquet(
-            self.path(table)
-        )
+        return self.read_version(spark, table, None)
 
     def drop(self, table: str) -> None:
-        shutil.rmtree(self.path(table), ignore_errors=True)
+        if self.entry(table) is not None:
+            self.commit({table: None})
+            self.expire()
+
+    # -- snapshots ------------------------------------------------------------
+    def read_version(
+        self, spark: SparkSession, table: str, version: int | None
+    ) -> DataFrame:
+        """``table`` as committed at ``version`` (None: the latest), planned
+        from the manifest: no listing, no inference, no discovery."""
+        e = self.entry(table, version)
+        if e is None:
+            raise FileNotFoundError(f"no table {table!r} in {self.root} at version {version}")
+        schema = StructType.fromJson(json.loads(e["schema"]))
+        if not e["files"]:
+            return spark.createDataFrame([], schema)
+        return (
+            spark.read.schema(schema)
+            .option("basePath", self.path(table))
+            .parquet(*[os.path.join(self.root, f["path"]) for f in e["files"]])
+        )
+
+    # -- the protocol's steps -------------------------------------------------
+    def stage(self, df: DataFrame, table: str, col: str | None = None) -> dict:
+        """Write ``df`` as new data files of ``table`` (partitioned by
+        ``col`` if given) and return the manifest entry of just those
+        files. They stay invisible until a commit lists them."""
+        dest = self.path(table)
+        before = set(_data_files(dest)) if os.path.isdir(dest) else set()
+        writer = df.write.mode("append")
+        (writer.partitionBy(col) if col else writer).parquet(dest)
+        files = []
+        for rel in sorted(set(_data_files(dest)) - before):
+            part = None
+            if col:
+                # the file's partition directory, as Spark names it
+                part = int(os.path.dirname(rel).split("=", 1)[1])
+            n = pq.ParquetFile(os.path.join(dest, rel)).metadata.num_rows
+            files.append({"path": os.path.join(table, rel), "part_id": part, "rows": n})
+        schema = df.schema
+        if col:
+            # the partition column reads last, typed as Spark infers it
+            fits = all(f["part_id"] in _INT32 for f in files)
+            schema = StructType(
+                [f for f in schema if f.name != col]
+                + [StructField(col, IntegerType() if fits else LongType())]
+            )
+        return {"schema": schema.json(), "files": files}
+
+    def appended(self, table: str, staged: dict) -> dict:
+        """``table``'s entry plus ``staged``'s files; columns that only the
+        staged files have are added to the schema (older files read them as
+        NULL)."""
+        old = self.entry(table)
+        if old is None:
+            return staged
+        schema = StructType.fromJson(json.loads(old["schema"]))
+        new = [f for f in StructType.fromJson(json.loads(staged["schema"]))
+               if f.name not in schema.names]
+        return {
+            "schema": StructType(list(schema) + new).json(),
+            "files": old["files"] + staged["files"],
+        }
+
+    def replaced(self, table: str, staged: dict, parts) -> dict:
+        """``table``'s entry with the partitions ``parts`` replaced by
+        ``staged``'s files."""
+        old = self.entry(table)
+        drop = set(parts)
+        kept = [f for f in old["files"] if f["part_id"] not in drop] if old else []
+        return {"schema": staged["schema"], "files": kept + staged["files"]}
+
+    def commit(self, tables: dict, version: int | None = None) -> int:
+        """Commit the latest version with each table in ``tables`` set to
+        its entry (None drops it), as ``version`` (default: the next one;
+        an explicit one may not precede the latest). One manifest rename is
+        the commit point."""
+        parent = self.manifest()
+        latest = parent["version"]
+        if version is None:
+            version = 1 if latest is None else latest + 1
+        elif latest is not None and version < latest:
+            raise ValueError(f"version {version} precedes the committed {latest}")
+        body = dict(parent["tables"])
+        for table, e in tables.items():
+            if e is None:
+                body.pop(table, None)
+            else:
+                body[table] = e
+        tmp = os.path.join(self._manifests, f".tmp-{uuid.uuid4().hex}.json")
+        with open(tmp, "w") as fh:
+            json.dump({"version": version, "tables": body}, fh)
+        os.rename(tmp, os.path.join(self._manifests, f"v{version}.json"))
+        return version
+
+    def expire(self, keep_last: int = 2) -> list[str]:
+        """Keep the newest ``keep_last`` manifests; delete the data files
+        (and their checksums) in any manifest's tables that no kept
+        manifest lists, then the older manifests and unfinished ``.tmp``
+        ones. Returns the deleted data files, store-relative."""
+        if keep_last < 1:
+            raise ValueError("expire must keep the latest version")
+        vs = self.versions()
+        live: set[str] = set()
+        tables: set[str] = set()
+        for i, v in enumerate(vs):
+            m = self.manifest(v)
+            tables.update(m["tables"])
+            if i >= len(vs) - keep_last:
+                live.update(f["path"] for e in m["tables"].values() for f in e["files"])
+        deleted = []
+        for table in sorted(tables):
+            for dirpath, _dirs, files in os.walk(self.path(table), topdown=False):
+                for name in files:
+                    rel = os.path.relpath(os.path.join(dirpath, name), self.root)
+                    if name.endswith(".parquet") and not name.startswith(("_", ".")):
+                        dead = rel not in live
+                    elif name.startswith(".") and name.endswith(".parquet.crc"):
+                        data = os.path.join(os.path.dirname(rel), name[1:-4])
+                        dead = data not in live or not os.path.exists(
+                            os.path.join(self.root, data))
+                    else:
+                        continue
+                    if dead:
+                        os.remove(os.path.join(dirpath, name))
+                        if name.endswith(".parquet"):
+                            deleted.append(rel)
+                if dirpath != self.path(table) and not os.listdir(dirpath):
+                    os.rmdir(dirpath)
+        for name in os.listdir(self._manifests):
+            m = _MANIFEST.fullmatch(name)
+            if (m and int(m.group(1)) in vs[:-keep_last]) or name.startswith(".tmp-"):
+                os.remove(os.path.join(self._manifests, name))
+        return sorted(deleted)
 
 
 def input_fingerprint(path: str) -> str:

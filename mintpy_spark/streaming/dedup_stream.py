@@ -17,12 +17,14 @@ batches equals `dedup.minhash_near_dups` run once over everything
 ingested — a pair is emitted exactly once, in the first batch where its
 later member arrives.
 
-Crash safety: same protocol as TierMaintainer — each batch writes its
-signature shard to ``sig/b{N}/`` then atomically creates the marker
-``_commits/b{N}``; a replayed committed batch is skipped outright; a
-crashed batch overwrites its orphan shard on replay. Readers (the probe
-join) only load committed shards, so a half-written shard is never
-probed. foreachBatch's at-least-once becomes exactly-once emission.
+Crash safety: the engine's table store (sources/tables.py), as for
+TierMaintainer — each batch stages its signature shard and its pairs as
+new files of the ``sig`` and ``pairs`` tables, then ONE manifest rename
+commits both appends as version N (the batch id). A replayed committed
+batch is skipped outright (``latest >= N``); a batch killed before the
+rename leaves its staged files unlisted, so the probe join never reads a
+half-written shard, and its replay stages them anew (``expire`` deletes
+the orphans). foreachBatch's at-least-once becomes exactly-once emission.
 
 Scale shape: per batch the probe join shuffles batch-band rows against
 the stored band projection — at 10^12 docs the index is bucketed on
@@ -48,6 +50,7 @@ from mintpy_spark.operators.dedup import (
     minhash_signatures,
     signature_verify,
 )
+from mintpy_spark.sources.tables import TableStore
 
 
 class DedupIndexMaintainer:
@@ -66,36 +69,17 @@ class DedupIndexMaintainer:
         self.text_col = text_col
         self.threshold = threshold
         self.num_perm = num_perm
+        self.store = TableStore(root)
 
-    # filesystem helpers (hadoop FS API — portable across Spark filesystems)
-    def _fs(self, spark: SparkSession, path: str):
-        p = spark._jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-    def committed_batches(self, spark: SparkSession) -> list[int]:
-        fs, p = self._fs(spark, f"{self.root}/_commits")
-        if not fs.exists(p):
-            return []
-        out = []
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("b"):
-                out.append(int(name[1:]))
-        return sorted(out)
-
-    def _commit(self, spark: SparkSession, batch_id: int) -> None:
-        fs, d = self._fs(spark, f"{self.root}/_commits")
-        fs.mkdirs(d)
-        _, marker = self._fs(spark, f"{self.root}/_commits/b{batch_id}")
-        fs.create(marker, True).close()
+    def committed_version(self, spark: SparkSession) -> int | None:
+        """The last committed batch id, or None."""
+        return self.store.latest()
 
     def stored_signatures(self, spark: SparkSession) -> DataFrame | None:
-        """Union of committed signature shards (None before first commit)."""
-        batches = self.committed_batches(spark)
-        if not batches:
+        """The committed signature index (None before the first shard)."""
+        if not self.store.exists("sig"):
             return None
-        paths = [f"{self.root}/sig/b{b}" for b in batches]
-        return spark.read.parquet(*paths)
+        return self.store.read(spark, "sig")
 
     def apply_batch(
         self, new_docs: DataFrame, batch_id: int = 0
@@ -104,7 +88,8 @@ class DedupIndexMaintainer:
         (doc_a < doc_b, est_jaccard >= threshold), or None for a replay
         of an already-committed batch."""
         spark = new_docs.sparkSession
-        if batch_id in self.committed_batches(spark):
+        committed = self.committed_version(spark)
+        if committed is not None and committed >= batch_id:
             return None
         sig_new = minhash_signatures(
             new_docs, self.id_col, self.text_col, self.num_perm
@@ -148,19 +133,19 @@ class DedupIndexMaintainer:
         pairs = signature_verify(
             cand, all_sigs, self.id_col, self.num_perm, self.threshold
         ).localCheckpoint(eager=True)
-        # shard write THEN marker: replay of a crashed batch overwrites
-        sig_new.write.mode("overwrite").parquet(f"{self.root}/sig/b{batch_id}")
-        pairs.write.mode("overwrite").parquet(f"{self.root}/pairs/b{batch_id}")
-        self._commit(spark, batch_id)
+        # stage both appends, then one commit as version ``batch_id``
+        self.store.commit(
+            {t: self.store.appended(t, self.store.stage(df, t))
+             for t, df in (("sig", sig_new), ("pairs", pairs))},
+            version=batch_id,
+        )
+        self.store.expire()
         return pairs
 
     def emitted_pairs(self, spark: SparkSession) -> DataFrame | None:
-        batches = self.committed_batches(spark)
-        if not batches:
+        if self.committed_version(spark) is None:
             return None
-        return spark.read.parquet(
-            *[f"{self.root}/pairs/b{b}" for b in batches]
-        )
+        return self.store.read(spark, "pairs")
 
     def foreach_batch(self):
         """writeStream.foreachBatch callable."""

@@ -3,15 +3,14 @@ presence bitmaps and per-day HLL registers, folded delta-wise.
 
 The interesting contrast with sketch_stream.py (HDR/CMS): those folds
 are additive — replaying a committed delta DOUBLE-counts, so the
-committed-version marker is load-bearing.  Presence bitmaps fold with
+committed-version guard is load-bearing.  Presence bitmaps fold with
 bit_or and HLL registers with MAX: both are associative, commutative
 AND idempotent, so a replayed delta is a NO-OP by algebra, not by
-bookkeeping.  The maintainer still runs under the same versioned
-atomic-commit protocol (atomic snapshot reads, time travel, GC), but
-the version guard is belt-and-braces here — and the test suite proves
-it by replaying a batch with the guard DISABLED and observing the same
-store.  At-least-once delivery is therefore safe end-to-end for this
-family even if the marker write itself is lost.
+bookkeeping.  The maintainer still runs TierMaintainer's fold (both
+tables staged and committed by ONE manifest rename per batch, snapshot
+reads, time travel, expiry), but the version guard is belt-and-braces
+here — and the test suite proves it by replaying a batch with the guard
+DISABLED and observing the same store.
 
 Scale: both stored tables are bounded — <= one row per (user, 60-day
 block) for presence (compressing day-level presence 60:1), <= 64
@@ -26,11 +25,10 @@ Reference analog: the nonzero/common-mask ALL-aggregate maintenance of
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from mintpy_spark.operators.bitmap import presence_merge, presence_tier
 from mintpy_spark.operators.sketch import hll_merge, hll_tier
-from mintpy_spark.streaming.tier_maintenance import TierMaintainer
+from mintpy_spark.streaming.tier_maintenance import TierMaintainer, merged
 
 
 class PresenceHllMaintainer(TierMaintainer):
@@ -60,61 +58,21 @@ class PresenceHllMaintainer(TierMaintainer):
         self.user_col = user_col
         self.guard = guard
 
-    def _deltas(self, delta_obs: DataFrame) -> dict[str, DataFrame]:
+    def _compute(self, delta_obs, stored, with_sq):
+        del with_sq  # value-tier knob; sketch stores carry no partials
         ev = delta_obs.select(self.user_col, self.ts)
-        return {
+        deltas = {
             self.PRESENCE: presence_tier(
                 ev, ts_col=self.ts, key_cols=(self.user_col,)
             ),
             self.HLL: hll_tier(ev, self.user_col, "1d", ts=self.ts),
         }
+        return merged(deltas, stored, self._merge)
 
     def _merge(self, name: str, both: DataFrame) -> DataFrame:
         if name == self.PRESENCE:
             return presence_merge(both, key_cols=(self.user_col,))
         return hll_merge(both, "1d")
-
-    def apply_delta(
-        self, delta_obs: DataFrame, batch_id: int = 0, with_sq: bool = False
-    ) -> None:
-        del with_sq  # value-tier knob; sketch stores carry no partials
-        spark = delta_obs.sparkSession
-        committed = self.committed_version(spark)
-        if self.guard and committed is not None and committed >= batch_id:
-            return  # replay of a committed batch (no-op anyway — idempotent)
-        if delta_obs.isEmpty():
-            return
-        import time as _time
-
-        t0 = _time.time()
-        rows = {}
-        for name, new in self._deltas(delta_obs).items():
-            if committed is not None:
-                stored = spark.read.parquet(
-                    self._version_path(committed, name)
-                )
-                new = self._merge(name, stored.unionByName(new))
-            materialized = new.localCheckpoint(eager=True)
-            materialized.write.mode("overwrite").parquet(
-                self._version_path(batch_id, name)
-            )
-            rows[name] = int(materialized.count())
-        self._commit(spark, batch_id)
-        self._gc(spark)
-        self.metrics.append(
-            [
-                {
-                    "run_id": f"batch{batch_id}",
-                    "stage": f"maintain_{name}",
-                    "part_id": int(batch_id),
-                    "input_fp": "delta",
-                    "row_count": n,
-                    "wall_ms": int((_time.time() - t0) * 1000),
-                    "status": "complete",
-                }
-                for name, n in rows.items()
-            ]
-        )
 
     def read_presence(self, spark: SparkSession) -> DataFrame:
         return self.read_tier(spark, self.PRESENCE)

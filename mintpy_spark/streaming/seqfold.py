@@ -31,16 +31,18 @@ committed per-key state:
    the sorted-group seam (``operators.seqstate.map_sorted_groups``); the
    watermark test runs on numpy arrays and each key with accepted rows
    costs one Python ``fold`` call;
-3. the batch's output rows, a new state version (touched keys refolded,
-   the rest carried by an anti-join) and its lineage rows are written, the
-   first two under ``v{N}/``, and committed with TierMaintainer's
-   ``_commits/v{N}`` marker;
-4. after the marker, the output files move into the output table.
+3. the batch's output rows and a new state version (touched keys
+   refolded, the rest carried by an anti-join) are staged as the store
+   tables ``tier_levels`` and ``tier_state`` and its lineage rows are
+   appended; ONE manifest rename then commits both tables as version N
+   (TierMaintainer's store, sources/tables.py);
+4. after the commit, the output files move into the output table.
 
 Where the state lives: beside Spark's own checkpoint files and outside its
-``state/`` subdirectory — ``v{N}/tier_state`` (the state table),
-``v{N}/tier_levels`` (the batch's output rows until they are moved),
-``_commits/`` and ``_maintenance_metrics`` (the lineage rows).
+``state/`` subdirectory, in a table store at ``<checkpoint>/<name>_state``:
+``tier_state`` (the state table), ``tier_levels`` (the batch's output rows
+until they are moved), ``_manifests`` and ``_maintenance_metrics`` (the
+lineage rows).
 
 Why not ``applyInPandasWithState``: it builds pandas frames, a GroupState
 round trip and an output frame for every touched key of every batch —
@@ -50,14 +52,17 @@ CPU s over 10 keys and 9.8–11.2 CPU s over 2 000 keys. Here a batch pays
 one Arrow hand-off per chunk of keys, as the batch operators do.
 
 Crash safety (foreachBatch is at-least-once): a replay of a committed
-batch only finishes moving its output (a crash between the marker and the
-move); a replay of an uncommitted batch recomputes v{N} from the
-still-authoritative previous version and overwrites the orphans. Readers
-of the output table see no row before its batch commits, and no row twice
-(tests/test_seqfold.py kills the fold at each step); the move renames one
-file at a time, so a concurrent reader may see part of a batch. A
-replayed batch appends its lineage rows again with the same counts;
-readers take one row per ``part_id`` (``CheckpointTable.stage_metrics``).
+batch only finishes moving its output (a crash between the commit and the
+move); a replay of an uncommitted batch recomputes version N from the
+still-authoritative previous version, and the files the crashed attempt
+staged are never listed and are expired. Readers of the output table see
+no row before its batch commits, and no row twice (tests/test_seqfold.py
+kills the fold at each step). The move into the output directory is the
+one step outside the store: plain-parquet readers (``filter_job``, the
+benchmark) read that directory, and it renames one file at a time, so a
+concurrent reader may see part of a batch. A replayed batch appends its
+lineage rows again with the same counts; readers take one row per
+``part_id`` (``CheckpointTable.stage_metrics``).
 
 Late-row policy: a row whose ts is at or behind its key's committed
 watermark (a replay redelivery or an out-of-order arrival) carries no
@@ -81,6 +86,7 @@ history.
 
 from __future__ import annotations
 
+import os
 import time
 
 import numpy as np
@@ -93,8 +99,7 @@ from mintpy_spark.operators.seqstate import map_sorted_groups
 from mintpy_spark.streaming.tier_maintenance import TierMaintainer
 
 STATE = "state"
-# the staged output's directory; the Kalman-only fold used the same name,
-# so a move it left unfinished still completes
+# the store table holding a batch's output rows until they are moved
 OUT = "levels"
 # the watermark of a key without state; also where a NULL ts sorts
 _NO_TS = int(np.iinfo(np.int64).min)
@@ -121,16 +126,15 @@ class SeqFold(TierMaintainer):
 
     def _publish(self, spark: SparkSession, version: int) -> None:
         """Move a committed version's output files into the output table.
-        Idempotent: a moved file is gone from the version directory."""
-        fs, staged = self._fs(spark, self._version_path(version, OUT))
-        if not fs.exists(staged):
+        Idempotent: a moved file is gone from the store's directory."""
+        staged = self.store.entry(self.table(OUT), version)
+        if staged is None:
             return
-        fs.mkdirs(self._fs(spark, self.output)[1])
-        for st in fs.listStatus(staged):
-            name = st.getPath().getName()
-            dest = self._fs(spark, f"{self.output}/{name}")[1]
-            if name.endswith(".parquet") and not fs.rename(st.getPath(), dest):
-                raise OSError(f"could not move {st.getPath()} to {dest}")
+        os.makedirs(self.output, exist_ok=True)
+        for f in staged["files"]:
+            src = os.path.join(self.root, f["path"])
+            if os.path.exists(src):
+                os.rename(src, os.path.join(self.output, os.path.basename(src)))
 
     def _fold(self, delta_obs: DataFrame, state: DataFrame | None) -> DataFrame:
         """The batch's rows plus its keys' committed state rows (``_o`` 0,
@@ -249,10 +253,7 @@ class SeqFold(TierMaintainer):
         t0 = time.time()
         state = None
         if committed is not None:
-            ktype = dict(delta_obs.dtypes)[self.key]
-            state = spark.read.schema(
-                ", ".join([f"`{self.key}` {ktype}", *self.rec.state])
-            ).parquet(self._version_path(committed, STATE))
+            state = self.read_tier(spark, STATE, committed)
         folded = self._fold(delta_obs, state).localCheckpoint(eager=True)
         n_keys, n_out, n_late = folded.agg(
             F.count(F.when(F.col("_o") == 0, 1)),
@@ -262,14 +263,14 @@ class SeqFold(TierMaintainer):
         if not n_keys:
             return  # no row to fold in the batch
         ttype = delta_obs.schema[self.ts].dataType
-        folded.where(F.col("_o") == 1).select(
+        out = folded.where(F.col("_o") == 1).select(
             F.col("k").alias(self.key),
             *[
                 (F.timestamp_micros(f"out{j}").cast(ttype) if t == "timestamp"
                  else F.col(f"out{j}")).alias(self.ts if c == "ts" else c)
                 for j, (c, t) in enumerate(_cols(self.rec.out))
             ],
-        ).write.mode("overwrite").parquet(self._version_path(batch_id, OUT))
+        )
         new_state = folded.where(
             (F.col("_o") == 0) & (F.col("t_us") > _NO_TS)
         ).select(
@@ -285,17 +286,16 @@ class SeqFold(TierMaintainer):
             new_state = state.join(touched, self.key, "left_anti").unionByName(
                 new_state
             )
-        new_state.write.mode("overwrite").parquet(
-            self._version_path(batch_id, STATE)
-        )
-        # lineage before the marker: a crash after it cannot lose the
+        tables = {self.table(OUT): self.store.stage(out, self.table(OUT)),
+                  self.table(STATE): self.store.stage(new_state, self.table(STATE))}
+        # lineage before the commit: a crash after it cannot lose the
         # batch's counts (a replay of an uncommitted batch appends the
         # same counts again)
         name = self.rec.name
         counts = {
             f"{name}_{self.rec.emits}": int(n_out),
             f"{name}_late": int(n_late),
-            f"{name}_state": self._written_rows(batch_id, STATE),
+            f"{name}_state": sum(f["rows"] for f in tables[self.table(STATE)]["files"]),
         }
         wall_ms = int((time.time() - t0) * 1000)
         self.metrics.append([
@@ -310,7 +310,7 @@ class SeqFold(TierMaintainer):
             }
             for stage, n in counts.items()
         ])
-        self._commit(spark, batch_id)
+        self._commit(spark, batch_id, tables)
         self._publish(spark, batch_id)
         self._gc(spark)
 
@@ -336,15 +336,13 @@ def run_seq_fold(
         recursion, f"{checkpoint}/{recursion.name}_state", output_path,
         value_col=value_col, key=key, ts=ts,
     )
-    fs, sink_log = fold._fs(spark, f"{output_path}/_spark_metadata")
-    if fs.exists(sink_log):
+    if os.path.exists(f"{output_path}/_spark_metadata"):
         # a file-sink log makes readers ignore every file it does not list
         raise ValueError(
             f"{output_path} was written by Spark's file sink; fold into a new "
             "output and checkpoint"
         )
-    fs, op_state = fold._fs(spark, f"{checkpoint}/state")
-    if fs.exists(op_state):
+    if os.path.exists(f"{checkpoint}/state"):
         # a stateful operator's checkpoint: Spark would resume its offsets
         # while every key restarted from no state here
         raise ValueError(

@@ -1,6 +1,7 @@
 """Streaming sketch-tier maintenance: HDR quantile and Count-Min
-frequency sketches folded incrementally under the SAME versioned-commit
-protocol as the stored value tiers (tier_maintenance.py).
+frequency sketches folded incrementally by the SAME fold as the stored
+value tiers (tier_maintenance.py): one manifest-committed store version
+per batch.
 
 Why this is trivially correct where the value tiers needed care: both
 sketches are PURELY ADDITIVE — merging a delta sketch is a counter sum
@@ -9,10 +10,11 @@ a micro-batch can be aggregated independently on its executors before
 one bounded merge against the stored table. What additivity does NOT
 give is replay safety: foreachBatch is at-least-once, and re-adding a
 replayed delta DOUBLE-counts (unlike min/max partials, which are
-idempotent under re-merge). The committed-version marker protocol
-inherited from TierMaintainer is therefore load-bearing here, not just
-defensive: a replay of a committed batch is skipped outright, and a
-crashed batch recomputes from the still-authoritative previous version.
+idempotent under re-merge). The committed-version guard inherited from
+TierMaintainer is therefore load-bearing here, not just defensive: a
+replay of a committed batch is skipped outright, and a batch killed before
+its manifest rename recomputes from the still-authoritative previous
+version, its staged files never read and later expired.
 
 Scale: the stored sketch table is bounded (<= 64*2^sub_bits buckets per
 key for HDR; d*w counters per key for CMS) regardless of ingest volume,
@@ -31,14 +33,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mintpy_spark.operators.sketch import hdr_merge, hdr_tier
-from mintpy_spark.streaming.tier_maintenance import TierMaintainer
+from mintpy_spark.streaming.tier_maintenance import TierMaintainer, merged
 
 
 class HdrSketchMaintainer(TierMaintainer):
     """Maintains ONE stored table: the per-(key-day) HDR quantile
-    sketch of ``value_col``, updated delta-wise with the versioned
-    atomic-commit protocol (see tier_maintenance.py docstring; replay
-    and crash semantics are identical and tested)."""
+    sketch of ``value_col``, updated delta-wise by TierMaintainer's fold
+    (see tier_maintenance.py docstring; replay and crash semantics are
+    identical and tested)."""
 
     TIER_NAME = "hdr1d"
 
@@ -51,47 +53,15 @@ class HdrSketchMaintainer(TierMaintainer):
             tiers=(self.TIER_NAME,),
         )
 
-    def _delta_sketch(self, delta_obs: DataFrame) -> DataFrame:
+    def _compute(self, delta_obs, stored, with_sq):
+        del with_sq  # value-tier knob; sketches carry counters only
         obs = delta_obs.select(
             F.date_trunc("day", F.col(self.ts)).alias("day"),
             F.col(self.value_col).cast("long").alias("_v"),
         )
-        return hdr_tier(obs, "_v", key_cols=("day",))
-
-    def apply_delta(
-        self, delta_obs: DataFrame, batch_id: int = 0, with_sq: bool = False
-    ) -> None:
-        del with_sq  # value-tier knob; sketches carry counters only
-        spark = delta_obs.sparkSession
-        committed = self.committed_version(spark)
-        if committed is not None and committed >= batch_id:
-            return  # replay of a committed batch: already folded
-        if delta_obs.isEmpty():
-            return
-        new = self._delta_sketch(delta_obs)
-        if committed is not None:
-            stored = spark.read.parquet(
-                self._version_path(committed, self.TIER_NAME)
-            )
-            new = hdr_merge(stored.unionByName(new), key_cols=("day",))
-        materialized = new.localCheckpoint(eager=True)
-        materialized.write.mode("overwrite").parquet(
-            self._version_path(batch_id, self.TIER_NAME)
-        )
-        self._commit(spark, batch_id)
-        self._gc(spark)
-        self.metrics.append(
-            [
-                {
-                    "run_id": f"batch{batch_id}",
-                    "stage": f"maintain_{self.TIER_NAME}",
-                    "part_id": int(batch_id),
-                    "input_fp": "delta",
-                    "row_count": int(materialized.count()),
-                    "wall_ms": 0,
-                    "status": "complete",
-                }
-            ]
+        return merged(
+            {self.TIER_NAME: hdr_tier(obs, "_v", key_cols=("day",))}, stored,
+            lambda _t, both: hdr_merge(both, key_cols=("day",)),
         )
 
     def read_sketch(self, spark: SparkSession) -> DataFrame:

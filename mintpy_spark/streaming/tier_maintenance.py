@@ -7,19 +7,20 @@ refresh (coarser tiers) — see operators/rollup.py.
 
 Crash safety — foreachBatch is only AT-LEAST-once (the stream checkpoint
 commits after the callback returns), so the fold must be idempotent and
-the store must never be half-written. Both come from versioned snapshots
-with atomic commit markers:
+the store must never be half-written. Both come from the engine's table
+store (sources/tables.py), one manifest-committed version per batch:
 
-* batch N writes ALL tiers into a fresh ``v{N}/`` directory set computed
-  from the last COMMITTED version, then atomically creates the marker
-  ``_commits/v{N}`` (single-file create);
-* a replay of batch N after the marker exists is skipped outright;
-* a crash before the marker leaves the previous version authoritative —
-  the replay recomputes v{N} from it and overwrites the orphan dirs;
-* readers resolve the max committed marker, so they never observe a
-  partial write. Old versions are garbage-collected, keeping the last
-  two. (On the target deployment Iceberg snapshot commits provide exactly
-  this; the marker scheme is the same protocol over a filesystem.)
+* batch N stages ALL tiers, computed from the last COMMITTED version, as
+  new immutable files, then commits them in ONE manifest rename, as
+  version N;
+* a replay of batch N once version N is committed is skipped outright
+  (the guard is ``latest >= N``);
+* a crash before the rename leaves the previous version authoritative and
+  the staged files unreferenced — the replay recomputes version N from it,
+  and ``expire`` deletes the orphans;
+* readers plan from one manifest, so they never see a partial fold or a
+  mix of two. Expiry keeps the last two versions (the current one plus
+  the one a crashed-then-replayed batch would recompute from).
 
 The maintained tiers therefore equal a batch rebuild over everything ever
 ingested (verified by tests/test_streaming.py, including a replay test).
@@ -39,19 +40,38 @@ the merge joins co-locate.
 
 from __future__ import annotations
 
-import os
+import time
+from collections.abc import Callable
 
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from mintpy_spark.operators.rollup import build_tiers, refresh_tiers_incremental
 from mintpy_spark.plans.checkpoint import CheckpointTable
+from mintpy_spark.sources.tables import TableStore
 
 TIERS = ("1h", "1d", "30d")
 
 
+def merged(
+    deltas: dict[str, DataFrame],
+    stored: dict[str, DataFrame] | None,
+    merge: Callable[[str, DataFrame], DataFrame],
+) -> dict[str, DataFrame]:
+    """Each table's new version for a mergeable-sketch fold: its delta,
+    merged (``merge(table, stored ∪ delta)``) into the stored version when
+    there is one, materialized."""
+    if stored is not None:
+        deltas = {t: merge(t, stored[t].unionByName(d)) for t, d in deltas.items()}
+    return {t: d.localCheckpoint(eager=True) for t, d in deltas.items()}
+
+
 class TierMaintainer:
-    """Holds the stored-tier locations and applies one delta per call."""
+    """Holds the stored-tier locations and applies one delta per call.
+    Subclasses keep the fold and override ``_compute`` (the new tables
+    from the delta and the committed ones)."""
+
+    #: skip a replayed batch whose version is already committed
+    guard = True
 
     def __init__(
         self, root: str, value_col: str = "text_length",
@@ -62,72 +82,37 @@ class TierMaintainer:
         self.key = key
         self.ts = ts
         self.tiers = tiers
+        self.store = TableStore(root)
         # per-batch lineage metrics — the maintenance twin of the batch
         # pipeline's checkpoint table (plans/checkpoint.py): every fold
         # records (batch_id, tier, rows, wall) so operators can audit what
         # each refresh touched and when
         self.metrics = CheckpointTable(f"{root}/_maintenance_metrics")
 
-    # -- filesystem helpers (hadoop FS API: works for any Spark-supported
-    #    filesystem, not just local paths) --------------------------------
-
-    def _fs(self, spark: SparkSession, path: str):
-        p = spark._jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+    @staticmethod
+    def table(tier: str) -> str:
+        """The store table holding ``tier``."""
+        return f"tier_{tier}"
 
     def committed_version(self, spark: SparkSession) -> int | None:
-        """Highest batch id with a commit marker, or None."""
-        fs, p = self._fs(spark, f"{self.root}/_commits")
-        if not fs.exists(p):
-            return None
-        best = None
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            # isdigit guard (same as _gc): a stray non-numeric v* entry
-            # (object-store rename artifact, hand-placed v6.bak) must not
-            # crash every read/fold with ValueError
-            if name.startswith("v") and name[1:].isdigit():
-                v = int(name[1:])
-                best = v if best is None or v > best else best
-        return best
-
-    def _version_path(self, version: int, tier: str) -> str:
-        return f"{self.root}/v{version:012d}/tier_{tier}"
+        """Highest committed batch id, or None."""
+        return self.store.latest()
 
     def versions(self, spark: SparkSession) -> list[int]:
-        """All committed, still-retained versions, oldest first (GC keeps
-        the latest two — the snapshot set available for time travel)."""
-        fs, p = self._fs(spark, f"{self.root}/_commits")
-        if not fs.exists(p):
-            return []
-        retained = []
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("v") and name[1:].isdigit():
-                v = int(name[1:])
-                _fs2, vp = self._fs(spark, f"{self.root}/v{v:012d}")
-                if fs.exists(vp):
-                    retained.append(v)
-        return sorted(retained)
+        """All committed, still-retained versions, oldest first (expiry
+        keeps the latest two — the snapshot set available for time
+        travel)."""
+        return self.store.versions()
 
     def read_tier(
         self, spark: SparkSession, tier: str, version: int | None = None
     ) -> DataFrame:
         """Snapshot read: the latest committed version by default, or an
         explicit retained ``version`` for time travel (the Iceberg
-        snapshot-id read; GC bounds how far back is retained)."""
-        if version is None:
-            version = self.committed_version(spark)
-            if version is None:
-                raise FileNotFoundError(
-                    f"no committed tier version under {self.root}"
-                )
-        elif version not in self.versions(spark):
-            raise FileNotFoundError(
-                f"version {version} not committed/retained under {self.root} "
-                f"(retained: {self.versions(spark)})"
-            )
-        return spark.read.parquet(self._version_path(version, tier))
+        snapshot-id read; expiry bounds how far back is retained). Raises
+        FileNotFoundError before the first commit or for a version that is
+        not retained."""
+        return self.store.read_version(spark, self.table(tier), version)
 
     def read_realtime(
         self, spark: SparkSession, tier: str, tail_obs: DataFrame
@@ -158,79 +143,61 @@ class TierMaintainer:
             stored.select(*cols).unionByName(tail.select(*cols)), self.key
         )
 
-    def _commit(self, spark: SparkSession, version: int) -> None:
-        fs, marker = self._fs(spark, f"{self.root}/_commits/v{version:012d}")
-        fs.mkdirs(marker.getParent())
-        out = fs.create(marker, True)
-        out.close()
+    def _commit(self, spark: SparkSession, version: int, tables: dict) -> None:
+        """Commit the staged ``tables`` (store table -> entry) as
+        ``version``: one manifest rename."""
+        self.store.commit(tables, version=version)
 
     def _gc(self, spark: SparkSession) -> None:
-        """Drop all version dirs except the latest two committed (the
-        current version plus the one a crashed-then-replayed batch would
-        recompute from), AND their commit markers — markers for GC'd
-        versions are dead weight that would otherwise accumulate one per
-        batch forever, making every committed_version()/versions() call
-        an O(all-history) listing (billed and slow on object stores)."""
-        fs, root = self._fs(spark, self.root)
-        if not fs.exists(root):
-            return
-        versions = sorted(
-            int(st.getPath().getName()[1:])
-            for st in fs.listStatus(root)
-            if st.getPath().getName().startswith("v")
-            and st.getPath().getName()[1:].isdigit()
-        )
-        for v in versions[:-2]:  # keep latest + previous
-            _fs2, p = self._fs(spark, f"{self.root}/v{v:012d}")
-            fs.delete(p, True)
-            # marker AFTER dir: a crash in between leaves a marker for a
-            # missing dir, which versions() already filters out
-            _fs3, mk = self._fs(spark, f"{self.root}/_commits/v{v:012d}")
-            fs.delete(mk, False)
+        """Expire all but the latest two versions and every file only they
+        (or a crashed fold) wrote."""
+        self.store.expire(keep_last=2)
 
-    def apply_delta(
-        self, delta_obs: DataFrame, batch_id: int = 0, with_sq: bool = False
-    ) -> None:
-        """One idempotent maintenance step: merge the delta into a NEW
-        tier version computed from the last COMMITTED version, then commit
-        atomically. Replays of an already-committed batch are skipped;
-        replays of a crashed batch recompute from the still-authoritative
-        previous version (see module docstring). ``with_sq`` makes the
-        INITIAL build variance-capable (vsumsq); later folds inherit the
-        stored partial set automatically."""
-        spark = delta_obs.sparkSession
-        committed = self.committed_version(spark)
-        if committed is not None and committed >= batch_id:
-            return  # replay of a committed batch: already folded
-        if delta_obs.isEmpty():
-            return
-        import time as _time
-
-        t0 = _time.time()
-        # materialize before writing: the plans read the committed version
-        # (never overwritten here, so a crashed partial write of v{N}
-        # cannot corrupt what a replay reads). The refresh materializes
-        # each tier as it builds the next one from it.
-        if committed is None:
+    def _compute(
+        self, delta_obs: DataFrame, stored: dict[str, DataFrame] | None,
+        with_sq: bool,
+    ) -> dict[str, DataFrame]:
+        """The new version of each tier: built from the delta on the first
+        fold, else the delta merged into the committed tiers (the refresh
+        materializes each tier as it builds the next one from it)."""
+        if stored is None:
             new = build_tiers(
                 delta_obs, self.value_col, tiers=self.tiers,
                 key=self.key, ts=self.ts, with_sq=with_sq,
             )
-            new = {t: new[t].localCheckpoint(eager=True) for t in self.tiers}
-        else:
-            stored = {
-                t: spark.read.parquet(self._version_path(committed, t))
-                for t in self.tiers
-            }
-            new = refresh_tiers_incremental(
-                stored, delta_obs, self.value_col, tiers=self.tiers,
-                key=self.key, ts=self.ts,
-            )
-        for t in self.tiers:
-            new[t].write.mode("overwrite").parquet(self._version_path(batch_id, t))
-        self._commit(spark, batch_id)
+            return {t: new[t].localCheckpoint(eager=True) for t in self.tiers}
+        return refresh_tiers_incremental(
+            stored, delta_obs, self.value_col, tiers=self.tiers,
+            key=self.key, ts=self.ts,
+        )
+
+    def apply_delta(
+        self, delta_obs: DataFrame, batch_id: int = 0, with_sq: bool = False
+    ) -> None:
+        """One idempotent maintenance step: stage a NEW version of every
+        table computed from the last COMMITTED version, then commit it as
+        version ``batch_id``. Replays of an already-committed batch are
+        skipped (unless ``guard`` is off); replays of a crashed batch
+        recompute from the still-authoritative previous version (see
+        module docstring). ``with_sq`` makes the INITIAL build
+        variance-capable (vsumsq); later folds inherit the stored partial
+        set automatically."""
+        spark = delta_obs.sparkSession
+        committed = self.committed_version(spark)
+        if self.guard and committed is not None and committed >= batch_id:
+            return  # replay of a committed batch: already folded
+        if delta_obs.isEmpty():
+            return
+        t0 = time.time()
+        stored = None
+        if committed is not None:
+            stored = {t: self.read_tier(spark, t, committed) for t in self.tiers}
+        new = self._compute(delta_obs, stored, with_sq)
+        tables = {self.table(t): self.store.stage(new[t], self.table(t))
+                  for t in self.tiers}
+        self._commit(spark, batch_id, tables)
         self._gc(spark)
-        wall_ms = int((_time.time() - t0) * 1000)
+        wall_ms = int((time.time() - t0) * 1000)
         self.metrics.append(
             [
                 {
@@ -238,22 +205,12 @@ class TierMaintainer:
                     "stage": f"maintain_{t}",
                     "part_id": int(batch_id),
                     "input_fp": "delta",
-                    "row_count": self._written_rows(batch_id, t),
+                    "row_count": sum(f["rows"] for f in tables[self.table(t)]["files"]),
                     "wall_ms": wall_ms,
                     "status": "complete",
                 }
                 for t in self.tiers
             ]
-        )
-
-    def _written_rows(self, version: int, tier: str) -> int:
-        """Rows of a written tier version, summed from its Parquet footers
-        (no Spark job; the lineage table is local, so the store is too)."""
-        path = self._version_path(version, tier)
-        return sum(
-            pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
         )
 
     def foreach_batch(self):

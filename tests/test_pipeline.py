@@ -4,14 +4,13 @@
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from mintpy_spark.plans.checkpoint import CheckpointTable
 from mintpy_spark.plans.pipeline import run_pipeline
-from mintpy_spark.sources.tables import TableStore
+from mintpy_spark.sources.tables import TableStore, _data_files
 
 STAGES = ("obs", "tier_1h", "tier_1d", "tier_30d", "blocks", "velocity")
 
@@ -65,16 +64,20 @@ def test_resume_skips_completed(spark, pages, tmp_path):
 
 def test_resume_after_partial_failure(spark, pages, tmp_path):
     """Simulate a mid-tier crash: drop some completed partitions of tier_1h
-    (as if their rename never happened) and their checkpoint rows; the rerun
-    rebuilds exactly the missing partitions and converges to identical
-    output."""
+    (as if their commit never happened) and their checkpoint rows; the rerun
+    rebuilds exactly the missing partitions, carries the others' files
+    over unchanged, and converges to identical output."""
     root = str(tmp_path / "pipe3")
     out1 = run_pipeline(spark, pages, root, buckets=4)
     full_fp = fingerprint(out1["tier_1h"], ["url", "bucket_start", "cnt", "vsum"])
 
-    # crash simulation: remove partitions 1 and 3 + their checkpoint rows
-    for p in (1, 3):
-        shutil.rmtree(f"{root}/tier_1h/part_id={p}")
+    # crash simulation: a version without partitions 1 and 3, and without
+    # their checkpoint rows
+    store = TableStore(root)
+    entry = store.entry("tier_1h")
+    kept = [f for f in entry["files"] if f["part_id"] not in (1, 3)]
+    store.commit({"tier_1h": {**entry, "files": kept}})
+    assert store.partitions("tier_1h") == [0, 2]
     ckdir = f"{root}/_checkpoint"
     import pyarrow.parquet as pq
 
@@ -101,6 +104,8 @@ def test_resume_after_partial_failure(spark, pages, tmp_path):
     assert (full_fp.h, full_fp.n) == (fp2.h, fp2.n)
     assert ckpt.complete_parts("tier_1h", "v1") == {0, 1, 2, 3}
     assert_lineage_counts(spark, root)
+    # the partitions that were not recomputed keep their files
+    assert [f for f in store.entry("tier_1h")["files"] if f["part_id"] in (0, 2)] == kept
 
 
 def test_null_url_is_a_named_error(spark, pages, tmp_path):
@@ -119,7 +124,8 @@ def test_null_url_is_a_named_error(spark, pages, tmp_path):
     store = TableStore(root)
     assert all(store.exists(t) for t in ("obs", "tier_1h", "tier_1d", "tier_30d"))
     assert not store.exists("blocks")
-    assert not [d for d in os.listdir(root) if d.startswith("_tmp_")]
+    # the failed write left no data file behind
+    assert not _data_files(store.path("blocks"))
 
 
 def test_config_change_invalidates(spark, pages, tmp_path):

@@ -1,96 +1,121 @@
-"""SnapshotStore (sources/snapshots.py): commit atomicity, time travel,
-MERGE upsert, rollback, and expiry GC."""
+"""Snapshots of the table store (sources/tables.py): commit atomicity, time
+travel, expiry, and schema evolution on append."""
 
 from __future__ import annotations
 
-import glob
 import os
 
 import pytest
 
-from mintpy_spark.sources.snapshots import SnapshotStore
+from mintpy_spark.sources.tables import TableStore, _data_files
 
 
 @pytest.fixture()
 def store(tmp_path):
-    return SnapshotStore(str(tmp_path / "snap"))
+    return TableStore(str(tmp_path / "snap"))
 
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "k long, v string")
 
 
+def write(store, df, table="t"):
+    return store.commit({table: store.stage(df, table)})
+
+
+def append(store, df, table="t"):
+    return store.commit({table: store.appended(table, store.stage(df, table))})
+
+
 def test_write_read_and_time_travel(spark, store):
-    v1 = store.write(_df(spark, [(1, "a"), (2, "b")]), "t")
-    v2 = store.append(_df(spark, [(3, "c")]), "t")
+    v1 = write(store, _df(spark, [(1, "a"), (2, "b")]))
+    v2 = append(store, _df(spark, [(3, "c")]))
     assert (v1, v2) == (1, 2)
     assert store.read(spark, "t").count() == 3
-    assert store.read(spark, "t", as_of=1).count() == 2
+    assert store.read_version(spark, "t", 1).count() == 2
     # append carries parent files by reference, not by copy
-    m1, m2 = store.manifest("t", 1), store.manifest("t", 2)
-    assert set(m1["files"]) <= set(m2["files"])
-
-
-def test_upsert_replaces_by_key(spark, store):
-    store.write(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), "t")
-    store.upsert(spark, _df(spark, [(2, "B"), (4, "d")]), "t", key="k")
-    got = {(r.k, r.v) for r in store.read(spark, "t").collect()}
-    assert got == {(1, "a"), (2, "B"), (3, "c"), (4, "d")}
-    # old version still readable (time travel across a merge)
-    old = {(r.k, r.v) for r in store.read(spark, "t", as_of=1).collect()}
-    assert old == {(1, "a"), (2, "b"), (3, "c")}
+    f1, f2 = ({f["path"] for f in store.entry("t", v)["files"]} for v in (1, 2))
+    assert f1 < f2
+    assert store.rows("t") == 3
 
 
 def test_uncommitted_files_are_invisible(spark, store):
-    store.write(_df(spark, [(1, "a")]), "t")
+    write(store, _df(spark, [(1, "a")]))
     # simulate a writer crash AFTER staging data but BEFORE the manifest
     # rename: stage files directly, never commit
-    store._stage_files(_df(spark, [(9, "ghost")]), "t")
+    store.stage(_df(spark, [(9, "ghost")]), "t")
     assert store.read(spark, "t").count() == 1
-    assert store.latest("t") == 1
-
-
-def test_rollback_is_metadata_only(spark, store):
-    store.write(_df(spark, [(1, "a")]), "t")
-    store.write(_df(spark, [(2, "b")]), "t")
-    n_files = len(glob.glob(os.path.join(store.root, "t", "data", "*")))
-    v3 = store.rollback("t", 1)
-    assert v3 == 3
-    assert {r.k for r in store.read(spark, "t").collect()} == {1}
-    # no data files were written by the rollback
-    assert len(glob.glob(os.path.join(store.root, "t", "data", "*"))) == n_files
+    assert store.latest() == 1
+    # the next expiry deletes the orphan
+    store.expire()
+    listed = {f["path"] for f in store.entry("t")["files"]}
+    assert {os.path.join("t", f) for f in _data_files(store.path("t"))} == listed
 
 
 def test_expire_gc_keeps_referenced_files(spark, store):
-    store.write(_df(spark, [(1, "a")]), "t")
-    store.upsert(spark, _df(spark, [(1, "A")]), "t", key="k")
-    store.upsert(spark, _df(spark, [(1, "AA")]), "t", key="k")
-    deleted = store.expire("t", keep_last=2)
-    assert deleted, "v1's files must be GC'd"
-    assert store.versions("t") == [2, 3]
+    write(store, _df(spark, [(1, "a")]))
+    write(store, _df(spark, [(1, "A")]))
+    write(store, _df(spark, [(1, "AA")]))
+    v1_files = [f["path"] for f in store.entry("t", 1)["files"]]
+    deleted = store.expire(keep_last=2)
+    assert deleted == sorted(v1_files), "v1's files must be GC'd"
+    assert store.versions() == [2, 3]
     # surviving versions stay readable after GC
-    assert store.read(spark, "t", as_of=2).count() == 1
+    assert store.read_version(spark, "t", 2).count() == 1
     assert [r.v for r in store.read(spark, "t").collect()] == ["AA"]
+    with pytest.raises(FileNotFoundError):
+        store.read_version(spark, "t", 1)
 
 
 def test_schema_evolution_on_append(spark, store):
-    store.write(_df(spark, [(1, "a")]), "t")
+    write(store, _df(spark, [(1, "a")]))
     evolved = spark.createDataFrame([(2, "b", 9.5)], "k long, v string, score double")
-    store.append(evolved, "t")
+    append(store, evolved)
     got = store.read(spark, "t")
     assert set(got.columns) == {"k", "v", "score"}
     rows = {r.k: r.score for r in got.collect()}
     assert rows[1] is None and rows[2] == 9.5
     # pre-evolution snapshot still reads with its own schema
-    assert set(store.read(spark, "t", as_of=1).columns) == {"k", "v"}
+    assert set(store.read_version(spark, "t", 1).columns) == {"k", "v"}
 
 
-def test_compact_preserves_rows_and_shrinks_files(spark, store):
-    df = spark.range(100).selectExpr("id AS k", "CAST(id AS STRING) AS v")
-    store.write(df.repartition(8), "t")
-    assert len(store.manifest("t", 1)["files"]) == 8
-    v2 = store.compact(spark, "t", target_files=1)
-    assert len(store.manifest("t", v2)["files"]) == 1
-    assert store.read(spark, "t").count() == 100
-    # compaction is a new version; the uncompacted snapshot is intact
-    assert len(store.manifest("t", 1)["files"]) == 8
+def test_partition_overwrite_and_manifest_read(spark, store):
+    """A partition overwrite replaces only the partitions it writes, in one
+    commit; the read is planned from the manifest with the partition
+    column typed as Spark would infer it, and runs no Spark job."""
+    df = spark.createDataFrame(
+        [(1, "a", 0), (2, "b", 1), (3, "c", 2)], "k long, v string, part_id long"
+    )
+    assert store.write_partitions(df, "t") == {0: 1, 1: 1, 2: 1}
+    assert store.write_partitions(
+        spark.createDataFrame([(4, "d", 1)], "k long, v string, part_id long"), "t"
+    ) == {1: 1}
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    got = store.read(spark, "t")
+    assert dag.nextJobId() == j0
+    assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
+        ("k", "bigint"), ("v", "string"), ("part_id", "int")
+    ]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, "a", 0), (3, "c", 2), (4, "d", 1)
+    ]
+    assert store.partitions("t") == [0, 1, 2]
+    # a replaced partition with no row in the write is dropped by the commit
+    staged = store.stage(df.where("k = 3"), "t", "part_id")
+    store.commit({"t": store.replaced("t", staged, [1, 2])})
+    assert store.partitions("t") == [0, 2]
+    assert store.rows("t") == 2
+
+
+def test_stray_manifest_entries_are_not_versions(store):
+    store.commit({})
+    for name in ("v6.json.bak", "v6.bak", "vx.json", ".tmp-1.json"):
+        open(os.path.join(store.root, "_manifests", name), "w").write("")
+    assert store.versions() == [1]
+    assert store.commit({}) == 2
+
+
+def test_remote_root_is_refused():
+    with pytest.raises(NotImplementedError, match="remote root"):
+        TableStore("s3a://bucket/store")

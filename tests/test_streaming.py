@@ -476,7 +476,7 @@ def test_dedup_index_stream_equals_batch(spark, tmp_path):
     # replay of a committed batch: skipped, store unchanged
     assert m.apply_batch(b2, 1) is None
     assert m.emitted_pairs(spark).count() == total
-    assert m.committed_batches(spark) == [0, 1, 2]
+    assert m.committed_version(spark) == 2
 
 
 def test_compact_raw_keeps_null_ts_rows(spark, paths):
@@ -506,12 +506,19 @@ def test_compact_raw_keeps_null_ts_rows(spark, paths):
     assert left.count() == 2 * 2 + 1
 
 
-def test_committed_version_ignores_stray_commit_entries(spark, paths):
-    """Review fix: a non-numeric v* file in _commits (rename artifact,
-    v6.bak) must not crash every read/fold."""
+def test_committed_version_ignores_stray_commit_entries(spark, paths, tmp_path):
+    """Review fix: a stray entry in the manifest directory (rename
+    artifact, v6.bak, an unfinished .tmp manifest) must not crash every
+    read/fold of the tier store or the dedup index, nor count as a
+    version."""
     import os
 
+    from mintpy_spark.streaming.dedup_stream import DedupIndexMaintainer
     from mintpy_spark.streaming.tier_maintenance import TierMaintainer
+
+    def litter(root):
+        for name in ("v6.bak", "v6.json.bak", "v7x.json", ".tmp-1.json"):
+            open(os.path.join(root, "_manifests", name), "w").write("")
 
     inp, store_root, _ = paths
     sch = "url string, warc_ts timestamp, text_length long"
@@ -520,10 +527,22 @@ def test_committed_version_ignores_stray_commit_entries(spark, paths):
     ).write.mode("overwrite").parquet(inp)
     m = TierMaintainer(store_root)
     m.apply_delta(spark.read.parquet(inp), batch_id=0)
-    open(os.path.join(store_root, "_commits", "v6.bak"), "w").write("")
+    litter(store_root)
     assert m.committed_version(spark) == 0
     assert m.versions(spark) == [0]
     assert m.read_tier(spark, "1h").count() == 1
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "the quick brown fox jumps over the lazy dog again")],
+        "doc_id long, text string",
+    )
+    d = DedupIndexMaintainer(str(tmp_path / "dedup_idx"))
+    d.apply_batch(docs, batch_id=0)
+    litter(d.root)
+    assert d.committed_version(spark) == 0
+    assert d.apply_batch(docs, batch_id=0) is None  # a replay, still skipped
+    assert d.stored_signatures(spark).count() == 2
 
 
 def test_read_realtime_on_variance_capable_store(spark, paths):
