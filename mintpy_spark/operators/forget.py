@@ -17,11 +17,18 @@ Crash safety: ONE manifest rename (the store's commit) then replaces the
 touched partitions of every table at once, so a reader sees the store
 before the erasure or after it, never a table erased and another not. A
 partition whose rows are ALL erased is dropped by that same commit. The
-manifest entries of untouched partitions are carried over unchanged; the
-replaced files are deleted by the store's expiry, once no retained
-version lists them. A run killed before the rename erases nothing and a
-rerun redoes it; one killed after it has erased everything, and a rerun
-finds nothing left to erase.
+manifest entries of untouched partitions are carried over unchanged.
+The commit is followed by ``expire(keep_last=1)``: no earlier version is
+retained (no time travel to before an erasure), so the replaced files,
+which hold the erased rows, are deleted from disk at once. A run killed
+before the rename erases nothing and a rerun redoes it; one killed after
+it has erased everything from the latest version, and a rerun finds
+nothing left to erase and runs the expiry the killed run missed.
+
+``store`` must be the file-backed ``TableStore``: the erasure stages and
+commits through its ``stage``/``replaced``/``commit`` steps, which
+``IcebergTableStore`` does not expose (on Iceberg, erasure is a
+``DELETE FROM`` followed by ``expire_snapshots``).
 
 Every touched partition gets a lineage row (stage, part_id, op=forget,
 row_count AFTER erasure) in the same checkpoint table the pipeline
@@ -109,7 +116,10 @@ def forget_keys(
         ]
     if commit:
         store.commit(commit)
-        store.expire()
         if ckpt is not None:
             ckpt.append(lineage)
+    # keep no version that still lists the erased rows, so their files go
+    # now; also run when nothing was left to erase, which finishes a run
+    # killed between its commit and this expiry
+    store.expire(keep_last=1)
     return removed

@@ -130,7 +130,8 @@ def run_export(
 ) -> dict[str, DataFrame]:
     """documents -> clean -> kept -> packed -> shards, each stage committed
     by one manifest rename of the table store, with lineage rows; re-running with the same
-    run_id/root resumes at the first incomplete partition."""
+    run_id/root resumes at the first incomplete partition. With an Iceberg
+    catalog the store ignores ``root`` (see ``open_table_store``)."""
     from mintpy_spark.operators.packing import pack_next_fit
     from mintpy_spark.operators.sampling import stable_bucket, with_split
     from mintpy_spark.sources.tables import with_part_id

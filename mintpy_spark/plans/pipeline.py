@@ -28,6 +28,12 @@ Execution contract per stage:
   the reference's partial-write detection (ifgram_inversion.py:48-55) at
   partition rather than file granularity.
 
+The store comes from ``open_table_store``. With an Iceberg catalog
+configured it ignores ``root`` and writes the catalog's shared namespace,
+while the checkpoint stays at ``<root>/_checkpoint``; runs over different
+roots on one catalog therefore need their own namespace (see
+``open_table_store``).
+
 input_fp is a config/upstream fingerprint: changing it invalidates every
 partition, like the reference's config-attr comparison (run_or_skip,
 utils/utils1.py:691-746).

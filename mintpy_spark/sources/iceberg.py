@@ -27,10 +27,19 @@ otherwise):
     partitions        <- SELECT partition.{col} FROM t.partitions
     read              <- spark.table(t)
     rows              <- SELECT sum(record_count) FROM t.files
-    versions          <- SELECT snapshot_id FROM t.snapshots
+    versions(table)   <- SELECT snapshot_id FROM t.snapshots
     read_version      <- spark.read.option('snapshot-id', v)   (time travel)
     upsert            <- MERGE INTO
-    expire            <- CALL system.expire_snapshots (tables.py's expire)
+    expire(table, keep_last)
+                      <- CALL system.expire_snapshots
+
+The snapshot calls differ from tables.py's by design: an Iceberg snapshot
+is per table, so ``versions``, ``latest`` and ``expire`` take the table,
+while the file-backed store versions all its tables together
+(``versions()``, ``latest()``, ``expire(keep_last)``). Only the narrow
+contract above the snapshot calls (``write_partitions``, ``partitions``,
+``read``, ``rows``, ``exists``, ``drop``) is backend-neutral; that is what
+``run_pipeline`` and ``run_export`` use.
 
 Crash safety is the table format's: every write below is one snapshot
 commit, atomic and serializable, so a reader sees the snapshot before a
@@ -208,7 +217,14 @@ def open_table_store(
     """Factory: IcebergTableStore when the runtime jar + catalog config are
     present, else the file-backed TableStore rooted at ``root``. Callers
     depend only on the shared contract, so this is the ONLY site that
-    knows which backend is live."""
+    knows which backend is live.
+
+    The Iceberg store ignores ``root``: its tables live in ``namespace`` of
+    the catalog, shared by every root. Two pipelines with different roots
+    (and so different ``<root>/_checkpoint`` lineage) must pass different
+    namespaces, or they overwrite each other's tables while each resumes
+    from its own checkpoint. ``forget_keys`` needs the file-backed store
+    (it stages and commits through ``TableStore``'s protocol steps)."""
     if iceberg_available(spark) and catalog_configured(spark, catalog):
         return IcebergTableStore(spark, catalog=catalog, namespace=namespace)
     from mintpy_spark.sources.tables import TableStore

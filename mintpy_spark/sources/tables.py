@@ -31,7 +31,9 @@ Write protocol (crash safety):
 * ``expire`` keeps the newest manifests and deletes every data file in the
   tables' directories that none of them lists: files a commit replaced and
   files a crashed writer staged. A reader planned on an expired version
-  loses its files, so expiry keeps the previous version too.
+  loses its files, so expiry keeps the previous version too. Erasure is
+  the exception: ``forget_keys`` expires down to its own commit, so no
+  retained version still lists the erased rows.
 
 Reads are planned from the manifest: its schema and file list go to
 ``spark.read.schema(..).parquet(*files)`` with ``basePath`` at the table
@@ -41,7 +43,9 @@ partitions (above 32 files Spark checks the files in one listing job).
 One writer per store (the engine's writers are driver-scheduled).
 Partition values are integers. The store is local-filesystem only and
 refuses a ``://`` root, as ``CheckpointTable`` does; a cluster uses
-``IcebergTableStore``.
+``IcebergTableStore``. It also refuses a root that the old protocol wrote
+(bare ``part_id=`` partitions, or ``v<N>/`` directories with ``_commits``
+markers, and no ``_manifests``) rather than read it as an empty store.
 """
 
 from __future__ import annotations
@@ -54,10 +58,9 @@ import uuid
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 _MANIFEST = re.compile(r"v(\d+)\.json")
-_INT32 = range(-(2**31), 2**31)
 
 
 def _data_files(table_dir: str) -> list[str]:
@@ -72,6 +75,22 @@ def _data_files(table_dir: str) -> list[str]:
             if f.endswith(".parquet") and not f.startswith(("_", "."))
         ]
     return out
+
+
+def _old_layout(root: str) -> bool:
+    """True iff ``root`` has a ``_commits`` directory or a table directory
+    with ``part_id=`` partitions: what the store's old protocol left."""
+    if not os.path.isdir(root):
+        return False
+    if os.path.isdir(os.path.join(root, "_commits")):
+        return True
+    for table in os.listdir(root):
+        path = os.path.join(root, table)
+        if table.startswith(("_", ".")) or not os.path.isdir(path):
+            continue
+        if any(d.startswith("part_id=") for d in os.listdir(path)):
+            return True
+    return False
 
 
 def part_rows(entry: dict) -> dict[int, int]:
@@ -91,6 +110,13 @@ class TableStore:
             )
         self.root = root
         self._manifests = os.path.join(root, "_manifests")
+        if not os.path.isdir(self._manifests) and _old_layout(root):
+            raise ValueError(
+                f"{root} holds tables of the old store layout (bare part_id= "
+                f"partitions, or v<N>/ directories with _commits markers) and no "
+                f"_manifests; this store does not read them — see the upgrade "
+                f"note in README.md (Storage) and write to a new root"
+            )
         os.makedirs(self._manifests, exist_ok=True)
 
     def path(self, table: str) -> str:
@@ -201,10 +227,8 @@ class TableStore:
         schema = df.schema
         if col:
             # the partition column reads last, typed as Spark infers it
-            fits = all(f["part_id"] in _INT32 for f in files)
             schema = StructType(
-                [f for f in schema if f.name != col]
-                + [StructField(col, IntegerType() if fits else LongType())]
+                [f for f in schema if f.name != col] + [StructField(col, IntegerType())]
             )
         return {"schema": schema.json(), "files": files}
 

@@ -1,8 +1,13 @@
 """Right-to-be-forgotten (operators/forget.py): full erasure across
-tiers, untouched partitions keep their files, lineage is recorded."""
+tiers, untouched partitions keep their files, lineage is recorded, and no
+retained version or data file still holds an erased row."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pyarrow.parquet as pq
 import pytest
 
 from mintpy_spark.operators.forget import affected_parts, forget_keys
@@ -80,3 +85,35 @@ def test_forget_missing_key_is_noop(spark, built):
     removed = forget_keys(spark, store, ["https://no-such-url/"], buckets=8)
     assert all(v == 0 for v in removed.values())
     assert store.read(spark, "obs").count() == before
+
+
+def test_forget_deletes_the_erased_rows_from_disk(spark, built, tmp_path):
+    root = str(tmp_path / "store")
+    shutil.copytree(built, root)
+    store = TableStore(root)
+    victim = [
+        r.url for r in store.read(spark, "obs").select("url").distinct()
+        .orderBy(F_col("url").desc()).limit(1).collect()
+    ]
+    before = store.latest()
+    assert before is not None
+    removed = forget_keys(spark, store, victim, buckets=8)
+    assert removed["obs"] > 0
+    # no version from before the erasure is retained, so none can be read
+    assert store.versions() == [before + 1]
+    with pytest.raises(FileNotFoundError):
+        store.read_version(spark, "obs", before)
+    # ... and no data file left anywhere under the store holds the key
+    n_files = 0
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".parquet"):
+                continue
+            n_files += 1
+            t = pq.read_table(os.path.join(dirpath, name))
+            for col in ("url", "key"):
+                if col in t.column_names:
+                    assert not set(victim) & set(t.column(col).to_pylist()), (
+                        f"{os.path.relpath(dirpath, root)}/{name} holds the erased key"
+                    )
+    assert n_files

@@ -119,3 +119,20 @@ def test_stray_manifest_entries_are_not_versions(store):
 def test_remote_root_is_refused():
     with pytest.raises(NotImplementedError, match="remote root"):
         TableStore("s3a://bucket/store")
+
+
+@pytest.mark.parametrize("layout", ["partitions", "commits"])
+def test_old_layout_root_is_refused(spark, tmp_path, layout):
+    # roots the old protocol wrote: a pipeline store's bare part_id=
+    # partitions, or a maintainer's v<N>/ directories plus _commits markers
+    root = tmp_path / "old"
+    if layout == "partitions":
+        _df(spark, [(1, "a")]).write.parquet(str(root / "obs" / "part_id=0"))
+    else:
+        _df(spark, [(1, "a")]).write.parquet(str(root / "v3" / "tier_1h"))
+        (root / "_commits").mkdir()
+        (root / "_commits" / "v3").write_text("")
+    with pytest.raises(ValueError, match="old store layout"):
+        TableStore(str(root))
+    assert not (root / "_manifests").exists()
+
