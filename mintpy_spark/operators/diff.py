@@ -126,6 +126,63 @@ def temporal_derivative(
     )
 
 
+class ChangeEvents:
+    """Per-url page-change events, one row per CHANGE of the observed
+    length: the streaming fold's recursion (``streaming.seqfold``, whose
+    protocol this implements). The first observation of a url counts as
+    a change from nothing, with NULL ``prev_length`` and ``delta``; a
+    repeat of the last length emits nothing. Values are lengths: a
+    fractional one is truncated, as ``cast(value as long)``; a NULL one
+    carries no update.
+
+    ``batch_change_events`` is the lag-window twin that the tests compare
+    the fold against; the two are separate definitions, so stream ==
+    batch is checked by tests, not guaranteed by construction.
+
+    Reference analog: the update-mode re-run skip (utils/utils1.py:691
+    run_or_skip) detects "input changed since last run" at file
+    granularity; this is the same idea at row granularity."""
+
+    name, emits, drop_nulls = "changes", "events", True
+    state = ("last_ts_us long", "last_length long")
+    out = ("ts timestamp", "text_length long", "prev_length long", "delta long")
+
+    def fold(self, ts_us, ys: list[float], state: tuple | None):
+        """One url's next lengths: ((ts, text_length, prev_length, delta)
+        columns of its changes, new state)."""
+        _last, prev = state or (None, None)
+        out: tuple[list, ...] = ([], [], [], [])
+        for t, y in zip(ts_us, ys):
+            y = int(y)
+            if y != prev:
+                row = (t, y, prev, None if prev is None else y - prev)
+                for col, v in zip(out, row):
+                    col.append(v)
+            prev = y
+        return out, (ts_us[-1], prev)
+
+
+def batch_change_events(obs: DataFrame) -> DataFrame:
+    """obs(url, warc_ts, text_length) -> (url, warc_ts, text_length,
+    prev_length, delta): one row per change of a url's length along
+    time, the first observation included (NULL prev_length and delta).
+    One lag window; the reference the streaming ``ChangeEvents`` fold is
+    tested against."""
+    w = Window.partitionBy("url").orderBy("warc_ts")
+    prev = F.lag("text_length").over(w)
+    return (
+        obs.withColumn("prev_length", prev)
+        .where(F.col("prev_length").isNull() | (F.col("prev_length") != F.col("text_length")))
+        .select(
+            "url",
+            "warc_ts",
+            F.col("text_length").cast("long").alias("text_length"),
+            F.col("prev_length").cast("long").alias("prev_length"),
+            (F.col("text_length") - F.col("prev_length")).cast("long").alias("delta"),
+        )
+    )
+
+
 def closure_triplet(
     obs: DataFrame, value_col: str, key: str = "url", ts: str = "warc_ts"
 ) -> DataFrame:

@@ -143,8 +143,8 @@ def merge_tier_delta(
     Because the tier stores decomposable partials, late data folds in by
     aggregating only the delta and full-outer-merging partial-wise:
     cnt/vsum add, vmin/vmax combine. Cost scales with the DELTA (plus the
-    touched tier cells), not with the corpus — this is the batch twin of
-    the streaming watermark path (streaming/rollup_stream.py) and the
+    touched tier cells), not with the corpus — this is the merge step of
+    the streaming tier fold (streaming/tier_maintenance.py) and the
     TimescaleDB-style continuous-aggregate refresh the north rule asks
     for. The reference's analog is update-mode re-running over grown
     inputs (utils/utils1.py:691 run_or_skip) — which recomputes the whole

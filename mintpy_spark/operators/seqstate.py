@@ -4,8 +4,9 @@ Callers: the Kalman filters and smoother (``operators.kalman``),
 Holt-Winters (``operators.holtwinters``), the Welford moments
 (``operators.stats``), the token bucket (``operators.crawlsched``), the
 streaming sequential fold (``streaming.seqfold``, one call per
-micro-batch for any of those recursions or the gap sessions, each key's
-committed state row sorted first), the per-key time-function fit
+micro-batch for any of those recursions, the gap sessions, the change
+events or the z-score monitor, each key's committed state row sorted
+first), the per-key time-function fit
 (``operators.timefunc``), the inversion sigma path (``operators.invert``),
 ``operators.forecast``, the audit folds in ``queries_tiers``, and the
 cold-tier block packer

@@ -8,9 +8,9 @@ bit_or and HLL registers with MAX: both are associative, commutative
 AND idempotent, so a replayed delta is a NO-OP by algebra, not by
 bookkeeping.  The maintainer still runs TierMaintainer's fold (both
 tables staged and committed by ONE manifest rename per batch, snapshot
-reads, time travel, expiry), but the version guard is belt-and-braces
-here — and the test suite proves it by replaying a batch with the guard
-DISABLED and observing the same store.
+reads, time travel, expiry), but the committed-version check is
+belt-and-braces here — and the test suite proves it by folding a batch's
+delta again as the next version and observing the same store.
 
 Scale: both stored tables are bounded — <= one row per (user, 60-day
 block) for presence (compressing day-level presence 60:1), <= 64
@@ -39,9 +39,8 @@ class PresenceHllMaintainer(TierMaintainer):
     * ``hll1d`` — per-day 64-register HLL of distinct users
       (operators/sketch.py), merged with MAX.
 
-    ``guard=False`` disables the committed-version replay check — safe
-    for THIS family only (idempotent folds; see module docstring), and
-    used by tests to prove replay convergence without bookkeeping.
+    ``run`` is its AvailableNow pass over new event files: the streaming
+    twin of presence_tier + hll_tier over everything ingested.
     """
 
     PRESENCE = "presence"
@@ -49,14 +48,12 @@ class PresenceHllMaintainer(TierMaintainer):
 
     def __init__(
         self, root: str, user_col: str = "user_id", ts: str = "ts",
-        guard: bool = True,
     ) -> None:
         super().__init__(
             root, value_col=user_col, key=user_col, ts=ts,
             tiers=(self.PRESENCE, self.HLL),
         )
         self.user_col = user_col
-        self.guard = guard
 
     def _compute(self, delta_obs, stored, with_sq):
         del with_sq  # value-tier knob; sketch stores carry no partials
@@ -87,24 +84,3 @@ class PresenceHllMaintainer(TierMaintainer):
             "presence_merge/hll_merge — both idempotent, so folding the "
             "tail repeatedly is safe"
         )
-
-
-def maintain_presence_hll(
-    spark: SparkSession,
-    input_path: str,
-    store_root: str,
-    checkpoint: str,
-    schema: str = "user_id long, ts timestamp",
-    guard: bool = True,
-) -> None:
-    """One AvailableNow maintenance pass over new event files: the
-    streaming twin of presence_tier + hll_tier over everything ingested."""
-    m = PresenceHllMaintainer(store_root, guard=guard)
-    src = spark.readStream.schema(schema).parquet(input_path)
-    q = (
-        src.writeStream.foreachBatch(m.foreach_batch())
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -1,10 +1,11 @@
 """One streaming fold for every per-key sequential recursion: a
 foreachBatch fold over a versioned per-key state table.
 
-A recursion object (``operators.kalman.LocalLevel``,
-``operators.holtwinters.HoltWinters``, ``operators.stats.Welford``,
-``operators.crawlsched.TokenBucket``, ``operators.sessionize.GapSessions``)
-declares:
+The engine's one per-key streaming mechanism. A recursion object — one of
+seven: ``operators.kalman.LocalLevel``, ``operators.holtwinters.HoltWinters``,
+``operators.stats.Welford``, ``operators.crawlsched.TokenBucket``,
+``operators.sessionize.GapSessions``, ``operators.diff.ChangeEvents`` and
+``operators.anomaly.ZScoreMonitor`` — declares:
 
 * ``name`` and ``emits``: its state lives under
   ``<checkpoint>/<name>_state`` and each batch records the lineage rows
@@ -13,14 +14,18 @@ declares:
   ``last_ts_us long``, the key's watermark (the ts of its last folded row);
 * ``out``: its output columns; a ``timestamp`` column is folded as
   microseconds and written in the input's ts type, and a column named
-  ``ts`` takes the input's ts column name;
+  ``ts`` takes the input's ts column name; a ``long`` column may hold
+  NULLs (None);
 * ``drop_nulls``: whether rows with a NULL value are dropped before the
   fold, or kept and handed to ``fold`` as None;
 * ``fold(ts_us, values, state) -> (out columns, new state)``: one key's
   next rows in (ts, value) order; ``state`` is None for a new key.
 
-The batch operator beside each recursion calls the same ``fold``, so
-stream == batch holds by construction.
+The batch operators of the first five call the same ``fold``, so
+stream == batch holds by construction. ``ChangeEvents`` and
+``ZScoreMonitor`` sit beside zero-Python SQL windows
+(``batch_change_events``, ``rolling_zscore_anomalies``): there stream ==
+batch is checked by tests (tests/test_seqfold.py), not by construction.
 
 Each micro-batch of observations (key, ts, value) is folded into the
 committed per-key state:
@@ -234,9 +239,13 @@ class SeqFold(TierMaintainer):
                     (np.asarray(vals, dt), np.zeros(n_out, dt))
                 )
             for j, (vals, dt) in enumerate(zip(outs, out_types)):
-                frame[f"out{j}"] = np.concatenate(
-                    (np.zeros(n_keys, dt), np.asarray(vals, dt))
-                )
+                head = np.zeros(n_keys, dt)
+                if dt is np.int64 and None in vals:
+                    # numpy has no NULL long: a nullable column, built only
+                    # where a fold returned None
+                    frame[f"out{j}"] = pd.array([*head.tolist(), *vals], "Int64")
+                else:
+                    frame[f"out{j}"] = np.concatenate((head, np.asarray(vals, dt)))
             return pd.DataFrame(frame)
 
         return map_sorted_groups(rows, "k", ("_o", "t_us", "y"), fold, schema)
@@ -349,12 +358,5 @@ def run_seq_fold(
             f"{checkpoint} holds a stateful operator's state; fold into a new "
             "output and checkpoint"
         )
-    query = (
-        spark.readStream.schema(schema).parquet(input_path)
-        .writeStream.foreachBatch(fold.foreach_batch())
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    fold.run(spark, input_path, checkpoint, schema)
     return fold

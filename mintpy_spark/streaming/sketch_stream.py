@@ -40,7 +40,9 @@ class HdrSketchMaintainer(TierMaintainer):
     """Maintains ONE stored table: the per-(key-day) HDR quantile
     sketch of ``value_col``, updated delta-wise by TierMaintainer's fold
     (see tier_maintenance.py docstring; replay and crash semantics are
-    identical and tested)."""
+    identical and tested). ``run`` is its AvailableNow pass over new
+    files: the streaming twin of hdr_tier over everything ever
+    ingested."""
 
     TIER_NAME = "hdr1d"
 
@@ -73,24 +75,3 @@ class HdrSketchMaintainer(TierMaintainer):
             "sketch store has no unfolded tail — read_sketch() gives the "
             "latest committed sketch, hdr_merge folds any live delta"
         )
-
-
-def maintain_hdr_sketch(
-    spark: SparkSession,
-    input_path: str,
-    store_root: str,
-    checkpoint: str,
-    schema: str = "url string, warc_ts timestamp, text_length long",
-    value_col: str = "text_length",
-) -> None:
-    """One AvailableNow maintenance pass over new files: the streaming
-    twin of hdr_tier over everything ever ingested."""
-    m = HdrSketchMaintainer(store_root, value_col=value_col)
-    src = spark.readStream.schema(schema).parquet(input_path)
-    q = (
-        src.writeStream.foreachBatch(m.foreach_batch())
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -14,7 +14,7 @@ store (sources/tables.py), one manifest-committed version per batch:
   new immutable files, then commits them in ONE manifest rename, as
   version N;
 * a replay of batch N once version N is committed is skipped outright
-  (the guard is ``latest >= N``);
+  (the test is ``latest >= N``);
 * a crash before the rename leaves the previous version authoritative and
   the staged files unreferenced — the replay recomputes version N from it,
   and ``expire`` deletes the orphans;
@@ -25,13 +25,14 @@ store (sources/tables.py), one manifest-committed version per batch:
 The maintained tiers therefore equal a batch rebuild over everything ever
 ingested (verified by tests/test_streaming.py, including a replay test).
 
-Why foreachBatch and not a streaming aggregation: the watermark path
-(rollup_stream.py) FINALIZES buckets and drops later arrivals — right for
-append-only emission; tier MAINTENANCE must keep every bucket updatable
-forever, which is state Structured Streaming cannot hold. foreachBatch
-turns each micro-batch into a bounded batch job against durable tables —
-the lambda-architecture merge loop, with the delta-proportional cost the
-north rule's continuous aggregates require.
+Why foreachBatch and not a streaming aggregation: a watermarked window
+aggregation FINALIZES buckets and drops every later arrival; tier
+MAINTENANCE must keep every bucket updatable forever, which is state
+Structured Streaming cannot hold. foreachBatch turns each micro-batch into
+a bounded batch job against durable tables — the lambda-architecture merge
+loop, with the delta-proportional cost the north rule's continuous
+aggregates require. The engine keeps no Structured-Streaming state at all:
+its per-key recursions fold on the same loop (streaming/seqfold.py).
 
 Scale: per batch, cost = delta aggregation + touched-cell rewrite. The
 stored tier tables should be bucketed on the key (sources/bucketed.py) so
@@ -44,6 +45,7 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from mintpy_spark.operators.rollup import build_tiers, refresh_tiers_incremental
 from mintpy_spark.plans.checkpoint import CheckpointTable
@@ -69,9 +71,6 @@ class TierMaintainer:
     """Holds the stored-tier locations and applies one delta per call.
     Subclasses keep the fold and override ``_compute`` (the new tables
     from the delta and the committed ones)."""
-
-    #: skip a replayed batch whose version is already committed
-    guard = True
 
     def __init__(
         self, root: str, value_col: str = "text_length",
@@ -177,14 +176,13 @@ class TierMaintainer:
         """One idempotent maintenance step: stage a NEW version of every
         table computed from the last COMMITTED version, then commit it as
         version ``batch_id``. Replays of an already-committed batch are
-        skipped (unless ``guard`` is off); replays of a crashed batch
-        recompute from the still-authoritative previous version (see
-        module docstring). ``with_sq`` makes the INITIAL build
-        variance-capable (vsumsq); later folds inherit the stored partial
-        set automatically."""
+        skipped; replays of a crashed batch recompute from the
+        still-authoritative previous version (see module docstring).
+        ``with_sq`` makes the INITIAL build variance-capable (vsumsq);
+        later folds inherit the stored partial set automatically."""
         spark = delta_obs.sparkSession
         committed = self.committed_version(spark)
-        if self.guard and committed is not None and committed >= batch_id:
+        if committed is not None and committed >= batch_id:
             return  # replay of a committed batch: already folded
         if delta_obs.isEmpty():
             return
@@ -213,13 +211,23 @@ class TierMaintainer:
             ]
         )
 
-    def foreach_batch(self):
-        """The writeStream.foreachBatch callable."""
-
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            self.apply_delta(batch_df, batch_id)
-
-        return fn
+    def run(
+        self, spark: SparkSession, input_path: str, checkpoint: str,
+        schema: str | StructType,
+    ) -> None:
+        """One AvailableNow pass: the parquet files under ``input_path``
+        that arrived since the last pass (Spark's stream checkpoint at
+        ``checkpoint`` records which) are folded, one ``apply_delta`` per
+        micro-batch with its batch id as the version, then the query
+        stops."""
+        (
+            spark.readStream.schema(schema).parquet(input_path)
+            .writeStream.foreachBatch(self.apply_delta)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
 
 
 def maintain_tiers(
@@ -232,12 +240,6 @@ def maintain_tiers(
 ) -> None:
     """Run one AvailableNow maintenance pass: new files since the last
     checkpoint are folded into the stored tiers and the query stops."""
-    m = TierMaintainer(store_root, value_col=value_col)
-    src = spark.readStream.schema(schema).parquet(input_path)
-    q = (
-        src.writeStream.foreachBatch(m.foreach_batch())
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    TierMaintainer(store_root, value_col=value_col).run(
+        spark, input_path, checkpoint, schema
     )
-    q.awaitTermination()

@@ -1,6 +1,6 @@
 """Round-3 batch z: streaming maintenance of the IDEMPOTENT sketch
 family (presence bitmap + HLL registers) — stream == batch rebuild,
-replay convergence WITHOUT the version guard, bounded store."""
+replay convergence by algebra alone, bounded store."""
 
 from __future__ import annotations
 
@@ -43,18 +43,16 @@ def _batch_truth(spark, inp):
 
 
 def test_presence_hll_stream_equals_batch(spark, paths):
-    from mintpy_spark.streaming.presence_stream import (
-        PresenceHllMaintainer, maintain_presence_hll,
-    )
+    from mintpy_spark.streaming.presence_stream import PresenceHllMaintainer
 
     inp, store, ckpt = paths
+    m = PresenceHllMaintainer(store)
     _drop(spark, inp, range(4), range(1, 4))
-    maintain_presence_hll(spark, inp, store, ckpt)
+    m.run(spark, inp, ckpt, SCH)
     _drop(spark, inp, range(2, 6), range(3, 6))   # new users + new days
     _drop(spark, inp, [0], [1])                   # pure replayed duplicate rows
-    maintain_presence_hll(spark, inp, store, ckpt)
+    m.run(spark, inp, ckpt, SCH)
 
-    m = PresenceHllMaintainer(store)
     pres_want, hll_want = _batch_truth(spark, inp)
     assert {tuple(r) for r in m.read_presence(spark).collect()} == pres_want
     assert {tuple(r) for r in m.read_hll(spark).collect()} == hll_want
@@ -62,8 +60,9 @@ def test_presence_hll_stream_equals_batch(spark, paths):
 
 def test_replay_converges_even_without_guard(spark, paths):
     """The idempotent family's distinguishing property: folding the SAME
-    delta twice — with the committed-version guard DISABLED — leaves the
-    store unchanged (bit_or / MAX are idempotent).  The additive HDR/CMS
+    delta again as the next version (batch 1 over committed version 0,
+    which the committed-version check does not skip) leaves the store
+    unchanged (bit_or / MAX are idempotent).  The additive HDR/CMS
     maintainers would double-count here."""
     from mintpy_spark.streaming.presence_stream import PresenceHllMaintainer
 
@@ -71,11 +70,11 @@ def test_replay_converges_even_without_guard(spark, paths):
     _drop(spark, inp, range(3), range(1, 3))
     delta = spark.read.parquet(inp)
 
-    m = PresenceHllMaintainer(store, guard=False)
+    m = PresenceHllMaintainer(store)
     m.apply_delta(delta, batch_id=0)
     once_p = {tuple(r) for r in m.read_presence(spark).collect()}
     once_h = {tuple(r) for r in m.read_hll(spark).collect()}
-    m.apply_delta(delta, batch_id=1)  # full replay, guard off
+    m.apply_delta(delta, batch_id=1)  # the same delta, folded again
     assert {tuple(r) for r in m.read_presence(spark).collect()} == once_p
     assert {tuple(r) for r in m.read_hll(spark).collect()} == once_h
 

@@ -1,5 +1,7 @@
-"""Streaming tier refresh: incremental, watermark-finalized, and exactly
-consistent with the batch rollup for every emitted bucket."""
+"""Streaming maintenance over the table store: stored tiers, sketches and
+the dedup index folded per micro-batch equal a batch rebuild, replays are
+idempotent, reads see committed versions plus the unfolded tail, and raw
+compaction drops only covered history."""
 
 from __future__ import annotations
 
@@ -7,19 +9,6 @@ import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
-
-from mintpy_spark.streaming.rollup_stream import refresh_tier_1h
-
-
-def _rows(day: int, hours: range, url: str = "u1"):
-    out = []
-    for h in hours:
-        ts = dt.datetime(2023, 1, day, h, 30)
-        out.append((url, ts, b"<body>x</body>", "x" * (10 + h), "en"))
-    return out
-
-
-SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
 @pytest.fixture()
@@ -29,134 +18,6 @@ def paths(tmp_path):
         str(tmp_path / "tier_out"),
         str(tmp_path / "ckpt"),
     )
-
-
-def test_streaming_matches_batch_and_is_incremental(spark, paths):
-    inp, outp, ckpt = paths
-    # batch 1: hours 0..9 of day 1
-    spark.createDataFrame(_rows(1, range(0, 10)), SCHEMA).write.mode(
-        "append"
-    ).parquet(inp)
-    refresh_tier_1h(spark, inp, outp, ckpt, watermark="2 hours")
-    got1 = spark.read.parquet(outp)
-    n1 = got1.count()
-    # watermark = max(09:30) - 2h -> buckets strictly before 07:00 finalized
-    assert 0 < n1 <= 8
-    assert got1.agg(F.max("bucket_start")).first()[0] < dt.datetime(2023, 1, 1, 8)
-
-    # batch 2: a later day arrives -> watermark jumps, day-1 buckets flush
-    spark.createDataFrame(_rows(2, range(0, 3)), SCHEMA).write.mode(
-        "append"
-    ).parquet(inp)
-    refresh_tier_1h(spark, inp, outp, ckpt, watermark="2 hours")
-    got2 = spark.read.parquet(outp)
-    assert got2.count() > n1  # incremental progress, no reprocessing crash
-
-    # every emitted bucket equals the batch rollup of the same input
-    batch = (
-        spark.read.parquet(inp)
-        .groupBy("url", F.date_trunc("hour", "warc_ts").alias("bucket_start"))
-        .agg(
-            F.count("text").alias("cnt"),
-            F.sum(F.octet_length("text")).alias("vsum"),
-            F.min(F.octet_length("text")).alias("vmin"),
-            F.max(F.octet_length("text")).alias("vmax"),
-        )
-    )
-    joined = got2.alias("s").join(
-        batch.alias("b"), ["url", "bucket_start"], "left"
-    )
-    assert joined.where(F.col("b.cnt").isNull()).count() == 0
-    mism = joined.where(
-        (F.col("s.cnt") != F.col("b.cnt"))
-        | (F.col("s.vsum") != F.col("b.vsum"))
-        | (F.col("s.vmin") != F.col("b.vmin"))
-        | (F.col("s.vmax") != F.col("b.vmax"))
-    ).count()
-    assert mism == 0
-    # no bucket emitted twice
-    assert (
-        got2.groupBy("url", "bucket_start").count().where("count > 1").count() == 0
-    )
-
-
-def _run_changes(spark, inp, outp, ckpt):
-    from mintpy_spark.streaming.change_detect import change_events
-
-    src = (
-        spark.readStream.schema("url string, warc_ts timestamp, text_length long")
-        .parquet(inp)
-    )
-    q = (
-        change_events(src)
-        .writeStream.format("parquet")
-        .option("path", outp)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def test_stateful_change_detector_matches_batch_twin(spark, paths):
-    inp, outp, ckpt = paths
-    obs1 = [
-        ("u1", dt.datetime(2023, 1, 1, 0), 10),
-        ("u1", dt.datetime(2023, 1, 1, 1), 10),   # unchanged -> no event
-        ("u1", dt.datetime(2023, 1, 1, 2), 15),   # change
-        ("u2", dt.datetime(2023, 1, 1, 0), 7),
-    ]
-    sch = "url string, warc_ts timestamp, text_length long"
-    spark.createDataFrame(obs1, sch).write.mode("append").parquet(inp)
-    _run_changes(spark, inp, outp, ckpt)
-    got1 = spark.read.parquet(outp)
-    assert got1.count() == 3  # u1 first-seen, u1 change, u2 first-seen
-
-    # batch 2: state must carry across restarts — u1 repeating 15 is NOT a
-    # change; u2 changing is; a brand-new url is first-seen
-    obs2 = [
-        ("u1", dt.datetime(2023, 1, 2, 0), 15),   # same as state -> no event
-        ("u2", dt.datetime(2023, 1, 2, 0), 9),    # change
-        ("u3", dt.datetime(2023, 1, 2, 0), 3),    # first seen
-    ]
-    spark.createDataFrame(obs2, sch).write.mode("append").parquet(inp)
-    _run_changes(spark, inp, outp, ckpt)
-    got2 = spark.read.parquet(outp)
-    assert got2.count() == 5
-
-    # cross-check: streamed events == batch lag-window twin over all input
-    from mintpy_spark.streaming.change_detect import batch_change_events
-
-    batch = batch_change_events(spark.read.parquet(inp))
-    s = {tuple(r) for r in got2.collect()}
-    b = {tuple(r) for r in batch.collect()}
-    assert s == b
-    # delta semantics
-    deltas = {(r.url, r.delta) for r in got2.collect()}
-    assert ("u1", 5) in deltas and ("u2", 2) in deltas
-    assert ("u3", None) in deltas
-
-
-def test_change_detector_survives_multi_chunk_groups(spark, paths):
-    """A group larger than the Arrow batch arrives as several chunks in
-    arbitrary order; the fold must concat+sort once, not per chunk."""
-    inp, outp, ckpt = paths
-    sch = "url string, warc_ts timestamp, text_length long"
-    rows = [
-        ("u1", dt.datetime(2023, 1, 1, h), 10 + (h % 3)) for h in range(24)
-    ]
-    spark.createDataFrame(rows, sch).write.mode("append").parquet(inp)
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
-    try:
-        _run_changes(spark, inp, outp, ckpt)
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    from mintpy_spark.streaming.change_detect import batch_change_events
-
-    got = {tuple(r) for r in spark.read.parquet(outp).collect()}
-    expect = {tuple(r) for r in batch_change_events(spark.read.parquet(inp)).collect()}
-    assert got == expect and len(got) == 24  # value changes every hour
 
 
 def test_streaming_tier_maintenance_equals_batch_rebuild(spark, paths):
@@ -581,9 +442,7 @@ def test_hdr_sketch_maintenance_equals_batch_and_replay_safe(spark, paths):
     ingested, and — critically for an ADDITIVE sketch — a replayed
     committed batch must not double-count."""
     from mintpy_spark.operators.sketch import hdr_tier
-    from mintpy_spark.streaming.sketch_stream import (
-        HdrSketchMaintainer, maintain_hdr_sketch,
-    )
+    from mintpy_spark.streaming.sketch_stream import HdrSketchMaintainer
 
     inp, store_root, ckpt = paths
     sch = "url string, warc_ts timestamp, text_length long"
@@ -597,13 +456,13 @@ def test_hdr_sketch_maintenance_equals_batch_and_replay_safe(spark, paths):
         ]
         spark.createDataFrame(rows, sch).write.mode("append").parquet(inp)
 
+    m = HdrSketchMaintainer(store_root)
     drop(1, 3)
-    maintain_hdr_sketch(spark, inp, store_root, ckpt)
+    m.run(spark, inp, ckpt, sch)
     drop(3, 5)  # new days
     drop(1, 2)  # late rows for day 1
-    maintain_hdr_sketch(spark, inp, store_root, ckpt)
+    m.run(spark, inp, ckpt, sch)
 
-    m = HdrSketchMaintainer(store_root)
     got = {tuple(r) for r in m.read_sketch(spark).collect()}
     allobs = spark.read.parquet(inp).select(
         F.date_trunc("day", F.col("warc_ts")).alias("day"),

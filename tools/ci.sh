@@ -1,6 +1,9 @@
 #!/usr/bin/env bash
-# One-command verification gate: full pytest suite, the cascade, ingest and
-# serve benchmarks' smoke self-tests (their output checks: sum(cnt) at 30d ==
+# One-command verification gate: no Structured-Streaming state in the engine
+# (no .applyInPandasWithState(, .withWatermark( or import GroupState under
+# mintpy_spark/ or jobs/; per-key streaming folds through streaming/seqfold.py),
+# the full pytest suite, the cascade, ingest and serve benchmarks' smoke
+# self-tests (their output checks: sum(cnt) at 30d ==
 # pages; text_sha == sha1(text), cnt/vsum per tier, n over blocks; stored
 # tiers == build_tiers, streaming Kalman levels == batch kalman_level, 0 rows
 # dropped), then the full-registry oracle sweep at sf0.01 (--fast: only the
@@ -15,6 +18,13 @@
 #   bash tools/ci.sh --fast     # pytest, the self-tests and the store oracles
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+echo "== no Structured-Streaming state under mintpy_spark/ and jobs/ =="
+if grep -rnE --include='*.py' '\.applyInPandasWithState\(|\.withWatermark\(|import GroupState' \
+    mintpy_spark/ jobs/; then
+  echo "Structured-Streaming state found above; fold per-key state through streaming/seqfold.py" >&2
+  exit 1
+fi
 
 echo "== pytest =="
 python -m pytest tests/ -q
