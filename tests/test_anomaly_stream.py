@@ -1,5 +1,6 @@
-"""Streaming rolling z-score monitor: streaming == batch over the replayed
-history, state carries across restarts, replay is a no-op."""
+"""Streaming rolling z-score monitor (``ZScoreMonitor`` on the sequential
+fold): streaming == batch over the replayed history, state carries across
+restarts, a duplicate delivery is a no-op, NULLs hold frame positions."""
 
 from __future__ import annotations
 
@@ -8,6 +9,8 @@ import datetime as dt
 import numpy as np
 import pytest
 
+from mintpy_spark.operators.anomaly import ZScoreMonitor, rolling_zscore_anomalies
+from mintpy_spark.streaming.seqfold import run_seq_fold
 
 SCHEMA = "user_id long, ts timestamp, value double"
 
@@ -22,18 +25,11 @@ def paths(tmp_path):
 
 
 def _run(spark, inp, outp, ckpt):
-    from mintpy_spark.streaming.anomaly_stream import streaming_zscore_anomalies
+    run_seq_fold(spark, ZScoreMonitor(), inp, outp, ckpt, SCHEMA, "value")
 
-    src = spark.readStream.schema(SCHEMA).parquet(inp)
-    q = (
-        streaming_zscore_anomalies(src)
-        .writeStream.format("parquet")
-        .option("path", outp)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+
+def _rows(df_rows):
+    return {(r.user_id, r.ts, r.value, r.n, r.dev, r.z) for r in df_rows}
 
 
 def _series(seed: int, n: int, start_hour: int = 0):
@@ -47,8 +43,6 @@ def _series(seed: int, n: int, start_hour: int = 0):
 
 
 def test_streaming_anomalies_equal_batch_over_history(spark, paths):
-    from mintpy_spark.operators.anomaly import rolling_zscore_anomalies
-
     inp, outp, ckpt = paths
     rows1 = _series(21, 30)
     rows1[25] = (1, rows1[25][1], 400.0)  # planted spike in batch 1
@@ -67,17 +61,15 @@ def test_streaming_anomalies_equal_batch_over_history(spark, paths):
     got2 = spark.read.parquet(outp).collect()
     assert any(r.ts == rows2[3][1] for r in got2)
 
-    batch = rolling_zscore_anomalies(
-        spark.read.parquet(inp), "value"
-    ).collect()
-    s = {(r.user_id, r.ts, r.value, r.n, r.dev, r.z) for r in got2}
-    b = {(r.user_id, r.ts, r.value, r.n, r.dev, r.z) for r in batch}
+    batch = rolling_zscore_anomalies(spark.read.parquet(inp), "value").collect()
+    s, b = _rows(got2), _rows(batch)
+    assert len(s) == len(got2)  # no row emitted twice
     assert s == b and len(b) >= 2
 
 
 def test_streaming_anomaly_duplicate_delivery_is_noop(spark, paths):
     """At-least-once tolerance: the same rows delivered AGAIN as new source
-    files are at-or-behind the state watermark and emit nothing."""
+    files are at-or-behind the per-key state and emit nothing."""
     inp, outp, ckpt = paths
     rows = _series(31, 40)
     rows[30] = (1, rows[30][1], 500.0)
@@ -95,8 +87,6 @@ def test_streaming_anomaly_duplicate_delivery_is_noop(spark, paths):
 def test_streaming_anomaly_null_values_hold_frame_positions(spark, paths):
     """NULL values occupy ROWS-frame slots but are skipped by the
     aggregates — identical to the batch window semantics."""
-    from mintpy_spark.operators.anomaly import rolling_zscore_anomalies
-
     inp, outp, ckpt = paths
     t0 = dt.datetime(2024, 1, 1)
     rows = [(1, t0 + dt.timedelta(hours=i), 50.0 + (i % 3)) for i in range(20)]
@@ -104,12 +94,8 @@ def test_streaming_anomaly_null_values_hold_frame_positions(spark, paths):
     rows[18] = (1, rows[18][1], 300.0)
     spark.createDataFrame(rows, SCHEMA).write.mode("append").parquet(inp)
     _run(spark, inp, outp, ckpt)
-    got = {
-        (r.user_id, r.ts, r.value, r.n, r.dev, r.z)
-        for r in spark.read.parquet(outp).collect()
-    }
-    batch = {
-        (r.user_id, r.ts, r.value, r.n, r.dev, r.z)
-        for r in rolling_zscore_anomalies(spark.read.parquet(inp), "value").collect()
-    }
+    got = _rows(spark.read.parquet(outp).collect())
+    batch = _rows(
+        rolling_zscore_anomalies(spark.read.parquet(inp), "value").collect()
+    )
     assert got == batch and len(batch) >= 1
