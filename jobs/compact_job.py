@@ -9,6 +9,13 @@ operators/retention.compact_raw).  Run it after each maintenance fold
 with the retention horizon you want, e.g. daily with
 ``--cutoff $(date -d '90 days ago' +'%Y-%m-%d 00:00:00')``.
 
+The drop is file-granular, like ``drop_chunks``: only raw files whose
+rows all lie below the cutoff are deleted, and nothing is rewritten, so
+the next maintain_job sees no compacted file as new input.  A file that
+straddles the cutoff stays as it is.  There is no swap of the raw
+directory, so a killed run leaves nothing to recover: at worst the ledger
+misses the deleted files' rows, and the next gate refuses.
+
 Deployment (north_rule):
 
     cd /root/repo && zip -r /tmp/mintpy_spark.zip mintpy_spark

@@ -96,11 +96,22 @@ def compact_raw(
     tier: str = "1h",
     value_col: str | None = None,
 ) -> dict:
-    """Downsample-then-delete: drop raw observations older than ``cutoff``
-    once the committed finest tier provably covers them (the TimescaleDB
-    ``drop_chunks``-after-continuous-aggregate lifecycle; the reference
-    instead keeps full stacks forever and leans on HDF5 chunk gzip,
-    stack.py:352-355 — affordable at image scale, not at 10^12 rows).
+    """Downsample-then-delete: drop the raw files whose observations all
+    lie below ``cutoff`` once the committed finest tier provably covers
+    them (the TimescaleDB ``drop_chunks``-after-continuous-aggregate
+    lifecycle; the reference instead keeps full stacks forever and leans
+    on HDF5 chunk gzip, stack.py:352-355 — affordable at image scale, not
+    at 10^12 rows).
+
+    File-granular drop, as ``drop_chunks`` drops whole chunks: a raw file
+    is deleted only when every one of its rows has a non-NULL timestamp
+    below the cutoff and a non-NULL value. Nothing is rewritten, so the
+    maintenance stream (``maintain_tiers``), which folds every file it has
+    not seen, never sees a compacted file as new input. A file that
+    straddles the cutoff, or holds a NULL-ts or NULL-value row (no bucket,
+    or no ledger trace, could account for it), stays byte for byte, and
+    its old rows keep counting as raw in the gate. The production stream
+    lands one file per interval, so whole files fall below a cutoff.
 
     Safety gate (refuses, never silently loses data):
     * ``cutoff`` must be aligned to a ``tier`` bucket boundary — a
@@ -108,28 +119,23 @@ def compact_raw(
       ``floor(cutoff)`` and ``cutoff``;
     * per (key, bucket) below the cutoff, the committed ``tier`` table
       must account for EXACTLY the rows ever dropped plus the raw rows
-      about to be:  ``tier.cnt == ledger.dropped + raw.cnt``.  The
-      ledger (``<raw>.__compaction_ledger``, appended on every
-      compaction) is what makes the gate exact across REPEATED
-      compactions and late arrivals into already-compacted buckets: an
-      unfolded raw row makes ``ledger + raw > tier`` and the compaction
-      refuses — fold first, compact after;
-    * rows with a NULL timestamp belong to no bucket and can never be
-      covered by a tier — they are kept unconditionally (a bare
-      ``ts >= cut`` filter would silently drop them unledgered).
+      still there:  ``tier.cnt == ledger.dropped + raw.cnt``.  The
+      ledger (``<raw>.__compaction_ledger``, appended with the dropped
+      files' rows on every compaction) is what makes the gate exact
+      across REPEATED compactions and late arrivals into
+      already-compacted buckets: an unfolded raw row makes
+      ``ledger + raw > tier`` and the compaction refuses — fold first,
+      compact after.
 
-    Rewrite protocol (parquet-over-filesystem stand-in for an Iceberg
-    ``DELETE WHERE``): kept rows are written to ``<raw>.__compact_tmp``,
-    the old directory is renamed to ``<raw>.__old``, tmp renamed into
-    place, old removed.  A crash between the two renames leaves
-    ``.__old`` intact — recovery is renaming it back; the tier store is
-    never touched.  The raw input is a plain Parquet directory on any
-    Hadoop filesystem, not a table of the engine's store, so this swap
-    stays outside the store's manifest commit.  The compaction is
-    recorded in the maintainer's lineage metrics table (north-rule
-    checkpoint discipline).
+    Crash safety: the files are deleted, then the ledger is appended. A
+    crash in between leaves the ledger short, so the next gate reads
+    ``tier > ledger + raw`` and refuses — the safe direction (no silent
+    loss; the operator appends the missing ledger rows). There is no swap
+    of the raw directory, so nothing is left to recover; the tier store
+    is never touched. The compaction is recorded in the maintainer's
+    lineage metrics table (north-rule checkpoint discipline).
     """
-    from mintpy_spark.functions.timefn import TIER_SECONDS, iso_to_epoch_sec
+    from mintpy_spark.functions.timefn import TIER_SECONDS, bucket_start, iso_to_epoch_sec
 
     value_col = value_col or maintainer.value_col
     ts = maintainer.ts
@@ -141,19 +147,28 @@ def compact_raw(
         )
     cut = F.lit(cutoff).cast("timestamp")
 
-    from mintpy_spark.functions.timefn import bucket_start
-
     key = maintainer.key
-    raw = spark.read.parquet(raw_path)
-    old_rows = raw.where(F.col(ts) < cut)
-    drop_counts = (
-        old_rows.where(F.col(value_col).isNotNull())
-        .groupBy(
-            F.col(key).alias("k"),
-            bucket_start(F.col(ts), tier).alias("b"),
-        )
-        .agg(F.count(F.lit(1)).alias("raw_cnt"))
+    raw = spark.read.parquet(raw_path).withColumn("_file", F.input_file_name())
+    # per raw file: its rows, and whether every row is droppable
+    droppable = F.coalesce(
+        F.col(ts).isNotNull() & (F.col(ts) < cut) & F.col(value_col).isNotNull(),
+        F.lit(False),
     )
+    files = raw.groupBy("_file").agg(
+        F.count(F.lit(1)).alias("n"), F.bool_and(droppable).alias("drop")
+    ).collect()
+    drop_files = [r["_file"] for r in files if r["drop"]]
+
+    def bucket_counts(rows):
+        return (
+            rows.where(F.col(value_col).isNotNull())
+            .groupBy(
+                F.col(key).alias("k"),
+                bucket_start(F.col(ts), tier).alias("b"),
+            )
+            .agg(F.count(F.lit(1)).alias("raw_cnt"))
+        )
+
     ledger_path = raw_path.rstrip("/") + ".__compaction_ledger"
     try:
         ledger = (
@@ -169,7 +184,8 @@ def compact_raw(
         F.col("bucket_start").alias("b"),
         F.col("cnt").alias("tier_cnt"),
     )
-    acc = tier_below.join(drop_counts, ["k", "b"], "full")
+    # every raw row below the cutoff counts, in a dropped file or not
+    acc = tier_below.join(bucket_counts(raw.where(F.col(ts) < cut)), ["k", "b"], "full")
     if ledger is not None:
         acc = acc.join(ledger, ["k", "b"], "full")
     else:
@@ -186,45 +202,21 @@ def compact_raw(
             f"committed tier != ledger + raw (e.g. {ex}) — fold the "
             "outstanding delta before compacting"
         )
-    raw_cnt = int(
-        drop_counts.agg(F.sum("raw_cnt").alias("c")).first()["c"] or 0
-    )
-
-    # NULL-ts rows are outside every bucket: `ts >= cut` would silently
-    # drop them (NULL is neither >= nor < cut, so they'd vanish from the
-    # rewrite AND from drop_counts/ledger — unaccounted loss). NULL-VALUE
-    # rows are equally unledgerable: the gate and drop_counts both count
-    # non-NULL values only (tiers count values), so deleting an old row
-    # whose value is NULL would lose its timestamp without any ledger
-    # trace. Keep both unconditionally; compaction only ever removes rows
-    # it has ledgered.
-    kept = raw.where(
-        F.col(ts).isNull() | (F.col(ts) >= cut) | F.col(value_col).isNull()
-    )
-    # pin the ledger delta BEFORE the swap — it is computed from the old
-    # raw directory, which is about to disappear
-    ledger_delta = drop_counts.select(
-        "k", "b", F.col("raw_cnt").alias("dropped")
-    ).localCheckpoint(eager=True)
-    tmp = raw_path.rstrip("/") + ".__compact_tmp"
-    old = raw_path.rstrip("/") + ".__old"
-    kept.write.mode("overwrite").parquet(tmp)
-    # row count from the just-written parquet footers — not a dedicated
-    # kept.count() action that re-scans the full raw table a 4th time
-    kept_cnt = spark.read.parquet(tmp).count()
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    raw_p, tmp_p, old_p = hpath(raw_path), hpath(tmp), hpath(old)
-    fs = raw_p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(old_p):
-        fs.delete(old_p, True)
-    fs.rename(raw_p, old_p)
-    fs.rename(tmp_p, raw_p)
-    fs.delete(old_p, True)
-    # ledger append AFTER the swap: a crash in between leaves the ledger
-    # short, which makes the next gate read tier > ledger + raw and
-    # refuse — the safe direction (no silent loss, operator fixes up)
-    ledger_delta.write.mode("append").parquet(ledger_path)
-    dropped = raw_cnt
+    dropped = sum(r["n"] for r in files if r["drop"])
+    kept = sum(r["n"] for r in files if not r["drop"])
+    if drop_files:
+        # pin the ledger delta BEFORE the deletes: it is computed from the
+        # files about to disappear
+        ledger_delta = bucket_counts(
+            raw.where(F.col("_file").isin(drop_files))
+        ).select("k", "b", F.col("raw_cnt").alias("dropped")).localCheckpoint(eager=True)
+        jvm = spark._jvm
+        fs = jvm.org.apache.hadoop.fs.Path(raw_path).getFileSystem(
+            spark._jsc.hadoopConfiguration()
+        )
+        for f in drop_files:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)), False)
+        ledger_delta.write.mode("append").parquet(ledger_path)
     maintainer.metrics.append(
         [
             {
@@ -232,10 +224,10 @@ def compact_raw(
                 "stage": f"compact_raw_{tier}",
                 "part_id": 0,
                 "input_fp": raw_path,
-                "row_count": int(kept_cnt),
+                "row_count": int(kept),
                 "wall_ms": 0,
                 "status": "complete",
             }
         ]
     )
-    return {"dropped": int(dropped), "kept": int(kept_cnt), "cutoff": cutoff}
+    return {"dropped": int(dropped), "kept": int(kept), "cutoff": cutoff}

@@ -58,7 +58,8 @@ def rollup_from_obs(
     """Raw observations -> finest tier partials (key, bucket_start, cnt,
     vsum, vmin, vmax[, vsumsq]). ``with_sq`` adds the sum-of-squares
     partial IN THE SAME aggregation (one scan, one shuffle) so the tier
-    can answer variance/std/rms; every downstream operator (cascade,
+    can answer variance/std/rms (var_pop = vsumsq/cnt - (vsum/cnt)^2,
+    rms = sqrt(vsumsq/cnt)); every downstream operator (cascade,
     merge_tier_delta, refresh) carries it automatically."""
     aggs = [
         F.count("v").alias("cnt"),
@@ -341,23 +342,6 @@ def refresh_tiers_incremental(
         ).localCheckpoint(eager=True)
         prev = out[t]
     return out
-
-
-def rollup_with_sq(
-    obs: DataFrame, value_col: str, tier: str = "1h", key: str = "url",
-    ts: str = "warc_ts",
-) -> DataFrame:
-    """Variance-capable tier: rollup_from_obs(with_sq=True) — ONE scan and
-    shuffle produce (cnt, vsum, vmin, vmax, vsumsq); var_pop = vsumsq/cnt
-    - (vsum/cnt)^2, rms = sqrt(vsumsq/cnt), and the vsumsq partial flows
-    through cascade/merge_tier_delta/refresh automatically."""
-    return rollup_from_obs(obs, value_col, tier, key=key, ts=ts, with_sq=True)
-
-
-def sq_cascade(tier_df: DataFrame, to_tier: str, key: str = "url") -> DataFrame:
-    """Alias of cascade(): the partial-merge seam carries vsumsq when the
-    frame has it."""
-    return cascade(tier_df, to_tier, key=key)
 
 
 def histogram_tier(

@@ -698,11 +698,11 @@ def rollup_1d_variance_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw-data reads. Products of 2-dp inputs are exact 4-dp values, so
     vsumsq rounds at 4 dp (rounding coarser would sit on half-way
     points) while vsum keeps the 2-dp rule."""
-    from mintpy_spark.operators.rollup import rollup_with_sq, sq_cascade
+    from mintpy_spark.operators.rollup import cascade, rollup_from_obs
 
     ev = load(spark, sf_dir, "events")
-    t1h = rollup_with_sq(ev, "value", "1h", key="user_id", ts="ts")
-    t1d = sq_cascade(t1h, "1d", key="user_id")
+    t1h = rollup_from_obs(ev, "value", "1h", key="user_id", ts="ts", with_sq=True)
+    t1d = cascade(t1h, "1d", key="user_id")
     return t1d.select(
         "user_id", "bucket_start", "cnt",
         F.round("vsum", 2).alias("vsum"),

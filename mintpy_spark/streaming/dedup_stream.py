@@ -17,14 +17,16 @@ batches equals `dedup.minhash_near_dups` run once over everything
 ingested — a pair is emitted exactly once, in the first batch where its
 later member arrives.
 
-Crash safety: the engine's table store (sources/tables.py), as for
-TierMaintainer — each batch stages its signature shard and its pairs as
-new files of the ``sig`` and ``pairs`` tables, then ONE manifest rename
-commits both appends as version N (the batch id). A replayed committed
-batch is skipped outright (``latest >= N``); a batch killed before the
-rename leaves its staged files unlisted, so the probe join never reads a
-half-written shard, and its replay stages them anew (``expire`` deletes
-the orphans). foreachBatch's at-least-once becomes exactly-once emission.
+Crash safety, with lineage: the index runs the engine's one fold step
+(``StoreFold.apply_delta``, tier_maintenance.py). Each batch stages its
+signature shard and its pairs as new files of the ``sig`` and ``pairs``
+tables, appends its ``dedup_sig`` and ``dedup_pairs`` lineage rows, then
+ONE manifest rename commits both appends as version N (the batch id). A
+replayed committed batch is skipped (``latest >= N``), its lineage already
+recorded; a batch killed before the rename leaves its staged files
+unlisted, so the probe join never reads a half-written shard, and its
+replay stages them anew. foreachBatch's at-least-once becomes
+exactly-once emission; ``run`` is the AvailableNow pass over new files.
 
 Scale shape: per batch the probe join shuffles batch-band rows against
 the stored band projection — at 10^12 docs the index is bucketed on
@@ -50,11 +52,14 @@ from mintpy_spark.operators.dedup import (
     minhash_signatures,
     signature_verify,
 )
-from mintpy_spark.sources.tables import TableStore
+from mintpy_spark.streaming.tier_maintenance import StoreFold, written_rows
 
 
-class DedupIndexMaintainer:
+class DedupIndexMaintainer(StoreFold):
     """Holds the signature-index location and folds one batch per call."""
+
+    # the index's tables are ``sig`` and ``pairs``
+    PREFIX = ""
 
     def __init__(
         self,
@@ -64,16 +69,11 @@ class DedupIndexMaintainer:
         threshold: float = 0.5,
         num_perm: int = NUM_PERM,
     ) -> None:
-        self.root = root
+        super().__init__(root, ("sig",))
         self.id_col = id_col
         self.text_col = text_col
         self.threshold = threshold
         self.num_perm = num_perm
-        self.store = TableStore(root)
-
-    def committed_version(self, spark: SparkSession) -> int | None:
-        """The last committed batch id, or None."""
-        return self.store.latest()
 
     def stored_signatures(self, spark: SparkSession) -> DataFrame | None:
         """The committed signature index (None before the first shard)."""
@@ -87,15 +87,16 @@ class DedupIndexMaintainer:
         """Fold one batch; returns the emitted near-dup pairs
         (doc_a < doc_b, est_jaccard >= threshold), or None for a replay
         of an already-committed batch."""
-        spark = new_docs.sparkSession
-        committed = self.committed_version(spark)
-        if committed is not None and committed >= batch_id:
-            return None
+        return self.apply_delta(new_docs, batch_id)
+
+    def _stage(self, new_docs: DataFrame, stored: dict[str, DataFrame] | None):
+        """Stage the batch's signature shard and verified pairs as
+        appends, with their ``dedup_*`` counts; the pairs are the result."""
         sig_new = minhash_signatures(
             new_docs, self.id_col, self.text_col, self.num_perm
         ).localCheckpoint(eager=True)
         bands_new = lsh_bands(sig_new, self.id_col)
-        stored = self.stored_signatures(spark)
+        old = stored["sig"] if stored is not None else None
 
         id_a, id_b = f"ba.{self.id_col}", f"bb.{self.id_col}"
         cands = []
@@ -110,8 +111,8 @@ class DedupIndexMaintainer:
                 F.col(id_a).alias("doc_a"), F.col(id_b).alias("doc_b")
             )
         )
-        if stored is not None:
-            bands_old = lsh_bands(stored, self.id_col)
+        if old is not None:
+            bands_old = lsh_bands(old, self.id_col)
             o, n = bands_old.alias("ba"), bands_new.alias("bb")
             cands.append(  # stored vs new; normalize pair order by id
                 o.join(
@@ -128,29 +129,20 @@ class DedupIndexMaintainer:
         cand = cand.distinct()
 
         all_sigs = (
-            sig_new if stored is None else stored.unionByName(sig_new)
+            sig_new if old is None else old.unionByName(sig_new)
         )
         pairs = signature_verify(
             cand, all_sigs, self.id_col, self.num_perm, self.threshold
         ).localCheckpoint(eager=True)
-        # stage both appends, then one commit as version ``batch_id``
-        self.store.commit(
-            {t: self.store.appended(t, self.store.stage(df, t))
-             for t, df in (("sig", sig_new), ("pairs", pairs))},
-            version=batch_id,
+        staged = {t: self.store.stage(df, t)
+                  for t, df in (("sig", sig_new), ("pairs", pairs))}
+        return (
+            {t: self.store.appended(t, e) for t, e in staged.items()},
+            {f"dedup_{t}": written_rows(e) for t, e in staged.items()},
+            pairs,
         )
-        self.store.expire()
-        return pairs
 
     def emitted_pairs(self, spark: SparkSession) -> DataFrame | None:
         if self.committed_version(spark) is None:
             return None
         return self.store.read(spark, "pairs")
-
-    def foreach_batch(self):
-        """writeStream.foreachBatch callable."""
-
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            self.apply_batch(batch_df, batch_id)
-
-        return fn

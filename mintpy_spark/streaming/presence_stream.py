@@ -6,11 +6,15 @@ are additive — replaying a committed delta DOUBLE-counts, so the
 committed-version guard is load-bearing.  Presence bitmaps fold with
 bit_or and HLL registers with MAX: both are associative, commutative
 AND idempotent, so a replayed delta is a NO-OP by algebra, not by
-bookkeeping.  The maintainer still runs TierMaintainer's fold (both
-tables staged and committed by ONE manifest rename per batch, snapshot
-reads, time travel, expiry), but the committed-version check is
-belt-and-braces here — and the test suite proves it by folding a batch's
-delta again as the next version and observing the same store.
+bookkeeping.  The maintainer still runs the engine's one fold step
+(``StoreFold.apply_delta``, tier_maintenance.py: both tables staged,
+their ``maintain_*`` lineage rows appended, then ONE manifest rename per
+batch; snapshot reads, time travel, expiry), but the committed-version
+check is belt-and-braces here — and the test suite proves it by folding a
+batch's delta again as the next version and observing the same store.
+There is no ``read_realtime`` (a value-tier read): a live tail folds into
+``read_presence()``/``read_hll()`` with ``presence_merge``/``hll_merge``,
+both idempotent, so folding the tail repeatedly is safe.
 
 Scale: both stored tables are bounded — <= one row per (user, 60-day
 block) for presence (compressing day-level presence 60:1), <= 64
@@ -28,10 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from mintpy_spark.operators.bitmap import presence_merge, presence_tier
 from mintpy_spark.operators.sketch import hll_merge, hll_tier
-from mintpy_spark.streaming.tier_maintenance import TierMaintainer, merged
+from mintpy_spark.streaming.tier_maintenance import StoreFold, merged
 
 
-class PresenceHllMaintainer(TierMaintainer):
+class PresenceHllMaintainer(StoreFold):
     """Maintains TWO stored tables from an events-shaped stream:
 
     * ``presence`` — per-(user, 60-day block) presence bitmap
@@ -49,14 +53,11 @@ class PresenceHllMaintainer(TierMaintainer):
     def __init__(
         self, root: str, user_col: str = "user_id", ts: str = "ts",
     ) -> None:
-        super().__init__(
-            root, value_col=user_col, key=user_col, ts=ts,
-            tiers=(self.PRESENCE, self.HLL),
-        )
+        super().__init__(root, (self.PRESENCE, self.HLL))
         self.user_col = user_col
+        self.ts = ts
 
-    def _compute(self, delta_obs, stored, with_sq):
-        del with_sq  # value-tier knob; sketch stores carry no partials
+    def _compute(self, delta_obs, stored):
         ev = delta_obs.select(self.user_col, self.ts)
         deltas = {
             self.PRESENCE: presence_tier(
@@ -76,11 +77,3 @@ class PresenceHllMaintainer(TierMaintainer):
 
     def read_hll(self, spark: SparkSession) -> DataFrame:
         return self.read_tier(spark, self.HLL)
-
-    def read_realtime(self, *a, **k):  # pragma: no cover - guard only
-        raise NotImplementedError(
-            "read_realtime merges value-tier partials (cnt/vsum/...); fold "
-            "a live tail into read_presence()/read_hll() with "
-            "presence_merge/hll_merge — both idempotent, so folding the "
-            "tail repeatedly is safe"
-        )

@@ -27,8 +27,9 @@ stream == batch holds by construction. ``ChangeEvents`` and
 (``batch_change_events``, ``rolling_zscore_anomalies``): there stream ==
 batch is checked by tests (tests/test_seqfold.py), not by construction.
 
-Each micro-batch of observations (key, ts, value) is folded into the
-committed per-key state:
+Each micro-batch of observations (key, ts, value) runs the engine's one
+fold step (``StoreFold.apply_delta``, streaming/tier_maintenance.py); this
+module supplies what the recursion computes (``_stage``):
 
 1. the committed state rows of the batch's keys are semi-joined in
    (untouched keys stay on disk);
@@ -38,10 +39,11 @@ committed per-key state:
    costs one Python ``fold`` call;
 3. the batch's output rows and a new state version (touched keys
    refolded, the rest carried by an anti-join) are staged as the store
-   tables ``tier_levels`` and ``tier_state`` and its lineage rows are
-   appended; ONE manifest rename then commits both tables as version N
-   (TierMaintainer's store, sources/tables.py);
-4. after the commit, the output files move into the output table.
+   tables ``tier_levels`` and ``tier_state``; the step appends the
+   lineage rows ``<name>_<emits>``, ``<name>_late`` and ``<name>_state``,
+   THEN one manifest rename commits both tables as version N;
+4. after the commit, ``_publish`` moves the output files into the output
+   table (a replay first finishes a move a crash cut short).
 
 Where the state lives: beside Spark's own checkpoint files and outside its
 ``state/`` subdirectory, in a table store at ``<checkpoint>/<name>_state``:
@@ -57,17 +59,18 @@ CPU s over 10 keys and 9.8–11.2 CPU s over 2 000 keys. Here a batch pays
 one Arrow hand-off per chunk of keys, as the batch operators do.
 
 Crash safety (foreachBatch is at-least-once): a replay of a committed
-batch only finishes moving its output (a crash between the commit and the
-move); a replay of an uncommitted batch recomputes version N from the
-still-authoritative previous version, and the files the crashed attempt
-staged are never listed and are expired. Readers of the output table see
-no row before its batch commits, and no row twice (tests/test_seqfold.py
-kills the fold at each step). The move into the output directory is the
-one step outside the store: plain-parquet readers (``filter_job``, the
-benchmark) read that directory, and it renames one file at a time, so a
-concurrent reader may see part of a batch. A replayed batch appends its
-lineage rows again with the same counts; readers take one row per
-``part_id`` (``CheckpointTable.stage_metrics``).
+batch only finishes moving its output; a replay of an uncommitted batch
+recomputes version N from the still-authoritative previous version, and
+the files the crashed attempt staged are never listed and are expired.
+Readers of the output table see no row before its batch commits, and no
+row twice (tests/test_seqfold.py kills the fold at each step). The lineage
+rows go in before the commit, so a crash after it cannot lose them; a
+replayed uncommitted batch appends the same counts again, and readers take
+one row per ``part_id`` (``CheckpointTable.stage_metrics``). The move into
+the output directory is the one step outside the store: plain-parquet
+readers (``filter_job``, the benchmark) read that directory, and it
+renames one file at a time, so a concurrent reader may see part of a
+batch.
 
 Late-row policy: a row whose ts is at or behind its key's committed
 watermark (a replay redelivery or an out-of-order arrival) carries no
@@ -92,7 +95,6 @@ history.
 from __future__ import annotations
 
 import os
-import time
 
 import numpy as np
 import pandas as pd
@@ -101,7 +103,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from mintpy_spark.operators.seqstate import map_sorted_groups
-from mintpy_spark.streaming.tier_maintenance import TierMaintainer
+from mintpy_spark.streaming.tier_maintenance import StoreFold, written_rows
 
 STATE = "state"
 # the store table holding a batch's output rows until they are moved
@@ -116,7 +118,7 @@ def _cols(ddl: tuple[str, ...]) -> list[list[str]]:
     return [c.split() for c in ddl]
 
 
-class SeqFold(TierMaintainer):
+class SeqFold(StoreFold):
     """Folds observation micro-batches into ``recursion``'s per-key state
     under ``root`` and appends its output rows, (key, *recursion.out), to
     ``output``."""
@@ -125,9 +127,12 @@ class SeqFold(TierMaintainer):
         self, recursion, root: str, output: str, value_col: str | None = "value",
         key: str = "user_id", ts: str = "ts",
     ) -> None:
-        super().__init__(root, value_col=value_col, key=key, ts=ts, tiers=(STATE,))
+        super().__init__(root, tiers=(STATE,))
         self.output = output
         self.rec = recursion
+        self.value_col = value_col
+        self.key = key
+        self.ts = ts
 
     def _publish(self, spark: SparkSession, version: int) -> None:
         """Move a committed version's output files into the output table.
@@ -250,19 +255,11 @@ class SeqFold(TierMaintainer):
 
         return map_sorted_groups(rows, "k", ("_o", "t_us", "y"), fold, schema)
 
-    def apply_delta(self, delta_obs: DataFrame, batch_id: int = 0) -> None:
-        """One idempotent fold of ``delta_obs`` as version ``batch_id``
-        (see the module docstring for the protocol)."""
-        spark = delta_obs.sparkSession
-        committed = self.committed_version(spark)
-        if committed is not None:
-            self._publish(spark, committed)  # finish a move a crash cut
-            if committed >= batch_id:
-                return  # replay of a committed batch: already folded
-        t0 = time.time()
-        state = None
-        if committed is not None:
-            state = self.read_tier(spark, STATE, committed)
+    def _stage(self, delta_obs: DataFrame, stored: dict[str, DataFrame] | None):
+        """Stage the batch's output rows and the new state version, with
+        the ``<name>_<emits>``, ``<name>_late`` and ``<name>_state``
+        counts; None for a batch with no row to fold."""
+        state = stored[STATE] if stored is not None else None
         folded = self._fold(delta_obs, state).localCheckpoint(eager=True)
         n_keys, n_out, n_late = folded.agg(
             F.count(F.when(F.col("_o") == 0, 1)),
@@ -270,7 +267,7 @@ class SeqFold(TierMaintainer):
             F.coalesce(F.sum("late"), F.lit(0)),
         ).first()
         if not n_keys:
-            return  # no row to fold in the batch
+            return None
         ttype = delta_obs.schema[self.ts].dataType
         out = folded.where(F.col("_o") == 1).select(
             F.col("k").alias(self.key),
@@ -297,31 +294,13 @@ class SeqFold(TierMaintainer):
             )
         tables = {self.table(OUT): self.store.stage(out, self.table(OUT)),
                   self.table(STATE): self.store.stage(new_state, self.table(STATE))}
-        # lineage before the commit: a crash after it cannot lose the
-        # batch's counts (a replay of an uncommitted batch appends the
-        # same counts again)
         name = self.rec.name
         counts = {
-            f"{name}_{self.rec.emits}": int(n_out),
-            f"{name}_late": int(n_late),
-            f"{name}_state": sum(f["rows"] for f in tables[self.table(STATE)]["files"]),
+            f"{name}_{self.rec.emits}": n_out,
+            f"{name}_late": n_late,
+            f"{name}_state": written_rows(tables[self.table(STATE)]),
         }
-        wall_ms = int((time.time() - t0) * 1000)
-        self.metrics.append([
-            {
-                "run_id": f"batch{batch_id}",
-                "stage": stage,
-                "part_id": int(batch_id),
-                "input_fp": "delta",
-                "row_count": n,
-                "wall_ms": wall_ms,
-                "status": "complete",
-            }
-            for stage, n in counts.items()
-        ])
-        self._commit(spark, batch_id, tables)
-        self._publish(spark, batch_id)
-        self._gc(spark)
+        return tables, counts, None
 
 
 def run_seq_fold(

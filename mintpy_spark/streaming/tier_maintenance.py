@@ -1,29 +1,37 @@
-"""Streaming continuous-aggregate maintenance: the full production loop.
+"""The fold step every maintained store runs, and the stored value tiers.
 
-``readStream(pages/obs dir) -> foreachBatch(refresh_tiers_incremental)``:
-each micro-batch is a late/new-observation delta folded into the STORED
-tier tables by partial-wise merge (finest tier) + dirty-bucket cascade
-refresh (coarser tiers) — see operators/rollup.py.
+``readStream(obs dir) -> foreachBatch(apply_delta)``: each micro-batch is
+folded into durable tables by ONE step, ``StoreFold.apply_delta``, run by
+the value tiers here, the sketch tables (sketch_stream.py,
+presence_stream.py), the sequential folds (seqfold.py) and the
+near-duplicate index (dedup_stream.py). A store supplies only what it
+computes (``_compute`` or ``_stage``, and a post-commit ``_publish``):
 
-Crash safety — foreachBatch is only AT-LEAST-once (the stream checkpoint
-commits after the callback returns), so the fold must be idempotent and
-the store must never be half-written. Both come from the engine's table
-store (sources/tables.py), one manifest-committed version per batch:
+1. finish a ``_publish`` that a crash cut short;
+2. skip the batch when ``latest >= batch_id``;
+3. read the committed tables (``tiers``);
+4. stage the new tables as new immutable files (``_stage``);
+5. append the batch's lineage rows to ``_maintenance_metrics``;
+6. commit every staged table with ONE manifest rename, as version
+   ``batch_id`` (``_commit``);
+7. ``_publish``;
+8. expire all but the last two versions (``_gc``).
 
-* batch N stages ALL tiers, computed from the last COMMITTED version, as
-  new immutable files, then commits them in ONE manifest rename, as
-  version N;
-* a replay of batch N once version N is committed is skipped outright
-  (the test is ``latest >= N``);
-* a crash before the rename leaves the previous version authoritative and
-  the staged files unreferenced — the replay recomputes version N from it,
-  and ``expire`` deletes the orphans;
-* readers plan from one manifest, so they never see a partial fold or a
-  mix of two. Expiry keeps the last two versions (the current one plus
-  the one a crashed-then-replayed batch would recompute from).
+Crash safety — foreachBatch is only AT-LEAST-once, so the step must be
+idempotent and the store never half-written (sources/tables.py). A crash
+before the rename leaves the previous version authoritative and the
+staged files unreferenced: the replay recomputes version N from it,
+appends the same lineage counts again (readers take one row per
+``part_id``, ``CheckpointTable.stage_metrics``), and ``expire`` deletes
+the orphans. A crash after the rename leaves version N committed and its
+replay skipped; its lineage went in before the rename, so it is kept.
+Readers plan from one manifest: never a partial fold or a mix of two.
+Expiry keeps the previous version, the one a replay recomputes from.
 
-The maintained tiers therefore equal a batch rebuild over everything ever
-ingested (verified by tests/test_streaming.py, including a replay test).
+The value tiers: each batch is merged into the STORED tiers by
+partial-wise merge (finest tier) + dirty-bucket cascade refresh (coarser
+tiers) — see operators/rollup.py — so they equal a batch rebuild over
+everything ever ingested (tests/test_streaming.py, with a replay test).
 
 Why foreachBatch and not a streaming aggregation: a watermarked window
 aggregation FINALIZES buckets and drops every later arrival; tier
@@ -31,8 +39,7 @@ MAINTENANCE must keep every bucket updatable forever, which is state
 Structured Streaming cannot hold. foreachBatch turns each micro-batch into
 a bounded batch job against durable tables — the lambda-architecture merge
 loop, with the delta-proportional cost the north rule's continuous
-aggregates require. The engine keeps no Structured-Streaming state at all:
-its per-key recursions fold on the same loop (streaming/seqfold.py).
+aggregates require. The engine keeps no Structured-Streaming state at all.
 
 Scale: per batch, cost = delta aggregation + touched-cell rewrite. The
 stored tier tables should be bucketed on the key (sources/bucketed.py) so
@@ -67,31 +74,33 @@ def merged(
     return {t: d.localCheckpoint(eager=True) for t, d in deltas.items()}
 
 
-class TierMaintainer:
-    """Holds the stored-tier locations and applies one delta per call.
-    Subclasses keep the fold and override ``_compute`` (the new tables
-    from the delta and the committed ones)."""
+def written_rows(entry: dict) -> int:
+    """Rows of a staged or committed table entry, from its file footers."""
+    return sum(f["rows"] for f in entry["files"])
 
-    def __init__(
-        self, root: str, value_col: str = "text_length",
-        key: str = "url", ts: str = "warc_ts", tiers: tuple[str, ...] = TIERS,
-    ) -> None:
+
+class StoreFold:
+    """A store folded one micro-batch at a time under ``root``: the shared
+    fold step (``apply_delta``, see the module docstring) over the tables
+    ``tiers``. A subclass supplies ``_compute`` (the new version of each of
+    its ``tiers`` from the delta and the committed ones), or overrides
+    ``_stage``, and, if it has one, a post-commit step ``_publish``."""
+
+    # the store table of tier t is PREFIX + t
+    PREFIX = "tier_"
+
+    def __init__(self, root: str, tiers: tuple[str, ...]) -> None:
         self.root = root
-        self.value_col = value_col
-        self.key = key
-        self.ts = ts
         self.tiers = tiers
         self.store = TableStore(root)
-        # per-batch lineage metrics — the maintenance twin of the batch
-        # pipeline's checkpoint table (plans/checkpoint.py): every fold
-        # records (batch_id, tier, rows, wall) so operators can audit what
-        # each refresh touched and when
+        # per-batch lineage (batch_id, stage, rows, wall), the twin of the
+        # batch pipeline's checkpoint table (plans/checkpoint.py)
         self.metrics = CheckpointTable(f"{root}/_maintenance_metrics")
 
-    @staticmethod
-    def table(tier: str) -> str:
+    @classmethod
+    def table(cls, tier: str) -> str:
         """The store table holding ``tier``."""
-        return f"tier_{tier}"
+        return cls.PREFIX + tier
 
     def committed_version(self, spark: SparkSession) -> int | None:
         """Highest committed batch id, or None."""
@@ -112,6 +121,100 @@ class TierMaintainer:
         FileNotFoundError before the first commit or for a version that is
         not retained."""
         return self.store.read_version(spark, self.table(tier), version)
+
+    def _commit(self, spark: SparkSession, version: int, tables: dict) -> None:
+        """Commit the staged ``tables`` (store table -> entry) as
+        ``version``: one manifest rename."""
+        self.store.commit(tables, version=version)
+
+    def _publish(self, spark: SparkSession, version: int) -> None:
+        """The post-commit step of a committed ``version``; idempotent.
+        None by default."""
+
+    def _gc(self, spark: SparkSession) -> None:
+        """Expire all but the latest two versions and every file only they
+        (or a crashed fold) wrote."""
+        self.store.expire(keep_last=2)
+
+    def _stage(self, delta: DataFrame, stored: dict[str, DataFrame] | None):
+        """Stage the batch: (store table -> staged entry, lineage stage ->
+        rows, the step's result), or None when there is nothing to fold.
+        By default every tier's new version replaces it, recorded as
+        ``maintain_<tier>``; an empty delta folds nothing."""
+        if delta.isEmpty():
+            return None
+        new = self._compute(delta, stored)
+        tables = {self.table(t): self.store.stage(new[t], self.table(t))
+                  for t in self.tiers}
+        counts = {f"maintain_{t}": written_rows(tables[self.table(t)])
+                  for t in self.tiers}
+        return tables, counts, None
+
+    def apply_delta(self, delta: DataFrame, batch_id: int = 0):
+        """Fold ``delta`` as version ``batch_id``: the one fold step (see
+        the module docstring). Returns the store's result for the batch
+        (None for a replay of a committed batch)."""
+        spark = delta.sparkSession
+        committed = self.committed_version(spark)
+        if committed is not None:
+            self._publish(spark, committed)  # finish a step a crash cut
+            if committed >= batch_id:
+                return None  # replay of a committed batch: already folded
+        t0 = time.time()
+        stored = None if committed is None else {
+            t: self.read_tier(spark, t, committed) for t in self.tiers}
+        staged = self._stage(delta, stored)
+        if staged is None:
+            return None
+        tables, counts, result = staged
+        # lineage before the commit: a crash after the rename skips the
+        # replay, and must not take the batch's counts with it
+        wall_ms = int((time.time() - t0) * 1000)
+        self.metrics.append([
+            {"run_id": f"batch{batch_id}", "stage": stage, "part_id": int(batch_id),
+             "input_fp": "delta", "row_count": int(n), "wall_ms": wall_ms,
+             "status": "complete"}
+            for stage, n in counts.items()
+        ])
+        self._commit(spark, batch_id, tables)
+        self._publish(spark, batch_id)
+        self._gc(spark)
+        return result
+
+    def run(
+        self, spark: SparkSession, input_path: str, checkpoint: str,
+        schema: str | StructType,
+    ) -> None:
+        """One AvailableNow pass: the parquet files under ``input_path``
+        that arrived since the last pass (Spark's stream checkpoint at
+        ``checkpoint`` records which) are folded, one ``apply_delta`` per
+        micro-batch with its batch id as the version, then the query
+        stops."""
+        (
+            spark.readStream.schema(schema).parquet(input_path)
+            .writeStream.foreachBatch(self.apply_delta)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+
+
+class TierMaintainer(StoreFold):
+    """The stored value tiers (key, bucket_start, cnt, vsum, vmin, vmax
+    [, vsumsq]) of ``value_col``. ``with_sq`` makes the first fold's build
+    variance-capable (vsumsq); later folds carry the stored partial set."""
+
+    def __init__(
+        self, root: str, value_col: str = "text_length",
+        key: str = "url", ts: str = "warc_ts", tiers: tuple[str, ...] = TIERS,
+        with_sq: bool = False,
+    ) -> None:
+        super().__init__(root, tiers)
+        self.value_col = value_col
+        self.key = key
+        self.ts = ts
+        self.with_sq = with_sq
 
     def read_realtime(
         self, spark: SparkSession, tier: str, tail_obs: DataFrame
@@ -142,19 +245,8 @@ class TierMaintainer:
             stored.select(*cols).unionByName(tail.select(*cols)), self.key
         )
 
-    def _commit(self, spark: SparkSession, version: int, tables: dict) -> None:
-        """Commit the staged ``tables`` (store table -> entry) as
-        ``version``: one manifest rename."""
-        self.store.commit(tables, version=version)
-
-    def _gc(self, spark: SparkSession) -> None:
-        """Expire all but the latest two versions and every file only they
-        (or a crashed fold) wrote."""
-        self.store.expire(keep_last=2)
-
     def _compute(
-        self, delta_obs: DataFrame, stored: dict[str, DataFrame] | None,
-        with_sq: bool,
+        self, delta_obs: DataFrame, stored: dict[str, DataFrame] | None
     ) -> dict[str, DataFrame]:
         """The new version of each tier: built from the delta on the first
         fold, else the delta merged into the committed tiers (the refresh
@@ -162,71 +254,12 @@ class TierMaintainer:
         if stored is None:
             new = build_tiers(
                 delta_obs, self.value_col, tiers=self.tiers,
-                key=self.key, ts=self.ts, with_sq=with_sq,
+                key=self.key, ts=self.ts, with_sq=self.with_sq,
             )
             return {t: new[t].localCheckpoint(eager=True) for t in self.tiers}
         return refresh_tiers_incremental(
             stored, delta_obs, self.value_col, tiers=self.tiers,
             key=self.key, ts=self.ts,
-        )
-
-    def apply_delta(
-        self, delta_obs: DataFrame, batch_id: int = 0, with_sq: bool = False
-    ) -> None:
-        """One idempotent maintenance step: stage a NEW version of every
-        table computed from the last COMMITTED version, then commit it as
-        version ``batch_id``. Replays of an already-committed batch are
-        skipped; replays of a crashed batch recompute from the
-        still-authoritative previous version (see module docstring).
-        ``with_sq`` makes the INITIAL build variance-capable (vsumsq);
-        later folds inherit the stored partial set automatically."""
-        spark = delta_obs.sparkSession
-        committed = self.committed_version(spark)
-        if committed is not None and committed >= batch_id:
-            return  # replay of a committed batch: already folded
-        if delta_obs.isEmpty():
-            return
-        t0 = time.time()
-        stored = None
-        if committed is not None:
-            stored = {t: self.read_tier(spark, t, committed) for t in self.tiers}
-        new = self._compute(delta_obs, stored, with_sq)
-        tables = {self.table(t): self.store.stage(new[t], self.table(t))
-                  for t in self.tiers}
-        self._commit(spark, batch_id, tables)
-        self._gc(spark)
-        wall_ms = int((time.time() - t0) * 1000)
-        self.metrics.append(
-            [
-                {
-                    "run_id": f"batch{batch_id}",
-                    "stage": f"maintain_{t}",
-                    "part_id": int(batch_id),
-                    "input_fp": "delta",
-                    "row_count": sum(f["rows"] for f in tables[self.table(t)]["files"]),
-                    "wall_ms": wall_ms,
-                    "status": "complete",
-                }
-                for t in self.tiers
-            ]
-        )
-
-    def run(
-        self, spark: SparkSession, input_path: str, checkpoint: str,
-        schema: str | StructType,
-    ) -> None:
-        """One AvailableNow pass: the parquet files under ``input_path``
-        that arrived since the last pass (Spark's stream checkpoint at
-        ``checkpoint`` records which) are folded, one ``apply_delta`` per
-        micro-batch with its batch id as the version, then the query
-        stops."""
-        (
-            spark.readStream.schema(schema).parquet(input_path)
-            .writeStream.foreachBatch(self.apply_delta)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
         )
 
 

@@ -25,3 +25,21 @@ def obs(spark, pages):
     from mintpy_spark.operators.observe import pages_to_obs
 
     return pages_to_obs(pages).cache()
+
+
+@pytest.fixture
+def land_days(spark):
+    """Append rows (key, ts, ...) to a parquet directory one file per day,
+    in day order, as the production stream lands them: the unit raw
+    compaction drops."""
+
+    def land(path, rows, schema):
+        by_day: dict = {}
+        for r in rows:
+            by_day.setdefault(r[1].date(), []).append(r)
+        for day in sorted(by_day):
+            spark.createDataFrame(by_day[day], schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(path)
+
+    return land

@@ -125,7 +125,7 @@ def test_network_invert_malformed_pairs(spark):
     assert [round(r.value, 6) for r in out] == [0.0, 1.0, 2.0]
 
 
-def test_compact_raw_keeps_null_value_rows(spark, tmp_path):
+def test_compact_raw_keeps_null_value_rows(spark, tmp_path, land_days):
     # a row with an old timestamp but NULL value is unledgerable (tiers
     # count values) — compaction must keep it, not silently delete it
     from mintpy_spark.operators.retention import compact_raw
@@ -137,8 +137,12 @@ def test_compact_raw_keeps_null_value_rows(spark, tmp_path):
         ("u", dt.datetime(2023, 1, d, h, 30), 100 + d + h)
         for d in range(1, 6)
         for h in (3, 9)
-    ] + [("u", dt.datetime(2023, 1, 1, 5, 30), None)]  # old NULL-value row
-    spark.createDataFrame(rows, sch).write.mode("overwrite").parquet(inp)
+    ]
+    land_days(inp, rows, sch)
+    # an old NULL-value row, landed later in a file of its own
+    spark.createDataFrame(
+        [("u", dt.datetime(2023, 1, 1, 5, 30), None)], sch
+    ).write.mode("append").parquet(inp)
 
     m = TierMaintainer(str(tmp_path / "store"))
     m.apply_delta(spark.read.parquet(inp), batch_id=0)

@@ -258,9 +258,9 @@ def test_variance_from_tier_partials(spark, obs):
     stddev_pop over raw data, at the cascaded 1d tier."""
     from pyspark.sql import functions as F
 
-    from mintpy_spark.operators.rollup import rollup_with_sq, sq_cascade
+    from mintpy_spark.operators.rollup import cascade, rollup_from_obs
 
-    t1d = sq_cascade(rollup_with_sq(obs, "text_length"), "1d")
+    t1d = cascade(rollup_from_obs(obs, "text_length", with_sq=True), "1d")
     derived = t1d.select(
         "url", "bucket_start",
         F.sqrt(
@@ -282,15 +282,17 @@ def test_vsumsq_flows_through_incremental_merge(spark, obs):
     extension): merged variance tier == from-scratch variance tier."""
     from pyspark.sql import functions as F
 
-    from mintpy_spark.operators.rollup import merge_tier_delta, rollup_with_sq
+    from mintpy_spark.operators.rollup import merge_tier_delta, rollup_from_obs
 
     cut = obs.agg(F.percentile_approx("warc_ts", 0.7).alias("c")).first()["c"]
-    base = rollup_with_sq(obs.where(F.col("warc_ts") < F.lit(cut)), "text_length")
+    base = rollup_from_obs(
+        obs.where(F.col("warc_ts") < F.lit(cut)), "text_length", with_sq=True
+    )
     merged = merge_tier_delta(
         base, obs.where(F.col("warc_ts") >= F.lit(cut)), "text_length"
     )
     assert "vsumsq" in merged.columns
-    full = rollup_with_sq(obs, "text_length")
+    full = rollup_from_obs(obs, "text_length", with_sq=True)
     j = merged.alias("m").join(full.alias("f"), ["url", "bucket_start"], "full")
     bad = j.where(
         F.col("m.vsumsq").isNull()

@@ -91,6 +91,6 @@ def test_store_stays_bounded(spark, paths):
     m.apply_delta(spark.read.parquet(inp), batch_id=0)
     assert m.read_presence(spark).count() <= 5          # one block per user
     assert m.read_hll(spark).count() <= 3 * HLL_BUCKETS  # 64 regs per day
-    # realtime partial-merge read is a value-tier concept — guarded off
-    with pytest.raises(NotImplementedError):
+    # realtime partial-merge read is a value-tier concept — not offered
+    with pytest.raises(AttributeError):
         m.read_realtime(spark, "1h", None)

@@ -9,7 +9,9 @@ Each writer is killed twice at its commit point: the manifest rename raises
 * a rerun (the pipeline, forget) or a replay of the same batch id (the
   streaming folds) equals the crash-free result;
 * after the rerun's expiry, no data file is left that no retained manifest
-  lists, and no unfinished manifest.
+  lists, and no unfinished manifest;
+* a streaming fold's lineage after the replay equals the crash-free
+  fold's.
 """
 
 from __future__ import annotations
@@ -56,6 +58,12 @@ def rows(df) -> list:
         for r in df.collect()
     ]
     return sorted(out, key=repr)
+
+
+def lineage(fold) -> dict[str, dict[int, int]]:
+    """{stage: {batch: rows}} of a streaming fold's lineage table."""
+    stages = set(fold.metrics.load().column("stage").to_pylist())
+    return {s: fold.metrics.stage_metrics(s) for s in stages}
 
 
 def unreferenced(store: TableStore) -> set[str]:
@@ -218,6 +226,8 @@ def test_tier_fold_killed_at_commit(spark, tmp_path, monkeypatch, when):
     assert m.committed_version(spark) == 1
     assert _tiers(spark, m) == _tiers(spark, ref)
     assert not unreferenced(m.store)
+    assert lineage(m) == lineage(ref)
+    assert set(lineage(ref)["maintain_1h"]) == {0, 1}
 
 
 # -- the sequential fold --------------------------------------------------------
@@ -271,6 +281,8 @@ def test_seq_fold_killed_at_commit(spark, tmp_path, monkeypatch, when):
     assert rows(spark.read.parquet(fold.output)) == want_out
     assert rows(fold.read_tier(spark, STATE)) == want_state
     assert not unreferenced(fold.store)
+    assert lineage(fold) == lineage(ref)
+    assert set(lineage(ref)["kalman_levels"]) == {0, 1}
 
 
 # -- the dedup index ------------------------------------------------------------
@@ -311,3 +323,5 @@ def test_dedup_index_killed_at_commit(spark, tmp_path, monkeypatch, when):
     assert (replay is None) == (when == "after")
     assert (rows(m.emitted_pairs(spark)), rows(m.stored_signatures(spark))) == want
     assert not unreferenced(m.store)
+    assert lineage(m) == lineage(ref)
+    assert set(lineage(ref)["dedup_pairs"]) == {0, 1}

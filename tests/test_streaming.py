@@ -211,7 +211,7 @@ def test_query_job_routes_store_plus_tail(spark, paths, tmp_path, capsys):
     assert rep["total_obs"] == sum(r["cnt"] for r in w.values())
 
 
-def test_compact_raw_drops_covered_history_only(spark, paths):
+def test_compact_raw_drops_covered_history_only(spark, paths, land_days):
     """Downsample-then-delete lifecycle: raw below an aligned cutoff is
     deleted once the committed 1h tier accounts for it; routed range
     queries over the compacted store still answer exactly; misaligned
@@ -230,7 +230,7 @@ def test_compact_raw_drops_covered_history_only(spark, paths):
         for d in range(1, 8)
         for h in (3, 9, 15)
     ]
-    spark.createDataFrame(rows, sch).write.mode("overwrite").parquet(inp)
+    land_days(inp, rows, sch)
 
     m = TierMaintainer(store_root)
     m.apply_delta(spark.read.parquet(inp), batch_id=0)
@@ -269,7 +269,7 @@ def test_compact_raw_drops_covered_history_only(spark, paths):
     assert res2["dropped"] == 3 * 2 * 3 + 1
 
 
-def test_compact_raw_late_row_in_compacted_bucket(spark, paths):
+def test_compact_raw_late_row_in_compacted_bucket(spark, paths, land_days):
     """A late row that lands in an ALREADY-compacted bucket: refused while
     unfolded (ledger + raw > tier), dropped cleanly once folded (the
     ledger is what makes this exact — tier == ledger + raw again)."""
@@ -285,7 +285,7 @@ def test_compact_raw_late_row_in_compacted_bucket(spark, paths):
         for d in range(1, 5)
         for h in (6, 18)
     ]
-    spark.createDataFrame(rows, sch).write.mode("overwrite").parquet(inp)
+    land_days(inp, rows, sch)
     m = TierMaintainer(store_root)
     m.apply_delta(spark.read.parquet(inp), batch_id=0)
     compact_raw(spark, inp, "2023-02-03 00:00:00", m, tier="1h")
@@ -300,6 +300,69 @@ def test_compact_raw_late_row_in_compacted_bucket(spark, paths):
     # drops day 3 (2 rows) + the folded late day-1 row
     assert res["dropped"] == 3
     assert spark.read.parquet(inp).where(F.col("warc_ts") < "2023-02-04").count() == 0
+
+
+def test_compaction_then_maintenance_does_not_refold(spark, paths, land_days):
+    """Compaction deletes whole raw files and rewrites none, so the next
+    maintenance pass sees no new file: the tiers still count each row
+    once, equal a batch build over everything ingested, and the next
+    compaction's gate passes."""
+    from mintpy_spark.operators.retention import compact_raw
+    from mintpy_spark.operators.rollup import build_tiers
+    from mintpy_spark.streaming.tier_maintenance import TierMaintainer, maintain_tiers
+
+    inp, store_root, ckpt = paths
+    sch = "url string, warc_ts timestamp, text_length long"
+    rows = [
+        (f"u{u}", dt.datetime(2023, 1, d, h, 30), 100 + u * 10 + d + h)
+        for u in range(3)
+        for d in range(1, 8)
+        for h in (3, 9, 15)
+    ]
+    land_days(inp, rows, sch)
+    maintain_tiers(spark, inp, store_root, ckpt)
+    m = TierMaintainer(store_root)
+    res = compact_raw(spark, inp, "2023-01-04 00:00:00", m, tier="1h")
+    assert (res["dropped"], res["kept"]) == (27, 36)
+
+    maintain_tiers(spark, inp, store_root, ckpt)
+    cols = ["url", "bucket_start", "cnt", "vsum", "vmin", "vmax"]
+    want = build_tiers(spark.createDataFrame(rows, sch), "text_length")
+    for t in m.tiers:
+        got = m.read_tier(spark, t).select(*cols)
+        assert got.agg(F.sum("cnt")).first()[0] == 63, t
+        assert got.exceptAll(want[t].select(*cols)).count() == 0, t
+        assert want[t].select(*cols).exceptAll(got).count() == 0, t
+    assert m.committed_version(spark) == 0  # nothing new was folded
+    res2 = compact_raw(spark, inp, "2023-01-06 00:00:00", m, tier="1h")
+    assert (res2["dropped"], res2["kept"]) == (18, 18)
+
+
+def test_compact_raw_keeps_a_straddling_file_whole(spark, paths):
+    """A raw file with rows on both sides of the cutoff is kept byte for
+    byte, records nothing in the ledger, and its old rows keep counting as
+    raw: the same compaction passes its gate again."""
+    import os
+
+    from mintpy_spark.operators.retention import compact_raw
+    from mintpy_spark.streaming.tier_maintenance import TierMaintainer
+
+    inp, store_root, _ = paths
+    sch = "url string, warc_ts timestamp, text_length long"
+    rows = [("u0", dt.datetime(2023, 1, d, 6), 10 * d) for d in range(1, 5)]
+    spark.createDataFrame(rows, sch).coalesce(1).write.parquet(inp)
+
+    def listing():
+        return {f: os.path.getsize(os.path.join(inp, f)) for f in os.listdir(inp)}
+
+    m = TierMaintainer(store_root)
+    m.apply_delta(spark.read.parquet(inp), batch_id=0)
+    before = listing()
+    for _ in range(2):
+        res = compact_raw(spark, inp, "2023-01-03 00:00:00", m, tier="1h")
+        assert (res["dropped"], res["kept"]) == (0, 4)
+        assert listing() == before
+    assert not os.path.exists(inp + ".__compaction_ledger")
 
 
 def test_dedup_index_stream_equals_batch(spark, tmp_path):
@@ -340,7 +403,33 @@ def test_dedup_index_stream_equals_batch(spark, tmp_path):
     assert m.committed_version(spark) == 2
 
 
-def test_compact_raw_keeps_null_ts_rows(spark, paths):
+def test_dedup_index_runs_on_the_shared_stream_pass(spark, tmp_path):
+    """The index's AvailableNow ``run`` folds each new document file once:
+    two passes equal the batch operator over every document, and each
+    batch's lineage rows count what it staged."""
+    from mintpy_spark.operators.dedup import minhash_near_dups
+    from mintpy_spark.streaming.dedup_stream import DedupIndexMaintainer
+
+    sch = "doc_id long, text string"
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    docs = [(i, " ".join(words[(i + j) % 10] for j in range(8)) + f" doc{i % 3}")
+            for i in range(24)]
+    inp, ckpt = str(tmp_path / "docs"), str(tmp_path / "ckpt")
+    m = DedupIndexMaintainer(str(tmp_path / "idx"))
+    for lo, hi in ((0, 12), (12, 24)):
+        spark.createDataFrame(docs[lo:hi], sch).write.mode("append").parquet(inp)
+        m.run(spark, inp, ckpt, sch)
+
+    got = {(r.doc_a, r.doc_b) for r in m.emitted_pairs(spark).collect()}
+    want = {(r.doc_a, r.doc_b) for r in minhash_near_dups(
+        spark.createDataFrame(docs, sch), threshold=0.5).collect()}
+    assert got == want and got
+    assert m.committed_version(spark) == 1
+    assert m.metrics.stage_metrics("dedup_sig") == {0: 12, 1: 12}
+    assert sum(m.metrics.stage_metrics("dedup_pairs").values()) == len(got)
+
+
+def test_compact_raw_keeps_null_ts_rows(spark, paths, land_days):
     """Review fix: a NULL-timestamp row belongs to no bucket and can never
     be tier-covered — compaction must keep it (a bare ts >= cut filter
     would silently drop it, unledgered)."""
@@ -354,7 +443,7 @@ def test_compact_raw_keeps_null_ts_rows(spark, paths):
         for d in range(1, 5)
         for h in (3, 9)
     ]
-    spark.createDataFrame(rows, sch).write.mode("overwrite").parquet(inp)
+    land_days(inp, rows, sch)
     spark.createDataFrame([("bad", None, 99)], sch).write.mode("append").parquet(inp)
 
     m = TierMaintainer(store_root)
@@ -417,8 +506,8 @@ def test_read_realtime_on_variance_capable_store(spark, paths):
     base = [("u", dt.datetime(2023, 1, 1, 1, 10), 10),
             ("u", dt.datetime(2023, 1, 1, 1, 40), 30)]
     spark.createDataFrame(base, sch).write.mode("overwrite").parquet(inp)
-    m = TierMaintainer(store_root)
-    m.apply_delta(spark.read.parquet(inp), batch_id=0, with_sq=True)
+    m = TierMaintainer(store_root, with_sq=True)
+    m.apply_delta(spark.read.parquet(inp), batch_id=0)
 
     tail = spark.createDataFrame(
         [("u", dt.datetime(2023, 1, 1, 1, 50), 50)], sch

@@ -1,15 +1,12 @@
-"""WLS + bootstrap uncertainty in fit_time_func, and the generic exporter."""
+"""WLS + bootstrap uncertainty in fit_time_func."""
 
 from __future__ import annotations
 
 import datetime as dt
 
 import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
 from mintpy_spark.operators.timefunc import fit_time_func
-from mintpy_spark.sources.export import export
 
 
 def _series(spark, noisy_weight=False):
@@ -59,26 +56,3 @@ def test_bootstrap_std_close_to_residue_std(spark):
         uncertainty="bootstrap", bootstrap_count=200,
     ).first()
     assert boot.velocity_std == boot2.velocity_std
-
-
-@pytest.mark.parametrize("fmt", ["parquet", "csv", "json"])
-def test_export_roundtrip(spark, tmp_path, fmt):
-    df = spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", 2.5)], "id long, s string, v double"
-    )
-    path = str(tmp_path / f"out_{fmt}")
-    export(df, path, fmt=fmt)
-    back = (
-        spark.read.format(fmt)
-        .option("header", "true")
-        .option("inferSchema", "true")
-        .load(path)
-    )
-    assert back.count() == 2
-    assert set(back.columns) == {"id", "s", "v"}
-
-
-def test_export_rejects_unknown_format(spark, tmp_path):
-    df = spark.range(1)
-    with pytest.raises(ValueError):
-        export(df, str(tmp_path / "x"), fmt="hdf5")

@@ -2,6 +2,9 @@
 # One-command verification gate: no Structured-Streaming state in the engine
 # (no .applyInPandasWithState(, .withWatermark( or import GroupState under
 # mintpy_spark/ or jobs/; per-key streaming folds through streaming/seqfold.py),
+# no table-store .commit( or .expire( under mintpy_spark/ or jobs/ outside the
+# store (sources/tables.py), the shared fold step (streaming/tier_maintenance.py)
+# and forget (operators/forget.py),
 # the full pytest suite, the cascade, ingest and serve benchmarks' smoke
 # self-tests (their output checks: sum(cnt) at 30d ==
 # pages; text_sha == sha1(text), cnt/vsum per tier, n over blocks; stored
@@ -23,6 +26,13 @@ echo "== no Structured-Streaming state under mintpy_spark/ and jobs/ =="
 if grep -rnE --include='*.py' '\.applyInPandasWithState\(|\.withWatermark\(|import GroupState' \
     mintpy_spark/ jobs/; then
   echo "Structured-Streaming state found above; fold per-key state through streaming/seqfold.py" >&2
+  exit 1
+fi
+
+echo "== table-store commits only in the store, the fold step and forget =="
+if grep -rnE --include='*.py' '\.(commit|expire)\(' mintpy_spark/ jobs/ \
+    | grep -vE '^mintpy_spark/(sources/tables|streaming/tier_maintenance|operators/forget)\.py:'; then
+  echo "store commit/expire found above; fold through StoreFold.apply_delta (streaming/tier_maintenance.py)" >&2
   exit 1
 fi
 
