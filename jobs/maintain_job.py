@@ -3,9 +3,10 @@
 The companion to jobs/rollup_job.py: instead of the full checkpointed
 rebuild, each invocation folds ONLY the observation files that arrived
 since the last run into the stored tier tables (streaming AvailableNow
-checkpoint tracks which files were consumed; the fold is the partial
-merge + dirty-bucket cascade of operators/rollup.py). Schedule it as the
-per-interval refresh job — cost per run scales with the new data.
+checkpoint tracks which files were consumed; the fold is one partial-merge
+aggregation per tier, refresh_tiers_incremental of operators/rollup.py).
+Schedule it as the per-interval refresh job — each run reads the stored
+tiers and the new data, never raw history.
 
 Deployment (north_rule):
 

@@ -169,15 +169,19 @@ def compact_raw(
             .agg(F.count(F.lit(1)).alias("raw_cnt"))
         )
 
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.Path(raw_path).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
     ledger_path = raw_path.rstrip("/") + ".__compaction_ledger"
-    try:
+    # no ledger before the first compaction; an unreadable one raises
+    ledger = None
+    if fs.exists(jvm.org.apache.hadoop.fs.Path(ledger_path)):
         ledger = (
             spark.read.parquet(ledger_path)
             .groupBy("k", "b")
             .agg(F.sum("dropped").alias("led_cnt"))
         )
-    except Exception:
-        ledger = None
     tier_df = maintainer.read_tier(spark, tier)  # raises if none committed
     tier_below = tier_df.where(F.col("bucket_start") < cut).select(
         F.col(key).alias("k"),
@@ -210,10 +214,6 @@ def compact_raw(
         ledger_delta = bucket_counts(
             raw.where(F.col("_file").isin(drop_files))
         ).select("k", "b", F.col("raw_cnt").alias("dropped")).localCheckpoint(eager=True)
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(raw_path).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
         for f in drop_files:
             fs.delete(jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)), False)
         ledger_delta.write.mode("append").parquet(ledger_path)

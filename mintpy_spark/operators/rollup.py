@@ -129,61 +129,75 @@ def build_tiers(
     return out
 
 
+def unit_partials(
+    obs: DataFrame, value_col: str, tier: str | None = None, key: str = "url",
+    ts: str = "warc_ts", with_sq: bool = False,
+) -> DataFrame:
+    """One partial row per observation: (key[, bucket_start at ``tier``],
+    cnt 0/1, vsum = vmin = vmax = the value[, vsumsq = value^2]). Merged
+    by _merge_partials (or any sum/min/max regrouping) they give exactly
+    what rollup_from_obs aggregates, so raw rows can join stored partials
+    in ONE aggregation instead of a pre-aggregation plus a merge."""
+    v = F.col(value_col).cast("double")
+    cols = [F.col(key)]
+    if tier is not None:
+        cols.append(bucket_start(F.col(ts), tier).alias("bucket_start"))
+    cols += [
+        v.isNotNull().cast("long").alias("cnt"),
+        v.alias("vsum"),
+        v.alias("vmin"),
+        v.alias("vmax"),
+    ]
+    if with_sq:
+        cols.append((v * v).alias("vsumsq"))
+    return obs.select(*cols)
+
+
 def merge_tier_delta(
-    stored: DataFrame,
+    stored: DataFrame | None,
     delta_obs: DataFrame,
     value_col: str,
     tier: str = "1h",
     key: str = "url",
     ts: str = "warc_ts",
-    delta_partials: DataFrame | None = None,
+    with_sq: bool = False,
 ) -> DataFrame:
     """Continuous-aggregate refresh: fold LATE/NEW observations into a
     stored tier WITHOUT re-reading raw history.
 
-    Because the tier stores decomposable partials, late data folds in by
-    aggregating only the delta and full-outer-merging partial-wise:
-    cnt/vsum add, vmin/vmax combine. Cost scales with the DELTA (plus the
-    touched tier cells), not with the corpus — this is the merge step of
-    the streaming tier fold (streaming/tier_maintenance.py) and the
-    TimescaleDB-style continuous-aggregate refresh the north rule asks
-    for. The reference's analog is update-mode re-running over grown
-    inputs (utils/utils1.py:691 run_or_skip) — which recomputes the whole
-    step; partial-wise merging is what makes the recast incremental.
+    Because the tier stores decomposable partials, late data folds in as
+    ONE aggregation: the stored partials unioned with the delta's unit
+    partials at this tier's bucket, merged by the one merge spec
+    (_merge_partials) — cnt/vsum add, vmin/vmax combine. Cost is one
+    shuffle of the stored tier plus the delta, never raw history — this
+    is the merge step of the streaming tier fold
+    (streaming/tier_maintenance.py) and the TimescaleDB-style
+    continuous-aggregate refresh the north rule asks for. The reference's
+    analog is update-mode re-running over grown inputs
+    (utils/utils1.py:691 run_or_skip) — which recomputes the whole step;
+    partial-wise merging is what makes the recast incremental.
 
-    Exactness: cnt/min/max exact; vsum regroups the float addition tree —
-    within 1 ulp of a full recompute (same bound as cascade()).
+    The union form is both the simplest correct merge and the scale-right
+    one: groupBy groups NULL keys natively, so the (key, NULL) bucket of
+    NULL-ts observations MERGES (a name-list join never matches NULL and
+    would append a duplicate cell per fold); sum/min/max skip NULLs, so
+    "vsum is NULL iff cnt == 0" holds as in a rebuild.
 
-    ``delta_partials``: the already-aggregated delta tier frame (same
-    tier, same partial set as ``stored``) when the caller has one — e.g.
-    refresh_tiers_incremental reuses its ``touched`` frame so the delta
-    is scanned and shuffled ONCE per maintenance fold, not twice.
+    Exactness: cnt/min/max exact; vsum regroups the float addition tree
+    (exact for integral metrics; within 1 ulp of a full recompute
+    otherwise, the same bound as cascade()). An untouched cell passes
+    through bit-identical: the sum, min or max of one value is that value.
+
+    ``stored`` None (a store's first fold) builds the tier from the delta
+    alone, with the vsumsq partial when ``with_sq``; otherwise the result
+    carries the stored tier's partial set.
     """
-    with_sq = "vsumsq" in stored.columns
-    if delta_partials is not None:
-        d = delta_partials
-    else:
-        d = rollup_from_obs(
-            delta_obs, value_col, tier, key=key, ts=ts, with_sq=with_sq
-        )
-    pcols = _partial_cols(stored)
-    # The merge IS a partial re-aggregation: union the two partial
-    # frames and fold with the ONE merge spec (_merge_partials). This is
-    # both the simplest correct form and the scale-right one:
-    # - groupBy groups NULL keys natively, so the (key, NULL) bucket of
-    #   NULL-ts observations MERGES — a name-list full-outer join never
-    #   matches NULL and appended a duplicate (key, NULL) row per fold,
-    #   silently diverging the store from a batch rebuild;
-    # - an eqNullSafe join would also be correct but costs 2 extra
-    #   tier-sized Exchanges per fold (null-safe keys forfeit the
-    #   aggregations' partitioning reuse; measured 2 -> 4), while the
-    #   union form re-shuffles the union once (+1);
-    # - sum/min/max skip NULLs, so the "vsum is NULL iff cnt == 0"
-    #   rebuild semantics hold without any coalesce bookkeeping.
-    cols = [key, "bucket_start", *pcols]
-    return _merge_partials(
-        stored.select(*cols).unionByName(d.select(*cols)), key
-    )
+    if stored is not None:
+        with_sq = "vsumsq" in stored.columns
+    d = unit_partials(delta_obs, value_col, tier, key=key, ts=ts, with_sq=with_sq)
+    if stored is not None:
+        d = stored.select(*d.columns).unionByName(d)
+    return _merge_partials(d, key)
 
 
 def parse_width(spec: str) -> int:
@@ -247,101 +261,33 @@ def rollup_to_width(
     )
 
 
-def cascade_refresh(
-    stored_coarse: DataFrame,
-    merged_fine: DataFrame,
-    touched_fine: DataFrame,
-    to_tier: str,
-    key: str = "url",
-) -> DataFrame:
-    """Incrementally refresh a coarser stored tier after its finer tier
-    absorbed a delta: only the DIRTY coarse buckets — those covering a
-    touched fine bucket — are re-cascaded from the (already merged) fine
-    tier; every other stored cell passes through untouched via an
-    anti-join. Cost scales with the dirty set, not the tier.
-
-    ``touched_fine``: the fine-tier (key, bucket_start) cells the delta
-    hit (e.g. ``rollup_from_obs(delta_obs, ...)`` — the same frame
-    merge_tier_delta aggregates).
-    """
-    dirty = touched_fine.select(
-        key, bucket_start(F.col("bucket_start"), to_tier).alias("bucket_start")
-    ).distinct()
-    # The (key, NULL) bucket (NULL-ts observations) must be refreshable
-    # and anti-joinable like any other cell; plain name-list joins never
-    # match NULL and would leave the stale NULL cell in `kept` while
-    # never selecting its fine rows for the rebuild. Null-safe equality
-    # against the BROADCAST dirty set keeps this correct AND cheap: the
-    # dirty frame is delta-sized by construction, so both joins stream
-    # the big side with zero shuffle (broadcast hash semi/anti join —
-    # eqNullSafe is a supported hash-join key), instead of forfeiting
-    # the tier's partitioning to a null-safe shuffle join.
-    d_sel = F.broadcast(
-        dirty.select(
-            F.col(key).alias("_dk"), F.col("bucket_start").alias("_db")
-        )
-    )
-    fine_in_dirty = (
-        merged_fine.withColumn(
-            "_coarse", bucket_start(F.col("bucket_start"), to_tier)
-        )
-        .join(
-            d_sel,
-            F.col(key).eqNullSafe(F.col("_dk"))
-            & F.col("_coarse").eqNullSafe(F.col("_db")),
-            "left_semi",
-        )
-        .drop("_coarse")
-    )
-    rebuilt = cascade(fine_in_dirty, to_tier, key=key)
-    kept = stored_coarse.join(
-        d_sel,
-        F.col(key).eqNullSafe(F.col("_dk"))
-        & F.col("bucket_start").eqNullSafe(F.col("_db")),
-        "left_anti",
-    )
-    return kept.unionByName(rebuilt)
-
-
 def refresh_tiers_incremental(
-    stored: dict[str, DataFrame],
+    stored: dict[str, DataFrame] | None,
     delta_obs: DataFrame,
     value_col: str,
     tiers: tuple[str, ...] = ("1h", "1d", "30d"),
     key: str = "url",
     ts: str = "warc_ts",
+    with_sq: bool = False,
 ) -> dict[str, DataFrame]:
     """Full continuous-aggregate maintenance: fold a late/new observation
-    delta into EVERY stored tier — partial-wise merge at the finest tier,
-    then dirty-bucket cascade refresh upward. The whole update reads the
-    delta plus the touched cells; raw history is never re-read and
-    untouched tier cells are never recomputed.
+    delta into EVERY stored tier — each tier's new version is ONE
+    aggregation, merge_tier_delta of its stored partials and the delta's
+    unit partials at its own bucket. Raw history is never re-read, and no
+    tier waits on (or materializes) another.
 
-    Eager: the delta aggregation and each refreshed tier are materialized
-    (localCheckpoint) as they are built, so every coarser tier is built
-    from its materialized finer tier — computing the 30d tier re-runs
-    neither the 1h and 1d merges nor the delta aggregation."""
-    finest = tiers[0]
-    # ONE aggregation of the delta serves both roles: the dirty-set
-    # driver for the cascade refreshes AND the partial frame the finest
-    # merge folds in (merge_tier_delta would otherwise re-aggregate the
-    # identical scan+shuffle on every maintenance fold)
-    with_sq = "vsumsq" in stored[finest].columns
-    touched = rollup_from_obs(
-        delta_obs, value_col, finest, key=key, ts=ts, with_sq=with_sq
-    ).localCheckpoint(eager=True)
-    out: dict[str, DataFrame] = {}
-    out[finest] = merge_tier_delta(
-        stored[finest], delta_obs, value_col, finest, key=key, ts=ts,
-        delta_partials=touched,
-    ).localCheckpoint(eager=True)
-    prev = out[finest]
-    for t in tiers[1:]:
-        out[t] = cascade_refresh(
-            stored[t], prev, touched, t, key=key
-        ).localCheckpoint(eager=True)
-        prev = out[t]
-    return out
+    Trade-off: every fold shuffles each stored tier once. The coarser
+    tiers are never larger than the finest one, which every fold shuffles
+    anyway, and no fold computes a dirty-bucket set or holds a tier in
+    the block manager. ``stored`` None builds the tiers from the delta
+    alone (``with_sq`` as in merge_tier_delta)."""
+    return {
+        t: merge_tier_delta(
+            None if stored is None else stored[t], delta_obs, value_col, t,
+            key=key, ts=ts, with_sq=with_sq,
+        )
+        for t in tiers
+    }
 
 
 def histogram_tier(
@@ -494,9 +440,9 @@ def route_range_agg(
     """Answer ``SELECT key, cnt/sum/min/max WHERE ts in [t0, t1)`` by
     stitching stored tier partials for the tier-aligned interior with raw
     observations on the fringes (plan_range_cover), then one partial
-    merge. Each tier piece is a bucket_start range filter (partition-
-    prunable on stored tier tables); each raw piece pushes its ts
-    predicate into the scan. Reference analog: temporal subsetting +
+    merge. Each tier is scanned once, filtered on bucket_start by the OR
+    of its cover pieces; the raw rows likewise on ``ts``, so the
+    predicate pushes into the scan. Reference analog: temporal subsetting +
     temporal_average (stack.py:451-456) — but answered from the
     continuous-aggregate tiers instead of the raw stack."""
     cover = plan_range_cover(t0, t1, tuple(tiers))
@@ -505,37 +451,30 @@ def route_range_agg(
             f"empty time range: [{t0}, {t1}) covers no interval — "
             "'from' must be strictly before 'to'"
         )
-    parts: list[DataFrame] = []
+    spans: dict[str, list[tuple[str, str]]] = {}
     for tier, lo, hi in cover:
-        if tier == "raw":
-            # raw fringe rows become UNIT partials (cnt 0/1, vsum=value)
-            # and merge in the single final aggregation below — one
-            # Exchange for the whole routed read instead of a pre-agg
-            # shuffle per raw piece plus the merge shuffle (partial
-            # map-side aggregation still combines them before the wire)
-            parts.append(
-                obs.where(
-                    (F.col(ts) >= F.lit(lo).cast("timestamp"))
-                    & (F.col(ts) < F.lit(hi).cast("timestamp"))
-                ).select(
-                    F.col(key),
-                    F.when(F.col(value_col).isNotNull(), F.lit(1))
-                    .otherwise(F.lit(0))
-                    .cast("long")
-                    .alias("cnt"),
-                    F.col(value_col).cast("double").alias("vsum"),
-                    F.col(value_col).cast("double").alias("vmin"),
-                    F.col(value_col).cast("double").alias("vmax"),
-                )
-            )
-        else:
-            t = tiers[tier]
-            parts.append(
-                t.where(
-                    (F.col("bucket_start") >= F.lit(lo).cast("timestamp"))
-                    & (F.col("bucket_start") < F.lit(hi).cast("timestamp"))
-                ).select(key, "cnt", "vsum", "vmin", "vmax")
-            )
+        spans.setdefault(tier, []).append((lo, hi))
+
+    def within(col: str, pieces: list[tuple[str, str]]):
+        cond = None
+        for lo, hi in pieces:
+            c = (F.col(col) >= F.lit(lo).cast("timestamp")) & (
+                F.col(col) < F.lit(hi).cast("timestamp"))
+            cond = c if cond is None else cond | c
+        return cond
+
+    # raw fringe rows become UNIT partials and merge in the single final
+    # aggregation below — one Exchange for the whole routed read instead
+    # of a pre-agg shuffle per raw piece plus the merge shuffle (partial
+    # map-side aggregation still combines them before the wire)
+    parts = [
+        unit_partials(obs.where(within(ts, pieces)), value_col, key=key)
+        if tier == "raw"
+        else tiers[tier].where(within("bucket_start", pieces)).select(
+            key, *PARTIAL_COLS
+        )
+        for tier, pieces in spans.items()
+    ]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

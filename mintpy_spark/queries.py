@@ -658,8 +658,8 @@ def rollup_1d_change_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tier_refresh_incremental_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full continuous-aggregate maintenance, end-to-end: tiers built from
-    the first 20 days, a late slice folded in by partial merge (1h) +
-    dirty-bucket cascade refresh (1d). The oracle is the direct full daily
+    the first 20 days, a late slice folded into each tier (1h, 1d) by one
+    partial-merge aggregation. The oracle is the direct full daily
     aggregation — incremental maintenance must be indistinguishable from a
     from-scratch build."""
     from mintpy_spark.operators.rollup import build_tiers, refresh_tiers_incremental

@@ -173,8 +173,10 @@ class SeqFold(StoreFold):
         rows = obs
         if state is not None:
             rows = (
+                # a left-semi join is set-valued: duplicate keys need no
+                # distinct
                 state.join(
-                    obs.select(F.col("k").alias(self.key)).distinct(),
+                    obs.select(F.col("k").alias(self.key)),
                     self.key, "left_semi",
                 )
                 .select(

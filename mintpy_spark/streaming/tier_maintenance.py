@@ -28,10 +28,11 @@ replay skipped; its lineage went in before the rename, so it is kept.
 Readers plan from one manifest: never a partial fold or a mix of two.
 Expiry keeps the previous version, the one a replay recomputes from.
 
-The value tiers: each batch is merged into the STORED tiers by
-partial-wise merge (finest tier) + dirty-bucket cascade refresh (coarser
-tiers) — see operators/rollup.py — so they equal a batch rebuild over
-everything ever ingested (tests/test_streaming.py, with a replay test).
+The value tiers: each batch is merged into the STORED tiers by one
+aggregation per tier, the stored partials unioned with the batch's unit
+partials at that tier's bucket (refresh_tiers_incremental in
+operators/rollup.py), so they equal a batch rebuild over everything ever
+ingested (tests/test_streaming.py, with a replay test).
 
 Why foreachBatch and not a streaming aggregation: a watermarked window
 aggregation FINALIZES buckets and drops every later arrival; tier
@@ -41,9 +42,9 @@ a bounded batch job against durable tables — the lambda-architecture merge
 loop, with the delta-proportional cost the north rule's continuous
 aggregates require. The engine keeps no Structured-Streaming state at all.
 
-Scale: per batch, cost = delta aggregation + touched-cell rewrite. The
-stored tier tables should be bucketed on the key (sources/bucketed.py) so
-the merge joins co-locate.
+Scale: per batch, each tier's write runs its own aggregation: the stored
+tier shuffled once together with the delta, nothing held in the block
+manager. The coarser tiers are never larger than the finest one.
 """
 
 from __future__ import annotations
@@ -54,7 +55,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from mintpy_spark.operators.rollup import build_tiers, refresh_tiers_incremental
+from mintpy_spark.operators.rollup import merge_tier_delta, refresh_tiers_incremental
 from mintpy_spark.plans.checkpoint import CheckpointTable
 from mintpy_spark.sources.tables import TableStore
 
@@ -219,47 +220,26 @@ class TierMaintainer(StoreFold):
     def read_realtime(
         self, spark: SparkSession, tier: str, tail_obs: DataFrame
     ) -> DataFrame:
-        """Real-time continuous aggregate: the committed tier partials
-        unioned with an on-the-fly aggregation of the NOT-yet-folded
-        observation tail, merged partial-wise — readers see exact
-        up-to-the-second buckets without waiting for the next maintenance
-        fold (TimescaleDB's materialized_only=false read path). Cost:
-        tier scan + tail-proportional aggregation; the tail is one
-        micro-batch, so this stays cheap at any stored scale."""
-        from mintpy_spark.operators.rollup import (
-            _merge_partials,
-            _partial_cols,
-            rollup_from_obs,
-        )
-
-        stored = self.read_tier(spark, tier)
-        # the tail must carry the SAME partial set as the stored tier:
-        # a variance-capable store (vsumsq) unioned with a tail built
-        # without it would fail unionByName on the missing column
-        tail = rollup_from_obs(
-            tail_obs, self.value_col, tier, key=self.key, ts=self.ts,
-            with_sq=("vsumsq" in stored.columns),
-        )
-        cols = [self.key, "bucket_start", *_partial_cols(stored)]
-        return _merge_partials(
-            stored.select(*cols).unionByName(tail.select(*cols)), self.key
+        """Real-time continuous aggregate: the committed tier with the
+        NOT-yet-folded observation tail merged in (merge_tier_delta, the
+        fold's own step) — readers see exact up-to-the-second buckets
+        without waiting for the next maintenance fold (TimescaleDB's
+        materialized_only=false read path). Cost: one tier scan plus the
+        tail; the tail is one micro-batch, so this stays cheap at any
+        stored scale."""
+        return merge_tier_delta(
+            self.read_tier(spark, tier), tail_obs, self.value_col, tier,
+            key=self.key, ts=self.ts,
         )
 
     def _compute(
         self, delta_obs: DataFrame, stored: dict[str, DataFrame] | None
     ) -> dict[str, DataFrame]:
-        """The new version of each tier: built from the delta on the first
-        fold, else the delta merged into the committed tiers (the refresh
-        materializes each tier as it builds the next one from it)."""
-        if stored is None:
-            new = build_tiers(
-                delta_obs, self.value_col, tiers=self.tiers,
-                key=self.key, ts=self.ts, with_sq=self.with_sq,
-            )
-            return {t: new[t].localCheckpoint(eager=True) for t in self.tiers}
+        """The new version of each tier: one aggregation of the committed
+        tier (none on the first fold) and the delta."""
         return refresh_tiers_incremental(
             stored, delta_obs, self.value_col, tiers=self.tiers,
-            key=self.key, ts=self.ts,
+            key=self.key, ts=self.ts, with_sq=self.with_sq,
         )
 
 

@@ -35,25 +35,18 @@ def test_merge_tier_delta_null_bucket_merges(spark):
     assert rows == rebuilt
 
 
-def test_cascade_refresh_null_bucket(spark):
-    from mintpy_spark.operators.rollup import (
-        cascade,
-        cascade_refresh,
-        merge_tier_delta,
-        rollup_from_obs,
-    )
+def test_refresh_tiers_null_bucket(spark):
+    from mintpy_spark.operators.rollup import build_tiers, refresh_tiers_incremental
 
     base = _obs(spark, [("u", None, 5.0), ("u", T0, 1.0)])
-    fine = rollup_from_obs(base, "value", "1h")
-    coarse = cascade(fine, "1d")
-    delta = _obs(spark, [("u", None, 7.0)])
-    touched = rollup_from_obs(delta, "value", "1h")
-    merged_fine = merge_tier_delta(fine, delta, "value", "1h")
-    refreshed = cascade_refresh(coarse, merged_fine, touched, "1d")
-    got = {r.bucket_start: (r.cnt, r.vsum) for r in refreshed.collect()}
-    # the NULL coarse cell was refreshed (stale value would be (1, 5.0))
-    assert got[None] == (2, 12.0)
-    assert got[T0] == (1, 1.0)
+    stored = build_tiers(base, "value")
+    refreshed = refresh_tiers_incremental(stored, _obs(spark, [("u", None, 7.0)]), "value")
+    for t, df in refreshed.items():
+        got = {r.bucket_start: (r.cnt, r.vsum) for r in df.collect()}
+        # the NULL cell of every tier was refreshed (stale value would be
+        # (1, 5.0)), and T0's cell is untouched
+        assert got.pop(None) == (2, 12.0), t
+        assert list(got.values()) == [(1, 1.0)], t
 
 
 def test_pack_blocks_nan_and_null_value_roundtrip(spark):

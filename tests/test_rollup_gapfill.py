@@ -200,8 +200,8 @@ def test_rollup_to_width_matches_direct(spark, obs):
 
 
 def test_refresh_tiers_incremental_equals_full_rebuild(spark, obs):
-    """Merging a late slice through all three tiers (partial merge + dirty
-    cascade) reproduces the from-scratch tier stack."""
+    """Merging a late slice through all three tiers (one partial merge per
+    tier) reproduces the from-scratch tier stack."""
     from pyspark.sql import functions as F
 
     from mintpy_spark.operators.rollup import build_tiers, refresh_tiers_incremental
@@ -226,31 +226,25 @@ def test_refresh_tiers_incremental_equals_full_rebuild(spark, obs):
         assert bad == 0, t
 
 
-def test_cascade_refresh_touches_only_dirty_buckets(spark, obs):
-    """Untouched coarse cells must pass through IDENTICALLY (same object
-    values, not recomputed): refresh with an empty-ish delta touching one
-    day leaves every other 1d cell bit-identical to the stored tier."""
-    from pyspark.sql import functions as F
-
-    from mintpy_spark.operators.rollup import (
-        build_tiers,
-        cascade_refresh,
-        merge_tier_delta,
-        rollup_from_obs,
-    )
+def test_refresh_tiers_passes_untouched_cells_through(spark, obs):
+    """Untouched cells must pass through IDENTICALLY (same values, bit for
+    bit): a refresh with a delta touching a few cells leaves every other
+    cell of every tier bit-identical to the stored tier."""
+    from mintpy_spark.functions.timefn import bucket_start
+    from mintpy_spark.operators.rollup import build_tiers, refresh_tiers_incremental
 
     stored = build_tiers(obs, "text_length")
     one_day = obs.orderBy("warc_ts").limit(5)
-    touched = rollup_from_obs(one_day, "text_length")
-    merged_1h = merge_tier_delta(stored["1h"], one_day, "text_length")
-    refreshed_1d = cascade_refresh(stored["1d"], merged_1h, touched, "1d")
-    dirty_days = touched.select(
-        "url", F.date_trunc("day", "bucket_start").alias("bucket_start")
-    ).distinct()
-    clean_ref = refreshed_1d.join(dirty_days, ["url", "bucket_start"], "left_anti")
-    clean_old = stored["1d"].join(dirty_days, ["url", "bucket_start"], "left_anti")
-    assert clean_ref.exceptAll(clean_old).count() == 0
-    assert clean_old.exceptAll(clean_ref).count() == 0
+    refreshed = refresh_tiers_incremental(stored, one_day, "text_length")
+    for t in ("1h", "1d", "30d"):
+        dirty = one_day.select(
+            "url", bucket_start(F.col("warc_ts"), t).alias("bucket_start")
+        ).distinct()
+        clean_ref = refreshed[t].join(dirty, ["url", "bucket_start"], "left_anti")
+        clean_old = stored[t].join(dirty, ["url", "bucket_start"], "left_anti")
+        assert clean_ref.exceptAll(clean_old).count() == 0, t
+        assert clean_old.exceptAll(clean_ref).count() == 0, t
+        assert clean_old.count() > 0, t
 
 
 def test_variance_from_tier_partials(spark, obs):

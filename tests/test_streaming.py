@@ -570,3 +570,83 @@ def test_hdr_sketch_maintenance_equals_batch_and_replay_safe(spark, paths):
     m.apply_delta(delta, batch_id=last + 1)  # new id -> folds once
     total = m.read_sketch(spark).agg(F.sum("cnt")).first()[0]
     assert total == spark.read.parquet(inp).count() + 1
+
+
+def test_compact_raw_raises_an_unreadable_ledger(spark, paths, land_days):
+    """A ledger that exists but cannot be read is an error of its own, not
+    "no ledger": the gate must not refuse with the outstanding-delta
+    message, which would point at the wrong cause."""
+    import glob
+
+    from mintpy_spark.operators.retention import compact_raw
+    from mintpy_spark.streaming.tier_maintenance import TierMaintainer
+
+    inp, store_root, _ = paths
+    sch = "url string, warc_ts timestamp, text_length long"
+    rows = [(f"u{u}", dt.datetime(2023, 1, d, 3, 30), 10 * u + d)
+            for u in range(2) for d in range(1, 6)]
+    land_days(inp, rows, sch)
+    m = TierMaintainer(store_root)
+    m.apply_delta(spark.read.parquet(inp), batch_id=0)
+    assert compact_raw(spark, inp, "2023-01-03 00:00:00", m, tier="1h")["dropped"] == 4
+
+    ledger = glob.glob(inp + ".__compaction_ledger/*.parquet")
+    assert ledger
+    with open(ledger[0], "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception) as err:
+        compact_raw(spark, inp, "2023-01-05 00:00:00", m, tier="1h")
+    assert "outstanding delta" not in str(err.value)
+
+
+def test_tier_fold_with_null_nan_and_null_ts_rows_equals_batch(spark, paths):
+    """Two folds of deltas holding a NULL value, a NaN value and a NULL
+    timestamp leave every variance-capable tier equal to build_tiers over
+    both deltas (NaN compared as NaN)."""
+    import math
+
+    from mintpy_spark.operators.rollup import build_tiers
+    from mintpy_spark.streaming.tier_maintenance import TierMaintainer
+
+    _, store_root, _ = paths
+    sch = "url string, warc_ts timestamp, value double"
+    d1 = [("a", dt.datetime(2023, 1, 1, 1), 1.0), ("a", dt.datetime(2023, 1, 1, 2), None),
+          ("b", None, 4.0), ("b", dt.datetime(2023, 2, 3, 5), float("nan"))]
+    d2 = [("a", dt.datetime(2023, 1, 1, 1, 30), 2.0), ("a", dt.datetime(2023, 1, 5), None),
+          ("b", None, float("nan")), ("b", None, None), ("c", None, 3.0),
+          ("b", dt.datetime(2023, 2, 3, 5, 20), 6.0)]
+    m = TierMaintainer(store_root, value_col="value", with_sq=True)
+    m.apply_delta(spark.createDataFrame(d1, sch), batch_id=0)
+    m.apply_delta(spark.createDataFrame(d2, sch), batch_id=1)
+    want = build_tiers(spark.createDataFrame(d1 + d2, sch), "value", with_sq=True)
+
+    def nan(v):
+        return "NaN" if isinstance(v, float) and math.isnan(v) else v
+
+    def rows(df):
+        cols = ["url", "bucket_start", "cnt", "vsum", "vmin", "vmax", "vsumsq"]
+        return sorted((tuple(map(nan, r)) for r in df.select(*cols).collect()), key=repr)
+
+    for t in m.tiers:
+        assert rows(m.read_tier(spark, t)) == rows(want[t]), t
+
+
+def test_tier_fold_runs_seven_spark_jobs(spark, paths):
+    """A fold into stored tiers runs at most 7 Spark jobs: the isEmpty
+    probe, then per tier one shuffle stage and one write."""
+    from mintpy_spark.streaming.tier_maintenance import TierMaintainer
+
+    _, store_root, _ = paths
+    sch = "url string, warc_ts timestamp, text_length long"
+    m = TierMaintainer(store_root)
+    m.apply_delta(spark.createDataFrame(
+        [(f"u{u}", dt.datetime(2023, 1, 1 + u, h), u + h) for u in range(4) for h in range(3)],
+        sch), batch_id=0)
+    delta = spark.createDataFrame(
+        [(f"u{u}", dt.datetime(2023, 3, 1, h), u * h) for u in range(6) for h in range(3)], sch)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    m.apply_delta(delta, batch_id=1)
+    jobs = dag.nextJobId() - j0
+    assert jobs <= 7, jobs
+    assert m.read_tier(spark, "1h").agg(F.sum("cnt")).first()[0] == 12 + 18

@@ -13,7 +13,8 @@
 # queries that certify the table store's commits: the five streaming
 # sequential folds' *_realtime_check queries, the tier fold's
 # tier_realtime_read_check, the dedup index's dedup_index_realtime_check and
-# the lineage table's checkpoint_lineage_audit).
+# the lineage table's checkpoint_lineage_audit; plus
+# tier_refresh_incremental_1d, the oracle of the one-aggregation tier fold).
 # Run before stamping closing numbers in BASELINE.md — "N/N green" claims
 # must cite this script's output.
 #
@@ -52,7 +53,8 @@ if [[ "${1:-}" == "--fast" ]]; then
   echo "== table-store commits vs oracle (sf0.01) =="
   python tools/check_oracle.py kalman_realtime_check sessionize_realtime_check \
     holt_winters_realtime_check welford_realtime_check token_bucket_realtime_check \
-    tier_realtime_read_check dedup_index_realtime_check checkpoint_lineage_audit
+    tier_realtime_read_check dedup_index_realtime_check checkpoint_lineage_audit \
+    tier_refresh_incremental_1d
 else
   echo "== full-registry oracle sweep (sf0.01) =="
   python tools/check_oracle.py
