@@ -68,7 +68,8 @@ def rolling_zscore_anomalies(
     or zero window variance are never flagged (a constant window gives no
     scale to judge against). Precondition: (key, ts) is unique — a
     trailing ROWS frame is ill-defined under duplicate timestamps (tie
-    order is arbitrary in any engine).
+    order is arbitrary in any engine). A row with a NULL ts is skipped,
+    as the streaming ``ZScoreMonitor`` fold skips it.
 
     ``threshold`` must be an integer so the predicate stays exact; the
     common 2σ/3σ/4σ monitors all are. Exactness bound: the linear terms
@@ -88,7 +89,7 @@ def rolling_zscore_anomalies(
     )
     dec = "decimal(38,0)"
     v = quantize_fixed(F.col(value_col), scale)
-    q = df.select(key, ts, value_col, v.alias("_v"))
+    q = df.where(F.col(ts).isNotNull()).select(key, ts, value_col, v.alias("_v"))
     n = F.count("_v").over(fr)
     s1 = F.sum("_v").over(fr)
     # squared terms in decimal: v*v overflows int64 at |v| ~ 3e9

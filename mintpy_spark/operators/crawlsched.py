@@ -8,8 +8,9 @@ under a per-host minimum delay, and HOW OFTEN a page should be revisited
 given its observed change history. Both are closed-form column plans —
 no iteration, no UDFs. The third, token-bucket admission, is what a live
 fetcher consults per request: an exact-integer sequential recursion
-(``TokenBucket``) run by ``token_bucket`` on the sorted-group seam and by
-the streaming fold (streaming/seqfold.py).
+(``TokenBucket``) run through the one fold runner
+(``operators.seqstate.fold_groups``) by ``token_bucket`` and by the
+streaming fold (streaming/seqfold.py).
 
 Reference analog: MintPy sequences its per-pixel work through explicit
 box scheduling (`split2boxes`, ifgram_inversion.py:795-860) and derives
@@ -19,7 +20,6 @@ a fetch and the cadence signal is the page's own change process.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -218,30 +218,19 @@ def token_bucket(
     """Per-key token-bucket simulation over events in ts order: (key,
     n_events, n_admitted, n_rejected, final_tokens_mt). Refill between
     equal timestamps is 0, so these aggregates do not depend on how tied
-    events are ordered. One shuffle into the sorted-group seam, O(1)
-    integer state per key."""
-    from mintpy_spark.operators.seqstate import map_sorted_groups
+    events are ordered. An event with a NULL ts is skipped, as the
+    streaming fold skips it. ``TokenBucket`` runs through the streaming
+    fold's own runner (``operators.seqstate.fold_groups``) with no state:
+    one shuffle into the sorted-group seam, O(1) integer state per key,
+    and the answer is each key's state row."""
+    from mintpy_spark.operators.seqstate import fold_groups, fold_states
 
-    src = events.select(
-        F.col(key).alias("k"),
-        F.unix_micros(F.col(ts).cast("timestamp")).alias("t"),
-    )
-    schema = (
-        f"k {dict(src.dtypes)['k']}, n_events long, n_admitted long,"
-        " n_rejected long, final_tokens_mt long"
-    )
-    model = TokenBucket(cap_mt, cost_mt, rate_mt_per_hour)
-
-    def run_sorted(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for kval, g in pdf.groupby("k", sort=False):
-            _out, (_t, n, adm, tokens) = model.fold(g["t"].tolist(), None, None)
-            rows.append((kval, n, adm, n - adm, tokens))
-        return pd.DataFrame(rows, columns=[
-            "k", "n_events", "n_admitted", "n_rejected", "final_tokens_mt"
-        ])
-
-    return map_sorted_groups(src, "k", ("t",), run_sorted, schema).select(
-        F.col("k").alias(key), "n_events", "n_admitted", "n_rejected",
-        "final_tokens_mt",
+    rec = TokenBucket(cap_mt, cost_mt, rate_mt_per_hour)
+    state = fold_states(fold_groups(events, rec, key, ts, None), rec, key)
+    return state.select(
+        key,
+        F.col("n").alias("n_events"),
+        F.col("admitted").alias("n_admitted"),
+        (F.col("n") - F.col("admitted")).alias("n_rejected"),
+        F.col("tokens").alias("final_tokens_mt"),
     )

@@ -167,11 +167,13 @@ def batch_change_events(obs: DataFrame) -> DataFrame:
     prev_length, delta): one row per change of a url's length along
     time, the first observation included (NULL prev_length and delta).
     One lag window; the reference the streaming ``ChangeEvents`` fold is
-    tested against."""
+    tested against. A row with a NULL ``warc_ts`` is skipped, as the
+    fold skips it."""
     w = Window.partitionBy("url").orderBy("warc_ts")
     prev = F.lag("text_length").over(w)
     return (
-        obs.withColumn("prev_length", prev)
+        obs.where(F.col("warc_ts").isNotNull())
+        .withColumn("prev_length", prev)
         .where(F.col("prev_length").isNull() | (F.col("prev_length") != F.col("text_length")))
         .select(
             "url",

@@ -24,17 +24,18 @@ integer cents cast to double so the daily pre-aggregation is
 order-independent too.
 
 Scale: one shuffle into the per-key Arrow seam; state is P + 2 doubles
-per key. ``HoltWinters`` is the one definition of the recursion: the
-batch pass below and the streaming fold (streaming/seqfold.py, which
-carries the rotating profile in its per-key state table) both call its
-``fold``.
+per key. ``HoltWinters`` is the one definition of the recursion and
+``operators.seqstate.fold_groups`` its one runner: the batch pass below
+runs it with no state, the streaming fold (streaming/seqfold.py, which
+carries the rotating profile in its per-key state table) with each
+key's committed state.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from mintpy_spark.operators.seqstate import fold_groups, fold_outputs
 
 
 class HoltWinters:
@@ -98,32 +99,13 @@ def holt_winters_additive(
 ) -> DataFrame:
     """Per-key causal Holt-Winters pass over an already-bucketed series
     (one row per (key, bucket)). Returns (key, rn, level, trend,
-    seasonal) after each observation in bucket order."""
-    src = df.where(F.col(value_col).isNotNull()).select(
-        F.col(key).alias("k"),
-        F.col(ts).alias("t"),
-        F.col(value_col).cast("double").alias("y"),
+    seasonal) after each observation in (bucket, value) order. NULL
+    values are dropped, and a row with a NULL bucket is skipped, as the
+    streaming fold skips it: ``HoltWinters`` runs through the streaming
+    fold's own runner (``operators.seqstate.fold_groups``) with no
+    state."""
+    rec = HoltWinters(period, alpha, beta, gamma)
+    folded = fold_groups(df, rec, key, ts, value_col)
+    return fold_outputs(folded, rec, key, ts, df.schema[ts].dataType).select(
+        key, "rn", "level", "trend", "seasonal"
     )
-    schema = (
-        f"k {dict(src.dtypes)['k']}, rn long, level double, trend double,"
-        " seasonal double"
-    )
-    model = HoltWinters(period, alpha, beta, gamma)
-
-    def run_sorted(pdf: pd.DataFrame) -> pd.DataFrame:
-        names = ("rn", "level", "trend", "seasonal")
-        cols: dict[str, list] = {c: [] for c in ("k", *names)}
-        for kval, grp in pdf.groupby("k", sort=False):
-            (rn, _ts, *vals), _state = model.fold(
-                grp["t"].to_numpy(), grp["y"].tolist(), None
-            )
-            cols["k"].extend([kval] * len(rn))
-            for c, v in zip(names, (rn, *vals)):
-                cols[c].extend(v)
-        return pd.DataFrame(cols)
-
-    from mintpy_spark.operators.seqstate import map_sorted_groups
-
-    return map_sorted_groups(
-        src, "k", ("t", "y"), run_sorted, schema
-    ).select(F.col("k").alias(key), "rn", "level", "trend", "seasonal")

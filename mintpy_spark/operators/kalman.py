@@ -26,9 +26,11 @@ mapInPandas over key-clustered partitions — one Arrow frame per chunk,
 NOT one per key: grouped applyInPandas pays pandas frame construction
 per key, which dominated wall time 6.8x at sf0.1 (5.0 s -> 0.73 s) and
 dominates harder at production shape (10^9 keys x ~10^2 rows). The
-per-key pass is O(n) with O(1) state; the recursion itself
-(``LocalLevel``) is shared with the streaming fold, which carries that
-state in a versioned table (streaming/seqfold.py).
+per-key pass is O(n) with O(1) state. The filter shares both the
+recursion (``LocalLevel``) and its runner (``operators.seqstate.
+fold_groups``) with the streaming fold, which carries that state in a
+versioned table (streaming/seqfold.py): ``kalman_level`` is the fold
+with no state.
 """
 
 from __future__ import annotations
@@ -37,12 +39,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mintpy_spark.operators.seqstate import fold_groups, fold_outputs, map_sorted_groups
+
 
 class LocalLevel:
     """The local-level recursion, defined once for the batch filter
     (``kalman_level``) and the streaming fold (``streaming.seqfold``,
     whose recursion protocol ``name``/``state``/``out``/``fold`` this
-    implements), so stream == batch holds by construction.
+    implements); both run it through ``operators.seqstate.fold_groups``,
+    so stream == batch holds by construction.
 
     A key's state after ``rn`` observations is (rn, m, p). For a fresh
     key the variance p and the gain depend only on the position, not on
@@ -111,41 +116,20 @@ def kalman_level(
     ts: str = "ts",
     q: float = 0.04,
     r: float = 1.0,
-    order_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Per-key causal Kalman local-level filter. Returns one row per
     observation: (key, rn, level) where rn is the 1-based position in
-    (ts, value, *order_cols) order — the value tie-break keeps duplicate
-    timestamps deterministic (ADVICE r3 ordering convention) — and level
-    the filtered mean after seeing observation rn. NULL observations are
-    dropped before ranking (they carry no update)."""
-    src = df.where(F.col(value_col).isNotNull()).select(
-        F.col(key).alias("k"),
-        F.col(ts).alias("t"),
-        *[F.col(c) for c in order_cols],
-        F.col(value_col).cast("double").alias("y"),
-    )
-    order = ["t", "y", *order_cols]
-    schema = f"k {dict(src.dtypes)['k']}, rn long, level double"
-
-    model = LocalLevel(q, r)
-
-    def run_sorted(pdf: pd.DataFrame) -> pd.DataFrame:
-        """One or more WHOLE key groups, already in (k, t, y) order."""
-        out_k: list = []
-        out_rn: list[int] = []
-        out_lv: list[float] = []
-        for kval, g in pdf.groupby("k", sort=False):
-            levels, _m, _p = model.levels(g["y"].tolist())
-            out_k.extend([kval] * len(levels))
-            out_rn.extend(range(1, len(levels) + 1))
-            out_lv.extend(levels)
-        return pd.DataFrame({"k": out_k, "rn": out_rn, "level": out_lv})
-
-    from mintpy_spark.operators.seqstate import map_sorted_groups
-
-    return map_sorted_groups(src, "k", tuple(order), run_sorted, schema).select(
-        F.col("k").alias(key), "rn", "level"
+    (ts, value) order — the value tie-break keeps duplicate timestamps
+    deterministic (ADVICE r3 ordering convention) — and level the
+    filtered mean after seeing observation rn. NULL observations are
+    dropped before ranking (they carry no update), and a row with a NULL
+    ts is skipped, as the streaming fold skips it. Runs ``LocalLevel``
+    through the streaming fold's own runner
+    (``operators.seqstate.fold_groups``) with no state."""
+    rec = LocalLevel(q, r)
+    folded = fold_groups(df, rec, key, ts, value_col)
+    return fold_outputs(folded, rec, key, ts, df.schema[ts].dataType).select(
+        key, "rn", "level"
     )
 
 
@@ -259,8 +243,6 @@ def kalman_em_stats(
         return pd.DataFrame(
             rows, columns=["k", "n", "sum_r_e6", "sum_q_e6", "r1_e4", "q1_e4"]
         )
-
-    from mintpy_spark.operators.seqstate import map_sorted_groups
 
     out = map_sorted_groups(src, "k", ("t", "y"), run_sorted, schema)
     return out.select(
@@ -415,8 +397,6 @@ def kalman_level_adaptive(
             out_rn.extend(range(1, len(ys) + 1))
             out_lv.extend(levels)
         return pd.DataFrame({"k": out_k, "rn": out_rn, "level": out_lv})
-
-    from mintpy_spark.operators.seqstate import map_sorted_groups
 
     return map_sorted_groups(src, "k", ("t", "y"), run_sorted, schema).select(
         F.col("k").alias(key), "rn", "level"

@@ -10,13 +10,13 @@ Reference analogs (SURVEY.md §2.4):
 
 All pure Catalyst aggregates (partial+final hash agg, one shuffle each),
 except the sequential Welford moments: ``Welford`` is the one definition
-of that recursion, run by ``welford_moments`` on the sorted-group seam
-and by the streaming fold (streaming/seqfold.py).
+of that recursion, run through the one fold runner
+(``operators.seqstate.fold_groups``) by ``welford_moments`` and by the
+streaming fold (streaming/seqfold.py).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -287,27 +287,14 @@ def welford_moments(
     df: DataFrame, value_col: str = "value", key: str = "user_id", ts: str = "ts"
 ) -> DataFrame:
     """Per-key (n, mean, m2) after Welford's update over the non-NULL
-    values in (ts, value) order: one shuffle into the sorted-group seam,
-    three doubles of state per key."""
-    from mintpy_spark.operators.seqstate import map_sorted_groups
+    values in (ts, value) order; a row with a NULL ts is skipped, as the
+    streaming fold skips it. ``Welford`` runs through the streaming fold's
+    own runner (``operators.seqstate.fold_groups``) with no state: one
+    shuffle into the sorted-group seam, three doubles of state per key,
+    and the answer is each key's state row."""
+    from mintpy_spark.operators.seqstate import fold_groups, fold_states
 
-    src = df.where(F.col(value_col).isNotNull()).select(
-        F.col(key).alias("k"),
-        F.unix_micros(F.col(ts).cast("timestamp")).alias("t"),
-        F.col(value_col).cast("double").alias("y"),
-    )
-    schema = f"k {dict(src.dtypes)['k']}, n long, mean double, m2 double"
-    model = Welford()
-
-    def run_sorted(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for kval, g in pdf.groupby("k", sort=False):
-            _out, (_t, n, mean, m2) = model.fold(
-                g["t"].to_numpy(), g["y"].tolist(), None
-            )
-            rows.append((kval, n, mean, m2))
-        return pd.DataFrame(rows, columns=["k", "n", "mean", "m2"])
-
-    return map_sorted_groups(src, "k", ("t", "y"), run_sorted, schema).select(
-        F.col("k").alias(key), "n", "mean", "m2"
+    rec = Welford()
+    return fold_states(fold_groups(df, rec, key, ts, value_col), rec, key).select(
+        key, "n", "mean", "m2"
     )

@@ -7,9 +7,12 @@ stage records, per partition, an append-only row
 
     (run_id, stage, part_id, input_fp, row_count, wall_ms, status, ts_utc)
 
-A (stage, part_id, input_fp) with status='complete' is skipped on resume;
-changing the input fingerprint (config or upstream data) invalidates the
-entry automatically, exactly like the reference's config-attr comparison.
+A (stage, part_id, input_fp) with status='complete' is skipped on resume,
+as is one with status='empty' (a partition its stage computed and found
+without rows, row_count 0; ``stage_metrics`` leaves it out, as the stored
+table holds no such partition); changing the input fingerprint (config or
+upstream data) invalidates the entry automatically, exactly like the
+reference's config-attr comparison.
 
 Storage is a directory of small parquet files (one per commit, written
 atomically via temp+rename) — driver-side pyarrow, no Spark job needed for
@@ -89,7 +92,7 @@ class CheckpointTable:
             return set()
         df = t.to_pandas()
         m = (df["stage"] == stage) & (df["input_fp"] == input_fp) & (
-            df["status"] == "complete"
+            df["status"].isin(("complete", "empty"))
         )
         return set(df.loc[m, "part_id"].astype(int).tolist())
 

@@ -13,9 +13,13 @@ Execution contract per stage:
   already carries ``part_id`` (stable hash(key) % B bucketing),
 * run_stage() consults the checkpoint table: partitions already complete
   for this (stage, input_fp) are **not recomputed** — the input is filtered
-  to the missing buckets only, written as one partition overwrite of the
-  stage's table, and each written partition's row count is committed to
-  the checkpoint. The counts are what ``write_partitions`` returns, summed
+  to the missing buckets only, written as one overwrite of exactly those
+  partitions of the stage's table (a partition left without rows is
+  dropped, so a key gone from the input leaves no stale rows), and every
+  recomputed partition is recorded in the checkpoint: ``complete`` with
+  its row count, or ``empty`` (row count 0) when it holds no row, so a
+  rerun of a finished stage recomputes nothing and commits no store
+  version. The counts are what ``write_partitions`` returns, summed
   from the Parquet footers of the files it just staged: counting a stage
   costs no second read of its output. The stage's output is then read
   back planned from the store's manifest, which costs no Spark job,
@@ -85,7 +89,9 @@ def run_stage(
             raise ValueError(f"stage {stage}: build() must attach part_id")
         if done:
             df = df.where(F.col("part_id").isin(missing))
-        written = store.write_partitions(df, stage)
+        # replace exactly the recomputed partitions: one the recomputation
+        # left without rows is dropped, not left holding its old rows
+        written = store.write_partitions(df, stage, missing)
         wall = int((time.time() - t0) * 1000)
         ckpt.append(
             [
@@ -94,11 +100,11 @@ def run_stage(
                     "stage": stage,
                     "part_id": int(p),
                     "input_fp": input_fp,
-                    "row_count": int(n),
+                    "row_count": int(written.get(p, 0)),
                     "wall_ms": wall,
-                    "status": "complete",
+                    "status": "complete" if p in written else "empty",
                 }
-                for p, n in written.items()
+                for p in missing
             ]
         )
     return store.read(spark, stage)

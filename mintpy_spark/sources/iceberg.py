@@ -22,8 +22,8 @@ Contract parity (asserted by tests/test_iceberg_seam.py, which runs the
 full read/write/time-travel path whenever a jar IS present and skips
 otherwise):
 
-    write_partitions  <- df.writeTo(t).overwritePartitions()   (dynamic,
-                         one snapshot commit, as tables.py's manifest)
+    write_partitions  <- df.writeTo(t).overwrite(col IN parts)   (one
+                         snapshot commit, as tables.py's manifest)
     partitions        <- SELECT partition.{col} FROM t.partitions
     read              <- spark.table(t)
     rows              <- SELECT sum(record_count) FROM t.files
@@ -120,11 +120,14 @@ class IcebergTableStore:
         return sorted(int(r["p"]) for r in rows if r["p"] is not None)
 
     def write_partitions(
-        self, df: DataFrame, table: str, col: str = "part_id"
+        self, df: DataFrame, table: str, parts, col: str = "part_id"
     ) -> dict[int, int]:
-        """Dynamic partition overwrite: partitions present in ``df`` are
-        replaced atomically in ONE snapshot commit; others untouched —
-        tables.py's manifest commit semantics. Returns {partition id: rows
+        """Overwrite the partitions ``parts`` with ``df``'s rows in ONE
+        snapshot commit; other partitions untouched — tables.py's manifest
+        commit semantics. It is an overwrite by filter, ``col IN parts``:
+        the commit deletes every row of those partitions and adds
+        ``df``'s, so a listed partition ``df`` holds no row of is dropped
+        (a dynamic overwrite would leave it). Returns {partition id: rows
         written}, read from the record counts of the data files that
         commit added (tables.py reads the same counts from its staged
         files' footers), so ``df`` is not recomputed."""
@@ -132,7 +135,7 @@ class IcebergTableStore:
         if not self.exists(table):
             df.writeTo(q).partitionedBy(F.col(col)).create()
         else:
-            df.writeTo(q).overwritePartitions()
+            df.writeTo(q).overwrite(F.col(col).isin([int(p) for p in parts]))
         rows = self.spark.sql(
             f"SELECT data_file.partition.{col} AS p, "
             "sum(data_file.record_count) AS n "

@@ -169,15 +169,17 @@ class TableStore:
         return sum(f["rows"] for f in e["files"]) if e else 0
 
     def write_partitions(
-        self, df: DataFrame, table: str, col: str = "part_id"
+        self, df: DataFrame, table: str, parts, col: str = "part_id"
     ) -> dict[int, int]:
-        """Overwrite the partitions ``df`` holds (``df`` must contain
-        ``col``) in one commit; other partitions are carried over. Returns
-        {partition id: rows written}, from the staged files' footers, so
-        counting what was written costs no Spark job."""
+        """Overwrite the partitions ``parts`` with ``df``'s rows (``df``
+        must contain ``col`` and hold no other partition) in one commit;
+        other partitions are carried over, and a listed partition ``df``
+        holds no row of is dropped. Returns {partition id: rows written},
+        from the staged files' footers, so counting what was written
+        costs no Spark job."""
         staged = self.stage(df, table, col)
         written = part_rows(staged)
-        self.commit({table: self.replaced(table, staged, written)})
+        self.commit({table: self.replaced(table, staged, parts)})
         self.expire()
         return written
 

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from mintpy_spark.operators.bitmap import presence_merge, presence_tier
 from mintpy_spark.operators.sketch import hll_merge, hll_tier
-from mintpy_spark.streaming.tier_maintenance import StoreFold, merged
+from mintpy_spark.streaming.tier_maintenance import StoreFold
 
 
 class PresenceHllMaintainer(StoreFold):
@@ -65,7 +65,10 @@ class PresenceHllMaintainer(StoreFold):
             ),
             self.HLL: hll_tier(ev, self.user_col, "1d", ts=self.ts),
         }
-        return merged(deltas, stored, self._merge)
+        if stored is None:
+            return deltas
+        return {t: self._merge(t, stored[t].unionByName(d))
+                for t, d in deltas.items()}
 
     def _merge(self, name: str, both: DataFrame) -> DataFrame:
         if name == self.PRESENCE:

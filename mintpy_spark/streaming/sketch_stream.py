@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mintpy_spark.operators.sketch import hdr_merge, hdr_tier
-from mintpy_spark.streaming.tier_maintenance import StoreFold, merged
+from mintpy_spark.streaming.tier_maintenance import StoreFold
 
 
 class HdrSketchMaintainer(StoreFold):
@@ -60,10 +60,12 @@ class HdrSketchMaintainer(StoreFold):
             F.date_trunc("day", F.col(self.ts)).alias("day"),
             F.col(self.value_col).cast("long").alias("_v"),
         )
-        return merged(
-            {self.TIER_NAME: hdr_tier(obs, "_v", key_cols=("day",))}, stored,
-            lambda _t, both: hdr_merge(both, key_cols=("day",)),
-        )
+        new = hdr_tier(obs, "_v", key_cols=("day",))
+        if stored is not None:
+            new = hdr_merge(
+                stored[self.TIER_NAME].unionByName(new), key_cols=("day",)
+            )
+        return {self.TIER_NAME: new}
 
     def read_sketch(self, spark: SparkSession) -> DataFrame:
         return self.read_tier(spark, self.TIER_NAME)

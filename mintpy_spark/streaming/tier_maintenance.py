@@ -50,7 +50,6 @@ manager. The coarser tiers are never larger than the finest one.
 from __future__ import annotations
 
 import time
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -60,19 +59,6 @@ from mintpy_spark.plans.checkpoint import CheckpointTable
 from mintpy_spark.sources.tables import TableStore
 
 TIERS = ("1h", "1d", "30d")
-
-
-def merged(
-    deltas: dict[str, DataFrame],
-    stored: dict[str, DataFrame] | None,
-    merge: Callable[[str, DataFrame], DataFrame],
-) -> dict[str, DataFrame]:
-    """Each table's new version for a mergeable-sketch fold: its delta,
-    merged (``merge(table, stored ∪ delta)``) into the stored version when
-    there is one, materialized."""
-    if stored is not None:
-        deltas = {t: merge(t, stored[t].unionByName(d)) for t, d in deltas.items()}
-    return {t: d.localCheckpoint(eager=True) for t, d in deltas.items()}
 
 
 def written_rows(entry: dict) -> int:

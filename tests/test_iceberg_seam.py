@@ -90,14 +90,14 @@ def test_iceberg_roundtrip(iceberg_spark):
     df1 = spark.range(6).select(
         (F.col("id") % 3).alias("part_id"), F.col("id").alias("v")
     )
-    written = store.write_partitions(df1, "seam_check")
+    written = store.write_partitions(df1, "seam_check", [0, 1, 2])
     assert written == {0: 2, 1: 2, 2: 2}
     assert store.partitions("seam_check") == [0, 1, 2]
     v1 = store.latest("seam_check")
 
     # overwrite ONLY part 1; parts 0/2 must survive
     df2 = spark.createDataFrame([(1, 100)], "part_id int, v long")
-    store.write_partitions(df2, "seam_check")
+    store.write_partitions(df2, "seam_check", [1])
     cur = {r["v"] for r in store.read(spark, "seam_check").collect()}
     assert 100 in cur and 0 in cur and 2 in cur and 1 not in cur
 

@@ -108,6 +108,53 @@ def test_resume_after_partial_failure(spark, pages, tmp_path):
     assert [f for f in store.entry("tier_1h")["files"] if f["part_id"] in (0, 2)] == kept
 
 
+def _lone_url(obs):
+    """A url that no other url shares a bucket with."""
+    alone = obs.groupBy("part_id").agg(
+        F.countDistinct("url").alias("n"), F.first("url").alias("url")
+    ).where("n = 1").orderBy("part_id").first()
+    assert alone is not None
+    return alone["url"]
+
+
+def test_rerun_drops_a_removed_url_from_every_stage(spark, tmp_path):
+    """A rerun under a new config over input without one url replaces
+    every partition it recomputes: the url is gone from every stage even
+    where its bucket held no other url (a partition the recomputation
+    leaves empty is dropped)."""
+    from mintpy_spark.datagen import gen_pages
+
+    pages = gen_pages(spark, num_urls=6).cache()
+    root = str(tmp_path / "pipe_removed")
+    out1 = run_pipeline(spark, pages, root, buckets=4, config_fp="v1")
+    gone = _lone_url(out1["obs"])
+    kept = pages.where(F.col("url") != gone)
+    out2 = run_pipeline(spark, kept, root, buckets=4, config_fp="v2")
+    assert out2["obs"].count() == kept.count()
+    for stage in STAGES:
+        key = "key" if stage == "blocks" else "url"
+        assert out2[stage].where(F.col(key) == gone).count() == 0, stage
+        assert out2[stage].count() > 0, stage
+
+
+def test_rerun_of_a_finished_pipeline_commits_nothing(spark, tmp_path):
+    """Buckets without rows are recorded as computed: a second run of a
+    finished pipeline recomputes no stage and commits no store version."""
+    from mintpy_spark.datagen import gen_pages
+
+    pages = gen_pages(spark, num_urls=6).cache()
+    root = str(tmp_path / "pipe_empty_bucket")
+    run_pipeline(spark, pages, root, buckets=8)
+    store = TableStore(root)
+    assert len(store.partitions("obs")) < 8  # a bucket holds no url
+    assert_lineage_counts(spark, root)
+    version = store.latest()
+    n_entries = CheckpointTable(f"{root}/_checkpoint").load().num_rows
+    run_pipeline(spark, pages, root, buckets=8)
+    assert store.latest() == version
+    assert CheckpointTable(f"{root}/_checkpoint").load().num_rows == n_entries
+
+
 def test_null_url_is_a_named_error(spark, pages, tmp_path):
     """NULL url policy (plans/pipeline.py docstring): the blocks stage
     refuses a NULL key with the seam's named ValueError, not a JVM

@@ -208,6 +208,8 @@ def test_two_restarts_equal_batch(spark, paths, case):
     # event to the bucket, extends a session without counting, holds a
     # z-score frame slot
     rows1[3] = (1, rows1[3][1], None)
+    # a NULL ts: skipped by the fold and by the batch operator
+    rows1.append((2, None, 99.0))
     _run(spark, case, paths, rows1)
     # continuation after a RESTART: state must resume, not re-init. Key 1
     # carries 15 values, so Holt-Winters resumes mid-season (15 % 7 == 1).

@@ -80,16 +80,15 @@ def test_schema_evolution_on_append(spark, store):
 
 
 def test_partition_overwrite_and_manifest_read(spark, store):
-    """A partition overwrite replaces only the partitions it writes, in one
+    """A partition overwrite replaces only the partitions it lists, in one
     commit; the read is planned from the manifest with the partition
     column typed as Spark would infer it, and runs no Spark job."""
     df = spark.createDataFrame(
         [(1, "a", 0), (2, "b", 1), (3, "c", 2)], "k long, v string, part_id long"
     )
-    assert store.write_partitions(df, "t") == {0: 1, 1: 1, 2: 1}
-    assert store.write_partitions(
-        spark.createDataFrame([(4, "d", 1)], "k long, v string, part_id long"), "t"
-    ) == {1: 1}
+    assert store.write_partitions(df, "t", [0, 1, 2]) == {0: 1, 1: 1, 2: 1}
+    d = spark.createDataFrame([(4, "d", 1)], "k long, v string, part_id long")
+    assert store.write_partitions(d, "t", [1]) == {1: 1}
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     j0 = dag.nextJobId()
     got = store.read(spark, "t")

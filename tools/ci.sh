@@ -4,7 +4,9 @@
 # mintpy_spark/ or jobs/; per-key streaming folds through streaming/seqfold.py),
 # no table-store .commit( or .expire( under mintpy_spark/ or jobs/ outside the
 # store (sources/tables.py), the shared fold step (streaming/tier_maintenance.py)
-# and forget (operators/forget.py),
+# and forget (operators/forget.py), no recursion .fold( call under
+# mintpy_spark/ or jobs/ outside the one runner (operators/seqstate.py
+# fold_groups, which batch and stream both call),
 # the full pytest suite, the cascade, ingest and serve benchmarks' smoke
 # self-tests (their output checks: sum(cnt) at 30d ==
 # pages; text_sha == sha1(text), cnt/vsum per tier, n over blocks; stored
@@ -14,7 +16,10 @@
 # sequential folds' *_realtime_check queries, the tier fold's
 # tier_realtime_read_check, the dedup index's dedup_index_realtime_check and
 # the lineage table's checkpoint_lineage_audit; plus
-# tier_refresh_incremental_1d, the oracle of the one-aggregation tier fold).
+# tier_refresh_incremental_1d, the oracle of the one-aggregation tier fold,
+# and kalman_level_filter, holt_winters_weekly, welford_online_var and
+# token_bucket_admission, the oracles of the batch operators that run the
+# one fold runner).
 # Run before stamping closing numbers in BASELINE.md — "N/N green" claims
 # must cite this script's output.
 #
@@ -37,6 +42,13 @@ if grep -rnE --include='*.py' '\.(commit|expire)\(' mintpy_spark/ jobs/ \
   exit 1
 fi
 
+echo "== recursion .fold( calls only in the one runner =="
+if grep -rnE --include='*.py' '\.fold\(' mintpy_spark/ jobs/ \
+    | grep -vE '^mintpy_spark/operators/seqstate\.py:'; then
+  echo "recursion .fold( call found above; run it through operators/seqstate.py fold_groups" >&2
+  exit 1
+fi
+
 echo "== pytest =="
 python -m pytest tests/ -q
 
@@ -54,7 +66,8 @@ if [[ "${1:-}" == "--fast" ]]; then
   python tools/check_oracle.py kalman_realtime_check sessionize_realtime_check \
     holt_winters_realtime_check welford_realtime_check token_bucket_realtime_check \
     tier_realtime_read_check dedup_index_realtime_check checkpoint_lineage_audit \
-    tier_refresh_incremental_1d
+    tier_refresh_incremental_1d kalman_level_filter holt_winters_weekly \
+    welford_online_var token_bucket_admission
 else
   echo "== full-registry oracle sweep (sf0.01) =="
   python tools/check_oracle.py
