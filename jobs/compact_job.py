@@ -12,9 +12,10 @@ with the retention horizon you want, e.g. daily with
 The drop is file-granular, like ``drop_chunks``: only raw files whose
 rows all lie below the cutoff are deleted, and nothing is rewritten, so
 the next maintain_job sees no compacted file as new input.  A file that
-straddles the cutoff stays as it is.  There is no swap of the raw
-directory, so a killed run leaves nothing to recover: at worst the ledger
-misses the deleted files' rows, and the next gate refuses.
+straddles the cutoff stays as it is.  The ledger rows, each naming its
+raw file, are appended before the files are deleted, so a killed run
+leaves at worst files the ledger already counts; the next run deletes
+them before its gate, which finishes the killed run.
 
 Deployment (north_rule):
 

@@ -30,9 +30,11 @@ commits through its ``stage``/``replaced``/``commit`` steps, which
 ``IcebergTableStore`` does not expose (on Iceberg, erasure is a
 ``DELETE FROM`` followed by ``expire_snapshots``).
 
-Every touched partition gets a lineage row (stage, part_id, op=forget,
-row_count AFTER erasure) in the same checkpoint table the pipeline
-uses, so an auditor can reconstruct what was erased when.
+Every erasure is recorded in the pipeline's lineage under the store's
+root (``CheckpointTable.for_pipeline``), one row per touched partition:
+``forgotten`` with its rows left, or ``empty`` if dropped; the erased keys
+are not recorded. The rows go in before the commit, as a fold's do, so a
+rerun of a run killed before it records the same counts again.
 """
 
 from __future__ import annotations
@@ -74,8 +76,6 @@ def forget_keys(
     keys: Sequence[str],
     tables: dict[str, str] | None = None,
     buckets: int = 32,
-    ckpt: CheckpointTable | None = None,
-    run_id: str = "forget",
 ) -> dict[str, int]:
     """Erase ``keys`` from every table in ``tables`` (table -> key col;
     defaults to the rollup-pipeline layout). Returns rows removed per
@@ -84,7 +84,7 @@ def forget_keys(
     parts = affected_parts(spark, keys, buckets)
     removed: dict[str, int] = {}
     commit: dict[str, dict] = {}
-    lineage = []
+    lineage: dict[str, dict[int, int | None]] = {}
     for table, key_col in tables.items():
         if not store.exists(table):
             continue
@@ -102,22 +102,11 @@ def forget_keys(
         commit[table] = store.replaced(table, staged, present)
         removed[table] = erased
         written = part_rows(staged)
-        lineage += [
-            {
-                "run_id": run_id,
-                "stage": table,
-                "part_id": int(p),
-                "input_fp": "forget",
-                "row_count": int(written.get(p, 0)),
-                "wall_ms": 0,
-                "status": "forgotten",
-            }
-            for p in present
-        ]
+        lineage[table] = {p: written.get(p) for p in present}
     if commit:
+        CheckpointTable.for_pipeline(store.root).record(
+            "forget", "forget", lineage, status="forgotten")
         store.commit(commit)
-        if ckpt is not None:
-            ckpt.append(lineage)
     # keep no version that still lists the erased rows, so their files go
     # now; also run when nothing was left to erase, which finishes a run
     # killed between its commit and this expiry

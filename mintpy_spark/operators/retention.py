@@ -127,13 +127,12 @@ def compact_raw(
       ``ledger + raw > tier`` and the compaction refuses — fold first,
       compact after.
 
-    Crash safety: the files are deleted, then the ledger is appended. A
-    crash in between leaves the ledger short, so the next gate reads
-    ``tier > ledger + raw`` and refuses — the safe direction (no silent
-    loss; the operator appends the missing ledger rows). There is no swap
-    of the raw directory, so nothing is left to recover; the tier store
-    is never touched. The compaction is recorded in the maintainer's
-    lineage metrics table (north-rule checkpoint discipline).
+    Crash safety: the ledger rows, each naming its raw file, are
+    appended before the files are deleted, and each run first deletes
+    every raw file the ledger names (a name is never reused: Spark's
+    carry a uuid), which finishes a killed run before the gate. A ledger
+    without the file column names none. The tier store is never touched;
+    the run is recorded in the maintainer's lineage.
     """
     from mintpy_spark.functions.timefn import TIER_SECONDS, bucket_start, iso_to_epoch_sec
 
@@ -148,7 +147,23 @@ def compact_raw(
     cut = F.lit(cutoff).cast("timestamp")
 
     key = maintainer.key
-    raw = spark.read.parquet(raw_path).withColumn("_file", F.input_file_name())
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = path(raw_path).getFileSystem(spark._jsc.hadoopConfiguration())
+    ledger_path = raw_path.rstrip("/") + ".__compaction_ledger"
+    raw = spark.read.parquet(raw_path)
+    # no ledger before the first compaction; an unreadable one raises
+    ledger = None
+    if fs.exists(path(ledger_path)):
+        led = spark.read.option("mergeSchema", "true").parquet(ledger_path)
+        if "file" in led.columns:
+            # finish a killed run: the ledger already counts these files
+            named = {r["file"] for r in led.select("file").distinct().collect()}
+            finished = named & set(raw.inputFiles())
+            if finished:
+                _delete_files(spark, fs, sorted(finished))
+                raw = spark.read.parquet(raw_path)
+        ledger = led.groupBy("k", "b").agg(F.sum("dropped").alias("led_cnt"))
+    raw = raw.withColumn("_file", F.input_file_name())
     # per raw file: its rows, and whether every row is droppable
     droppable = F.coalesce(
         F.col(ts).isNotNull() & (F.col(ts) < cut) & F.col(value_col).isNotNull(),
@@ -159,29 +174,17 @@ def compact_raw(
     ).collect()
     drop_files = [r["_file"] for r in files if r["drop"]]
 
-    def bucket_counts(rows):
+    def bucket_counts(rows, *by):
         return (
             rows.where(F.col(value_col).isNotNull())
             .groupBy(
+                *by,
                 F.col(key).alias("k"),
                 bucket_start(F.col(ts), tier).alias("b"),
             )
             .agg(F.count(F.lit(1)).alias("raw_cnt"))
         )
 
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(raw_path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    ledger_path = raw_path.rstrip("/") + ".__compaction_ledger"
-    # no ledger before the first compaction; an unreadable one raises
-    ledger = None
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(ledger_path)):
-        ledger = (
-            spark.read.parquet(ledger_path)
-            .groupBy("k", "b")
-            .agg(F.sum("dropped").alias("led_cnt"))
-        )
     tier_df = maintainer.read_tier(spark, tier)  # raises if none committed
     tier_below = tier_df.where(F.col("bucket_start") < cut).select(
         F.col(key).alias("k"),
@@ -209,25 +212,22 @@ def compact_raw(
     dropped = sum(r["n"] for r in files if r["drop"])
     kept = sum(r["n"] for r in files if not r["drop"])
     if drop_files:
-        # pin the ledger delta BEFORE the deletes: it is computed from the
-        # files about to disappear
-        ledger_delta = bucket_counts(
-            raw.where(F.col("_file").isin(drop_files))
-        ).select("k", "b", F.col("raw_cnt").alias("dropped")).localCheckpoint(eager=True)
-        for f in drop_files:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)), False)
-        ledger_delta.write.mode("append").parquet(ledger_path)
-    maintainer.metrics.append(
-        [
-            {
-                "run_id": f"compact_{cutoff}",
-                "stage": f"compact_raw_{tier}",
-                "part_id": 0,
-                "input_fp": raw_path,
-                "row_count": int(kept),
-                "wall_ms": 0,
-                "status": "complete",
-            }
-        ]
+        # the ledger first: a kill before the deletes leaves files it
+        # names, which the next run deletes
+        bucket_counts(
+            raw.where(F.col("_file").isin(drop_files)), F.col("_file").alias("file")
+        ).select("k", "b", F.col("raw_cnt").alias("dropped"), "file").write.mode(
+            "append"
+        ).parquet(ledger_path)
+        _delete_files(spark, fs, drop_files)
+    maintainer.metrics.record(
+        f"compact_{cutoff}", raw_path, {f"compact_raw_{tier}": {0: kept}}
     )
     return {"dropped": int(dropped), "kept": int(kept), "cutoff": cutoff}
+
+
+def _delete_files(spark, fs, uris: list[str]) -> None:
+    """Delete the raw files at ``uris`` (as ``input_file_name`` names them)."""
+    jvm = spark._jvm
+    for f in uris:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)), False)

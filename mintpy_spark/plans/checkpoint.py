@@ -1,26 +1,39 @@
-"""Checkpoint / lineage table.
+"""Checkpoint / lineage table: the one module that knows what a lineage row is.
 
-The engine's recast of the reference's ``run_or_skip`` incrementality
-(utils/utils1.py:691-746: compare output mtime + recorded config attrs;
-ifgram_inversion.py:38-87: partial-write detection by file size): every
-stage records, per partition, an append-only row
+The recast of the reference's ``run_or_skip`` (utils/utils1.py:691-746;
+ifgram_inversion.py:38-87): every stage appends, per partition, a row
+(run_id, stage, part_id, input_fp, row_count, wall_ms, status, ts_unix)
+through the one writer, ``record``, which ``run_stage``,
+``StoreFold.apply_delta``, ``forget_keys``, ``compact_raw`` and
+``checkpoint_lineage_audit`` call. Statuses: ``complete`` (the part holds
+``row_count`` rows), ``empty`` (computed or erased, it holds none; the
+table keeps no such partition), ``forgotten`` (an erasure left
+``row_count`` rows).
 
-    (run_id, stage, part_id, input_fp, row_count, wall_ms, status, ts_utc)
+``complete_parts(stage, input_fp)`` (resume) skips a part with ANY
+``complete``/``empty`` row under that fingerprint, so a new config or
+input invalidates every entry; it is not newest-wins, so an erased part
+stays done and a resume never brings erased keys back. ``stage_metrics``:
+per (stage, part_id) the row appended last decides, whatever its
+fingerprint, and is reported unless ``empty``, so the counts are the
+store's; rows of another status (a half-written ``running``) are not
+read. Append order is the file name ``ckpt-<seq>-<uuid>.parquet``, ``seq``
+one above the directory's highest (concurrent appends may share one),
+never ``os.listdir`` order.
 
-A (stage, part_id, input_fp) with status='complete' is skipped on resume,
-as is one with status='empty' (a partition its stage computed and found
-without rows, row_count 0; ``stage_metrics`` leaves it out, as the stored
-table holds no such partition); changing the input fingerprint (config or
-upstream data) invalidates the entry automatically, exactly like the
-reference's config-attr comparison.
+Lineage lives under the store's root: ``<root>/_checkpoint`` for a
+pipeline store (``for_pipeline``), ``<root>/_maintenance_metrics`` for a
+fold store (``for_fold``; ``compact_raw`` records in its maintainer's).
+Fold rows are keyed by batch (``part_id`` the batch id, ``run_id``
+``batch<id>``, ``input_fp`` ``delta``); a fold's count of 0
+(``<name>_late``) is a real count, recorded ``complete``.
 
-Storage is a directory of small parquet files (one per commit, written
-atomically via temp+rename) — driver-side pyarrow, no Spark job needed for
-metadata. At cluster scale this becomes an Iceberg table; the API is the
-seam. It stays outside the manifest-committed table store
-(sources/tables.py): each append is its own file rename, so a
-writer killed between a store commit and its lineage append leaves that
-commit unrecorded, and a resumed pipeline recomputes it.
+Storage is a directory of small parquet files, each written atomically
+via temp+rename by driver-side pyarrow (no Spark job); at cluster scale an
+Iceberg table replaces it behind this API. It stays outside the
+manifest-committed table store (sources/tables.py), so a writer killed
+between a store commit and its lineage append leaves that commit
+unrecorded, and a resumed pipeline recomputes it.
 """
 
 from __future__ import annotations
@@ -28,6 +41,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from collections.abc import Mapping
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -44,6 +58,14 @@ SCHEMA = pa.schema(
         ("ts_unix", pa.float64()),
     ]
 )
+
+STATUSES = ("complete", "empty", "forgotten")
+
+
+def _seq(name: str) -> int:
+    """The append number of ``ckpt-<seq>-<uuid>.parquet``; -1 for an older name."""
+    parts = name.split("-")
+    return int(parts[1]) if len(parts) == 3 else -1
 
 
 class CheckpointTable:
@@ -62,6 +84,28 @@ class CheckpointTable:
         self.root = root
         os.makedirs(root, exist_ok=True)
 
+    @classmethod
+    def for_pipeline(cls, root: str) -> CheckpointTable:
+        return cls(f"{root}/_checkpoint")
+
+    @classmethod
+    def for_fold(cls, root: str) -> CheckpointTable:
+        return cls(f"{root}/_maintenance_metrics")
+
+    def record(self, run_id: str, input_fp: str, counts: Mapping[str, Mapping[int, int | None]],
+               wall_ms: int = 0, status: str = "complete") -> None:
+        """One row per (stage, part_id) of ``counts`` (stage -> part_id ->
+        rows), as one append: ``empty`` for ``None`` rows (the part holds
+        none), else ``status`` (complete/forgotten) with the count, 0 too."""
+        if status not in ("complete", "forgotten"):
+            raise ValueError(f"record status must be complete or forgotten, got {status!r}")
+        self.append([
+            {"run_id": run_id, "stage": stage, "part_id": int(p),
+             "input_fp": input_fp, "row_count": int(n or 0),
+             "wall_ms": int(wall_ms), "status": "empty" if n is None else status}
+            for stage, parts in counts.items() for p, n in parts.items()
+        ])
+
     def append(self, rows: list[dict]) -> None:
         if not rows:
             return
@@ -71,14 +115,17 @@ class CheckpointTable:
         table = pa.Table.from_pylist(rows, schema=SCHEMA)
         tmp = os.path.join(self.root, f".tmp-{uuid.uuid4().hex}.parquet")
         pq.write_table(table, tmp)
-        os.rename(tmp, os.path.join(self.root, f"ckpt-{uuid.uuid4().hex}.parquet"))
+        seq = 1 + max((_seq(os.path.basename(f)) for f in self._files()), default=0)
+        os.rename(tmp, os.path.join(self.root, f"ckpt-{seq:012d}-{uuid.uuid4().hex}.parquet"))
 
     def _files(self) -> list[str]:
-        return [
-            os.path.join(self.root, f)
-            for f in os.listdir(self.root)
+        """The committed files, oldest append first."""
+        names = [
+            f for f in os.listdir(self.root)
             if f.endswith(".parquet") and not f.startswith(".")
         ]
+        return [os.path.join(self.root, f)
+                for f in sorted(names, key=lambda f: (_seq(f), f))]
 
     def load(self) -> pa.Table:
         files = self._files()
@@ -87,16 +134,17 @@ class CheckpointTable:
         return pa.concat_tables([pq.read_table(f) for f in files])
 
     def complete_parts(self, stage: str, input_fp: str) -> set[int]:
-        t = self.load()
-        if t.num_rows == 0:
-            return set()
-        df = t.to_pandas()
+        df = self.load().to_pandas()
         m = (df["stage"] == stage) & (df["input_fp"] == input_fp) & (
             df["status"].isin(("complete", "empty"))
         )
         return set(df.loc[m, "part_id"].astype(int).tolist())
 
     def stage_metrics(self, stage: str) -> dict[int, int]:
+        """part_id -> rows, from each part's last appended row (module
+        docstring); a part whose last row is ``empty`` is left out."""
         df = self.load().to_pandas()
-        df = df[(df["stage"] == stage) & (df["status"] == "complete")]
+        df = df[(df["stage"] == stage) & df["status"].isin(STATUSES)]
+        df = df.drop_duplicates("part_id", keep="last")
+        df = df[df["status"] != "empty"]
         return dict(zip(df["part_id"].astype(int), df["row_count"].astype(int)))

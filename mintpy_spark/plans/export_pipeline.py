@@ -137,7 +137,7 @@ def run_export(
     from mintpy_spark.sources.tables import with_part_id
 
     store = open_table_store(spark, root)
-    ckpt = CheckpointTable(f"{root}/_checkpoint")
+    ckpt = CheckpointTable.for_pipeline(root)
     out: dict[str, DataFrame] = {}
     fp = config_fp
 

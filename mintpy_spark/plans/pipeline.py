@@ -93,20 +93,7 @@ def run_stage(
         # left without rows is dropped, not left holding its old rows
         written = store.write_partitions(df, stage, missing)
         wall = int((time.time() - t0) * 1000)
-        ckpt.append(
-            [
-                {
-                    "run_id": run_id,
-                    "stage": stage,
-                    "part_id": int(p),
-                    "input_fp": input_fp,
-                    "row_count": int(written.get(p, 0)),
-                    "wall_ms": wall,
-                    "status": "complete" if p in written else "empty",
-                }
-                for p in missing
-            ]
-        )
+        ckpt.record(run_id, input_fp, {stage: {p: written.get(p) for p in missing}}, wall)
     return store.read(spark, stage)
 
 
@@ -126,7 +113,7 @@ def run_pipeline(
     from mintpy_spark.operators.timefunc import linear_velocity
 
     store = open_table_store(spark, root)
-    ckpt = CheckpointTable(f"{root}/_checkpoint")
+    ckpt = CheckpointTable.for_pipeline(root)
     out: dict[str, DataFrame] = {}
 
     derive = pages_to_obs_extracted if "html" in pages.columns else pages_to_obs

@@ -387,7 +387,6 @@ def _ensure_ext() -> None:
     import mintpy_spark.queries_dedup  # noqa: F401  (dedup/similarity queries)
     import mintpy_spark.queries_ext  # noqa: F401  (registers extended queries)
     import mintpy_spark.queries_ops  # noqa: F401  (diff/add/mask/decimate queries)
-    import mintpy_spark.queries_r5a  # noqa: F401  (Kalman q/r estimation + EM)
     import mintpy_spark.queries_tpch  # noqa: F401  (TPC-H-shaped relational queries)
     import mintpy_spark.queries_sketch2  # noqa: F401  (Sketch-tier queries)
     import mintpy_spark.queries_text  # noqa: F401  (Text/LM analysis queries)

@@ -795,17 +795,37 @@ def codec_gorilla_size_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =========================================================================
-# from queries_r4e.py
+# from queries_r4e.py and queries_r5a.py
 # =========================================================================
 
-"""Round-4 batch e: causal Kalman local-level filtering under the driver
-oracle — DuckDB replays the identical scalar recursion with a recursive
-CTE, so the engine's applyInPandas forward pass is certified bit-for-bit
-(floor-quantized at the boundary per the engine discipline).
+"""Round-4 batch e and round-5 batch a: the Kalman local-level family
+under the driver oracle. Causal filtering: DuckDB replays the identical
+scalar recursion with a recursive CTE, so the engine's forward pass is
+certified bit-for-bit (floor-quantized at the boundary per the engine
+discipline). Data-driven noise estimation — the moments (q, r)
+estimator, a full EM iteration (forward filter + RTS smoother + M-step)
+and the adaptive filter that composes the two. Reference analog: MintPy
+estimates its noise level FROM the data (timeseries_rms.py,
+decorrelation weighting in ifgram_inversion.py) rather than assuming it.
+
+Exactness discipline of the three estimation oracles: per-row terms are
+evaluated with scalar IEEE doubles in the same operation order on both
+engines, floor-quantized to int64 PER ROW, then summed as integers —
+integer sums are associative, so aggregates are independent of
+partitioning and summation order (no float-sum-order hazard).
 """
 
 
 _Q, _R = 0.04, 1.0
+
+
+def _levels_e4(out: DataFrame) -> DataFrame:
+    """Filtered levels, floor-quantized at 1e-4 as the oracles are."""
+    return out.select(
+        "user_id",
+        "rn",
+        F.floor(F.col("level") * F.lit(10000)).cast("long").alias("level_e4"),
+    )
 
 
 @_q(
@@ -852,12 +872,196 @@ def kalman_level_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mintpy_spark.operators.kalman import kalman_level
 
     ev = load(spark, sf_dir, "events")
-    out = kalman_level(ev, "value", key="user_id", ts="ts", q=_Q, r=_R)
-    return out.select(
-        "user_id",
-        "rn",
-        F.floor(F.col("level") * F.lit(10000)).cast("long").alias("level_e4"),
+    return _levels_e4(kalman_level(ev, "value", key="user_id", ts="ts", q=_Q, r=_R))
+
+
+# shared SQL fragments (DuckDB): differenced series + quantized moments
+_DIFF_SQL = """
+    s AS (
+      SELECT user_id, ts, CAST(value AS DOUBLE) AS y
+      FROM events WHERE value IS NOT NULL
+    ), dd AS (
+      SELECT user_id, ts, y,
+             y - lag(y) OVER (PARTITION BY user_id ORDER BY ts, y) AS d
+      FROM s
+    ), d2 AS (
+      SELECT user_id, d,
+             lead(d) OVER (PARTITION BY user_id ORDER BY ts, y) AS dn
+      FROM dd
+    ), agg AS (
+      SELECT user_id, count(d) AS n_d,
+             SUM(CAST(FLOOR(d * d * 1000000.0) AS BIGINT)) AS s0,
+             SUM(CASE WHEN dn IS NOT NULL
+                 THEN CAST(FLOOR(d * dn * 1000000.0) AS BIGINT) END) AS s1,
+             SUM(CASE WHEN dn IS NOT NULL THEN 1 END) AS n1
+      FROM d2 WHERE d IS NOT NULL
+      GROUP BY user_id HAVING count(d) >= 2
+    ), cm AS (
+      SELECT user_id, n_d,
+             CAST(s0 AS DOUBLE) / (CAST(n_d AS DOUBLE) * 1000000.0) AS c0,
+             CAST(s1 AS DOUBLE) / (CAST(n1 AS DOUBLE) * 1000000.0) AS c1
+      FROM agg
     )
+"""
+
+
+@_q(
+    "kalman_qr_moments",
+    f"""
+    WITH {_DIFF_SQL}
+    SELECT user_id, n_d,
+           CAST(FLOOR(c0 * 10000.0) AS BIGINT) AS c0_e4,
+           CAST(FLOOR(c1 * 10000.0) AS BIGINT) AS c1_e4,
+           CAST(FLOOR((c0 + 2.0 * c1) * 10000.0) AS BIGINT) AS q_hat_e4,
+           CAST(FLOOR((-c1) * 10000.0) AS BIGINT) AS r_hat_e4
+    FROM cm
+    """,
+)
+def kalman_qr_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Closed-form method-of-moments (q, r) for the local-level model:
+    with d_t = y_t - y_{{t-1}}, Var(d) = q + 2r and
+    Cov(d_t, d_{{t+1}}) = -r, so r_hat = -c1, q_hat = c0 + 2 c1. The
+    quantized-integer-sum discipline makes the per-key moments exact
+    across engines. Reference analog: timeseries_rms.py noise-level
+    estimation (fit the noise from the series, don't assume it).
+
+    Scale: one window shuffle + one hash agg, zero Python, codegen end
+    to end; at 10^9 keys the partial aggregation is map-side combined.
+    """
+    from mintpy_spark.operators.kalman import kalman_qr_moments as op
+
+    return op(load(spark, sf_dir, "events"), "value", key="user_id", ts="ts")
+
+
+@_q(
+    "kalman_em_step",
+    f"""
+    WITH RECURSIVE s AS (
+      SELECT user_id,
+             row_number() OVER (PARTITION BY user_id ORDER BY ts, value)
+               AS rn,
+             CAST(value AS DOUBLE) AS y
+      FROM events WHERE value IS NOT NULL
+    ), fwd AS (
+      SELECT user_id, rn, y, y AS m, CAST({_R} AS DOUBLE) AS p
+      FROM s WHERE rn = 1
+      UNION ALL
+      SELECT s.user_id, s.rn, s.y,
+             fwd.m + ((fwd.p + {_Q}) / (fwd.p + {_Q} + {_R}))
+                   * (s.y - fwd.m),
+             (1 - (fwd.p + {_Q}) / (fwd.p + {_Q} + {_R}))
+               * (fwd.p + {_Q})
+      FROM fwd JOIN s ON s.user_id = fwd.user_id AND s.rn = fwd.rn + 1
+    ), mx AS (
+      SELECT user_id, max(rn) AS tmax FROM s GROUP BY user_id
+      HAVING max(rn) >= 2
+    ), bwd AS (
+      SELECT f.user_id, f.rn, f.m AS ms, f.p AS vs
+      FROM fwd f JOIN mx ON f.user_id = mx.user_id AND f.rn = mx.tmax
+      UNION ALL
+      SELECT f.user_id, f.rn,
+             f.m + (f.p / (f.p + {_Q})) * (b.ms - f.m),
+             f.p + (f.p / (f.p + {_Q})) * (f.p / (f.p + {_Q}))
+                 * (b.vs - (f.p + {_Q}))
+      FROM bwd b JOIN fwd f
+        ON f.user_id = b.user_id AND f.rn = b.rn - 1
+    ), j AS (
+      SELECT f.user_id, f.rn, f.y, f.p, b.ms, b.vs,
+             lag(f.p) OVER (PARTITION BY f.user_id ORDER BY f.rn)
+               AS p_prev,
+             lag(b.ms) OVER (PARTITION BY f.user_id ORDER BY f.rn)
+               AS ms_prev,
+             lag(b.vs) OVER (PARTITION BY f.user_id ORDER BY f.rn)
+               AS vs_prev
+      FROM fwd f JOIN bwd b
+        ON f.user_id = b.user_id AND f.rn = b.rn
+    ), terms AS (
+      SELECT user_id,
+        CAST(FLOOR((((y - ms) * (y - ms)) + vs) * 1000000.0) AS BIGINT)
+          AS e6r,
+        CASE WHEN p_prev IS NULL THEN NULL ELSE
+          CAST(FLOOR(((((ms - ms_prev) * (ms - ms_prev)) + vs) + vs_prev
+              - 2.0 * ((p_prev / (p_prev + {_Q})) * vs)) * 1000000.0)
+            AS BIGINT) END AS e6q
+      FROM j
+    )
+    SELECT user_id, count(*) AS n,
+           CAST(SUM(e6r) AS BIGINT) AS sum_r_e6,
+           CAST(SUM(e6q) AS BIGINT) AS sum_q_e6,
+           CAST(FLOOR((CAST(SUM(e6r) AS DOUBLE)
+             / (CAST(count(*) AS DOUBLE) * 1000000.0)) * 10000.0)
+             AS BIGINT) AS r1_e4,
+           CAST(FLOOR((CAST(SUM(e6q) AS DOUBLE)
+             / (CAST(count(*) - 1 AS DOUBLE) * 1000000.0)) * 10000.0)
+             AS BIGINT) AS q1_e4
+    FROM terms GROUP BY user_id
+    """,
+)
+def kalman_em_step(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One EM iteration for per-key (q, r): forward Kalman filter at
+    (q0=0.04, r0=1.0), RTS smoother, Shumway–Stoffer M-step. The oracle
+    replays the forward AND backward recursions as recursive CTEs and
+    aggregates the same floor-quantized per-row terms, so the sums are
+    exact by construction.
+
+    Scale: one shuffle into the seqstate seam; smoother variance
+    sequences are data-independent given series length, so they are
+    cached per distinct length and shared across keys — only the O(n)
+    mean recursions touch data.
+    """
+    from mintpy_spark.operators.kalman import kalman_em_stats
+
+    return kalman_em_stats(
+        load(spark, sf_dir, "events"), "value", key="user_id", ts="ts",
+        q0=_Q, r0=_R,
+    )
+
+
+@_q(
+    "kalman_level_adaptive",
+    f"""
+    WITH RECURSIVE {_DIFF_SQL}, par AS (
+      SELECT user_id,
+        CASE WHEN (c0 + 2.0 * c1) > 0.000001
+             THEN (c0 + 2.0 * c1) ELSE 0.000001 END AS qk,
+        CASE WHEN (-c1) > 0.000001 THEN (-c1) ELSE 0.000001 END AS rk
+      FROM cm
+    ), sr AS (
+      SELECT user_id,
+             row_number() OVER (PARTITION BY user_id ORDER BY ts, y)
+               AS rn, y
+      FROM s
+    ), rec AS (
+      SELECT sr.user_id, sr.rn, sr.y, sr.y AS m, par.rk AS p,
+             par.qk AS qk, par.rk AS rk
+      FROM sr JOIN par USING (user_id) WHERE sr.rn = 1
+      UNION ALL
+      SELECT sr.user_id, sr.rn, sr.y,
+             rec.m + ((rec.p + rec.qk) / (rec.p + rec.qk + rec.rk))
+                   * (sr.y - rec.m),
+             (1 - (rec.p + rec.qk) / (rec.p + rec.qk + rec.rk))
+               * (rec.p + rec.qk),
+             rec.qk, rec.rk
+      FROM rec JOIN sr
+        ON sr.user_id = rec.user_id AND sr.rn = rec.rn + 1
+    )
+    SELECT user_id, rn,
+           CAST(FLOOR(m * 10000) AS BIGINT) AS level_e4
+    FROM rec
+    """,
+)
+def kalman_level_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kalman local-level filter whose (q, r) are estimated per key from
+    the key's own differenced-series moments (clamped below at 1e-6) —
+    the composition MintPy performs when timeseries_rms-derived noise
+    feeds inversion weights. Keys with < 3 observations are dropped.
+
+    Scale: codegen moments agg, co-partitioned param join, one-pass
+    seqstate seam — parameters ride along as two doubles per key.
+    """
+    from mintpy_spark.operators.kalman import kalman_level_adaptive as op
+
+    return _levels_e4(op(load(spark, sf_dir, "events"), "value", key="user_id", ts="ts"))
 
 
 # =========================================================================
@@ -1084,9 +1288,8 @@ per-partition output.
 )
 def checkpoint_lineage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run a 1d-cell rollup stage partitioned by hash-mod-8, record one
-    lineage row per partition (run_id, stage, part_id, input_fp,
-    row_count, status='complete') through CheckpointTable.append's
-    atomic temp+rename commit, then answer FROM THE CHECKPOINT TABLE via
+    lineage row per partition through CheckpointTable.record's atomic
+    temp+rename commit, then answer FROM THE CHECKPOINT TABLE via
     stage_metrics — the oracle independently recounts the per-partition
     1d cells, so a lineage row that under- or over-reports its
     partition flips the driver hash.
@@ -1116,20 +1319,9 @@ def checkpoint_lineage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted = cells.collect()  # bounded: one row per partition
     root = tempfile.mkdtemp(prefix="lineage_audit_")
     ckpt = CheckpointTable(root)
-    run_id = uuid.uuid4().hex
-    ckpt.append(
-        [
-            {
-                "run_id": run_id,
-                "stage": "rollup_1d",
-                "part_id": int(r["part_id"]),
-                "input_fp": f"events@{sf_dir}",
-                "row_count": int(r["row_count"]),
-                "wall_ms": 0,
-                "status": "complete",
-            }
-            for r in counted
-        ]
+    ckpt.record(
+        uuid.uuid4().hex, f"events@{sf_dir}",
+        {"rollup_1d": {r["part_id"]: r["row_count"] for r in counted}},
     )
     metrics = ckpt.stage_metrics("rollup_1d")
     shutil.rmtree(root, ignore_errors=True)  # metrics are already read

@@ -73,8 +73,8 @@ the files the crashed attempt staged are never listed and are expired.
 Readers of the output table see no row before its batch commits, and no
 row twice (tests/test_seqfold.py kills the fold at each step). The lineage
 rows go in before the commit, so a crash after it cannot lose them; a
-replayed uncommitted batch appends the same counts again, and readers take
-one row per ``part_id`` (``CheckpointTable.stage_metrics``). The move into
+replayed uncommitted batch appends the same counts again, and per stage
+and batch the row appended last decides (``CheckpointTable.stage_metrics``). The move into
 the output directory is the one step outside the store: plain-parquet
 readers (``filter_job``, the benchmark) read that directory, and it
 renames one file at a time, so a concurrent reader may see part of a

@@ -11,7 +11,7 @@ computes (``_compute`` or ``_stage``, and a post-commit ``_publish``):
 2. skip the batch when ``latest >= batch_id``;
 3. read the committed tables (``tiers``);
 4. stage the new tables as new immutable files (``_stage``);
-5. append the batch's lineage rows to ``_maintenance_metrics``;
+5. record the batch's lineage in ``_maintenance_metrics`` (``CheckpointTable.record``);
 6. commit every staged table with ONE manifest rename, as version
    ``batch_id`` (``_commit``);
 7. ``_publish``;
@@ -21,10 +21,11 @@ Crash safety — foreachBatch is only AT-LEAST-once, so the step must be
 idempotent and the store never half-written (sources/tables.py). A crash
 before the rename leaves the previous version authoritative and the
 staged files unreferenced: the replay recomputes version N from it,
-appends the same lineage counts again (readers take one row per
-``part_id``, ``CheckpointTable.stage_metrics``), and ``expire`` deletes
-the orphans. A crash after the rename leaves version N committed and its
-replay skipped; its lineage went in before the rename, so it is kept.
+appends the same lineage counts again (per stage and batch the row
+appended last decides, ``CheckpointTable.stage_metrics``), and ``expire``
+deletes the orphans. A crash after the rename leaves version N committed
+and its replay skipped; its lineage went in before the rename, so it is
+kept.
 Readers plan from one manifest: never a partial fold or a mix of two.
 Expiry keeps the previous version, the one a replay recomputes from.
 
@@ -80,9 +81,7 @@ class StoreFold:
         self.root = root
         self.tiers = tiers
         self.store = TableStore(root)
-        # per-batch lineage (batch_id, stage, rows, wall), the twin of the
-        # batch pipeline's checkpoint table (plans/checkpoint.py)
-        self.metrics = CheckpointTable(f"{root}/_maintenance_metrics")
+        self.metrics = CheckpointTable.for_fold(root)
 
     @classmethod
     def table(cls, tier: str) -> str:
@@ -157,12 +156,9 @@ class StoreFold:
         # lineage before the commit: a crash after the rename skips the
         # replay, and must not take the batch's counts with it
         wall_ms = int((time.time() - t0) * 1000)
-        self.metrics.append([
-            {"run_id": f"batch{batch_id}", "stage": stage, "part_id": int(batch_id),
-             "input_fp": "delta", "row_count": int(n), "wall_ms": wall_ms,
-             "status": "complete"}
-            for stage, n in counts.items()
-        ])
+        self.metrics.record(
+            f"batch{batch_id}", "delta",
+            {stage: {batch_id: n} for stage, n in counts.items()}, wall_ms)
         self._commit(spark, batch_id, tables)
         self._publish(spark, batch_id)
         self._gc(spark)

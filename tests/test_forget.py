@@ -10,7 +10,7 @@ import shutil
 import pyarrow.parquet as pq
 import pytest
 
-from mintpy_spark.operators.forget import affected_parts, forget_keys
+from mintpy_spark.operators.forget import PIPELINE_KEY_COLS, affected_parts, forget_keys
 from mintpy_spark.plans.checkpoint import CheckpointTable
 from mintpy_spark.plans.pipeline import run_pipeline
 from mintpy_spark.sources.tables import TableStore
@@ -39,8 +39,7 @@ def test_forget_erases_everywhere_and_only_there(spark, built):
 
     files_before = untouched_files()
     assert files_before
-    ckpt = CheckpointTable(f"{built}/_checkpoint")
-    removed = forget_keys(spark, store, victim, buckets=8, ckpt=ckpt)
+    removed = forget_keys(spark, store, victim, buckets=8)
     assert removed["obs"] > 0 and removed["tier_1d"] > 0
     for table, key_col in (
         ("obs", "url"), ("tier_1h", "url"), ("tier_1d", "url"),
@@ -53,7 +52,9 @@ def test_forget_erases_everywhere_and_only_there(spark, built):
     # partitions the key never hashed into keep their manifest entries
     # (the same immutable files, the same footer counts)
     assert untouched_files() == files_before
-    # lineage: a 'forgotten' row exists for every touched partition
+    # lineage, recorded under the store's root: a 'forgotten' row exists
+    # for every touched partition
+    ckpt = CheckpointTable(f"{built}/_checkpoint")
     log = ckpt.load().to_pylist()
     forgotten = {
         (r["stage"], r["part_id"])
@@ -71,6 +72,13 @@ def test_forget_erases_everywhere_and_only_there(spark, built):
         for r in log
         if r["status"] == "forgotten" and r["stage"] == "obs"
     )
+    # ... and the lineage's counts are the store's, in every table
+    for table in PIPELINE_KEY_COLS:
+        stored = {
+            r["part_id"]: r["count"]
+            for r in store.read(spark, table).groupBy("part_id").count().collect()
+        }
+        assert ckpt.stage_metrics(table) == stored, table
 
 
 def F_col(name):

@@ -135,6 +135,8 @@ def test_rerun_drops_a_removed_url_from_every_stage(spark, tmp_path):
         key = "key" if stage == "blocks" else "url"
         assert out2[stage].where(F.col(key) == gone).count() == 0, stage
         assert out2[stage].count() > 0, stage
+    # the lineage counts the emptied bucket as the store does: not at all
+    assert_lineage_counts(spark, root)
 
 
 def test_rerun_of_a_finished_pipeline_commits_nothing(spark, tmp_path):

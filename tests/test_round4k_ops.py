@@ -1,6 +1,7 @@
 """Round-4 batch k planted truth: lineage rows read back from the
-checkpoint table equal the stage's true per-partition cell counts, and
-incomplete rows stay invisible to stage_metrics."""
+checkpoint table equal the stage's true per-partition cell counts,
+incomplete rows stay invisible to stage_metrics, and a part's newest row
+decides."""
 
 from __future__ import annotations
 
@@ -52,3 +53,13 @@ def test_stage_metrics_ignores_incomplete_rows():
             ]
         )
         assert ck.stage_metrics("s") == {0: 10}
+        # the row appended last decides, whatever its fingerprint; a part
+        # whose last row is 'empty' holds no rows
+        def row(part, n, status, fp):
+            return {"run_id": "r", "stage": "s", "part_id": part,
+                    "input_fp": fp, "row_count": n, "wall_ms": 1,
+                    "status": status}
+
+        ck.append([row(2, 5, "complete", "g")])
+        ck.append([row(0, 12, "complete", "h"), row(2, 0, "empty", "h")])
+        assert ck.stage_metrics("s") == {0: 12}

@@ -11,7 +11,7 @@ Each writer is killed twice at its commit point: the manifest rename raises
 * after the rerun's expiry, no data file is left that no retained manifest
   lists, and no unfinished manifest;
 * a streaming fold's lineage after the replay equals the crash-free
-  fold's.
+  fold's, and forget's lineage counts equal the store's.
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from mintpy_spark.plans.checkpoint import CheckpointTable
 from mintpy_spark.sources.tables import TableStore, _data_files
 
 WHEN = pytest.mark.parametrize("when", ["before", "after"])
@@ -184,6 +185,13 @@ def test_forget_killed_at_commit(spark, built, forget_ref, tmp_path, monkeypatch
     assert (sum(removed.values()) == 0) == (when == "after")
     assert {s: rows(store.read(spark, s)) for s in STAGES} == forget_ref
     assert not unreferenced(store)
+    # the erasure's lineage went in before the commit: its counts are the
+    # store's at either kill point
+    ckpt = CheckpointTable.for_pipeline(root)
+    for s in STAGES:
+        stored = {r["part_id"]: r["count"]
+                  for r in store.read(spark, s).groupBy("part_id").count().collect()}
+        assert ckpt.stage_metrics(s) == stored, s
 
 
 # -- the tier fold ------------------------------------------------------------

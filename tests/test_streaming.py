@@ -302,6 +302,52 @@ def test_compact_raw_late_row_in_compacted_bucket(spark, paths, land_days):
     assert spark.read.parquet(inp).where(F.col("warc_ts") < "2023-02-04").count() == 0
 
 
+class _Killed(Exception):
+    pass
+
+
+@pytest.mark.parametrize("kill", ["after_ledger", "after_first_delete"])
+def test_compact_raw_killed_midway_is_finished_by_the_rerun(
+    spark, paths, land_days, monkeypatch, kill
+):
+    """A compaction killed after its ledger append, or after its first
+    delete, leaves raw files the ledger already counts: the rerun deletes
+    them before its gate and goes through, tier.cnt == ledger + raw still
+    holds, and the next compaction's gate passes."""
+    from mintpy_spark.operators import retention
+    from mintpy_spark.streaming.tier_maintenance import TierMaintainer
+
+    inp, store_root, _ = paths
+    sch = "url string, warc_ts timestamp, text_length long"
+    rows = [(f"u{u}", dt.datetime(2023, 1, d, h, 30), 10 * u + d + h)
+            for u in range(2) for d in range(1, 6) for h in (3, 15)]
+    land_days(inp, rows, sch)
+    m = TierMaintainer(store_root)
+    m.apply_delta(spark.read.parquet(inp), batch_id=0)
+
+    real = retention._delete_files
+
+    def killed(spark_, fs, uris):
+        if kill == "after_first_delete":
+            real(spark_, fs, uris[:1])
+        raise _Killed
+
+    with monkeypatch.context() as mp:
+        mp.setattr(retention, "_delete_files", killed)
+        with pytest.raises(_Killed):
+            retention.compact_raw(spark, inp, "2023-01-03 00:00:00", m, tier="1h")
+    res = retention.compact_raw(spark, inp, "2023-01-03 00:00:00", m, tier="1h")
+    assert (res["dropped"], res["kept"]) == (0, 12)
+    raw = spark.read.parquet(inp)
+    assert raw.where(F.col("warc_ts") < "2023-01-03").count() == 0
+    ledger = spark.read.parquet(inp + ".__compaction_ledger")
+    tier = m.read_tier(spark, "1h")
+    assert ledger.agg(F.sum("dropped")).first()[0] + raw.count() == 20
+    assert tier.agg(F.sum("cnt")).first()[0] == 20
+    res2 = retention.compact_raw(spark, inp, "2023-01-05 00:00:00", m, tier="1h")
+    assert (res2["dropped"], res2["kept"]) == (8, 4)
+
+
 def test_compaction_then_maintenance_does_not_refold(spark, paths, land_days):
     """Compaction deletes whole raw files and rewrites none, so the next
     maintenance pass sees no new file: the tiers still count each row

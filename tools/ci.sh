@@ -6,7 +6,9 @@
 # store (sources/tables.py), the shared fold step (streaming/tier_maintenance.py)
 # and forget (operators/forget.py), no recursion .fold( call under
 # mintpy_spark/ or jobs/ outside the one runner (operators/seqstate.py
-# fold_groups, which batch and stream both call),
+# fold_groups, which batch and stream both call), no lineage row dict
+# ("row_count": under mintpy_spark/ or jobs/) outside the one lineage writer
+# (plans/checkpoint.py CheckpointTable.record),
 # the full pytest suite, the cascade, ingest and serve benchmarks' smoke
 # self-tests (their output checks: sum(cnt) at 30d ==
 # pages; text_sha == sha1(text), cnt/vsum per tier, n over blocks; stored
@@ -46,6 +48,13 @@ echo "== recursion .fold( calls only in the one runner =="
 if grep -rnE --include='*.py' '\.fold\(' mintpy_spark/ jobs/ \
     | grep -vE '^mintpy_spark/operators/seqstate\.py:'; then
   echo "recursion .fold( call found above; run it through operators/seqstate.py fold_groups" >&2
+  exit 1
+fi
+
+echo "== lineage rows built only in the one writer =="
+if grep -rnE --include='*.py' '"row_count":' mintpy_spark/ jobs/ \
+    | grep -vE '^mintpy_spark/plans/checkpoint\.py:'; then
+  echo "lineage row dict found above; record it through CheckpointTable.record (plans/checkpoint.py)" >&2
   exit 1
 fi
 
