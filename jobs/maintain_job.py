@@ -24,7 +24,8 @@ unconsumed files; the fold is idempotent (one manifest-committed store
 version per batch — a replayed committed batch is skipped, a crashed one
 is recomputed from the last committed version). --store and --checkpoint
 are a PAIR: batch ids from the checkpoint drive the store's version numbers,
-so never point a fresh checkpoint at an existing store.
+so a run that points a fresh checkpoint at an existing store (or at a
+rollup_job store) is refused with a ValueError before it folds anything.
 """
 
 from __future__ import annotations

@@ -94,8 +94,3 @@ def bucket_start(ts: Column, tier: str) -> Column:
         width = TIER_SECONDS["30d"]
         return F.timestamp_seconds((sec - (sec % width)).cast("long"))
     raise ValueError(f"unknown tier {tier!r}; expected one of {sorted(TIER_SECONDS)}")
-
-
-def epoch_seconds(ts: Column) -> Column:
-    """Seconds since Unix epoch as double (sub-second exact)."""
-    return ts.cast("double")

@@ -3,11 +3,10 @@
 The roaring-bitmap idea at fixed width: one BIGINT per (key, block) holds
 presence bits for ``block_days`` consecutive epoch days (bit i = day
 ``block*block_days + i`` seen). ``bit_or`` makes the tier mergeable AND —
-unlike additive sketch counters (streaming/sketch_stream.py) — replay-
-IDEMPOTENT: folding the same delta twice is a no-op, so a bitmap tier
-needs no committed-version replay guard. Reference analog: the nonzero/
-common-mask ALL-aggregates over epochs (stack.py:972, utils1.py:156) —
-presence-per-epoch compressed 60:1 into machine words.
+unlike additive sketch counters (hdr_merge in operators/sketch.py) —
+replay-IDEMPOTENT: folding the same delta twice is a no-op. Reference
+analog: the nonzero/common-mask ALL-aggregates over epochs (stack.py:972,
+utils1.py:156) — presence-per-epoch compressed 60:1 into machine words.
 
 Scale shape: the tier Exchange carries one row per (key, block) —
 days/60 rows per key regardless of observation volume; bit_count /

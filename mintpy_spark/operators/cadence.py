@@ -24,7 +24,7 @@ and partitioning.
 
 Plan shape: one lag window over (key ORDER BY ts) + one hash agg — the
 same single-Exchange shape as every per-key operator here; free when the
-input is already hash-partitioned on the key (sources/bucketed.py).
+input is already hash-partitioned on the key.
 """
 
 from __future__ import annotations

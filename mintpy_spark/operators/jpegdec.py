@@ -45,15 +45,6 @@ for _k in range(8):
         _B[_k, _x] = _c * np.cos((2 * _x + 1) * _k * np.pi / 16)
 
 
-def idct2(block: np.ndarray) -> np.ndarray:
-    """2-D inverse DCT of one 8x8 coefficient block (float64)."""
-    return _B.T @ block @ _B
-
-
-def fdct2(block: np.ndarray) -> np.ndarray:
-    return _B @ block @ _B.T
-
-
 class _Huff:
     """Canonical Huffman table from DHT (counts, symbols)."""
 

@@ -513,31 +513,6 @@ def sq_topk(
     return scored.orderBy(F.desc("qdot"), F.asc(id_col)).limit(k)
 
 
-def sq_topk_oracle_sql(
-    query_vec: list[float],
-    k: int = 10,
-    scale: float = 128.0,
-    exclude_id: int | None = None,
-) -> str:
-    """DuckDB replica of :func:`sq_topk` with the identical literal
-    quantized query vector."""
-    qints = [int(np.floor(float(x) * scale + 0.5)) for x in query_vec]
-    qlist = "[" + ", ".join(str(v) for v in qints) + "]"
-    where = f"WHERE vec_id <> {exclude_id}" if exclude_id is not None else ""
-    return f"""
-    SELECT vec_id, label, qdot FROM (
-      SELECT vec_id, label,
-             CAST(list_sum(list_transform(
-               list_zip(
-                 list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * {scale} + 0.5) AS BIGINT)),
-                 {qlist}),
-               p -> p[1] * p[2])) AS BIGINT) AS qdot
-      FROM embeddings {where}
-    ) ORDER BY qdot DESC, vec_id LIMIT {k}
-    """
-
-
 def top_eigen(
     df: DataFrame,
     vec_col: str = "embedding",

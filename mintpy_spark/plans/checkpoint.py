@@ -4,16 +4,15 @@ The recast of the reference's ``run_or_skip`` (utils/utils1.py:691-746;
 ifgram_inversion.py:38-87): every stage appends, per partition, a row
 (run_id, stage, part_id, input_fp, row_count, wall_ms, status, ts_unix)
 through the one writer, ``record``, which ``run_stage``,
-``StoreFold.apply_delta``, ``forget_keys``, ``compact_raw`` and
+``StoreFold.apply_delta``, ``compact_raw`` and
 ``checkpoint_lineage_audit`` call. Statuses: ``complete`` (the part holds
-``row_count`` rows), ``empty`` (computed or erased, it holds none; the
-table keeps no such partition), ``forgotten`` (an erasure left
-``row_count`` rows).
+``row_count`` rows), ``empty`` (computed, it holds none; the table keeps
+no such partition).
 
 ``complete_parts(stage, input_fp)`` (resume) skips a part with ANY
 ``complete``/``empty`` row under that fingerprint, so a new config or
-input invalidates every entry; it is not newest-wins, so an erased part
-stays done and a resume never brings erased keys back. ``stage_metrics``:
+input invalidates every entry; it is not newest-wins, so a part once
+done under a fingerprint stays done under it. ``stage_metrics``:
 per (stage, part_id) the row appended last decides, whatever its
 fingerprint, and is reported unless ``empty``, so the counts are the
 store's; rows of another status (a half-written ``running``) are not
@@ -59,7 +58,7 @@ SCHEMA = pa.schema(
     ]
 )
 
-STATUSES = ("complete", "empty", "forgotten")
+STATUSES = ("complete", "empty")
 
 
 def _seq(name: str) -> int:
@@ -93,16 +92,14 @@ class CheckpointTable:
         return cls(f"{root}/_maintenance_metrics")
 
     def record(self, run_id: str, input_fp: str, counts: Mapping[str, Mapping[int, int | None]],
-               wall_ms: int = 0, status: str = "complete") -> None:
+               wall_ms: int = 0) -> None:
         """One row per (stage, part_id) of ``counts`` (stage -> part_id ->
         rows), as one append: ``empty`` for ``None`` rows (the part holds
-        none), else ``status`` (complete/forgotten) with the count, 0 too."""
-        if status not in ("complete", "forgotten"):
-            raise ValueError(f"record status must be complete or forgotten, got {status!r}")
+        none), else ``complete`` with the count, 0 too."""
         self.append([
             {"run_id": run_id, "stage": stage, "part_id": int(p),
              "input_fp": input_fp, "row_count": int(n or 0),
-             "wall_ms": int(wall_ms), "status": "empty" if n is None else status}
+             "wall_ms": int(wall_ms), "status": "empty" if n is None else "complete"}
             for stage, parts in counts.items() for p, n in parts.items()
         ])
 
@@ -136,7 +133,7 @@ class CheckpointTable:
     def complete_parts(self, stage: str, input_fp: str) -> set[int]:
         df = self.load().to_pandas()
         m = (df["stage"] == stage) & (df["input_fp"] == input_fp) & (
-            df["status"].isin(("complete", "empty"))
+            df["status"].isin(STATUSES)
         )
         return set(df.loc[m, "part_id"].astype(int).tolist())
 

@@ -287,7 +287,7 @@ def index_postings_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per token AFTER the (tok, doc_id) pre-agg so list size is bounded by
     df, not cf. At 10^12 docs the stopword tokens' postings dominate —
     production would range-shard each hot token's postings by doc_id
-    block (the bucketed-table layout in sources/bucketed.py); the
+    block (a bucketed table layout); the
     fingerprint composes over blocks via the same md5-of-concat chain."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(

@@ -29,14 +29,12 @@ otherwise):
     rows              <- SELECT sum(record_count) FROM t.files
     versions(table)   <- SELECT snapshot_id FROM t.snapshots
     read_version      <- spark.read.option('snapshot-id', v)   (time travel)
-    upsert            <- MERGE INTO
-    expire(table, keep_last)
-                      <- CALL system.expire_snapshots
+    expire(table)     <- CALL system.expire_snapshots   (keeps KEEP_VERSIONS)
 
 The snapshot calls differ from tables.py's by design: an Iceberg snapshot
 is per table, so ``versions``, ``latest`` and ``expire`` take the table,
 while the file-backed store versions all its tables together
-(``versions()``, ``latest()``, ``expire(keep_last)``). Only the narrow
+(``versions()``, ``latest()``, ``expire()``). Only the narrow
 contract above the snapshot calls (``write_partitions``, ``partitions``,
 ``read``, ``rows``, ``exists``, ``drop``) is backend-neutral; that is what
 ``run_pipeline`` and ``run_export`` use.
@@ -55,6 +53,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from mintpy_spark.sources.tables import KEEP_VERSIONS, TableStore
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -78,9 +78,9 @@ def catalog_configured(spark: SparkSession, catalog: str = "local") -> bool:
 
 
 class IcebergTableStore:
-    """Same narrow surface as tables.TableStore, plus MERGE and rollback,
-    over a configured Iceberg catalog. All operations are table-format
-    commits — atomic, serializable, resume-safe by construction."""
+    """Same narrow surface as tables.TableStore over a configured Iceberg
+    catalog. All operations are table-format commits — atomic,
+    serializable, resume-safe by construction."""
 
     def __init__(
         self,
@@ -159,7 +159,7 @@ class IcebergTableStore:
         ).first()["n"]
         return int(n or 0)
 
-    # -- snapshots (time travel / MERGE / retention) --------------------
+    # -- snapshots (time travel / retention) ----------------------------
     def versions(self, table: str) -> list[int]:
         rows = self.spark.sql(
             f"SELECT snapshot_id FROM {self.qualified(table)}.snapshots "
@@ -178,36 +178,14 @@ class IcebergTableStore:
             .load(self.qualified(table))
         )
 
-    def rollback(self, table: str, version: int) -> None:
-        self.spark.sql(
-            f"CALL {self.catalog}.system.rollback_to_snapshot"
-            f"('{self.namespace}.{table}', {version})"
-        )
-
-    def upsert(self, df: DataFrame, table: str, keys: list[str]) -> None:
-        """MERGE INTO on ``keys``: update matched rows, insert new ones."""
-        q = self.qualified(table)
-        if not self.exists(table):
-            df.writeTo(q).create()
-            return
-        view = f"_merge_src_{table.replace('/', '_')}"
-        df.createOrReplaceTempView(view)
-        on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-        self.spark.sql(
-            f"MERGE INTO {q} t USING {view} s ON {on} "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN NOT MATCHED THEN INSERT *"
-        )
-        self.spark.catalog.dropTempView(view)
-
-    def expire(self, table: str, keep_last: int = 2) -> None:
+    def expire(self, table: str) -> None:
         versions = self.versions(table)
-        if len(versions) <= keep_last:
+        if len(versions) <= KEEP_VERSIONS:
             return
         self.spark.sql(
             f"CALL {self.catalog}.system.expire_snapshots"
             f"(table => '{self.namespace}.{table}', "
-            f"retain_last => {keep_last})"
+            f"retain_last => {KEEP_VERSIONS})"
         )
 
 
@@ -226,10 +204,7 @@ def open_table_store(
     the catalog, shared by every root. Two pipelines with different roots
     (and so different ``<root>/_checkpoint`` lineage) must pass different
     namespaces, or they overwrite each other's tables while each resumes
-    from its own checkpoint. ``forget_keys`` needs the file-backed store
-    (it stages and commits through ``TableStore``'s protocol steps)."""
+    from its own checkpoint."""
     if iceberg_available(spark) and catalog_configured(spark, catalog):
         return IcebergTableStore(spark, catalog=catalog, namespace=namespace)
-    from mintpy_spark.sources.tables import TableStore
-
     return TableStore(root)

@@ -3,9 +3,8 @@
 The production design is Iceberg (``sources/iceberg.py`` exposes the same
 narrow API, and ``open_table_store`` picks the backend). This module is the
 local-filesystem stand-in, and the one commit protocol of every table the
-engine writes with Spark: the pipelines' stages, the maintained tiers and
-sketches, the sequential folds' state and staged output, the dedup index
-and forget's rewrites.
+engine writes with Spark: the pipelines' stages, the maintained tiers, the
+sequential folds' state and staged output, and the dedup index.
 
 Layout under ``root``::
 
@@ -21,19 +20,18 @@ Write protocol (crash safety):
 * one ``os.rename`` of ``_manifests/v<N>.json`` commits. The manifest holds,
   per table, its schema and every data file with its ``part_id`` and its
   footer row count. One commit may replace several tables (a tier fold's
-  three tiers, a sequential fold's state and output, forget's rewrites);
+  three tiers, a sequential fold's state and output);
   a partition overwrite lists the table's files minus those of the
   replaced partitions, plus the new ones;
 * a crash before the rename leaves the previous version authoritative and
   the staged files unreferenced; a crash after it leaves the new version
   committed. A reader plans from one manifest and data files are never
   rewritten, so it sees exactly one version: never a mix, never a gap;
-* ``expire`` keeps the newest manifests and deletes every data file in the
-  tables' directories that none of them lists: files a commit replaced and
-  files a crashed writer staged. A reader planned on an expired version
-  loses its files, so expiry keeps the previous version too. Erasure is
-  the exception: ``forget_keys`` expires down to its own commit, so no
-  retained version still lists the erased rows.
+* ``expire`` keeps the newest ``KEEP_VERSIONS`` manifests and deletes every
+  data file in the tables' directories that none of them lists: files a
+  commit replaced and files a crashed writer staged. A reader planned on an
+  expired version loses its files, so expiry keeps the previous version
+  too.
 
 Reads are planned from the manifest: its schema and file list go to
 ``spark.read.schema(..).parquet(*files)`` with ``basePath`` at the table
@@ -61,6 +59,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 _MANIFEST = re.compile(r"v(\d+)\.json")
+# versions ``expire`` retains: the latest, and the previous one that a
+# replay recomputes from and a reader planned before the commit still reads
+KEEP_VERSIONS = 2
 
 
 def _data_files(table_dir: str) -> list[str]:
@@ -280,20 +281,18 @@ class TableStore:
         os.rename(tmp, os.path.join(self._manifests, f"v{version}.json"))
         return version
 
-    def expire(self, keep_last: int = 2) -> list[str]:
-        """Keep the newest ``keep_last`` manifests; delete the data files
-        (and their checksums) in any manifest's tables that no kept
+    def expire(self) -> list[str]:
+        """Keep the newest ``KEEP_VERSIONS`` manifests; delete the data
+        files (and their checksums) in any manifest's tables that no kept
         manifest lists, then the older manifests and unfinished ``.tmp``
         ones. Returns the deleted data files, store-relative."""
-        if keep_last < 1:
-            raise ValueError("expire must keep the latest version")
         vs = self.versions()
         live: set[str] = set()
         tables: set[str] = set()
         for i, v in enumerate(vs):
             m = self.manifest(v)
             tables.update(m["tables"])
-            if i >= len(vs) - keep_last:
+            if i >= len(vs) - KEEP_VERSIONS:
                 live.update(f["path"] for e in m["tables"].values() for f in e["files"])
         deleted = []
         for table in sorted(tables):
@@ -316,7 +315,7 @@ class TableStore:
                     os.rmdir(dirpath)
         for name in os.listdir(self._manifests):
             m = _MANIFEST.fullmatch(name)
-            if (m and int(m.group(1)) in vs[:-keep_last]) or name.startswith(".tmp-"):
+            if (m and int(m.group(1)) in vs[:-KEEP_VERSIONS]) or name.startswith(".tmp-"):
                 os.remove(os.path.join(self._manifests, name))
         return sorted(deleted)
 

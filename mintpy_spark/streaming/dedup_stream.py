@@ -29,9 +29,9 @@ replay stages them anew. foreachBatch's at-least-once becomes
 exactly-once emission; ``run`` is the AvailableNow pass over new files.
 
 Scale shape: per batch the probe join shuffles batch-band rows against
-the stored band projection — at 10^12 docs the index is bucketed on
-``band_key`` (sources/bucketed.py) so the probe co-locates without
-shuffling the stored side; the signature shard append is partition-local.
+the stored band projection — at 10^12 docs the index would be bucketed
+on ``band_key`` (an Iceberg ``bucket`` partition transform) so the probe
+co-locates without shuffling the stored side; the signature shard append is partition-local.
 The emitted-pairs stream feeds keeper resolution / connected components
 downstream (operators/dedup.dedup_components).
 

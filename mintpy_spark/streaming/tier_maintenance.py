@@ -2,10 +2,9 @@
 
 ``readStream(obs dir) -> foreachBatch(apply_delta)``: each micro-batch is
 folded into durable tables by ONE step, ``StoreFold.apply_delta``, run by
-the value tiers here, the sketch tables (sketch_stream.py,
-presence_stream.py), the sequential folds (seqfold.py) and the
+the value tiers here, the sequential folds (seqfold.py) and the
 near-duplicate index (dedup_stream.py). A store supplies only what it
-computes (``_compute`` or ``_stage``, and a post-commit ``_publish``):
+computes (``_stage``, and a post-commit ``_publish``):
 
 1. finish a ``_publish`` that a crash cut short;
 2. skip the batch when ``latest >= batch_id``;
@@ -29,6 +28,13 @@ kept.
 Readers plan from one manifest: never a partial fold or a mix of two.
 Expiry keeps the previous version, the one a replay recomputes from.
 
+A store and its stream checkpoint are a pair: the checkpoint's batch ids
+are the store's versions, so a fresh checkpoint pointed at a folded store
+(or at a ``run_pipeline`` store, whose versions count stage commits)
+would have every batch skipped by step 2. ``run`` refuses that pairing:
+Spark writes ``<checkpoint>/offsets/N`` before batch N runs, so a paired
+store's latest version is never above the checkpoint's highest batch id.
+
 The value tiers: each batch is merged into the STORED tiers by one
 aggregation per tier, the stored partials unioned with the batch's unit
 partials at that tier's bucket (refresh_tiers_incremental in
@@ -50,6 +56,7 @@ manager. The coarser tiers are never larger than the finest one.
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -62,6 +69,15 @@ from mintpy_spark.sources.tables import TableStore
 TIERS = ("1h", "1d", "30d")
 
 
+def _last_batch(checkpoint: str) -> int:
+    """The highest batch id under a stream checkpoint's ``offsets``; -1
+    for a fresh checkpoint."""
+    offsets = os.path.join(checkpoint, "offsets")
+    if not os.path.isdir(offsets):
+        return -1
+    return max((int(n) for n in os.listdir(offsets) if n.isdigit()), default=-1)
+
+
 def written_rows(entry: dict) -> int:
     """Rows of a staged or committed table entry, from its file footers."""
     return sum(f["rows"] for f in entry["files"])
@@ -70,9 +86,8 @@ def written_rows(entry: dict) -> int:
 class StoreFold:
     """A store folded one micro-batch at a time under ``root``: the shared
     fold step (``apply_delta``, see the module docstring) over the tables
-    ``tiers``. A subclass supplies ``_compute`` (the new version of each of
-    its ``tiers`` from the delta and the committed ones), or overrides
-    ``_stage``, and, if it has one, a post-commit step ``_publish``."""
+    ``tiers``. A subclass supplies ``_stage`` and, if it has one, a
+    post-commit step ``_publish``."""
 
     # the store table of tier t is PREFIX + t
     PREFIX = "tier_"
@@ -120,21 +135,12 @@ class StoreFold:
     def _gc(self, spark: SparkSession) -> None:
         """Expire all but the latest two versions and every file only they
         (or a crashed fold) wrote."""
-        self.store.expire(keep_last=2)
+        self.store.expire()
 
     def _stage(self, delta: DataFrame, stored: dict[str, DataFrame] | None):
         """Stage the batch: (store table -> staged entry, lineage stage ->
-        rows, the step's result), or None when there is nothing to fold.
-        By default every tier's new version replaces it, recorded as
-        ``maintain_<tier>``; an empty delta folds nothing."""
-        if delta.isEmpty():
-            return None
-        new = self._compute(delta, stored)
-        tables = {self.table(t): self.store.stage(new[t], self.table(t))
-                  for t in self.tiers}
-        counts = {f"maintain_{t}": written_rows(tables[self.table(t)])
-                  for t in self.tiers}
-        return tables, counts, None
+        rows, the step's result), or None when there is nothing to fold."""
+        raise NotImplementedError
 
     def apply_delta(self, delta: DataFrame, batch_id: int = 0):
         """Fold ``delta`` as version ``batch_id``: the one fold step (see
@@ -172,7 +178,17 @@ class StoreFold:
         that arrived since the last pass (Spark's stream checkpoint at
         ``checkpoint`` records which) are folded, one ``apply_delta`` per
         micro-batch with its batch id as the version, then the query
-        stops."""
+        stops. Raises ValueError, committing nothing, when the store holds
+        a version above the checkpoint's highest batch id (module
+        docstring)."""
+        latest = self.store.latest()
+        if latest is not None and latest > _last_batch(checkpoint):
+            raise ValueError(
+                f"store {self.root} is at version {latest}, past every batch "
+                f"of stream checkpoint {checkpoint}; a store and its "
+                "checkpoint are a pair, so fold into a new store or resume "
+                "its own checkpoint"
+            )
         (
             spark.readStream.schema(schema).parquet(input_path)
             .writeStream.foreachBatch(self.apply_delta)
@@ -214,15 +230,21 @@ class TierMaintainer(StoreFold):
             key=self.key, ts=self.ts,
         )
 
-    def _compute(
-        self, delta_obs: DataFrame, stored: dict[str, DataFrame] | None
-    ) -> dict[str, DataFrame]:
-        """The new version of each tier: one aggregation of the committed
-        tier (none on the first fold) and the delta."""
-        return refresh_tiers_incremental(
-            stored, delta_obs, self.value_col, tiers=self.tiers,
+    def _stage(self, delta: DataFrame, stored: dict[str, DataFrame] | None):
+        """Each tier's new version, one aggregation of the committed tier
+        (none on the first fold) and the delta, staged to replace it and
+        recorded as ``maintain_<tier>``; an empty delta folds nothing."""
+        if delta.isEmpty():
+            return None
+        new = refresh_tiers_incremental(
+            stored, delta, self.value_col, tiers=self.tiers,
             key=self.key, ts=self.ts, with_sq=self.with_sq,
         )
+        tables = {self.table(t): self.store.stage(new[t], self.table(t))
+                  for t in self.tiers}
+        counts = {f"maintain_{t}": written_rows(tables[self.table(t)])
+                  for t in self.tiers}
+        return tables, counts, None
 
 
 def maintain_tiers(

@@ -5,8 +5,8 @@ Two tiers:
   this jar-less sandbox, and the two backends expose the same contract
   surface (method-for-method), so swapping is config-only.
 - Skipped-unless-available: the full Iceberg read/write/partition-
-  overwrite/time-travel/MERGE path, exercised whenever a runtime jar IS
-  on the classpath (e.g. the production cluster's CI).
+  overwrite/time-travel path, exercised whenever a runtime jar IS on the
+  classpath (e.g. the production cluster's CI).
 """
 
 from __future__ import annotations
@@ -80,7 +80,7 @@ def iceberg_spark():
 
 def test_iceberg_roundtrip(iceberg_spark):
     """Full contract over a real Iceberg table: create, dynamic partition
-    overwrite, partition listing, snapshot time travel, MERGE upsert."""
+    overwrite, partition listing, snapshot time travel."""
     import pyspark.sql.functions as F
 
     spark = iceberg_spark
@@ -104,10 +104,4 @@ def test_iceberg_roundtrip(iceberg_spark):
     # time travel back to the first snapshot
     old = {r["v"] for r in store.read_version(spark, "seam_check", v1).collect()}
     assert old == {0, 1, 2, 3, 4, 5}
-
-    # MERGE upsert
-    up = spark.createDataFrame([(0, 0, -1), (9, 0, 9)], "v long, part_id int, v2 long")
-    store.upsert(up.select("part_id", "v"), "seam_check", keys=["v"])
-    after = {r["v"] for r in store.read(spark, "seam_check").collect()}
-    assert 9 in after
     store.drop("seam_check")

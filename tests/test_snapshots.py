@@ -57,7 +57,7 @@ def test_expire_gc_keeps_referenced_files(spark, store):
     write(store, _df(spark, [(1, "A")]))
     write(store, _df(spark, [(1, "AA")]))
     v1_files = [f["path"] for f in store.entry("t", 1)["files"]]
-    deleted = store.expire(keep_last=2)
+    deleted = store.expire()
     assert deleted == sorted(v1_files), "v1's files must be GC'd"
     assert store.versions() == [2, 3]
     # surviving versions stay readable after GC

@@ -6,12 +6,12 @@ Each writer is killed twice at its commit point: the manifest rename raises
 
 * a DataFrame planned before the kill, and one planned after it, read
   exactly the old version or the new one, never a mix or a gap;
-* a rerun (the pipeline, forget) or a replay of the same batch id (the
+* a rerun (the pipeline) or a replay of the same batch id (the
   streaming folds) equals the crash-free result;
 * after the rerun's expiry, no data file is left that no retained manifest
   lists, and no unfinished manifest;
 * a streaming fold's lineage after the replay equals the crash-free
-  fold's, and forget's lineage counts equal the store's.
+  fold's.
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from mintpy_spark.plans.checkpoint import CheckpointTable
 from mintpy_spark.sources.tables import TableStore, _data_files
 
 WHEN = pytest.mark.parametrize("when", ["before", "after"])
@@ -142,56 +141,6 @@ def test_pipeline_stage_killed_at_commit(
     out = run_pipeline(spark, _shifted(small_pages), root, buckets=4, config_fp="b")
     assert {s: rows(out[s]) for s in STAGES} == rerun_ref
     assert not unreferenced(store)
-
-
-# -- forget -------------------------------------------------------------------
-
-
-def _victim(spark, store):
-    return [store.read(spark, "obs").select("url").orderBy("url").first()["url"]]
-
-
-@pytest.fixture(scope="module")
-def forget_ref(spark, built, tmp_path_factory):
-    from mintpy_spark.operators.forget import forget_keys
-
-    root = str(tmp_path_factory.mktemp("faults") / "forget_ref")
-    shutil.copytree(built, root)
-    store = TableStore(root)
-    forget_keys(spark, store, _victim(spark, store), buckets=4)
-    return {s: rows(store.read(spark, s)) for s in STAGES}
-
-
-@WHEN
-def test_forget_killed_at_commit(spark, built, forget_ref, tmp_path, monkeypatch, when):
-    from mintpy_spark.operators.forget import forget_keys
-
-    root = str(tmp_path / "store")
-    shutil.copytree(built, root)
-    store = TableStore(root)
-    victim = _victim(spark, store)
-    old = {s: rows(store.read(spark, s)) for s in STAGES}
-    planned = {s: store.read(spark, s) for s in STAGES}
-    with monkeypatch.context() as mp:
-        kill_commit(mp, when)
-        with pytest.raises(Killed):
-            forget_keys(spark, store, victim, buckets=4)
-    assert {s: rows(df) for s, df in planned.items()} == old
-    # one commit erases every table at once: all old, or all new
-    want = forget_ref if when == "after" else old
-    assert {s: rows(store.read(spark, s)) for s in STAGES} == want
-
-    removed = forget_keys(spark, store, victim, buckets=4)
-    assert (sum(removed.values()) == 0) == (when == "after")
-    assert {s: rows(store.read(spark, s)) for s in STAGES} == forget_ref
-    assert not unreferenced(store)
-    # the erasure's lineage went in before the commit: its counts are the
-    # store's at either kill point
-    ckpt = CheckpointTable.for_pipeline(root)
-    for s in STAGES:
-        stored = {r["part_id"]: r["count"]
-                  for r in store.read(spark, s).groupBy("part_id").count().collect()}
-        assert ckpt.stage_metrics(s) == stored, s
 
 
 # -- the tier fold ------------------------------------------------------------

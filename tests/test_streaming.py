@@ -1,7 +1,8 @@
-"""Streaming maintenance over the table store: stored tiers, sketches and
-the dedup index folded per micro-batch equal a batch rebuild, replays are
-idempotent, reads see committed versions plus the unfolded tail, and raw
-compaction drops only covered history."""
+"""Streaming maintenance over the table store: stored tiers and the dedup
+index folded per micro-batch equal a batch rebuild, replays are
+idempotent, a store is folded only from its own stream checkpoint, reads
+see committed versions plus the unfolded tail, and raw compaction drops
+only covered history."""
 
 from __future__ import annotations
 
@@ -92,6 +93,71 @@ def test_tier_maintenance_replay_is_idempotent(spark, paths):
     assert m.committed_version(spark) == 1
     total = m.read_tier(spark, "1h").agg(F.sum("cnt")).first()[0]
     assert total == 9  # 6 + 3, no double counting anywhere
+
+
+def _store_state(spark, store):
+    """The store's committed versions and each table's rows at the latest."""
+    latest = store.latest()
+    tables = store.manifest(latest)["tables"]
+    return store.versions(), {
+        t: sorted(repr(tuple(r)) for r in store.read(spark, t).collect())
+        for t in tables
+    }
+
+
+def test_fresh_checkpoint_on_a_folded_store_is_refused(spark, paths):
+    """A fresh stream checkpoint numbers its batches from 0, so every one
+    would be skipped as a replay of the store's committed versions: the
+    new rows would never be folded. The pass refuses and commits nothing."""
+    from mintpy_spark.streaming.tier_maintenance import TierMaintainer, maintain_tiers
+
+    inp, store_root, ckpt = paths
+    sch = "url string, warc_ts timestamp, text_length long"
+
+    def drop(n, day):
+        rows = [(f"u{i % 3}", dt.datetime(2023, 1, day, i), 10 + i) for i in range(n)]
+        spark.createDataFrame(rows, sch).coalesce(1).write.mode("append").parquet(inp)
+
+    drop(5, 1)
+    maintain_tiers(spark, inp, store_root, ckpt)
+    drop(7, 2)
+    maintain_tiers(spark, inp, store_root, ckpt)
+    m = TierMaintainer(store_root)
+    assert m.committed_version(spark) == 1
+    before = _store_state(spark, m.store)
+
+    drop(4, 3)
+    with pytest.raises(ValueError, match="checkpoint"):
+        maintain_tiers(spark, inp, store_root, ckpt + "_fresh")
+    assert _store_state(spark, m.store) == before
+    assert m.read_tier(spark, "1h").agg(F.sum("cnt")).first()[0] == 12
+
+    maintain_tiers(spark, inp, store_root, ckpt)  # its own checkpoint folds
+    assert m.read_tier(spark, "1h").agg(F.sum("cnt")).first()[0] == 16
+
+
+def test_tier_fold_into_a_pipeline_store_is_refused(spark, paths):
+    """A run_pipeline store's versions count stage commits, not batch ids,
+    and its tier tables share the fold's names: a fold pass into it would
+    skip every batch. It refuses and commits nothing."""
+    from mintpy_spark.datagen import gen_pages
+    from mintpy_spark.operators.observe import pages_to_obs
+    from mintpy_spark.plans.pipeline import run_pipeline
+    from mintpy_spark.sources.tables import TableStore
+    from mintpy_spark.streaming.tier_maintenance import maintain_tiers
+
+    inp, store_root, ckpt = paths
+    pages = gen_pages(spark, num_urls=6)
+    run_pipeline(spark, pages, store_root, buckets=4)
+    pages_to_obs(pages).select(
+        "url", "warc_ts", F.col("text_length").cast("long").alias("text_length")
+    ).write.parquet(inp)
+    store = TableStore(store_root)
+    before = _store_state(spark, store)
+
+    with pytest.raises(ValueError, match="checkpoint"):
+        maintain_tiers(spark, inp, store_root, ckpt)
+    assert _store_state(spark, store) == before
 
 
 def test_read_realtime_and_time_travel(spark, paths):
@@ -570,52 +636,6 @@ def test_checkpoint_table_refuses_remote_roots():
 
     with pytest.raises(NotImplementedError, match="remote root"):
         CheckpointTable("s3a://bucket/tiers/_maintenance_metrics")
-
-
-def test_hdr_sketch_maintenance_equals_batch_and_replay_safe(spark, paths):
-    """Streamed HDR sketch folds must equal hdr_tier over everything
-    ingested, and — critically for an ADDITIVE sketch — a replayed
-    committed batch must not double-count."""
-    from mintpy_spark.operators.sketch import hdr_tier
-    from mintpy_spark.streaming.sketch_stream import HdrSketchMaintainer
-
-    inp, store_root, ckpt = paths
-    sch = "url string, warc_ts timestamp, text_length long"
-
-    def drop(day_lo, day_hi):
-        rows = [
-            (f"u{u}", dt.datetime(2023, 2, d, h), 90 + u * 13 + h * 7)
-            for u in range(3)
-            for d in range(day_lo, day_hi)
-            for h in (2, 8, 14, 20)
-        ]
-        spark.createDataFrame(rows, sch).write.mode("append").parquet(inp)
-
-    m = HdrSketchMaintainer(store_root)
-    drop(1, 3)
-    m.run(spark, inp, ckpt, sch)
-    drop(3, 5)  # new days
-    drop(1, 2)  # late rows for day 1
-    m.run(spark, inp, ckpt, sch)
-
-    got = {tuple(r) for r in m.read_sketch(spark).collect()}
-    allobs = spark.read.parquet(inp).select(
-        F.date_trunc("day", F.col("warc_ts")).alias("day"),
-        F.col("text_length").cast("long").alias("_v"),
-    )
-    want = {tuple(r) for r in hdr_tier(allobs, "_v", key_cols=("day",)).collect()}
-    assert got == want
-
-    # replay of an already-committed batch: counters must NOT double
-    delta = spark.createDataFrame(
-        [("u9", dt.datetime(2023, 2, 1, 5), 111)], sch
-    )
-    last = m.committed_version(spark)
-    m.apply_delta(delta, batch_id=last)  # same id -> skipped
-    assert {tuple(r) for r in m.read_sketch(spark).collect()} == got
-    m.apply_delta(delta, batch_id=last + 1)  # new id -> folds once
-    total = m.read_sketch(spark).agg(F.sum("cnt")).first()[0]
-    assert total == spark.read.parquet(inp).count() + 1
 
 
 def test_compact_raw_raises_an_unreadable_ledger(spark, paths, land_days):

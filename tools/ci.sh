@@ -3,12 +3,14 @@
 # (no .applyInPandasWithState(, .withWatermark( or import GroupState under
 # mintpy_spark/ or jobs/; per-key streaming folds through streaming/seqfold.py),
 # no table-store .commit( or .expire( under mintpy_spark/ or jobs/ outside the
-# store (sources/tables.py), the shared fold step (streaming/tier_maintenance.py)
-# and forget (operators/forget.py), no recursion .fold( call under
+# store (sources/tables.py) and the shared fold step
+# (streaming/tier_maintenance.py), no recursion .fold( call under
 # mintpy_spark/ or jobs/ outside the one runner (operators/seqstate.py
 # fold_groups, which batch and stream both call), no lineage row dict
 # ("row_count": under mintpy_spark/ or jobs/) outside the one lineage writer
-# (plans/checkpoint.py CheckpointTable.record),
+# (plans/checkpoint.py CheckpointTable.record), no module under mintpy_spark/
+# that only tests import (an import or a dotted path in mintpy_spark/, jobs/,
+# tools/, perfbench/, bench.py or __spark_entry__.py counts),
 # the full pytest suite, the cascade, ingest and serve benchmarks' smoke
 # self-tests (their output checks: sum(cnt) at 30d ==
 # pages; text_sha == sha1(text), cnt/vsum per tier, n over blocks; stored
@@ -37,9 +39,9 @@ if grep -rnE --include='*.py' '\.applyInPandasWithState\(|\.withWatermark\(|impo
   exit 1
 fi
 
-echo "== table-store commits only in the store, the fold step and forget =="
+echo "== table-store commits only in the store and the fold step =="
 if grep -rnE --include='*.py' '\.(commit|expire)\(' mintpy_spark/ jobs/ \
-    | grep -vE '^mintpy_spark/(sources/tables|streaming/tier_maintenance|operators/forget)\.py:'; then
+    | grep -vE '^mintpy_spark/(sources/tables|streaming/tier_maintenance)\.py:'; then
   echo "store commit/expire found above; fold through StoreFold.apply_delta (streaming/tier_maintenance.py)" >&2
   exit 1
 fi
@@ -57,6 +59,30 @@ if grep -rnE --include='*.py' '"row_count":' mintpy_spark/ jobs/ \
   echo "lineage row dict found above; record it through CheckpointTable.record (plans/checkpoint.py)" >&2
   exit 1
 fi
+
+echo "== every module under mintpy_spark/ is imported outside tests/ =="
+python3 - <<'PY'
+import pathlib
+import re
+import sys
+
+files = [p for d in ("mintpy_spark", "jobs", "tools", "perfbench")
+         for p in pathlib.Path(d).glob("**/*.py")]
+text = {p: p.read_text() for p in files + [pathlib.Path("bench.py"), pathlib.Path("__spark_entry__.py")]}
+orphans = []
+for mod in sorted(pathlib.Path("mintpy_spark").glob("**/*.py")):
+    if mod.name == "__init__.py":
+        continue
+    pkg, _, name = ".".join(mod.with_suffix("").parts).rpartition(".")
+    # `import pkg.name`, any dotted `pkg.name`, or `from pkg import ..., name`
+    used = re.compile(rf"\b{re.escape(pkg)}\.{name}\b"
+                      rf"|from {re.escape(pkg)} import (?:\([^)]*|[^\n]*)\b{name}\b")
+    if not any(used.search(t) for p, t in text.items() if p != mod):
+        orphans.append(str(mod))
+if orphans:
+    print("\n".join(orphans))
+    sys.exit("only tests import the modules above; give each a production importer or delete it")
+PY
 
 echo "== pytest =="
 python -m pytest tests/ -q
