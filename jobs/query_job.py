@@ -55,7 +55,11 @@ def main(argv: list[str] | None = None) -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from mintpy_spark.operators.rollup import plan_range_cover, route_range_agg
+    from mintpy_spark.operators.rollup import (
+        merge_tier_delta,
+        plan_range_cover,
+        route_range_agg,
+    )
     from mintpy_spark.session import apply_engine_conf
     from mintpy_spark.streaming.tier_maintenance import TierMaintainer
 
@@ -71,7 +75,16 @@ def main(argv: list[str] | None = None) -> None:
     version = args.version if args.version is not None else m.committed_version(spark)
     tiers = {t: m.read_tier(spark, t, version=version) for t in m.tiers}
     if args.tail:
+        # the tail merged into each pinned tier by the fold's own step
+        # (read_realtime, generalized to a range query). A tail row counts
+        # once: in the cover piece that holds it (a raw fringe reads it
+        # from the tail), since its bucket at every other tier lies
+        # outside that tier's spans
         tail = spark.read.parquet(args.tail)
+        tiers = {
+            t: merge_tier_delta(df, tail, args.value_col, t, key=args.key, ts=args.ts)
+            for t, df in tiers.items()
+        }
     else:
         # no tail: raw fringes have nothing to read; an empty frame keeps
         # the cover total correct for everything the store has folded
@@ -83,45 +96,6 @@ def main(argv: list[str] | None = None) -> None:
         tail, tiers, args.t0, args.t1, args.value_col,
         key=args.key, ts=args.ts,
     )
-    if args.tail:
-        # fold the ENTIRE tail range (not just the fringes) in as extra
-        # partials: tail rows inside the tier interior aren't in the
-        # stored buckets yet — this is read_realtime generalized to a
-        # range query
-        interior = tail.where(
-            (F.col(args.ts) >= F.lit(args.t0).cast("timestamp"))
-            & (F.col(args.ts) < F.lit(args.t1).cast("timestamp"))
-        )
-        # route_range_agg already aggregated the raw fringes from the
-        # tail; add the tier-covered interior spans of the tail
-        spans = [(lo, hi) for t, lo, hi in cover if t != "raw"]
-        if spans:
-            cond = None
-            for lo, hi in spans:
-                c = (F.col(args.ts) >= F.lit(lo).cast("timestamp")) & (
-                    F.col(args.ts) < F.lit(hi).cast("timestamp")
-                )
-                cond = c if cond is None else (cond | c)
-            extra = (
-                interior.where(cond)
-                .groupBy(args.key)
-                .agg(
-                    F.count(args.value_col).alias("cnt"),
-                    F.sum(args.value_col).alias("vsum"),
-                    F.min(args.value_col).alias("vmin"),
-                    F.max(args.value_col).alias("vmax"),
-                )
-            )
-            result = (
-                result.unionByName(extra)
-                .groupBy(args.key)
-                .agg(
-                    F.sum("cnt").alias("cnt"),
-                    F.sum("vsum").alias("vsum"),
-                    F.min("vmin").alias("vmin"),
-                    F.max("vmax").alias("vmax"),
-                )
-            )
     # execute the routed pipeline ONCE: either read the just-written
     # parquet back or persist — `result.count()` + `result.agg(...)` on
     # the raw plan would re-run the whole tier-union DAG per action

@@ -8,9 +8,6 @@ column expressions (no Python in the hot path):
   ``year + (doy-1)/365.25 + h/(365.25*24) + m/(365.25*24*60)
   + s/(365.25*24*3600)``).  This convention is load-bearing for
   value-exact reproduction of velocity estimates and design matrices.
-* temporal baseline in fractional days relative to a reference date
-  (reference: utils/ptime.py:449-478 ``date_list2tbase``:
-  ``delta.days + delta.seconds/86400``).
 * calendar-aligned tier bucketing (1h/1d) and fixed-width 30d bucketing
   anchored at the Unix epoch — the multilook/temporal_average analog
   (reference: src/mintpy/stdproc/multilook.py:19-130).
@@ -69,11 +66,6 @@ def decimal_year(ts: Column) -> Column:
         + F.second(ts) / (24.0 * 3600)
     )
     return F.year(ts) + (F.dayofyear(ts) - 1 + frac_day) / F.lit(365.25)
-
-
-def tbase_days(ts: Column, ref_ts: Column) -> Column:
-    """Fractional days between ``ts`` and ``ref_ts`` (ptime.py:449-478)."""
-    return (ts.cast("double") - ref_ts.cast("double")) / F.lit(float(SECONDS_PER_DAY))
 
 
 def bucket_start(ts: Column, tier: str) -> Column:

@@ -22,14 +22,10 @@ through a fixed IEEE op sequence, identical in Spark and DuckDB).
 Plan shape: one window over (key ORDER BY ts) — a single hash Exchange on
 the series key (none at all when the input is already hash-partitioned on
 key, e.g. read from the bucketed obs table) and zero Python. The rows
-frame is O(lookback) state per key, the same shape the online variant
-(``ZScoreMonitor`` on the streaming fold, streaming/seqfold.py) keeps.
+frame is O(lookback) state per key.
 """
 
 from __future__ import annotations
-
-import math
-from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -41,8 +37,7 @@ def quantize_fixed(col: Column, scale: float = 100.0) -> Column:
     Spark/DuckDB/NumPy; ROUND diverges at half-points). Non-finite values
     (NaN, ±Inf) quantize to NULL — never to 0 or Long.MAX (cast(NaN as
     long) is 0 non-ANSI / an error under ANSI; floor(Inf) cast saturates
-    to Long.MAX and would poison every window it enters), matching
-    ``ZScoreMonitor``'s math.isfinite test."""
+    to Long.MAX and would poison every window it enters)."""
     q = F.floor(col * F.lit(scale) + F.lit(0.5)).cast("long")
     finite = ~F.isnan(col) & (F.abs(col) != F.lit(float("inf")))
     return F.when(finite, q).otherwise(F.lit(None).cast("long"))
@@ -68,8 +63,7 @@ def rolling_zscore_anomalies(
     or zero window variance are never flagged (a constant window gives no
     scale to judge against). Precondition: (key, ts) is unique — a
     trailing ROWS frame is ill-defined under duplicate timestamps (tie
-    order is arbitrary in any engine). A row with a NULL ts is skipped,
-    as the streaming ``ZScoreMonitor`` fold skips it.
+    order is arbitrary in any engine). A row with a NULL ts is skipped.
 
     ``threshold`` must be an integer so the predicate stays exact; the
     common 2σ/3σ/4σ monitors all are. Exactness bound: the linear terms
@@ -135,75 +129,6 @@ def rolling_zscore_anomalies(
             F.round(z, 4).alias("z"),
         )
     )
-
-
-class ZScoreMonitor:
-    """The rolling z-score monitor as a per-key recursion: the streaming
-    fold's recursion (``streaming.seqfold``, whose protocol this
-    implements). Emits the (ts, value, n, dev, z) rows of
-    ``rolling_zscore_anomalies``: the same quantization
-    floor(value*scale + 0.5), the same trailing ROWS frame (a NULL or
-    non-finite value holds a frame position and the aggregates skip it),
-    the same integer flag predicate, and z from the same IEEE op sequence
-    over the same exact integers, rounded half-up at its shortest decimal
-    form as Spark's round does. The value is written as a double
-    ``value`` column.
-
-    State is the key's last ``lookback`` quantized values, oldest first,
-    unrolled into ``lookback`` long columns, with ``seen`` the number of
-    filled slots and bit i of ``nulls`` set when slot i holds a NULL; an
-    empty or NULL slot stores 0, which no reader takes for a value.
-
-    Precondition (shared with the batch operator): (key, ts) is unique; a
-    trailing ROWS frame is ill-defined under tied timestamps. The batch
-    operator is a zero-Python SQL window, a separate definition, so
-    stream == batch is checked by tests, not guaranteed by
-    construction."""
-
-    name, emits, drop_nulls = "zscore", "anomalies", False
-    out = ("ts timestamp", "value double", "n long", "dev long", "z double")
-
-    def __init__(
-        self, lookback: int = 12, min_obs: int = 8, threshold: int = 3,
-        scale: float = 100.0,
-    ) -> None:
-        if threshold != int(threshold):
-            raise ValueError("threshold must be an integer (stays in int64)")
-        if not 0 < lookback < 64:
-            raise ValueError("lookback must be in 1..63 (one bit per slot)")
-        self.lookback, self.min_obs, self.scale = lookback, min_obs, scale
-        self.t2 = int(threshold) * int(threshold)
-        self.state = ("last_ts_us long", "seen long", "nulls long",
-                      *(f"v{i} long" for i in range(lookback)))
-
-    def fold(self, ts_us, ys: list[float | None], state: tuple | None):
-        """One key's next values: ((ts, value, n, dev, z) columns of its
-        anomalies, new state)."""
-        window: list[int | None] = []
-        if state is not None:
-            _last, seen, nulls, *slots = state
-            window = [None if nulls >> i & 1 else slots[i] for i in range(seen)]
-        out: tuple[list, ...] = ([], [], [], [], [])
-        for t, y in zip(ts_us, ys):
-            finite = y is not None and math.isfinite(y)
-            v = math.floor(y * self.scale + 0.5) if finite else None
-            live = [x for x in window if x is not None]
-            n = len(live)
-            if v is not None and n >= self.min_obs:
-                s1 = sum(live)
-                nvar = n * sum(x * x for x in live) - s1 * s1
-                dev = v * n - s1
-                if nvar > 0 and dev * dev * (n - 1) > self.t2 * n * nvar:
-                    z = float(dev) / math.sqrt(float(n) * float(nvar) / float(n - 1))
-                    z = float(Decimal(repr(z)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
-                    for col, x in zip(out, (t, y, n, dev, z)):
-                        col.append(x)
-            window.append(v)
-            del window[:-self.lookback]
-        nulls = sum(1 << i for i, x in enumerate(window) if x is None)
-        slots = [0 if x is None else x for x in window]
-        slots += [0] * (self.lookback - len(window))
-        return out, (ts_us[-1], len(window), nulls, *slots)
 
 
 def exact_group_corr(

@@ -8,8 +8,8 @@ a line-level analog of document dedup: hash each line, count distinct
 documents per (source, line), flag lines above a document-frequency
 threshold, and report how much of each document is boilerplate.
 
-Reference analog: the per-pixel common mask (generate_mask.py /
-common_valid_keys here) — a cell flagged by MANY epochs is structural,
+Reference analog: the per-pixel common mask (generate_mask.py) — a
+cell flagged by MANY epochs is structural,
 not signal — applied to text lines instead of pixels.
 
 Scale shape (inverted-index family, like operators/tfidf.py):
@@ -56,26 +56,6 @@ def doc_lines(
     )
 
 
-def boilerplate_lines(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group: str = "source",
-    min_docs: int = 3,
-) -> DataFrame:
-    """(group, line_hash, n_docs, line): lines appearing in >= min_docs
-    DISTINCT documents of the same group, with one representative line
-    text (the minimum — deterministic) for inspection."""
-    staged = doc_lines(docs, text_col, id_col, group).select(
-        group, id_col, "line", portable_hash60(F.col("line")).alias("line_hash")
-    )
-    posting = staged.groupBy(group, "line_hash").agg(
-        F.countDistinct(id_col).alias("n_docs"),
-        F.min("line").alias("line"),
-    )
-    return posting.where(F.col("n_docs") >= min_docs)
-
-
 def boilerplate_coverage(
     docs: DataFrame,
     text_col: str = "text",
@@ -95,8 +75,7 @@ def boilerplate_coverage(
     persisted (one-slot cache) and both the boilerplate posting list
     (df >= min_docs) and the per-doc coverage join read it — the line
     explode is the dominant row-multiplying stage, so running it twice
-    (as calling boilerplate_lines here would) doubles corpus-scale
-    work for no reason."""
+    would double corpus-scale work for no reason."""
     from mintpy_spark.plans.cache import persist_slot
 
     lined = persist_slot(

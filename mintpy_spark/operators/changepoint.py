@@ -15,10 +15,7 @@ near-cancellation makes the argmax flip at ulp level). Counts come from the
 
 Plan shape: one hash aggregation to the 1d counts + one window over the
 series key (both shuffle on the same key — with the tier stored
-hash-partitioned on key, a single Exchange) + a rank filter. Online
-counterpart: ``operators.diff.ChangeEvents`` on the streaming fold
-(streaming/seqfold.py), which emits each change of a url's length as it
-arrives.
+hash-partitioned on key, a single Exchange) + a rank filter.
 """
 
 from __future__ import annotations

@@ -1,48 +1,16 @@
-"""Series algebra: diffs, pairwise deltas, temporal derivative.
+"""Series algebra: pairwise deltas, temporal derivative, closures, stitching.
 
-Recasts the reference's schema-aligned binary dataset combinations
-(SURVEY.md §2.3; reference: src/mintpy/diff.py, src/mintpy/add.py,
-objects/stack.py:459-478) as equi-joins / windows on (key, ts).
+Recasts the reference's schema-aligned dataset combinations (SURVEY.md
+§2.3; reference: src/mintpy/diff.py, objects/stack.py:459-478) as
+equi-joins / windows on (key, ts). The registry computes the plain
+``a - b`` and the NaN-union ``a + b`` inline (queries_ops
+``diff_series_vs_rollup``, ``add_series_nan_union``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def diff_series(
-    a: DataFrame,
-    b: DataFrame,
-    value_col: str,
-    how: str = "inner",
-    key: str = "url",
-    ts: str = "warc_ts",
-) -> DataFrame:
-    """a - b on shared (key, ts) — diff_timeseries (diff.py:58-149).
-
-    how='inner' keeps only shared timestamps (the default there); 'left'
-    mirrors ``--force`` (missing b treated as 0, diff.py:100-104).
-    """
-    bb = b.select(key, ts, F.col(value_col).alias("_b"))
-    joined = a.join(bb, [key, ts], how)
-    rhs = F.coalesce(F.col("_b"), F.lit(0.0)) if how == "left" else F.col("_b")
-    return joined.select(key, ts, (F.col(value_col) - rhs).alias(value_col))
-
-
-def add_series(
-    dfs: list[DataFrame], value_col: str, key: str = "url", ts: str = "warc_ts"
-) -> DataFrame:
-    """N-way sum with NaN-union semantics (add.py:18-87: a cell is null only
-    if null in all inputs; otherwise nulls count as 0)."""
-    out = None
-    for i, df in enumerate(dfs):
-        cur = df.select(key, ts, F.col(value_col).alias(f"_v{i}"))
-        out = cur if out is None else out.join(cur, [key, ts], "outer")
-    vals = [F.col(f"_v{i}") for i in range(len(dfs))]
-    all_null = F.coalesce(*vals).isNull() if len(vals) > 1 else vals[0].isNull()
-    total = sum((F.coalesce(v, F.lit(0.0)) for v in vals[1:]), F.coalesce(vals[0], F.lit(0.0)))
-    return out.select(key, ts, F.when(all_null, None).otherwise(total).alias(value_col))
 
 
 def pair_deltas(
@@ -123,65 +91,6 @@ def temporal_derivative(
             (F.col(value_col) - F.lag(value_col).over(w)).alias("deriv"),
         )
         .where(F.col("deriv").isNotNull())
-    )
-
-
-class ChangeEvents:
-    """Per-url page-change events, one row per CHANGE of the observed
-    length: the streaming fold's recursion (``streaming.seqfold``, whose
-    protocol this implements). The first observation of a url counts as
-    a change from nothing, with NULL ``prev_length`` and ``delta``; a
-    repeat of the last length emits nothing. Values are lengths: a
-    fractional one is truncated, as ``cast(value as long)``; a NULL one
-    carries no update.
-
-    ``batch_change_events`` is the lag-window twin that the tests compare
-    the fold against; the two are separate definitions, so stream ==
-    batch is checked by tests, not guaranteed by construction.
-
-    Reference analog: the update-mode re-run skip (utils/utils1.py:691
-    run_or_skip) detects "input changed since last run" at file
-    granularity; this is the same idea at row granularity."""
-
-    name, emits, drop_nulls = "changes", "events", True
-    state = ("last_ts_us long", "last_length long")
-    out = ("ts timestamp", "text_length long", "prev_length long", "delta long")
-
-    def fold(self, ts_us, ys: list[float], state: tuple | None):
-        """One url's next lengths: ((ts, text_length, prev_length, delta)
-        columns of its changes, new state)."""
-        _last, prev = state or (None, None)
-        out: tuple[list, ...] = ([], [], [], [])
-        for t, y in zip(ts_us, ys):
-            y = int(y)
-            if y != prev:
-                row = (t, y, prev, None if prev is None else y - prev)
-                for col, v in zip(out, row):
-                    col.append(v)
-            prev = y
-        return out, (ts_us[-1], prev)
-
-
-def batch_change_events(obs: DataFrame) -> DataFrame:
-    """obs(url, warc_ts, text_length) -> (url, warc_ts, text_length,
-    prev_length, delta): one row per change of a url's length along
-    time, the first observation included (NULL prev_length and delta).
-    One lag window; the reference the streaming ``ChangeEvents`` fold is
-    tested against. A row with a NULL ``warc_ts`` is skipped, as the
-    fold skips it."""
-    w = Window.partitionBy("url").orderBy("warc_ts")
-    prev = F.lag("text_length").over(w)
-    return (
-        obs.where(F.col("warc_ts").isNotNull())
-        .withColumn("prev_length", prev)
-        .where(F.col("prev_length").isNull() | (F.col("prev_length") != F.col("text_length")))
-        .select(
-            "url",
-            "warc_ts",
-            F.col("text_length").cast("long").alias("text_length"),
-            F.col("prev_length").cast("long").alias("prev_length"),
-            (F.col("text_length") - F.col("prev_length")).cast("long").alias("delta"),
-        )
     )
 
 

@@ -10,21 +10,14 @@ arbitrary (possibly non-UTF8) bytes. ``extract_text`` must recover the text
 **byte-for-byte** (`BASELINE.json` input_hint: "byte-identical extracted
 text per url").
 
-Execution model — two implementations, same output bytes:
-
-* ``extract_text`` (default): pure Catalyst expressions on the payload's
-  bytes. The payload is viewed as a string without copying it, the markers
-  are located on that view and measured in bytes, the body is cut as a
-  binary slice and decoded (malformed UTF-8 -> U+FFFD) only when it is not
-  valid UTF-8. Nothing but the body is ever converted, and everything
-  stays inside whole-stage codegen: no bytes cross the JVM/Python
-  boundary.
-* ``extract_text_arrow``: Arrow-batched ``mapInPandas`` doing the same
-  marker scan with ``bytes.find`` — kept as the template for payload
-  transforms that genuinely need Python (see operators/multimodal.py) and
-  as an independent implementation for parity tests. It decodes with the
-  ``jvm-replace`` error handler, which replaces malformed input exactly as
-  the JVM's UTF-8 decoder does.
+Execution model: ``extract_text`` is pure Catalyst expressions on the
+payload's bytes. The payload is viewed as a string without copying it, the
+markers are located on that view and measured in bytes, the body is cut as
+a binary slice and decoded (malformed UTF-8 -> U+FFFD) only when it is not
+valid UTF-8. Nothing but the body is ever converted, and everything stays
+inside whole-stage codegen: no bytes cross the JVM/Python boundary. The
+tests hold two independent twins it must match byte for byte: a
+whole-payload decode in SQL and a Python ``bytes.find`` extractor.
 
 At 100 TB this is the one stage that must touch every payload byte, so it
 is embarrassingly parallel by design: no shuffle, runs at scan parallelism,
@@ -34,54 +27,11 @@ text flows onward.
 
 from __future__ import annotations
 
-import codecs
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 BODY_OPEN = b"<body>"
 BODY_CLOSE = b"</body>"
-JVM_REPLACE = "jvm-replace"
-
-
-def _jvm_replace(exc: UnicodeError) -> tuple[str, int]:
-    """Decode error handler: ``errors="replace"`` as the JVM's UTF-8
-    decoder does it. The two differ on one shape only: an encoded surrogate
-    lead ``ED [A0-BF]`` (plus its continuation byte ``[80-BF]`` when one
-    follows). Python rejects the ``ED`` alone and then each continuation
-    byte, writing up to three U+FFFD; the JVM reads the sequence as one
-    malformed character and writes one U+FFFD."""
-    if isinstance(exc, UnicodeDecodeError):
-        b, i = exc.object, exc.start
-        if b[i] == 0xED and i + 1 < len(b) and 0xA0 <= b[i + 1] <= 0xBF:
-            j = i + 2
-            if j < len(b) and 0x80 <= b[j] <= 0xBF:
-                j += 1
-            return "\ufffd", j
-    return codecs.replace_errors(exc)
-
-
-codecs.register_error(JVM_REPLACE, _jvm_replace)
-
-
-def extract_text_bytes(html: bytes) -> bytes | None:
-    """Recover the embedded text bytes from one payload.
-
-    Returns None when no well-formed body is present (malformed page).
-    Uses the FIRST ``<body>`` and the LAST ``</body>`` so text containing
-    the literal marker substrings round-trips unharmed.
-    """
-    if html is None:
-        return None
-    i = html.find(BODY_OPEN)
-    if i < 0:
-        return None
-    j = html.rfind(BODY_CLOSE)
-    if j < i:
-        return None
-    return html[i + len(BODY_OPEN): j]
 
 
 def extract_text(
@@ -135,29 +85,3 @@ def extract_text(
     return staged.withColumn(
         "_x_b", F.when(ok, F.substring(html, lp + F.lit(len(BODY_OPEN) + 1), body_len))
     ).select(*cols, text.alias(out_col))
-
-
-def extract_text_arrow(
-    pages: DataFrame,
-    html_col: str = "html",
-    out_col: str = "extracted_text",
-    keep_html: bool = False,
-) -> DataFrame:
-    """Arrow/pandas implementation of extract_text (see module docstring)."""
-    out_fields = [f"{f.name} {f.dataType.simpleString()}" for f in pages.schema.fields
-                  if keep_html or f.name != html_col]
-    schema = ", ".join(out_fields + [f"{out_col} string"])
-    keep_cols = [f.name for f in pages.schema.fields if keep_html or f.name != html_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            raw = pdf[html_col]
-            texts = []
-            for h in raw:
-                b = extract_text_bytes(bytes(h) if h is not None else None)
-                texts.append(b.decode("utf-8", errors=JVM_REPLACE) if b is not None else None)
-            out = pdf[keep_cols].copy()
-            out[out_col] = pd.Series(texts, index=pdf.index, dtype="object")
-            yield out
-
-    return pages.mapInPandas(run, schema)

@@ -3,7 +3,12 @@
 Reference analogs (objects/stack.py:481-541 ``timeseries.filter``):
 * Gaussian-weighted moving average: weights exp(-dt^2 / (2 sigma^2))
   normalized over the window (stack.py:505-520),
-* running median over a +-half-window (stack.py:522-528).
+* exponentially weighted moving average.
+
+The running mean and median over a +-half-window (stack.py:522-528) are
+plain range-frame aggregates, computed inline by the registry
+(``temporal_filter_runmean``, ``temporal_filter_runmedian``) over
+``_range_window``.
 
 Spark recast: range-frame windows over unix seconds — partition-local after
 one shuffle on the key. Spark has no weighted average over a range frame,
@@ -15,7 +20,7 @@ path materializes the frame via ``collect_list`` and folds it with
 Memory bound: the collect_list buffer is O(rows x window_width) — fine for
 sparse crawl-revisit series (the target workload); for dense
 high-frequency keys, pre-bucket to a coarser tier first (rollup) or use
-the running-mean filter, which needs no per-row frame materialization.
+a running mean, which needs no per-row frame materialization.
 """
 
 from __future__ import annotations
@@ -33,42 +38,6 @@ def _range_window(key: str, ts: str, half_window_days: float) -> Window:
         .orderBy(F.unix_micros(F.col(ts).cast("timestamp")))
         .rangeBetween(-half, half)
     )
-
-
-def running_median(
-    obs: DataFrame,
-    value_col: str,
-    half_window_days: float = 15.0,
-    key: str = "url",
-    ts: str = "warc_ts",
-) -> DataFrame:
-    """Median of values within +-half_window (stack.py:522-528).
-
-    Spark disallows ``median`` over a window frame, so the exact median is
-    computed JVM-side from a sorted collect over the bounded range frame
-    (list size bounded by the window width).
-    """
-    w = _range_window(key, ts, half_window_days)
-    arr = F.array_sort(F.collect_list(F.col(value_col).cast("double")).over(w))
-    lo = F.element_at("_arr", ((F.size("_arr") + 1) / 2).cast("int"))
-    hi = F.element_at("_arr", (F.size("_arr") / 2 + 1).cast("int"))
-    return (
-        obs.withColumn("_arr", arr)
-        .withColumn("smoothed", (lo + hi) / 2.0)
-        .drop("_arr")
-    )
-
-
-def running_mean(
-    obs: DataFrame,
-    value_col: str,
-    half_window_days: float = 15.0,
-    key: str = "url",
-    ts: str = "warc_ts",
-) -> DataFrame:
-    """Unweighted moving average over the range frame."""
-    w = _range_window(key, ts, half_window_days)
-    return obs.withColumn("smoothed", F.avg(value_col).over(w))
 
 
 def gaussian_filter(

@@ -34,7 +34,7 @@ same result by construction, containment distributes over the split.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _US = 1_000_000
@@ -74,41 +74,6 @@ def _raw_bucket_join(
         & (pt[ts] <= iv[end])
     )
     return iv.join(pt, cond, how), iv, pt, w
-
-
-def bucketed_interval_join(
-    intervals: DataFrame,
-    points: DataFrame,
-    start: str = "session_start",
-    end: str = "session_end",
-    ts: str = "ts",
-    bucket_seconds: int = 3600,
-    how: str = "inner",
-) -> DataFrame:
-    """Join every point row to every interval row with
-    start <= ts <= end (inclusive both ends), via the bucket-explode
-    equi-join above. Returns intervals' columns + points' columns
-    (bucket helper columns dropped). ``how='left'`` keeps empty
-    intervals with exact SQL left-join arity: ONE (interval, NULL) row
-    per interval row with zero matches, none for intervals that
-    matched. The dedup is a window count over the interval's own
-    columns (identical duplicate interval rows merge harmlessly — they
-    match identical point sets, and each still contributes its own
-    first-bucket NULL row), keeping matched rows plus the unmatched
-    first-bucket row only when the whole interval saw no point."""
-    out, iv, pt, w = _raw_bucket_join(
-        intervals, points, start, end, ts, bucket_seconds, how
-    )
-    if how == "left":
-        win = Window.partitionBy(*[iv[c] for c in intervals.columns])
-        first_b = F.floor(
-            F.unix_micros(iv[start].cast("timestamp")) / w
-        )
-        out = out.withColumn("_nm", F.count(pt[ts]).over(win)).where(
-            pt[ts].isNotNull()
-            | ((F.col("_nm") == 0) & (iv["_b"] == first_b))
-        ).drop("_nm")
-    return out.drop(iv["_b"]).drop(pt["_b"])
 
 
 def interval_point_counts(

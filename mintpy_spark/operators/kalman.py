@@ -182,23 +182,22 @@ def kalman_em_stats(
         "r1_e4 long, q1_e4 long"
     )
 
-    # (p_t, J_t, Vs_t) depend only on the series length — cache per n
-    var_cache: dict[int, tuple[list[float], list[float], list[float]]] = {}
+    # the forward filter and its variances p_t are LocalLevel's; the
+    # smoother's (J_t, Vs_t) depend only on the series length — cache per n
+    rec = LocalLevel(qq, rr)
+    var_cache: dict[int, tuple[list[float], list[float]]] = {}
 
-    def variances(n: int) -> tuple[list[float], list[float], list[float]]:
+    def variances(n: int) -> tuple[list[float], list[float]]:
         got = var_cache.get(n)
         if got is None:
-            p = [rr]
-            for _ in range(1, n):
-                pp = p[-1] + qq
-                kg = pp / (pp + rr)
-                p.append((1.0 - kg) * pp)
+            rec._extend(n)
+            p = rec._p
             j = [p[t] / (p[t] + qq) for t in range(n - 1)]
             vs = [0.0] * n
             vs[n - 1] = p[n - 1]
             for t in range(n - 2, -1, -1):
                 vs[t] = p[t] + j[t] * j[t] * (vs[t + 1] - (p[t] + qq))
-            got = (p, j, vs)
+            got = (j, vs)
             var_cache[n] = got
         return got
 
@@ -211,14 +210,8 @@ def kalman_em_stats(
             n = len(ys)
             if n < 2:
                 continue
-            p, j, vs = variances(n)
-            # forward means (gain sequence = j-shifted identity shares
-            # the p recursion; recompute the gain exactly as the oracle)
-            m = [ys[0]]
-            for t in range(1, n):
-                pp = p[t - 1] + qq
-                kg = pp / (pp + rr)
-                m.append(m[-1] + kg * (ys[t] - m[-1]))
+            j, vs = variances(n)
+            m = rec.levels(ys)[0]  # forward means
             # backward smoothed means
             ms = [0.0] * n
             ms[n - 1] = m[n - 1]
@@ -382,17 +375,7 @@ def kalman_level_adaptive(
         out_lv: list[float] = []
         for kval, g in pdf.groupby("k", sort=False):
             ys = g["y"].tolist()
-            qk = float(g["qk"].iloc[0])
-            rk = float(g["rk"].iloc[0])
-            m = ys[0]
-            p = rk
-            levels = [m]
-            for y in ys[1:]:
-                pp = p + qk
-                kg = pp / (pp + rk)
-                m = m + kg * (y - m)
-                p = (1.0 - kg) * pp
-                levels.append(m)
+            levels = LocalLevel(g["qk"].iloc[0], g["rk"].iloc[0]).levels(ys)[0]
             out_k.extend([kval] * len(ys))
             out_rn.extend(range(1, len(ys) + 1))
             out_lv.extend(levels)

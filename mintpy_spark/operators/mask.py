@@ -5,25 +5,18 @@ Reference analogs (SURVEY.md §2.2):
   fill value (NaN); here: NULL-out or filter.
 * create_threshold_mask (generate_mask.py:44-170) — boolean mask from
   min/max value thresholds.
-* nonzero/common mask (stack.py:972-998) — valid in ALL epochs.
 * dropIfgram retention flag (stack.py:846-853, update :1370) — soft-delete
-  flag honored by every read; plus hard retention by age.
+  flag honored by every read.
+
+The registry computes the common mask (stack.py:972-998, valid in ALL
+epochs) inline as ``common_valid_keys``, and retention by age is
+``operators/retention.compact_raw``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def remap_nodata(obs: DataFrame, value_col: str, sentinels=(0.0,)) -> DataFrame:
-    """Sentinel no-data values -> NULL (the reference treats literal 0 phase
-    as no-data, ifgram_inversion.py:713-715; NaN -> NULL too)."""
-    v = F.col(value_col)
-    cond = F.isnan(v) if dict(obs.dtypes)[value_col] in ("double", "float") else F.lit(False)
-    for s in sentinels:
-        cond = cond | (v == F.lit(s))
-    return obs.withColumn(value_col, F.when(cond, None).otherwise(v))
 
 
 def threshold_mask(value: Column, vmin=None, vmax=None) -> Column:
@@ -45,22 +38,6 @@ def apply_mask(obs: DataFrame, value_col: str, mask: Column, fill=None) -> DataF
     )
 
 
-def common_valid_keys(
-    obs: DataFrame, value_col: str, key: str = "url", ts: str = "warc_ts",
-    min_epochs: int | None = None,
-) -> DataFrame:
-    """Keys valid (non-null) in ALL epochs they appear in, optionally with a
-    minimum epoch count — the nonzero_mask ALL-aggregate (stack.py:972-998)."""
-    agg = obs.groupBy(key).agg(
-        F.min(F.col(value_col).isNotNull()).alias("_all_valid"),
-        F.count(ts).alias("_n"),
-    )
-    cond = F.col("_all_valid")
-    if min_epochs is not None:
-        cond = cond & (F.col("_n") >= min_epochs)
-    return agg.where(cond).select(key)
-
-
 def tombstone(
     table: DataFrame, predicate: Column, flag_col: str = "dropped"
 ) -> DataFrame:
@@ -75,14 +52,3 @@ def live(table: DataFrame, flag_col: str = "dropped") -> DataFrame:
     if flag_col not in table.columns:
         return table
     return table.where(~F.col(flag_col))
-
-
-def retain_recent(
-    table: DataFrame, max_age_days: float, now_ts, ts: str = "warc_ts"
-) -> DataFrame:
-    """Hard retention: drop rows older than the horizon. ``now_ts`` is
-    passed explicitly (deterministic plans; no current_timestamp())."""
-    horizon = F.lit(now_ts).cast("timestamp") - F.expr(
-        f"interval {int(max_age_days * 86400)} seconds"
-    )
-    return table.where(F.col(ts) >= horizon)

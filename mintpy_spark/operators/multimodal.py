@@ -3,17 +3,16 @@
 Treats media payloads as opaque ``binary`` columns with typed metadata,
 exactly like the engine treats ``html``. The Spark-side machinery — schema,
 Arrow batch shape, mapInPandas signatures, partition behavior — is real and
-tested. Decode has two real codecs and a stub tier:
+tested. ``decode_media`` has a real tier and a stub tier:
 
 * ``decode_stub=False`` runs REAL pure-NumPy decoders — BMP
   (decode_bmp), PNG via stdlib zlib (decode_png, all color types +
-  filters), GIF (full LZW), WAV (decode_wav), and baseline-sequential
-  JPEG pixels (operators/jpegdec.decode_jpeg: Huffman + IDCT + 4:2:0
-  upsample, cross-checked against javax.imageio) — and raises
-  ``NotImplementedError``/``ValueError`` at the exact call site where
-  PIL/ffmpeg would slot in for the remaining tail (progressive or
-  arithmetic-coded JPEG, MP3/AAC samples, MP4 frames).
-* ``decode_stub=True`` derives deterministic fake metadata/features from a
+  filters), GIF (full LZW) and WAV (decode_wav); JPEG dimensions come
+  from the SOF header (jpeg_dimensions) and MP4 duration from the mvhd
+  box (mp4_duration_ms) — and raises ``NotImplementedError`` at the
+  exact call site where PIL/ffmpeg would slot in for the remaining
+  formats.
+* ``decode_stub=True`` derives deterministic fake metadata from a
   payload digest for any format (plumbing tests, compressed formats).
 
 At 100 TB this stage is the same shape as extract_text: embarrassingly
@@ -213,64 +212,6 @@ def _bmp_unrle8(data: bytes, w: int, h: int) -> np.ndarray:
     return out
 
 
-def encode_bmp8(
-    idx: np.ndarray, palette: np.ndarray, rle: bool = False
-) -> bytes:
-    """Index array (h, w) + palette (n, 3) RGB -> 8-bpp paletted BMP
-    bytes (BITMAPINFOHEADER, bottom-up, BGRA color table), uncompressed
-    or RLE8. Fixture encoder for the paletted decode path; the RLE
-    stream mixes runs, word-aligned literals and end-of-line escapes."""
-    h, w = idx.shape
-    assert idx.dtype == np.uint8 and palette.dtype == np.uint8
-    used = palette.shape[0]
-    table = np.zeros((used, 4), np.uint8)
-    table[:, :3] = palette[:, ::-1]  # RGB -> BGRA (alpha 0)
-    if not rle:
-        row = (w + 3) // 4 * 4
-        body = np.zeros((h, row), np.uint8)
-        body[:, :w] = idx[::-1]  # bottom-up
-        pix, comp = body.tobytes(), 0
-    else:
-        out = bytearray()
-        for r in idx[::-1]:
-            x = 0
-            while x < w:
-                run = 1
-                while x + run < w and r[x + run] == r[x] and run < 255:
-                    run += 1
-                if run >= 3 or r[x] == r[min(x + 1, w - 1)]:
-                    out += bytes([run, r[x]])
-                    x += run
-                else:
-                    lit = min(255, w - x)
-                    # literal runs must be >= 3 bytes; shorter tails
-                    # become unit runs
-                    if lit >= 3:
-                        out += bytes([0, lit]) + bytes(r[x : x + lit])
-                        if lit & 1:
-                            out.append(0)
-                        x += lit
-                    else:
-                        out += bytes([1, r[x]])
-                        x += 1
-            out += bytes([0, 0])  # end of line
-        out += bytes([0, 1])  # end of bitmap
-        pix, comp = bytes(out), 1
-    pix_off = 14 + 40 + used * 4
-    info = (
-        (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little") + h.to_bytes(4, "little")
-        + (1).to_bytes(2, "little") + (8).to_bytes(2, "little")
-        + comp.to_bytes(4, "little") + len(pix).to_bytes(4, "little")
-        + bytes(8) + used.to_bytes(4, "little") + bytes(4)
-    )
-    header = (
-        b"BM" + (pix_off + len(pix)).to_bytes(4, "little")
-        + bytes(4) + pix_off.to_bytes(4, "little")
-    )
-    return header + info + table.tobytes() + pix
-
-
 def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
     """int16 array (n,) or (n, channels) -> canonical RIFF/WAVE bytes
     (PCM fmt chunk + data chunk)."""
@@ -303,8 +244,7 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     re-centered), 16 (native), 24 (sign-extended) and 32 bits, IEEE
     float32, and WAVE_FORMAT_EXTENSIBLE wrapping either — wider-than-16
     samples downconvert to int16 by taking the top 16 bits, the standard
-    lossy narrowing (amplitude semantics preserved for the RMS features
-    downstream). Compressed codecs (ADPCM/MP3/...) are where ffmpeg would
+    lossy narrowing (amplitude semantics preserved). Compressed codecs (ADPCM/MP3/...) are where ffmpeg would
     slot in."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a WAV payload")
@@ -388,97 +328,6 @@ def _png_chunk(tag: bytes, body: bytes) -> bytes:
         len(body).to_bytes(4, "big") + tag + body
         + (zlib.crc32(tag + body) & 0xFFFFFFFF).to_bytes(4, "big")
     )
-
-
-def _pack_subbyte(idx: np.ndarray, depth: int) -> np.ndarray:
-    """Sample array (h, w) with values < 2**depth -> packed scanline bytes
-    (h, stride), MSB-first within each byte per the PNG spec."""
-    h, w = idx.shape
-    if depth == 8:
-        return idx
-    per = 8 // depth
-    pad = (-w) % per
-    padded = np.pad(idx, ((0, 0), (0, pad)))
-    bits = (
-        (padded[..., None] >> np.arange(depth - 1, -1, -1)) & 1
-    ).reshape(h, -1).astype(np.uint8)
-    return np.packbits(bits, axis=1)
-
-
-def encode_png_gray(
-    gray: np.ndarray, depth: int = 8, alpha: np.ndarray | None = None,
-    trns_level: int | None = None,
-) -> bytes:
-    """Grayscale sample array (h, w) with raw values < 2**depth -> PNG
-    bytes (color type 0, depths 1/2/4/8; or color type 4 gray+alpha at
-    depth 8 when ``alpha`` is given). ``trns_level`` adds a 2-byte tRNS
-    chunk (color-type-0 transparency). Fixture encoder for the grayscale
-    decode path — pure stdlib like encode_png."""
-    import zlib
-
-    h, w = gray.shape
-    assert gray.dtype == np.uint8 and depth in (1, 2, 4, 8)
-    assert int(gray.max(initial=0)) < (1 << depth)
-    if alpha is not None:
-        assert depth == 8 and alpha.shape == gray.shape
-        ctype = 4
-        packed = np.stack([gray, alpha], axis=2).reshape(h, w * 2)
-    else:
-        ctype = 0
-        packed = _pack_subbyte(gray, depth)
-    raw = np.concatenate(
-        [np.zeros((h, 1), np.uint8), packed], axis=1
-    ).tobytes()
-    ihdr = (
-        w.to_bytes(4, "big") + h.to_bytes(4, "big")
-        + bytes([depth, ctype, 0, 0, 0])
-    )
-    out = b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
-    if trns_level is not None:
-        out += _png_chunk(b"tRNS", int(trns_level).to_bytes(2, "big"))
-    return out + _png_chunk(b"IDAT", zlib.compress(raw, 6)) + _png_chunk(
-        b"IEND", b""
-    )
-
-
-def encode_png_palette(
-    idx: np.ndarray, palette: np.ndarray, depth: int = 8,
-    trns: bytes | None = None,
-) -> bytes:
-    """Index array (h, w) + palette (n, 3) -> paletted PNG bytes (color
-    type 3, PLTE chunk, optional tRNS, filter-0 scanlines). ``depth`` in
-    {1, 2, 4, 8}; sub-byte depths pack MSB-first per the spec. Fixture
-    encoder for the paletted decode path — pure stdlib like encode_png."""
-    import zlib
-
-    h, w = idx.shape
-    assert idx.dtype == np.uint8 and palette.dtype == np.uint8
-    assert depth in (1, 2, 4, 8) and int(idx.max(initial=0)) < (1 << depth)
-    chunk = _png_chunk
-
-    if depth == 8:
-        packed = idx
-    else:
-        per = 8 // depth
-        pad = (-w) % per
-        padded = np.pad(idx, ((0, 0), (0, pad)))
-        bits = (
-            (padded[..., None] >> np.arange(depth - 1, -1, -1)) & 1
-        ).reshape(h, -1).astype(np.uint8)
-        packed = np.packbits(bits, axis=1)
-    raw = np.concatenate(
-        [np.zeros((h, 1), np.uint8), packed], axis=1
-    ).tobytes()
-    ihdr = (
-        w.to_bytes(4, "big") + h.to_bytes(4, "big")
-        + bytes([depth, 3, 0, 0, 0])
-    )
-    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + chunk(
-        b"PLTE", palette.tobytes()
-    )
-    if trns is not None:
-        out += chunk(b"tRNS", trns)
-    return out + chunk(b"IDAT", zlib.compress(raw, 6)) + chunk(b"IEND", b"")
 
 
 def _png_unfilter(rows: np.ndarray, stride: int, fo: int) -> np.ndarray:
@@ -666,67 +515,6 @@ def _gif_interlace_order(h: int) -> list[int]:
         list(range(0, h, 8)) + list(range(4, h, 8))
         + list(range(2, h, 4)) + list(range(1, h, 2))
     )
-
-
-def encode_gif(
-    idx: np.ndarray, palette: np.ndarray, interlace: bool = False,
-    transparent: int | None = None,
-) -> bytes:
-    """Index array (h, w) + palette (n, 3) -> single-frame GIF89a bytes.
-    Fixture encoder, pure stdlib: emits a clear code before every pixel
-    code so the LZW code size never grows — a valid (if bulky) stream any
-    conformant decoder accepts. Optional interlace + GCE transparency."""
-    h, w = idx.shape
-    assert idx.dtype == np.uint8 and palette.dtype == np.uint8
-    min_code = max(2, int(np.ceil(np.log2(max(palette.shape[0], 2)))))
-    nslots = 1 << min_code
-    assert int(idx.max(initial=0)) < nslots
-    pal = np.zeros((nslots, 3), np.uint8)
-    pal[: palette.shape[0]] = palette
-    clear, end = nslots, nslots + 1
-    csize = min_code + 1
-
-    rows = idx
-    if interlace:
-        rows = idx[_gif_interlace_order(h)]
-    acc = nbits = 0
-    out = bytearray()
-
-    def put(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += csize
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    put(clear)
-    for px in rows.ravel():
-        put(int(px))
-        put(clear)
-    put(end)
-    if nbits:
-        out.append(acc & 0xFF)
-    blocks = b"".join(
-        bytes([len(out[i : i + 255])]) + bytes(out[i : i + 255])
-        for i in range(0, len(out), 255)
-    )
-    lsd_flags = 0x80 | (min_code - 1)  # global table, 2^min_code entries
-    gif = (
-        b"GIF89a"
-        + w.to_bytes(2, "little") + h.to_bytes(2, "little")
-        + bytes([lsd_flags, 0, 0]) + pal.tobytes()
-    )
-    if transparent is not None:
-        gif += bytes([0x21, 0xF9, 4, 0x01, 0, 0, transparent, 0])
-    gif += (
-        bytes([0x2C]) + bytes(4)
-        + w.to_bytes(2, "little") + h.to_bytes(2, "little")
-        + bytes([0x40 if interlace else 0])
-        + bytes([min_code]) + blocks + bytes([0, 0x3B])
-    )
-    return gif
 
 
 def _gif_lzw(min_code: int, data: bytes, npix: int) -> np.ndarray:
@@ -951,9 +739,8 @@ def _real_meta(payload: bytes) -> tuple[str, int | None, int | None,
         frames = samples.shape[0]
         return mtype, None, None, frames, rate, frames * 1000 // rate
     raise NotImplementedError(
-        f"real decode for {mtype} requires PIL/ffmpeg; BMP, PNG, GIF, WAV "
-        "and baseline JPEG (jpegdec.py) have pure-NumPy/stdlib decoders "
-        "in this sandbox"
+        f"real decode for {mtype} requires PIL/ffmpeg; BMP, PNG, GIF and "
+        "WAV have pure-NumPy/stdlib decoders, JPEG and MP4 header readers"
     )
 
 
@@ -975,7 +762,7 @@ def decode_media(
 ) -> DataFrame:
     """payload binary -> typed media metadata columns (Arrow-batched).
 
-    ``decode_stub=False`` runs the REAL decoders (BMP/WAV; see _real_meta)
+    ``decode_stub=False`` runs the REAL decoders (see _real_meta)
     and raises NotImplementedError per unsupported format — no caller can
     mistake stub output for real decode.
     """
@@ -1004,92 +791,6 @@ def decode_media(
                 ["object", "Int32", "Int32", "Int32", "Int32", "Int64"],
             ):
                 out[name] = pd.Series(vals, index=pdf.index, dtype=dtype)
-            yield out
-
-    return df.mapInPandas(run, schema)
-
-
-def extract_features(
-    df: DataFrame, payload_col: str = "payload", dim: int = 16,
-    decode_stub: bool = True,
-) -> DataFrame:
-    """payload -> float feature vector (array<float>).
-
-    ``decode_stub=True`` hashes bytes into a deterministic unit vector so
-    downstream similarity ops are exercised with stable values. The real
-    path (``decode_stub=False``) computes content features from the
-    decoded samples: a ``dim``-bin luminance histogram for BMP images,
-    ``dim`` windowed RMS energies for WAV audio — both L2-normalized, so
-    cosine similarity downstream is meaningful; a deep vision/audio
-    encoder would slot in at the same seam (the Arrow batch IS the
-    inference micro-batch), raising NotImplementedError for compressed
-    formats meanwhile.
-    """
-    passthrough = [c for c in df.columns if c != payload_col]
-    schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-         if f.name != payload_col]
-        + ["features array<float>"]
-    )
-
-    def _real_features(p: bytes) -> list[float]:
-        mtype = sniff_media_type(p)
-        if mtype in ("image/bmp", "image/png", "image/gif", "image/jpeg"):
-            if mtype == "image/jpeg":
-                # baseline-sequential pure-NumPy decode (jpegdec.py);
-                # progressive/arithmetic raise ValueError -> PIL seam
-                from mintpy_spark.operators.jpegdec import decode_jpeg
-
-                img = decode_jpeg(p)
-                if img.ndim == 2:
-                    img = np.stack([img] * 3, axis=-1)
-            else:
-                img = (
-                    decode_bmp(p) if mtype == "image/bmp"
-                    else decode_png(p)[:, :, :3] if mtype == "image/png"
-                    else decode_gif(p)[:, :, :3]
-                )
-            lum = img.astype(np.float32).mean(axis=2).ravel()
-            hist, _ = np.histogram(lum, bins=dim, range=(0.0, 256.0))
-            v = hist.astype(np.float32)
-        elif mtype == "audio/wav":
-            samples, _rate = decode_wav(p)
-            mono = samples.astype(np.float32).mean(axis=1)
-            n = max(len(mono) // dim, 1)
-            v = np.array(
-                [np.sqrt(np.mean(mono[i * n : (i + 1) * n] ** 2))
-                 if len(mono[i * n : (i + 1) * n]) else 0.0
-                 for i in range(dim)],
-                dtype=np.float32,
-            )
-        else:
-            raise NotImplementedError(
-                f"real features for {mtype} require PIL/ffmpeg"
-            )
-        nrm = float(np.linalg.norm(v))
-        return (v / nrm if nrm > 0 else v).tolist()
-
-    def _stub_features(p: bytes) -> list[float]:
-        # one sha256 digest is 32 bytes = 16 uint16 lanes; for dim > 16
-        # extend it counter-mode (sha256(digest || i)) so every requested
-        # dimension is real — silently truncating to 16 would hand
-        # downstream zip_with dot products mismatched array lengths
-        d = hashlib.sha256(p).digest()
-        while len(d) < dim * 2:
-            d += hashlib.sha256(d + len(d).to_bytes(4, "little")).digest()
-        v = np.frombuffer(d[: dim * 2], dtype=np.uint16).astype(np.float32)
-        nrm = float(np.linalg.norm(v))
-        return (v / nrm if nrm > 0 else v).tolist()
-
-    feat_fn = _stub_features if decode_stub else _real_features
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # null payload -> null feature row, not a crash
-            feats = [feat_fn(bytes(p)) if p is not None else None
-                     for p in pdf[payload_col]]
-            out = pdf[passthrough].copy()
-            out["features"] = pd.Series(feats, index=pdf.index, dtype="object")
             yield out
 
     return df.mapInPandas(run, schema)
@@ -1130,18 +831,3 @@ def attach_synth_payload(
         return ids.map(lambda i: synth_media_payload(int(i)))
 
     return df.withColumn(payload_col, synth(col(id_col)))
-
-
-def frame_sample_plan(n_frames_col: str, every_k: int = 8):
-    """Frame-sampling as a JVM-side expression: indexes [0, k, 2k, ...)
-    bounded by n_frames (the decode of selected frames happens in the
-    decoder stage; planning which frames stays in Catalyst). Media with
-    zero or unknown (NULL) frame count plans the EMPTY set — the
-    unguarded greatest(n-1, 0) form would schedule a phantom decode of
-    frame 0 that does not exist."""
-    from pyspark.sql import functions as F
-
-    n = F.col(n_frames_col)
-    return F.when(
-        n > 0, F.sequence(F.lit(0), n - 1, F.lit(every_k))
-    ).otherwise(F.array().cast("array<int>"))

@@ -1,4 +1,4 @@
-"""Explicit partitioning: salted repartition for skewed keys.
+"""Explicit partitioning: salted aggregation for skewed keys.
 
 north_rule: "salted repartition on hash(url) with skew-aware AQE splits
 for hot domains". Two mechanisms compose:
@@ -29,18 +29,6 @@ def salt_column(df: DataFrame, salt: int) -> Column:
     return F.pmod(
         F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt)
     ).cast("int")
-
-
-def salted_repartition(
-    df: DataFrame, key: str, num_partitions: int, salt: int = 8,
-    salt_col: str = "_salt",
-) -> DataFrame:
-    """Repartition on (key, salt-shard): rows of one hot key spread over
-    ``salt`` partitions instead of one. Downstream per-key aggregation
-    must be salted-first (see salted_agg)."""
-    return df.withColumn(salt_col, salt_column(df, salt)).repartition(
-        num_partitions, F.col(key), F.col(salt_col)
-    )
 
 
 def salted_agg(

@@ -1,13 +1,11 @@
-"""Re-referencing in time and space.
+"""Re-referencing in time.
 
-Reference analogs:
-* reference_date.py:57-146 — subtract each pixel's value at REF_DATE from
-  its whole series (``ts -= ts[ref_idx]``).
-* reference_point.py:28-167 — subtract the reference pixel's per-epoch value
-  from every pixel at that epoch.
-
-Spark recast: window/first-value subtraction keyed on url (time) and a
-broadcast join of the reference url's series (space).
+Reference analog: reference_date.py:57-146 — subtract each pixel's value at
+REF_DATE from its whole series (``ts -= ts[ref_idx]``). Spark recast: a
+window/first-value subtraction keyed on url. Re-referencing in space
+(reference_point.py:28-167, subtract the reference pixel's per-epoch value
+from every pixel at that epoch) is computed inline by the registry, against
+each epoch's cross-section mean (``ref_cross_section``).
 """
 
 from __future__ import annotations
@@ -34,38 +32,3 @@ def reference_in_time(
         w = Window.partitionBy(key)
         ref_val = F.max(F.when(F.col(ts) == F.lit(ref_ts), F.col(value_col))).over(w)
     return obs.withColumn(value_col, F.col(value_col) - ref_val)
-
-
-def reference_in_space(
-    obs: DataFrame,
-    value_col: str,
-    ref_key: str,
-    key: str = "url",
-    ts: str = "warc_ts",
-) -> DataFrame:
-    """v -> v - v[ref_key, same ts] for all keys: broadcast the reference
-    series (tiny dimension) and join on ts — no cross-key shuffle."""
-    ref = (
-        obs.where(F.col(key) == ref_key)
-        .select(F.col(ts).alias(ts), F.col(value_col).alias("_ref"))
-    )
-    return (
-        obs.join(F.broadcast(ref), ts, "left")
-        .withColumn(value_col, F.col(value_col) - F.coalesce(F.col("_ref"), F.lit(0.0)))
-        .drop("_ref")
-    )
-
-
-def auto_reference_key(
-    obs: DataFrame, quality_col: str, key: str = "url"
-) -> str:
-    """Pick the reference key with max mean quality — the max-coherence
-    auto-selection of reference_point.py:225."""
-    row = (
-        obs.groupBy(key)
-        .agg(F.avg(quality_col).alias("q"))
-        .orderBy(F.desc("q"), key)
-        .limit(1)
-        .collect()
-    )
-    return row[0][0]

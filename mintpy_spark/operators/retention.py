@@ -1,91 +1,19 @@
-"""Retention policy: hot raw window + compressed cold tier + tier-forever.
+"""Retention: downsample-then-delete of the raw observation files.
 
-The "retention engine" leg of the north rule made explicit as one
-operator: given the observation stream and a policy
-
-    raw:    keep observations in the trailing ``raw_days`` window as-is
-            (point queries, reprocessing, late-data merges hit this),
-    cold:   everything older is packed into Gorilla/delta-of-delta blocks
-            (codecs/blocks.py) — ~10-100x smaller, still losslessly
-            restorable (and byte-identical for text),
-    tiers:  aggregates live forever in the tier tables regardless
-            (built before compaction, so nothing is lost to it).
+The "retention engine" leg of the north rule: once the committed finest
+tier provably covers the raw rows below a cutoff, ``compact_raw`` deletes
+the raw files that hold only such rows. The tiers keep every aggregate
+forever, so nothing a tier query reads is lost to the deletion.
 
 Reference analog: the reference keeps full stacks forever in HDF5 and
-relies on chunk compression (stack.py:352-355); a crawl store cannot — the
-hot/cold split is what makes 10^12 rows affordable, and ``restore``
-proves the split is lossless.
-
-Scale: the split is two predicate scans (partition/row-group pruning on
-the timestamp makes each read only its side), packing is the existing
-Arrow-batched block codec, and ``restore`` is a union — no operator here
-adds a shuffle beyond what pack_blocks already does.
+relies on chunk compression (stack.py:352-355); a crawl store cannot, and
+dropping whole raw files behind a covering aggregate is what makes 10^12
+rows affordable.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from mintpy_spark.codecs.blocks import pack_blocks, unpack_blocks
-
-
-def apply_retention(
-    obs: DataFrame,
-    value_col: str,
-    raw_days: int = 90,
-    horizon=None,
-    key: str = "url",
-    ts: str = "warc_ts",
-    block_window: str = "30d",
-    value_dtype: str = "float64",
-) -> dict[str, DataFrame]:
-    """Split observations into {'raw': recent obs, 'cold': packed blocks}.
-
-    ``horizon`` (a timestamp Column/literal) overrides the data-derived
-    cutoff ``max(ts) - raw_days`` — pass it explicitly in production (the
-    data-derived form costs a 1-row broadcast aggregate, fine but
-    non-deterministic across growing inputs).
-    """
-    if horizon is None:
-        h = obs.agg(
-            (F.max(ts) - F.expr(f"INTERVAL {int(raw_days)} DAYS")).alias("_h")
-        )
-        obs = obs.crossJoin(F.broadcast(h))
-        cut = F.col("_h")
-    else:
-        cut = F.lit(horizon).cast("timestamp")
-        obs = obs.withColumn("_h", cut)
-    # rows with NULL ts or NULL value stay in the raw tier: the cold
-    # codec would drop the former (both range predicates are null-false)
-    # and NaN the latter — either silently breaks the lossless contract
-    clean = F.col(ts).isNotNull() & F.col(value_col).isNotNull()
-    raw = obs.where(~clean | (F.col(ts) >= F.col("_h"))).drop("_h")
-    old = obs.where(clean & (F.col(ts) < F.col("_h"))).drop("_h")
-    # float64 blocks by default: a retention store must be LOSSLESS (the
-    # codec's float32 default mirrors the reference compute dtype, which
-    # is a compute choice, not a storage one)
-    cold = pack_blocks(
-        old, value_col, window=block_window, key=key, ts=ts,
-        value_dtype=value_dtype,
-    )
-    return {"raw": raw, "cold": cold}
-
-
-def restore(
-    split: dict[str, DataFrame],
-    value_col: str,
-    key: str = "url",
-    ts: str = "warc_ts",
-) -> DataFrame:
-    """Union the hot window with the losslessly unpacked cold tier —
-    the full observation series again (proven equal by tests)."""
-    cold_obs = unpack_blocks(split["cold"]).select(
-        F.col("key").alias(key),
-        F.col("warc_ts").alias(ts),
-        F.col("value").alias(value_col),
-    )
-    return split["raw"].select(key, ts, value_col).unionByName(cold_obs)
 
 
 def compact_raw(

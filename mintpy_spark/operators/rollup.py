@@ -308,7 +308,7 @@ def histogram_tier(
         # NaN first: Spark orders NaN GREATER than any value, so without
         # this guard NaN satisfies v >= hi and lands in the overflow bin,
         # skewing every sketch quantile toward hi; NaN belongs in the
-        # NULL bin with NULL values (quantile_from_histogram drops it)
+        # NULL bin with NULL values
         F.when(F.isnan(v), F.lit(None).cast("int"))
         .when(v < lo, F.lit(0))
         .when(v >= hi, F.lit(nbins + 1))
@@ -339,46 +339,6 @@ def cascade_histogram(
         )
         .groupBy(key, "bucket_start", "bin")
         .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
-def quantile_from_histogram(
-    hist_df: DataFrame, q: float, lo: float, hi: float, nbins: int,
-    key: str = "url",
-) -> DataFrame:
-    """(key, bucket_start, q_approx): smallest bin upper edge whose
-    cumulative count reaches q * total — within one bin width of an
-    actual rank-q element WHEN that element lies in [lo, hi); quantiles
-    landing in the clipped under/overflow bins report the range edge
-    (pick [lo, hi) to cover the data, as with any fixed-range sketch)."""
-    from pyspark.sql import Window
-
-    width = (hi - lo) / nbins
-    w = (
-        Window.partitionBy(key, "bucket_start")
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    tot = Window.partitionBy(key, "bucket_start")
-    cum = F.sum("cnt").over(w)
-    total = F.sum("cnt").over(tot)
-    # bin upper edge, capped at hi: the overflow bin (nbins+1) otherwise
-    # reports hi + width, outside the sketch's own range
-    edge = F.least(
-        F.lit(lo) + F.col("bin").cast("double") * F.lit(width), F.lit(float(hi))
-    )
-    # drop the NULL bin histogram_tier emits for NULL/NaN values: NULLs
-    # sort first under orderBy('bin') and would inflate the cumulative
-    # and total counts, skewing the sketch quantile
-    hit = (
-        hist_df.where(F.col("bin").isNotNull())
-        .withColumn("_cum", cum)
-        .withColumn("_tot", total)
-        .where(F.col("_cum") >= F.lit(q) * F.col("_tot"))
-    )
-    return (
-        hit.groupBy(key, "bucket_start")
-        .agg(F.min(edge).alias("q_approx"))
     )
 
 
@@ -510,29 +470,6 @@ def rollup_openclose(
                 F.col(ts).alias(ts), v.alias(value_col))
         .groupBy(key, "bucket_start")
         .agg(o, c, F.count(value_col).alias("cnt"))
-        .select(
-            key, "bucket_start",
-            F.col("_o.t").alias("open_t"), F.col("_o.v").alias("open_v"),
-            F.col("_c.t").alias("close_t"), F.col("_c.v").alias("close_v"),
-            "cnt",
-        )
-    )
-
-
-def cascade_openclose(tier_df: DataFrame, to_tier: str, key: str = "url") -> DataFrame:
-    """Merge open/close partials into a coarser tier: the struct-min/max
-    over (t, v) re-applies associatively, so coarser open/close tiers come
-    from the finer tier, never from raw."""
-    return (
-        tier_df.select(
-            key,
-            bucket_start(F.col("bucket_start"), to_tier).alias("bucket_start"),
-            F.struct(F.col("open_t").alias("t"), F.col("open_v").alias("v")).alias("_o"),
-            F.struct(F.col("close_t").alias("t"), F.col("close_v").alias("v")).alias("_c"),
-            "cnt",
-        )
-        .groupBy(key, "bucket_start")
-        .agg(F.min("_o").alias("_o"), F.max("_c").alias("_c"), F.sum("cnt").alias("cnt"))
         .select(
             key, "bucket_start",
             F.col("_o.t").alias("open_t"), F.col("_o.v").alias("open_v"),

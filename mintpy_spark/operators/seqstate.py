@@ -7,9 +7,9 @@ Callers: the one runner of every sequential recursion, ``fold_groups``
 ``token_bucket`` (``operators.crawlsched``) call with no state, and the
 streaming sequential fold (``streaming.seqfold``) calls once per
 micro-batch with each key's committed state row sorted first, for those
-four recursions, the gap sessions, the change events and the z-score
-monitor; the Kalman EM statistics (filter plus RTS smoother) and the
-adaptive filter (``operators.kalman``), the per-key time-function fit
+four recursions and the gap sessions; the Kalman EM statistics (filter
+plus RTS smoother) and the adaptive filter (``operators.kalman``), both
+around ``LocalLevel``'s filter, the per-key time-function fit
 (``operators.timefunc``), the inversion sigma path (``operators.invert``),
 ``operators.forecast``, the audit folds in ``queries_tiers``, and the
 cold-tier block packer
@@ -236,13 +236,9 @@ def fold_groups(
                 (np.asarray(vals, dt), np.zeros(n_out, dt))
             )
         for j, (vals, dt) in enumerate(zip(outs, out_types)):
-            head = np.zeros(n_keys, dt)
-            if dt is np.int64 and None in vals:
-                # numpy has no NULL long: a nullable column, built only
-                # where a fold returned None
-                frame[f"out{j}"] = pd.array([*head.tolist(), *vals], "Int64")
-            else:
-                frame[f"out{j}"] = np.concatenate((head, np.asarray(vals, dt)))
+            frame[f"out{j}"] = np.concatenate(
+                (np.zeros(n_keys, dt), np.asarray(vals, dt))
+            )
         return pd.DataFrame(frame)
 
     return map_sorted_groups(rows, "k", ("_o", "t_us", "y"), fold, schema)

@@ -21,8 +21,6 @@ from __future__ import annotations
 
 import hashlib
 
-import numpy as np
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -393,74 +391,6 @@ def ivf_oracle_sql(
     """
 
 
-def kmeans_refine(
-    emb: DataFrame, centroids: list[tuple[int, list[float]]],
-    iterations: int = 2, vec_col: str = "embedding", id_col: str = "vec_id",
-) -> list[tuple[int, list[float]]]:
-    """Lloyd refinement of the IVF centroid table: assign -> per-bucket
-    mean vector -> repeat. Deterministic: init is the deterministic sample
-    (load_centroids), assignment ties break to the lowest centroid id
-    (ivf_assign), and the mean is computed per (bucket, dimension) — a
-    posexplode + groupBy average whose result does not depend on row
-    order beyond float summation (stable to ~1 ulp; the refined centroids
-    are driver-side literals thereafter, so downstream assignment is
-    exactly reproducible from them).
-
-    Each iteration is two bounded jobs (assign projection + one
-    aggregation of C x dim cells); empty buckets keep their previous
-    centroid (the standard Lloyd convention)."""
-    import numpy as np
-
-    cents = centroids
-    dim = len(cents[0][1])
-    for _ in range(iterations):
-        assigned = ivf_assign(emb, cents, vec_col)
-        # SPHERICAL update: average the norm-NORMALIZED vectors — the
-        # Lloyd step that matches the cosine assignment/objective (an
-        # unnormalized mean lets one large-norm vector tilt the centroid
-        # and the cosine inertia can INCREASE). The norm is staged ONCE
-        # per row (re-folding _vnorm inside the transform lambda is
-        # O(dim^2) per row) and zero norms are nullified so a zero
-        # vector contributes NULLs (dropped by avg) instead of NaNs
-        # that would poison its bucket's mean.
-        v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        staged = (
-            assigned.withColumn("_uv", v)
-            .withColumn("_un", F.nullif(_vnorm(F.col("_uv")), F.lit(0.0)))
-        )
-        unit = F.transform(F.col("_uv"), lambda x: x / F.col("_un"))
-        means = (
-            staged.withColumn("_unit", unit)
-            .select("ivf_bucket", F.posexplode("_unit").alias("pos", "x"))
-            .groupBy("ivf_bucket", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        by_bucket: dict[int, np.ndarray] = {}
-        for r in means:
-            by_bucket.setdefault(r.ivf_bucket, np.zeros(dim))[r.pos] = r.m
-        cents = [
-            (cid, list(by_bucket.get(cid, np.array(cvec, dtype=float))))
-            for cid, cvec in cents
-        ]
-    return cents
-
-
-def kmeans_inertia(
-    emb: DataFrame, centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-) -> float:
-    """Mean (1 - cosine-to-assigned-centroid) — the spherical-k-means
-    objective the refinement minimizes. Reuses the score array ivf_assign
-    already staged: the assigned bucket IS argmax(_cs), so the objective
-    is avg(1 - array_max(_cs)) — no re-scoring."""
-    assigned = ivf_assign(emb, centroids, vec_col, keep_scores=True)
-    row = assigned.agg(
-        F.avg(F.lit(1.0) - F.array_max("_cs")).alias("inertia")
-    ).first()
-    return float(row["inertia"])
-
-
 # ---------------------------------------------------------------------------
 # Scalar (int8-style) quantized similarity search
 # ---------------------------------------------------------------------------
@@ -479,38 +409,6 @@ def sq_quantize(vec: Column, scale: float = 128.0) -> Column:
     return F.transform(
         vec, lambda x: F.floor(x.cast("double") * F.lit(scale) + F.lit(0.5)).cast("long")
     )
-
-
-def sq_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    scale: float = 128.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Brute-force top-k by quantized integer dot product.
-
-    The query vector is quantized driver-side with the SAME floor(+0.5)
-    formula and inlined as an integer literal array, so the scan stays a
-    single whole-stage-codegen projection with zero exchanges and zero
-    Python (literal-constants-beat-cross-engine-functions discipline).
-    Magnitude bound: |q_i| <= scale, 64 dims -> |dot| <= 64*scale^2 ~ 1e6,
-    nowhere near ANSI overflow.  Ties break on the id for a deterministic
-    TakeOrderedAndProject."""
-    qints = [int(np.floor(float(x) * scale + 0.5)) for x in query_vec]
-    qlit = F.array(*[F.lit(v) for v in qints])
-    qdot = F.aggregate(
-        F.zip_with(sq_quantize(F.col(vec_col), scale), qlit, lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    scored = emb.select(id_col, label_col, qdot.alias("qdot"))
-    if exclude_id is not None:
-        scored = scored.where(F.col(id_col) != exclude_id)
-    return scored.orderBy(F.desc("qdot"), F.asc(id_col)).limit(k)
 
 
 def top_eigen(

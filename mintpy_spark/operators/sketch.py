@@ -353,33 +353,15 @@ def hdr_merge(
     )
 
 
-def hdr_quantile(
-    sketch: DataFrame,
-    q: float,
-    key_cols: tuple[str, ...] = (),
-    sub_bits: int = HDR_SUB_BITS,
-    out_col: str = "q_approx",
-) -> DataFrame:
-    """(key..., q_approx): the bucket LOWER EDGE of the first bucket
-    whose cumulative count reaches ceil(q * total) — the
-    rank-of-smallest-in-bucket estimator, within 2^-sub_bits relative
-    error of the exact order statistic. Pure integer ranks (no float
-    rank boundary), deterministic bucket order — engine-exact.
-    Single-quantile convenience over hdr_quantiles (ONE implementation
-    of the rank rule — the two must never fork)."""
-    del sub_bits  # the estimator reads only (bucket, cnt)
-    return hdr_quantiles(sketch, {out_col: q}, key_cols=key_cols)
-
-
 def hdr_quantiles(
     sketch: DataFrame,
     qs: dict[str, float],
     key_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """All requested quantiles in ONE pass: (key..., <name> per qs
-    entry). Same estimator as hdr_quantile, but the cumulative window
-    is computed once and each quantile is a conditional MIN over it —
-    one window + one agg instead of a sketch recomputation per q."""
+    entry): the cumulative window is computed once and each quantile is
+    a conditional MIN over it — one window + one agg instead of a sketch
+    recomputation per q."""
     w_cum = (
         Window.partitionBy(*key_cols)
         .orderBy("bucket")
@@ -560,15 +542,6 @@ def bloom_tier(
         words_cols.append(F.expr(e).alias(f"w{j}"))
     staged = staged.select(*key_cols, *words_cols)
     return staged.groupBy(*key_cols).agg(
-        *[F.expr(f"bit_or(w{j})").alias(f"w{j}") for j in range(words)]
-    )
-
-
-def bloom_merge(
-    sketch_df: DataFrame, key_cols: tuple[str, ...], words: int = BLOOM_WORDS
-) -> DataFrame:
-    """bit_or per word — idempotent/commutative, replay-safe."""
-    return sketch_df.groupBy(*key_cols).agg(
         *[F.expr(f"bit_or(w{j})").alias(f"w{j}") for j in range(words)]
     )
 

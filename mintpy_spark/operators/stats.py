@@ -54,12 +54,6 @@ def epoch_std_rms(
     )
 
 
-def auto_reference_epoch(epoch_rms: DataFrame, time_col: str = "warc_ts") -> str:
-    """argmin(RMS) epoch — auto reference-date selection
-    (timeseries_rms.py:37)."""
-    return epoch_rms.agg(F.min_by(time_col, "rms").alias("ref")).collect()[0]["ref"]
-
-
 def mad_outlier_epochs(
     epoch_rms: DataFrame, cutoff: float = 3.0, time_col: str = "warc_ts"
 ) -> DataFrame:

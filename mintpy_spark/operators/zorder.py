@@ -1,13 +1,14 @@
-"""Z-order (Morton) clustering for multi-dimensional data skipping.
+"""Z-order (Morton) values for multi-dimensional data skipping.
 
-No MintPy analog — this is table-layout machinery for the Iceberg-style
-store: a 10^12-row table queried by BOTH series key and time benefits
-from neither a pure key sort (time filters touch every file) nor a pure
-time sort (key filters touch every file). Interleaving the bits of the
-two dimensions into one sort key bounds the number of files a 2-D box
-query touches: a range in either dimension maps to O(sqrt) of the
-z-curve, so parquet row-group min/max stats prune most of the table
-(the mechanism Delta/Iceberg `OPTIMIZE ZORDER BY` uses).
+No MintPy analog — this is table-layout machinery: a 10^12-row table
+queried by BOTH series key and time benefits from neither a pure key sort
+(time filters touch every file) nor a pure time sort (key filters touch
+every file). Interleaving the bits of the two dimensions into one sort key
+bounds the number of files a 2-D box query touches: a range in either
+dimension maps to O(sqrt) of the z-curve, so parquet row-group min/max
+stats prune most of the table (the mechanism Delta/Iceberg `OPTIMIZE
+ZORDER BY` uses). The registry's ``zorder_cell_stats`` certifies that
+locality on the events table.
 
 The z-value is built from pure integer arithmetic — ``(x div 2^i) % 2``
 times a power-of-two weight — so the SAME formula evaluates identically
@@ -18,7 +19,7 @@ statistics verifiable cross-engine. No shift operators: Spark SQL lacks
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -39,25 +40,3 @@ def zvalue_sql(x: str, y: str, bits: int = 6, *, duck: bool = False) -> str:
 def zvalue(x: str, y: str, bits: int = 6) -> Column:
     """Spark Column for the z-value (see zvalue_sql)."""
     return F.expr(zvalue_sql(x, y, bits)).cast("long")
-
-
-def zvalue_py(x: int, y: int, bits: int = 6) -> int:
-    """Pure-Python reference (tests)."""
-    z = 0
-    for i in range(bits):
-        z |= ((x >> i) & 1) << (2 * i)
-        z |= ((y >> i) & 1) << (2 * i + 1)
-    return z
-
-
-def zorder_layout(
-    df: DataFrame, x: str, y: str, bits: int = 6, partitions: int | None = None
-) -> DataFrame:
-    """Return df clustered for 2-D skipping: repartitionByRange + local
-    sort on the z-value of (x, y). Writing this layout to parquet gives
-    every file/row-group a tight min/max box in BOTH dimensions, so a
-    reader's 2-D predicate prunes at the footer level. The z column is
-    kept (``_z``) so the writer can also use it as a bucket key."""
-    out = df.withColumn("_z", zvalue(x, y, bits))
-    n = partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    return out.repartitionByRange(int(n), "_z").sortWithinPartitions("_z")

@@ -9,14 +9,15 @@ through the one writer, ``record``, which ``run_stage``,
 ``row_count`` rows), ``empty`` (computed, it holds none; the table keeps
 no such partition).
 
-``complete_parts(stage, input_fp)`` (resume) skips a part with ANY
-``complete``/``empty`` row under that fingerprint, so a new config or
-input invalidates every entry; it is not newest-wins, so a part once
-done under a fingerprint stays done under it. ``stage_metrics``:
-per (stage, part_id) the row appended last decides, whatever its
-fingerprint, and is reported unless ``empty``, so the counts are the
-store's; rows of another status (a half-written ``running``) are not
-read. Append order is the file name ``ckpt-<seq>-<uuid>.parquet``, ``seq``
+One reading rule serves both reads: per (stage, part_id) the
+``complete``/``empty`` row appended last decides; rows of another status
+(a half-written ``running``) are not read. ``complete_parts(stage,
+input_fp)`` (resume) skips a part whose deciding row has that
+fingerprint, so a new config or input invalidates every entry, and
+returning to an earlier fingerprint recomputes the parts another one
+wrote since. ``stage_metrics`` reports the deciding row's count,
+whatever its fingerprint, unless it is ``empty``, so the counts are the
+store's. Append order is the file name ``ckpt-<seq>-<uuid>.parquet``, ``seq``
 one above the directory's highest (concurrent appends may share one),
 never ``os.listdir`` order.
 
@@ -130,18 +131,21 @@ class CheckpointTable:
             return SCHEMA.empty_table()
         return pa.concat_tables([pq.read_table(f) for f in files])
 
-    def complete_parts(self, stage: str, input_fp: str) -> set[int]:
+    def _newest(self, stage: str):
+        """Each part's last appended ``complete``/``empty`` row of ``stage``."""
         df = self.load().to_pandas()
-        m = (df["stage"] == stage) & (df["input_fp"] == input_fp) & (
-            df["status"].isin(STATUSES)
-        )
-        return set(df.loc[m, "part_id"].astype(int).tolist())
+        df = df[(df["stage"] == stage) & df["status"].isin(STATUSES)]
+        return df.drop_duplicates("part_id", keep="last")
+
+    def complete_parts(self, stage: str, input_fp: str) -> set[int]:
+        """The parts whose last appended row has ``input_fp``: done, so a
+        resume under that fingerprint skips them."""
+        df = self._newest(stage)
+        return set(df.loc[df["input_fp"] == input_fp, "part_id"].astype(int).tolist())
 
     def stage_metrics(self, stage: str) -> dict[int, int]:
         """part_id -> rows, from each part's last appended row (module
         docstring); a part whose last row is ``empty`` is left out."""
-        df = self.load().to_pandas()
-        df = df[(df["stage"] == stage) & df["status"].isin(STATUSES)]
-        df = df.drop_duplicates("part_id", keep="last")
+        df = self._newest(stage)
         df = df[df["status"] != "empty"]
         return dict(zip(df["part_id"].astype(int), df["row_count"].astype(int)))

@@ -224,8 +224,7 @@ def temporal_filter_runmedian(spark: SparkSession, sf_dir: str) -> DataFrame:
     temporal_filter_runmean). Exact percentile over a microsecond-precision
     range frame: Spark `percentile(0.5)` and DuckDB `median` interpolate
     identically on identical window multisets, so the raw double is
-    hash-exact with no rounding. operators/filters.running_median is the
-    collect-based equivalent for engines without percentile-over-window."""
+    hash-exact with no rounding."""
     from mintpy_spark.operators.filters import _range_window
 
     ev = load(spark, sf_dir, "events")
@@ -2297,7 +2296,7 @@ def interval_join_session_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     global incidents" query. No shared key between sides, so the naive
     plan is a cartesian BroadcastNestedLoopJoin; the engine snaps both
     sides to hour buckets and hash-joins on the bucket
-    (operators/intervaljoin.bucketed_interval_join), exactly the
+    (operators/intervaljoin.interval_point_counts), exactly the
     reference's overlap-grid equi-join recast
     (asc_desc2horz_vert.py:15)."""
     from mintpy_spark.operators.intervaljoin import interval_point_counts
@@ -2707,7 +2706,7 @@ def time_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one scan; the lead() window shuffles on user_id, the
     cumulative window re-clusters by event_type (row-level — at corpus
     scale this op downgrades to the histogram-sketch tier,
-    operators/rollup.quantile_from_histogram); final agg is tiny."""
+    operators/rollup.histogram_tier); final agg is tiny."""
     ev = load(spark, sf_dir, "events").where(F.col("value").isNotNull())
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     wu = Window.partitionBy("user_id").orderBy("ts", "event_id")

@@ -230,9 +230,8 @@ def rollup_1d_wow_change(spark: SparkSession, sf_dir: str) -> DataFrame:
 and the TPC-H Q17 small-quantity join shape.
 
 - ``zorder_cell_stats``: Morton-interleaved (series, day) cells — the
-  layout key the Iceberg-style store sorts by for 2-D data skipping
-  (operators/zorder.py; the skipping evidence itself is pytest-side
-  with parquet row-group stats).
+  sort key that bounds a 2-D box query's row groups
+  (operators/zorder.py).
 - ``kmv_audience_intersection``: theta-sketch intersection of per-type
   audience KMV sketches — distinct-overlap at 10^12 rows without a
   user-level shuffle (sketch per segment, tiny pair join).
@@ -267,8 +266,8 @@ _Z_Y_DUCK = "(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) % 64)"
 def zorder_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Occupancy of 4x4 z-curve tiles over (series-bucket, day-bucket):
     each cell's nx/ny <= 4 and zmax-zmin <= 15 certify that the
-    interleave keeps both dimensions locally bounded — the property the
-    layout writer (zorder_layout) relies on for row-group pruning. Pure
+    interleave keeps both dimensions locally bounded — the property a
+    z-sorted layout relies on for row-group pruning. Pure
     integer div/mod arithmetic, identical formula text on both engines."""
     ev = (
         load(spark, sf_dir, "events")

@@ -30,7 +30,8 @@ RUNTIME_SQL_CONF = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
-    # crawl payloads contain invalid byte sequences; decode() must replace
+    # crawl payloads contain invalid byte sequences; decode() must
+    # replace (U+FFFD), not raise (Spark 4 default errors under ANSI)
     "spark.sql.legacy.codingErrorAction": "true",
 }
 
@@ -64,16 +65,9 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
+        .config(map=RUNTIME_SQL_CONF)
         .config("spark.sql.shuffle.partitions", str(sp))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.sql.session.timeZone", "UTC")
-        # crawl payloads contain invalid byte sequences; decode() must
-        # replace (U+FFFD), not raise (Spark 4 default errors under ANSI)
-        .config("spark.sql.legacy.codingErrorAction", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("MINTPY_SPARK_DRIVER_MEM", "8g"))
         # BLAS pinning inside pandas UDF workers (reference: cluster.py:87-129)

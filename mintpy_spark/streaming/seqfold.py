@@ -2,10 +2,9 @@
 foreachBatch fold over a versioned per-key state table.
 
 The engine's one per-key streaming mechanism. A recursion object — one of
-seven: ``operators.kalman.LocalLevel``, ``operators.holtwinters.HoltWinters``,
-``operators.stats.Welford``, ``operators.crawlsched.TokenBucket``,
-``operators.sessionize.GapSessions``, ``operators.diff.ChangeEvents`` and
-``operators.anomaly.ZScoreMonitor`` — declares:
+five: ``operators.kalman.LocalLevel``, ``operators.holtwinters.HoltWinters``,
+``operators.stats.Welford``, ``operators.crawlsched.TokenBucket`` and
+``operators.sessionize.GapSessions`` — declares:
 
 * ``name`` and ``emits``: its state lives under
   ``<checkpoint>/<name>_state`` and each batch records the lineage rows
@@ -14,8 +13,7 @@ seven: ``operators.kalman.LocalLevel``, ``operators.holtwinters.HoltWinters``,
   ``last_ts_us long``, the key's watermark (the ts of its last folded row);
 * ``out``: its output columns; a ``timestamp`` column is folded as
   microseconds and written in the input's ts type, and a column named
-  ``ts`` takes the input's ts column name; a ``long`` column may hold
-  NULLs (None);
+  ``ts`` takes the input's ts column name;
 * ``drop_nulls``: whether rows with a NULL value are dropped before the
   fold, or kept and handed to ``fold`` as None;
 * ``fold(ts_us, values, state) -> (out columns, new state)``: one key's
@@ -27,11 +25,9 @@ committed state, and for the batch operators of the first four
 (``kalman_level``, ``holt_winters_additive``, ``welford_moments``,
 ``token_bucket``), which hand it none. So for those four stream == batch
 holds by construction: the same rows reach the same ``fold`` in the same
-order, under the same late-row policy (below). ``GapSessions``,
-``ChangeEvents`` and ``ZScoreMonitor`` sit beside zero-Python SQL windows
-(``sessionize``, ``batch_change_events``, ``rolling_zscore_anomalies``):
-there stream == batch is checked by tests (tests/test_seqfold.py), not by
-construction.
+order, under the same late-row policy (below). ``GapSessions`` sits
+beside a zero-Python SQL window (``sessionize``): there stream == batch
+is checked by tests (tests/test_seqfold.py), not by construction.
 
 Each micro-batch of observations (key, ts, value) runs the engine's one
 fold step (``StoreFold.apply_delta``, streaming/tier_maintenance.py); this

@@ -4,19 +4,227 @@ from __future__ import annotations
 
 import datetime as dt
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from mintpy_spark.operators.asof import asof_join
 from mintpy_spark.operators.multimodal import (
+    _gif_interlace_order,
+    _png_chunk,
     decode_media,
-    extract_features,
     sniff_media_type,
 )
 
 
 def _ts(s: str) -> dt.datetime:
     return dt.datetime.fromisoformat(s)
+
+
+# Fixture encoders: they build the paletted, grayscale and GIF inputs that
+# the decoders under test (decode_png, decode_gif, decode_bmp) must read.
+
+def encode_bmp8(
+    idx: np.ndarray, palette: np.ndarray, rle: bool = False
+) -> bytes:
+    """Index array (h, w) + palette (n, 3) RGB -> 8-bpp paletted BMP
+    bytes (BITMAPINFOHEADER, bottom-up, BGRA color table), uncompressed
+    or RLE8. Fixture encoder for the paletted decode path; the RLE
+    stream mixes runs, word-aligned literals and end-of-line escapes."""
+    h, w = idx.shape
+    assert idx.dtype == np.uint8 and palette.dtype == np.uint8
+    used = palette.shape[0]
+    table = np.zeros((used, 4), np.uint8)
+    table[:, :3] = palette[:, ::-1]  # RGB -> BGRA (alpha 0)
+    if not rle:
+        row = (w + 3) // 4 * 4
+        body = np.zeros((h, row), np.uint8)
+        body[:, :w] = idx[::-1]  # bottom-up
+        pix, comp = body.tobytes(), 0
+    else:
+        out = bytearray()
+        for r in idx[::-1]:
+            x = 0
+            while x < w:
+                run = 1
+                while x + run < w and r[x + run] == r[x] and run < 255:
+                    run += 1
+                if run >= 3 or r[x] == r[min(x + 1, w - 1)]:
+                    out += bytes([run, r[x]])
+                    x += run
+                else:
+                    lit = min(255, w - x)
+                    # literal runs must be >= 3 bytes; shorter tails
+                    # become unit runs
+                    if lit >= 3:
+                        out += bytes([0, lit]) + bytes(r[x : x + lit])
+                        if lit & 1:
+                            out.append(0)
+                        x += lit
+                    else:
+                        out += bytes([1, r[x]])
+                        x += 1
+            out += bytes([0, 0])  # end of line
+        out += bytes([0, 1])  # end of bitmap
+        pix, comp = bytes(out), 1
+    pix_off = 14 + 40 + used * 4
+    info = (
+        (40).to_bytes(4, "little")
+        + w.to_bytes(4, "little") + h.to_bytes(4, "little")
+        + (1).to_bytes(2, "little") + (8).to_bytes(2, "little")
+        + comp.to_bytes(4, "little") + len(pix).to_bytes(4, "little")
+        + bytes(8) + used.to_bytes(4, "little") + bytes(4)
+    )
+    header = (
+        b"BM" + (pix_off + len(pix)).to_bytes(4, "little")
+        + bytes(4) + pix_off.to_bytes(4, "little")
+    )
+    return header + info + table.tobytes() + pix
+
+
+
+def _pack_subbyte(idx: np.ndarray, depth: int) -> np.ndarray:
+    """Sample array (h, w) with values < 2**depth -> packed scanline bytes
+    (h, stride), MSB-first within each byte per the PNG spec."""
+    h, w = idx.shape
+    if depth == 8:
+        return idx
+    per = 8 // depth
+    pad = (-w) % per
+    padded = np.pad(idx, ((0, 0), (0, pad)))
+    bits = (
+        (padded[..., None] >> np.arange(depth - 1, -1, -1)) & 1
+    ).reshape(h, -1).astype(np.uint8)
+    return np.packbits(bits, axis=1)
+
+
+
+def encode_png_gray(
+    gray: np.ndarray, depth: int = 8, alpha: np.ndarray | None = None,
+    trns_level: int | None = None,
+) -> bytes:
+    """Grayscale sample array (h, w) with raw values < 2**depth -> PNG
+    bytes (color type 0, depths 1/2/4/8; or color type 4 gray+alpha at
+    depth 8 when ``alpha`` is given). ``trns_level`` adds a 2-byte tRNS
+    chunk (color-type-0 transparency). Fixture encoder for the grayscale
+    decode path — pure stdlib like encode_png."""
+    import zlib
+
+    h, w = gray.shape
+    assert gray.dtype == np.uint8 and depth in (1, 2, 4, 8)
+    assert int(gray.max(initial=0)) < (1 << depth)
+    if alpha is not None:
+        assert depth == 8 and alpha.shape == gray.shape
+        ctype = 4
+        packed = np.stack([gray, alpha], axis=2).reshape(h, w * 2)
+    else:
+        ctype = 0
+        packed = _pack_subbyte(gray, depth)
+    raw = np.concatenate(
+        [np.zeros((h, 1), np.uint8), packed], axis=1
+    ).tobytes()
+    ihdr = (
+        w.to_bytes(4, "big") + h.to_bytes(4, "big")
+        + bytes([depth, ctype, 0, 0, 0])
+    )
+    out = b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
+    if trns_level is not None:
+        out += _png_chunk(b"tRNS", int(trns_level).to_bytes(2, "big"))
+    return out + _png_chunk(b"IDAT", zlib.compress(raw, 6)) + _png_chunk(
+        b"IEND", b""
+    )
+
+
+
+def encode_png_palette(
+    idx: np.ndarray, palette: np.ndarray, depth: int = 8,
+    trns: bytes | None = None,
+) -> bytes:
+    """Index array (h, w) + palette (n, 3) -> paletted PNG bytes (color
+    type 3, PLTE chunk, optional tRNS, filter-0 scanlines). ``depth`` in
+    {1, 2, 4, 8}; sub-byte depths pack MSB-first per the spec. Fixture
+    encoder for the paletted decode path — pure stdlib like encode_png."""
+    import zlib
+
+    h, w = idx.shape
+    assert idx.dtype == np.uint8 and palette.dtype == np.uint8
+    assert depth in (1, 2, 4, 8) and int(idx.max(initial=0)) < (1 << depth)
+    chunk = _png_chunk
+    raw = np.concatenate(
+        [np.zeros((h, 1), np.uint8), _pack_subbyte(idx, depth)], axis=1
+    ).tobytes()
+    ihdr = (
+        w.to_bytes(4, "big") + h.to_bytes(4, "big")
+        + bytes([depth, 3, 0, 0, 0])
+    )
+    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + chunk(
+        b"PLTE", palette.tobytes()
+    )
+    if trns is not None:
+        out += chunk(b"tRNS", trns)
+    return out + chunk(b"IDAT", zlib.compress(raw, 6)) + chunk(b"IEND", b"")
+
+
+
+def encode_gif(
+    idx: np.ndarray, palette: np.ndarray, interlace: bool = False,
+    transparent: int | None = None,
+) -> bytes:
+    """Index array (h, w) + palette (n, 3) -> single-frame GIF89a bytes.
+    Fixture encoder, pure stdlib: emits a clear code before every pixel
+    code so the LZW code size never grows — a valid (if bulky) stream any
+    conformant decoder accepts. Optional interlace + GCE transparency."""
+    h, w = idx.shape
+    assert idx.dtype == np.uint8 and palette.dtype == np.uint8
+    min_code = max(2, int(np.ceil(np.log2(max(palette.shape[0], 2)))))
+    nslots = 1 << min_code
+    assert int(idx.max(initial=0)) < nslots
+    pal = np.zeros((nslots, 3), np.uint8)
+    pal[: palette.shape[0]] = palette
+    clear, end = nslots, nslots + 1
+    csize = min_code + 1
+
+    rows = idx
+    if interlace:
+        rows = idx[_gif_interlace_order(h)]
+    acc = nbits = 0
+    out = bytearray()
+
+    def put(code: int) -> None:
+        nonlocal acc, nbits
+        acc |= code << nbits
+        nbits += csize
+        while nbits >= 8:
+            out.append(acc & 0xFF)
+            acc >>= 8
+            nbits -= 8
+
+    put(clear)
+    for px in rows.ravel():
+        put(int(px))
+        put(clear)
+    put(end)
+    if nbits:
+        out.append(acc & 0xFF)
+    blocks = b"".join(
+        bytes([len(out[i : i + 255])]) + bytes(out[i : i + 255])
+        for i in range(0, len(out), 255)
+    )
+    lsd_flags = 0x80 | (min_code - 1)  # global table, 2^min_code entries
+    gif = (
+        b"GIF89a"
+        + w.to_bytes(2, "little") + h.to_bytes(2, "little")
+        + bytes([lsd_flags, 0, 0]) + pal.tobytes()
+    )
+    if transparent is not None:
+        gif += bytes([0x21, 0xF9, 4, 0x01, 0, 0, transparent, 0])
+    gif += (
+        bytes([0x2C]) + bytes(4)
+        + w.to_bytes(2, "little") + h.to_bytes(2, "little")
+        + bytes([0x40 if interlace else 0])
+        + bytes([min_code]) + blocks + bytes([0, 0x3B])
+    )
+    return gif
 
 
 def test_asof_join_semantics(spark):
@@ -97,15 +305,6 @@ def test_decode_media_real_path_raises(media_df):
         decode_media(media_df, decode_stub=False).collect()
 
 
-def test_extract_features_unit_norm(media_df):
-    out = extract_features(media_df, dim=16).collect()
-    assert len(out) == 3
-    for r in out:
-        assert len(r.features) == 16
-        norm = sum(x * x for x in r.features) ** 0.5
-        assert abs(norm - 1.0) < 1e-5
-
-
 def test_riff_family_split():
     assert sniff_media_type(b"RIFF\x00\x00\x00\x00WAVEfmt ") == "audio/wav"
     assert sniff_media_type(b"RIFF\x00\x00\x00\x00WEBPVP8 ") == "image/webp"
@@ -174,30 +373,6 @@ def test_decode_media_real_bmp_wav(spark):
             assert r.width is None and r.height is None
     # payload synthesis itself is deterministic (fixture stability)
     assert synth_media_payload(4) == synth_media_payload(4)
-
-
-def test_extract_features_real_content(spark):
-    """Real features: luminance histogram (BMP) / windowed RMS (WAV),
-    L2-normalized, computed from decoded samples not byte hashes."""
-    import numpy as np
-
-    from mintpy_spark.operators.multimodal import (
-        encode_bmp,
-        encode_wav,
-    )
-
-    flat = encode_bmp(np.full((6, 6, 3), 10, dtype=np.uint8))
-    loud = encode_wav(np.full(256, 30000, dtype=np.int16), 8000)
-    df = spark.createDataFrame(
-        [(1, bytearray(flat)), (2, bytearray(loud))], "id int, payload binary"
-    )
-    rows = {r.id: r.features for r in
-            extract_features(df, dim=8, decode_stub=False).collect()}
-    # constant-luminance image: all mass in one histogram bin -> one-hot
-    assert max(rows[1]) == pytest.approx(1.0)
-    assert sum(1 for x in rows[1] if x > 0) == 1
-    # constant-amplitude audio: equal RMS per window -> uniform vector
-    assert all(x == pytest.approx(1 / 8**0.5, rel=1e-5) for x in rows[2])
 
 
 def test_png_roundtrip_and_all_filters():
@@ -272,7 +447,7 @@ def test_png_paletted_roundtrip_all_depths():
     import numpy as np
 
     from mintpy_spark.operators.multimodal import (
-        decode_png, encode_png_palette, sniff_media_type,
+        decode_png, sniff_media_type,
     )
 
     rng = np.random.default_rng(7)
@@ -295,13 +470,11 @@ def test_png_paletted_roundtrip_all_depths():
     assert got[0, :, 3].tolist() == [10, 200, 255, 255]
 
 
-def test_png_flows_through_decode_media_and_features(spark):
+def test_png_flows_through_decode_media_like_bmp(spark):
     """PNG payloads run the REAL (non-stub) mapInPandas decode path and
-    produce the same luminance features as the equivalent BMP."""
-    import numpy as np
-
+    report the same dimensions as the equivalent BMP."""
     from mintpy_spark.operators.multimodal import (
-        decode_media, encode_bmp, encode_png, extract_features,
+        decode_media, encode_bmp, encode_png,
     )
 
     rng = np.random.default_rng(7)
@@ -311,11 +484,9 @@ def test_png_flows_through_decode_media_and_features(spark):
         "id long, payload binary",
     )
     meta = {r.id: r for r in decode_media(df, decode_stub=False).collect()}
-    assert meta[1].media_type == "image/png"
+    assert (meta[1].media_type, meta[2].media_type) == ("image/png", "image/bmp")
     assert (meta[1].width, meta[1].height) == (9, 12)
-    feats = {r.id: r.features for r in
-             extract_features(df, decode_stub=False).collect()}
-    assert feats[1] == feats[2]  # same pixels -> identical histogram
+    assert (meta[2].width, meta[2].height) == (9, 12)
 
 
 def test_asof_null_valued_right_row_is_the_match(spark):
@@ -377,7 +548,7 @@ def test_png_grayscale_roundtrip_all_depths():
     import numpy as np
 
     from mintpy_spark.operators.multimodal import (
-        decode_png, encode_png_gray, sniff_media_type,
+        decode_png, sniff_media_type,
     )
 
     rng = np.random.default_rng(11)
@@ -520,7 +691,7 @@ def test_gif_decode_real_lzw_and_variants():
     import pytest
 
     from mintpy_spark.operators.multimodal import (
-        decode_gif, encode_gif, sniff_media_type,
+        decode_gif, sniff_media_type,
     )
 
     rng = np.random.default_rng(13)
@@ -578,7 +749,7 @@ def test_bmp_8bpp_paletted_and_rle8():
     import numpy as np
 
     from mintpy_spark.operators.multimodal import (
-        decode_bmp, encode_bmp8, sniff_media_type,
+        decode_bmp, sniff_media_type,
     )
 
     rng = np.random.default_rng(17)

@@ -108,59 +108,6 @@ def test_block_pack_unpack_byte_identical_text(spark, pages):
     assert blocks.count() < obs.count() / 3
 
 
-def test_retention_split_and_restore_lossless(spark, obs):
-    """apply_retention splits hot/cold; restore() reproduces the original
-    series exactly (float64 block dtype -> bit-identical values)."""
-    from pyspark.sql import functions as F
-
-    from mintpy_spark.operators.retention import apply_retention, restore
-
-    src = obs.select(
-        F.col("url").cast("string").alias("url"),
-        "warc_ts",
-        F.col("text_length").cast("double").alias("text_length"),
-    )
-    split = apply_retention(src, "text_length", raw_days=60)
-    n_raw = split["raw"].count()
-    n_cold_pts = split["cold"].agg(F.sum("n")).first()[0]
-    assert n_raw > 0 and n_cold_pts > 0
-    assert n_raw + n_cold_pts == src.count()
-    # cold tier genuinely compresses vs the long rows it encodes
-    back = restore(split, "text_length")
-    assert back.count() == src.count()
-    a = {tuple(r) for r in src.collect()}
-    b = {tuple(r) for r in back.collect()}
-    assert a == b
-
-
-def test_retention_null_rows_stay_raw(spark):
-    """NULL ts / NULL value rows must surface in the raw tier, not vanish
-    (the cold codec can represent neither)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from mintpy_spark.operators.retention import apply_retention, restore
-
-    pdf = pd.DataFrame(
-        {
-            "url": ["a", "a", "a", "a"],
-            "warc_ts": [
-                pd.Timestamp("2023-01-01"),
-                pd.Timestamp("2023-06-01"),
-                pd.NaT,
-                pd.Timestamp("2023-01-02"),
-            ],
-            "text_length": [1.0, 2.0, 3.0, None],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    split = apply_retention(df, "text_length", horizon="2023-05-01")
-    raw_rows = split["raw"].collect()
-    assert len(raw_rows) == 3  # recent + null-ts + null-value
-    assert split["cold"].agg(F.sum("n")).first()[0] == 1
-    assert restore(split, "text_length").count() == 4
-
-
 def test_block_timestamps_roundtrip_exact_microseconds(spark):
     """Adversarial microsecond components (incl. values near the double
     truncation boundary) must round-trip bit-exactly."""

@@ -282,63 +282,6 @@ def test_components_close_transitive_chains(spark):
     assert got_nockpt == got
 
 
-def test_kmeans_refinement_reduces_inertia_and_matches_numpy(spark):
-    """Lloyd refinement: inertia is non-increasing, and one refined
-    iteration matches a NumPy replica of assign->mean."""
-    rng = np.random.default_rng(31)
-    # three well-separated clusters
-    centers = rng.normal(size=(3, 8)) * 5
-    vecs = np.vstack([
-        centers[i % 3] + rng.normal(size=8) * 0.3 for i in range(90)
-    ]).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, v.tolist()) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    init = S.load_centroids(df, num_centroids=3)
-    i0 = S.kmeans_inertia(df, init)
-    refined = S.kmeans_refine(df, init, iterations=2)
-    i2 = S.kmeans_inertia(df, refined)
-    assert i2 <= i0 + 1e-12
-    # replicate one iteration in numpy
-    C = np.array([c for _cid, c in init])
-    V = vecs.astype(np.float64)
-    sims = (V @ C.T) / (
-        np.linalg.norm(V, axis=1)[:, None] * np.linalg.norm(C, axis=1)[None, :]
-    )
-    labels = sims.argmax(axis=1)
-    U = V / np.linalg.norm(V, axis=1)[:, None]  # spherical: mean of units
-    expect = np.array([
-        U[labels == j].mean(axis=0) if (labels == j).any() else C[j]
-        for j in range(3)
-    ])
-    got1 = np.array([c for _cid, c in S.kmeans_refine(df, init, iterations=1)])
-    assert np.allclose(got1, expect, atol=1e-9)
-
-
-def test_kmeans_inertia_nonincreasing_with_heterogeneous_norms(spark):
-    """The spherical update must not let a large-norm outlier tilt a
-    centroid (the failure mode of an unnormalized mean)."""
-    rng = np.random.default_rng(33)
-    base = rng.normal(size=8)
-    rows = []
-    for i in range(40):
-        d = base + rng.normal(size=8) * 0.2
-        scale = 50.0 if i % 10 == 0 else 0.5  # mixed magnitudes
-        rows.append((i, (d * scale).astype(np.float32).tolist()))
-    # second, opposite cluster
-    for i in range(40, 80):
-        d = -base + rng.normal(size=8) * 0.2
-        rows.append((i, (d * (0.5 if i % 2 else 20.0)).astype(np.float32).tolist()))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    init = S.load_centroids(df, num_centroids=2)
-    i0 = S.kmeans_inertia(df, init)
-    i1 = S.kmeans_inertia(df, S.kmeans_refine(df, init, iterations=1))
-    i2 = S.kmeans_inertia(df, S.kmeans_refine(df, init, iterations=2))
-    assert i1 <= i0 + 1e-12
-    assert i2 <= i1 + 1e-12
-
-
 def test_ivf_assign_broadcast_matches_literal(spark):
     """The broadcast-centroid assignment (unbounded C) must match the
     literal-codebook form bit-for-bit, including lowest-cid tie-breaks,

@@ -4,8 +4,14 @@ contract (utils/readfile.py:319-388 returns stored values unaltered)."""
 
 from __future__ import annotations
 
+import codecs
 import random
+import sys
+from collections.abc import Iterator
 
+import pandas as pd
+from pyspark import cloudpickle
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mintpy_spark.datagen import gen_pages
@@ -13,8 +19,6 @@ from mintpy_spark.operators.extract import (
     BODY_CLOSE,
     BODY_OPEN,
     extract_text,
-    extract_text_arrow,
-    extract_text_bytes,
 )
 
 
@@ -32,6 +36,78 @@ def whole_payload_decode(html_col: str = "html"):
     body = F.substring(s, lp + F.lit(len(BODY_OPEN) + 1), F.greatest(body_len, F.lit(0)))
     ok = (lp < ls) & (lt < ls) & (body_len >= 0)
     return F.when(ok, body)
+
+
+# The Python twin: an Arrow-batched ``mapInPandas`` extractor that cuts the
+# body with ``bytes.find`` and decodes it with the ``jvm-replace`` error
+# handler, which replaces malformed input exactly as the JVM's UTF-8 decoder
+# does. ``extract_text`` must match it byte for byte. The Python workers
+# cannot import this test module, so its functions travel by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+JVM_REPLACE = "jvm-replace"
+
+
+def _jvm_replace(exc: UnicodeError) -> tuple[str, int]:
+    """Decode error handler: ``errors="replace"`` as the JVM's UTF-8
+    decoder does it. The two differ on one shape only: an encoded surrogate
+    lead ``ED [A0-BF]`` (plus its continuation byte ``[80-BF]`` when one
+    follows). Python rejects the ``ED`` alone and then each continuation
+    byte, writing up to three U+FFFD; the JVM reads the sequence as one
+    malformed character and writes one U+FFFD."""
+    if isinstance(exc, UnicodeDecodeError):
+        b, i = exc.object, exc.start
+        if b[i] == 0xED and i + 1 < len(b) and 0xA0 <= b[i + 1] <= 0xBF:
+            j = i + 2
+            if j < len(b) and 0x80 <= b[j] <= 0xBF:
+                j += 1
+            return "\ufffd", j
+    return codecs.replace_errors(exc)
+
+
+def extract_text_bytes(html: bytes) -> bytes | None:
+    """Recover the embedded text bytes from one payload.
+
+    Returns None when no well-formed body is present (malformed page).
+    Uses the FIRST ``<body>`` and the LAST ``</body>`` so text containing
+    the literal marker substrings round-trips unharmed.
+    """
+    if html is None:
+        return None
+    i = html.find(BODY_OPEN)
+    if i < 0:
+        return None
+    j = html.rfind(BODY_CLOSE)
+    if j < i:
+        return None
+    return html[i + len(BODY_OPEN): j]
+
+
+def extract_text_arrow(
+    pages: DataFrame,
+    html_col: str = "html",
+    out_col: str = "extracted_text",
+    keep_html: bool = False,
+) -> DataFrame:
+    """Arrow/pandas implementation of extract_text (see above)."""
+    out_fields = [f"{f.name} {f.dataType.simpleString()}" for f in pages.schema.fields
+                  if keep_html or f.name != html_col]
+    schema = ", ".join(out_fields + [f"{out_col} string"])
+    keep_cols = [f.name for f in pages.schema.fields if keep_html or f.name != html_col]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        codecs.register_error(JVM_REPLACE, _jvm_replace)  # in the Python worker
+        for pdf in batches:
+            raw = pdf[html_col]
+            texts = []
+            for h in raw:
+                b = extract_text_bytes(bytes(h) if h is not None else None)
+                texts.append(b.decode("utf-8", errors=JVM_REPLACE) if b is not None else None)
+            out = pdf[keep_cols].copy()
+            out[out_col] = pd.Series(texts, index=pdf.index, dtype="object")
+            yield out
+
+    return pages.mapInPandas(run, schema)
 
 
 # Byte fragments that stress the decoders: encoded surrogates (whole,

@@ -1,11 +1,10 @@
-"""Salting: skew-proof aggregation equals plain aggregation exactly, and
-salted partitioning spreads a hot key over multiple partitions."""
+"""Salting: skew-proof aggregation equals plain aggregation exactly."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mintpy_spark.operators.partitioning import salted_agg, salted_repartition
+from mintpy_spark.operators.partitioning import salted_agg
 
 
 def test_salted_agg_equals_plain(spark):
@@ -44,23 +43,3 @@ def test_salted_agg_equals_plain(spark):
         assert plain[k].vmin == salted[k].vmin
         assert plain[k].vmax == salted[k].vmax
         assert abs(plain[k].vsum - salted[k].vsum) < 1e-6
-
-
-def test_salted_repartition_spreads_hot_key(spark):
-    # one key carries 99% of rows — without salt it lands in 1 partition
-    df = spark.range(0, 10000).select(
-        F.when(F.col("id") < 9900, "hot").otherwise(F.col("id").cast("string")).alias("k"),
-        F.col("id").alias("v"),
-    )
-    parts = salted_repartition(df, "k", num_partitions=16, salt=8)
-    hot_parts = (
-        parts.where(F.col("k") == "hot")
-        .select(F.spark_partition_id().alias("p"))
-        .distinct()
-        .count()
-    )
-    assert hot_parts >= 4  # hot key spread over several partitions
-    # deterministic: same shard assignment on recompute
-    a = parts.select("k", "v", "_salt").collect()
-    b = parts.select("k", "v", "_salt").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))

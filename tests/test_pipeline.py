@@ -178,12 +178,23 @@ def test_null_url_is_a_named_error(spark, pages, tmp_path):
 
 
 def test_config_change_invalidates(spark, pages, tmp_path):
+    """A new fingerprint recomputes every part; returning to the first one
+    (its config or input back) recomputes the parts the other one wrote
+    since, rather than serving them as done."""
+    from mintpy_spark.datagen import gen_pages
+
     root = str(tmp_path / "pipe4")
-    run_pipeline(spark, pages, root, buckets=4, config_fp="a")
+    out1 = run_pipeline(spark, pages, root, buckets=4, config_fp="a")
+    want = {stage: fingerprint(out1[stage]) for stage in STAGES}
     ckpt = CheckpointTable(f"{root}/_checkpoint")
     n1 = ckpt.load().num_rows
-    run_pipeline(spark, pages, root, buckets=4, config_fp="b")
+    other = gen_pages(spark, num_urls=6, seed=2)
+    run_pipeline(spark, other, root, buckets=4, config_fp="b")
     assert ckpt.load().num_rows == 2 * n1  # everything recomputed under new fp
+    out3 = run_pipeline(spark, pages, root, buckets=4, config_fp="a")
+    assert ckpt.load().num_rows == 3 * n1  # and again under the first
+    assert {stage: fingerprint(out3[stage]) for stage in STAGES} == want
+    assert_lineage_counts(spark, root)
 
 
 def test_input_fingerprint_changes_on_data_change(spark, tmp_path):

@@ -112,25 +112,3 @@ def test_sniffer_riff_requires_wave_tag():
     assert sniff_media_type(b"RIFF\x10\x00\x00\x00ACON" + b"\x00" * 8) == \
         "application/octet-stream"
     assert sniff_media_type(b"RIFF\x10\x00\x00\x00WAVEfmt ") == "audio/wav"
-
-
-def test_stub_features_honors_dim_past_16(spark):
-    from mintpy_spark.operators.multimodal import (
-        attach_synth_payload,
-        extract_features,
-    )
-
-    d = spark.range(4).withColumnRenamed("id", "doc_id")
-    wp = attach_synth_payload(d, id_col="doc_id")
-    out = extract_features(wp, dim=32, decode_stub=True)
-    sizes = {r.s for r in out.select(F.size("features").alias("s")).collect()}
-    assert sizes == {32}
-
-
-def test_frame_sample_plan_empty_for_no_frames(spark):
-    from mintpy_spark.operators.multimodal import frame_sample_plan
-
-    df = spark.createDataFrame([(17,), (1,), (0,), (None,)], "n_frames int")
-    got = [r.p for r in
-           df.select(frame_sample_plan("n_frames", every_k=8).alias("p")).collect()]
-    assert got == [[0, 8, 16], [0], [], []]

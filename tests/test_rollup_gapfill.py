@@ -296,32 +296,6 @@ def test_vsumsq_flows_through_incremental_merge(spark, obs):
     assert bad == 0
 
 
-def test_histogram_quantile_within_bin_width(spark, obs):
-    """Approx quantile from the histogram tier is within one bin width of
-    the exact percentile."""
-    from pyspark.sql import functions as F
-
-    from mintpy_spark.operators.rollup import histogram_tier, quantile_from_histogram
-
-    # range must COVER the data: quantiles in the clipped overflow bin
-    # report the range edge and carry no width bound
-    lo, hi, nbins = 0.0, 4000.0, 80
-    width = (hi - lo) / nbins
-    h = histogram_tier(obs, "text_length", lo, hi, nbins, tier="1d")
-    qa = quantile_from_histogram(h, 0.5, lo, hi, nbins)
-    # rank-based order statistic, NOT the interpolated percentile: with
-    # sparse buckets interpolation averages values from distant bins and
-    # no histogram can bound that in value space; the sketch's guarantee
-    # is one bin width around an actual rank-q element
-    exact = (
-        obs.groupBy("url", F.date_trunc("day", "warc_ts").alias("bucket_start"))
-        .agg(F.percentile_approx("text_length", 0.5, 100000).alias("p50"))
-    )
-    j = qa.join(exact, ["url", "bucket_start"])
-    bad = j.where(F.abs(F.col("q_approx") - F.col("p50")) > width).count()
-    assert j.count() > 0 and bad == 0
-
-
 def test_gapfill_null_valued_obs_are_no_data(spark):
     """Review fix (live-reproduced DIVIDE_BY_ZERO): a NULL-valued
     observation must not set a bucket's obs_ts — linear interpolation

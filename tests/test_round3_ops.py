@@ -234,22 +234,8 @@ def test_asof_tolerance_subsecond_boundary(spark):
 
 
 # ---------------------------------------------------------------------------
-# open/close tier + cascade
+# open/close tier
 # ---------------------------------------------------------------------------
-
-def test_openclose_cascade_matches_direct(spark, obs):
-    from mintpy_spark.operators.rollup import cascade_openclose, rollup_openclose
-
-    fine = rollup_openclose(obs, "text_length", "1h")
-    coarse = cascade_openclose(fine, "1d")
-    direct = rollup_openclose(obs, "text_length", "1d")
-    c = {(r["url"], r["bucket_start"]): r for r in coarse.collect()}
-    d = {(r["url"], r["bucket_start"]): r for r in direct.collect()}
-    assert c.keys() == d.keys() and len(d) > 0
-    for k in d:
-        for col in ("open_t", "open_v", "close_t", "close_v", "cnt"):
-            assert c[k][col] == d[k][col], (k, col)
-
 
 def test_openclose_tie_break_deterministic(spark):
     from mintpy_spark.operators.rollup import rollup_openclose

@@ -156,28 +156,6 @@ def test_ltob_area_is_exact_integer(spark):
 # Scalar quantization
 # ---------------------------------------------------------------------------
 
-def test_sq_topk_matches_numpy_int_dot(spark):
-    from mintpy_spark.operators.similarity import sq_topk
-
-    rng = np.random.default_rng(3)
-    vecs = rng.uniform(-0.6, 0.6, size=(40, 16)).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]], i % 3) for i in range(40)],
-        "vec_id long, embedding array<float>, label long",
-    )
-    q = [float(x) for x in vecs[0]]
-    out = sq_topk(df, q, k=5, scale=128.0, exclude_id=0).collect()
-
-    qi = np.floor(np.asarray(q, dtype=np.float64) * 128.0 + 0.5).astype(np.int64)
-    ti = np.floor(vecs.astype(np.float64) * 128.0 + 0.5).astype(np.int64)
-    dots = ti @ qi
-    order = sorted(
-        (int(i) for i in range(1, 40)), key=lambda i: (-dots[i], i)
-    )[:5]
-    assert [r.vec_id for r in out] == order
-    assert [r.qdot for r in out] == [int(dots[i]) for i in order]
-
-
 def test_sq_quantize_engine_matches_driver_formula(spark):
     """The Spark-side floor(x*scale + 0.5) must equal the Python/NumPy
     quantization at exact half-points (where ROUND would diverge)."""

@@ -34,10 +34,7 @@ def test_repetition_profile_known_docs(spark):
 
 def test_boilerplate_multiline_corpus(spark):
     # the real (multi-line) path: a footer shared by 3 docs of one source
-    from mintpy_spark.operators.boilerplate import (
-        boilerplate_coverage,
-        boilerplate_lines,
-    )
+    from mintpy_spark.operators.boilerplate import boilerplate_coverage
 
     docs = spark.createDataFrame(
         [
@@ -48,8 +45,12 @@ def test_boilerplate_multiline_corpus(spark):
         ],
         "doc_id long, source string, text string",
     )
-    bl = boilerplate_lines(docs, min_docs=3).collect()
-    assert [(r.source, r.line, r.n_docs) for r in bl] == [("s", "cookie banner", 3)]
+    # min_docs=3: only 'cookie banner' (3 docs of source s) is boilerplate
+    cov3 = {
+        (r.source, r.doc_id): r.n_boiler
+        for r in boilerplate_coverage(docs, min_docs=3).collect()
+    }
+    assert cov3 == {("s", 1): 1, ("s", 2): 1, ("s", 3): 1, ("t", 4): 0}
 
     cov = {
         (r.source, r.doc_id): (r.n_lines, r.n_boiler, r.boiler_frac)

@@ -110,48 +110,3 @@ def test_quota_sample_independent_of_split_salt(spark):
     # each split half should hold ~50% of the quota sample (binomial,
     # 1000 draws -> 3-sigma ~ 47)
     assert abs(frac.get(0, 0) - 500) < 150
-
-
-def test_interval_left_join_exact_arity(spark):
-    # SQL left-join arity: one row per (interval, matched point), plus
-    # exactly ONE all-NULL row for an interval with zero matches — never
-    # one NULL row per empty bucket (the raw per-bucket join's shape).
-    from mintpy_spark.operators.intervaljoin import bucketed_interval_join
-
-    intervals = spark.createDataFrame(
-        [
-            ("a", _ts(1, 0), _ts(3, 30)),   # 3 buckets, 1 match
-            ("c", _ts(8, 0), _ts(11, 0)),   # 4 buckets, empty
-            ("c", _ts(8, 0), _ts(11, 0)),   # duplicate row: own NULL row
-        ],
-        "iv_id string, session_start timestamp, session_end timestamp",
-    )
-    points = spark.createDataFrame(
-        [(1, _ts(2, 30))], "event_id long, ts timestamp"
-    )
-    rows = bucketed_interval_join(
-        intervals, points, bucket_seconds=3600, how="left"
-    ).collect()
-    by_id = {}
-    for r in rows:
-        by_id.setdefault(r["iv_id"], []).append(r)
-    assert len(by_id["a"]) == 1 and by_id["a"][0]["event_id"] == 1
-    assert len(by_id["c"]) == 2  # one NULL row per duplicate, not per bucket
-    assert all(r["event_id"] is None and r["ts"] is None for r in by_id["c"])
-
-
-def test_interval_inner_join_columns(spark):
-    from mintpy_spark.operators.intervaljoin import bucketed_interval_join
-
-    intervals = spark.createDataFrame(
-        [("a", _ts(1, 0), _ts(3, 30))],
-        "iv_id string, session_start timestamp, session_end timestamp",
-    )
-    points = spark.createDataFrame(
-        [(1, _ts(2, 30)), (2, _ts(4, 0))], "event_id long, ts timestamp"
-    )
-    out = bucketed_interval_join(intervals, points, bucket_seconds=3600)
-    assert out.columns == [
-        "iv_id", "session_start", "session_end", "event_id", "ts"
-    ]
-    assert [r["event_id"] for r in out.collect()] == [1]

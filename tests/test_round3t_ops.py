@@ -40,7 +40,7 @@ def test_hdr_bucket_relative_error_bound(spark):
 
 def test_hdr_merge_equals_direct_and_quantile_accuracy(spark):
     from mintpy_spark.operators.sketch import (
-        hdr_merge, hdr_quantile, hdr_tier,
+        hdr_merge, hdr_quantiles, hdr_tier,
     )
 
     data = [(i % 2, i, (i * 37) % 997 + 1) for i in range(2000)]
@@ -58,7 +58,7 @@ def test_hdr_merge_equals_direct_and_quantile_accuracy(spark):
     }
     q95 = {
         r["g"]: r["q_approx"]
-        for r in hdr_quantile(whole, 0.95, key_cols=("g",)).collect()
+        for r in hdr_quantiles(whole, {"q_approx": 0.95}, key_cols=("g",)).collect()
     }
     import numpy as np
 

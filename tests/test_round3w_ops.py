@@ -59,8 +59,8 @@ def test_hll_null_items_ignored(spark):
     assert len(regs) == 1  # only the non-NULL item carries a register
 
 
-def test_bloom_no_false_negatives_and_merge(spark):
-    from mintpy_spark.operators.sketch import bloom_merge, bloom_probe, bloom_tier
+def test_bloom_no_false_negatives(spark):
+    from mintpy_spark.operators.sketch import bloom_probe, bloom_tier
 
     rows = [(d, u) for d in range(3) for u in range(d * 10, d * 10 + 8)]
     df = spark.createDataFrame(rows, "d long, user_id long")
@@ -69,15 +69,6 @@ def test_bloom_no_false_negatives_and_merge(spark):
     probes = df
     hits = bloom_probe(bloom, probes, "user_id", key_cols=("d",))
     assert hits.where(~F.col("bloom_hit")).count() == 0
-    # merge of disjoint halves == direct build (bit_or idempotent fold)
-    halves = bloom_merge(
-        bloom_tier(df.where(F.col("user_id") % 2 == 0), "user_id", key_cols=("d",))
-        .unionByName(
-            bloom_tier(df.where(F.col("user_id") % 2 == 1), "user_id", key_cols=("d",))
-        ),
-        key_cols=("d",),
-    )
-    assert sorted(map(tuple, bloom.collect())) == sorted(map(tuple, halves.collect()))
 
 
 def test_bloom_absent_key_never_hits(spark):

@@ -1,5 +1,5 @@
 """The generic sequential fold (streaming/seqfold.py), parametrized over its
-seven recursions: two restarts equal the batch operator (sessions: the
+five recursions: two restarts equal the batch operator (sessions: the
 batch sessions minus each key's open tail), a replay is a no-op, late rows
 are skipped and counted under hash-interleaved arrival, and a fold killed
 at any step between its writes and its garbage collection replays to
@@ -14,11 +14,8 @@ from typing import Callable
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from mintpy_spark.operators.anomaly import ZScoreMonitor, rolling_zscore_anomalies
 from mintpy_spark.operators.crawlsched import TokenBucket, token_bucket
-from mintpy_spark.operators.diff import ChangeEvents, batch_change_events
 from mintpy_spark.operators.holtwinters import HoltWinters, holt_winters_additive
 from mintpy_spark.operators.kalman import LocalLevel, kalman_level
 from mintpy_spark.operators.sessionize import GapSessions, sessionize
@@ -94,37 +91,6 @@ def _sessions_batch(spark, rows):
     }
 
 
-def _changes_view(rows):
-    return {(r["user_id"], r["ts"]): (r["text_length"], r["prev_length"], r["delta"])
-            for r in rows}
-
-
-def _changes_batch(spark, rows):
-    """The lag-window twin over the non-NULL values, cast to long as the
-    fold truncates them."""
-    hist = spark.createDataFrame(rows, SCHEMA).where(F.col("value").isNotNull())
-    obs = hist.select(F.col("user_id").alias("url"), F.col("ts").alias("warc_ts"),
-                      F.col("value").cast("long").alias("text_length"))
-    return _changes_view(
-        batch_change_events(obs).withColumnsRenamed({"url": "user_id", "warc_ts": "ts"})
-        .collect()
-    )
-
-
-# a small window and a 1-sigma threshold, so the short series flag rows
-ZSCORE = {"lookback": 4, "min_obs": 3, "threshold": 1}
-
-
-def _zscore_view(rows):
-    return {(r["user_id"], r["ts"]): (r["value"], r["n"], r["dev"], r["z"])
-            for r in rows}
-
-
-def _zscore_batch(spark, rows):
-    hist = spark.createDataFrame(rows, SCHEMA)
-    return _zscore_view(rolling_zscore_anomalies(hist, "value", **ZSCORE).collect())
-
-
 @dataclass
 class Case:
     name: str
@@ -151,10 +117,6 @@ CASES = [
          lambda rows: {(r["user_id"], r["session_start"]): _session_row(r)
                        for r in rows},
          _sessions_batch),
-    Case("changes", ChangeEvents, "value", ("user_id", "ts"), _changes_view,
-         _changes_batch),
-    Case("zscore", lambda: ZScoreMonitor(**ZSCORE), "value", ("user_id", "ts"),
-         _zscore_view, _zscore_batch),
 ]
 CASE = {c.name: c for c in CASES}
 by_case = pytest.mark.parametrize("case", CASES, ids=list(CASE))
@@ -204,9 +166,8 @@ def _series(uid, seed, n, start=0):
 @by_case
 def test_two_restarts_equal_batch(spark, paths, case):
     rows1 = _series(1, 5, 16) + _series(2, 6, 9)
-    # a NULL value: dropped by kalman/holt_winters/welford/changes, an
-    # event to the bucket, extends a session without counting, holds a
-    # z-score frame slot
+    # a NULL value: dropped by kalman/holt_winters/welford, an event to
+    # the bucket, extends a session without counting
     rows1[3] = (1, rows1[3][1], None)
     # a NULL ts: skipped by the fold and by the batch operator
     rows1.append((2, None, 99.0))
@@ -400,86 +361,3 @@ def test_equal_ts_rows_of_one_batch_are_all_folded(spark, paths):
     got = _out(spark, case, paths[1])
     assert got == case.batch(spark, rows) and got[1][0] == len(rows)
     assert _late_by_batch(fold) == [0]
-
-
-CHANGE_SCHEMA = "url string, warc_ts timestamp, text_length long"
-
-
-def _run_changes(spark, paths, rows):
-    inp, outp, ckpt = paths
-    spark.createDataFrame(rows, CHANGE_SCHEMA).write.mode("append").parquet(inp)
-    run_seq_fold(spark, ChangeEvents(), inp, outp, ckpt, CHANGE_SCHEMA,
-                 "text_length", key="url", ts="warc_ts")
-    return spark.read.parquet(outp)
-
-
-def test_change_events_hand_counted_across_restart(spark, paths):
-    """On the production (url, warc_ts, text_length) shape: a first-seen
-    url is a change with NULL prev_length and delta, an unchanged length
-    emits nothing (also across a restart), and the events equal the
-    lag-window twin, column names, types and NULLs included."""
-    def at(day, hour):
-        return dt.datetime(2023, 1, day, hour)
-
-    got1 = _run_changes(spark, paths, [
-        ("u1", at(1, 0), 10),
-        ("u1", at(1, 1), 10),   # unchanged: no event
-        ("u1", at(1, 2), 15),   # change
-        ("u2", at(1, 0), 7),
-    ])
-    assert got1.count() == 3  # u1 first-seen, u1 change, u2 first-seen
-    got2 = _run_changes(spark, paths, [
-        ("u1", at(2, 0), 15),   # the carried length: no event
-        ("u2", at(2, 0), 9),    # change
-        ("u3", at(2, 0), 3),    # first seen
-    ])
-    batch = batch_change_events(spark.read.parquet(paths[0]))
-    assert got2.dtypes == batch.dtypes
-    got = {tuple(r) for r in got2.collect()}
-    assert got == {tuple(r) for r in batch.collect()}
-    assert {(r[0], r[4]) for r in got} == {
-        ("u1", None), ("u1", 5), ("u2", None), ("u2", 2), ("u3", None)
-    }
-
-
-def test_change_events_group_split_over_arrow_batches(spark, paths):
-    """A url whose rows span several Arrow batches is folded as one group
-    in ts order."""
-    rows = [("u1", dt.datetime(2023, 1, 1, h), 10 + (h % 3)) for h in range(24)]
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
-    try:
-        got = {tuple(r) for r in _run_changes(spark, paths, rows).collect()}
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    want = batch_change_events(spark.read.parquet(paths[0]))
-    assert got == {tuple(r) for r in want.collect()} and len(got) == 24
-
-
-def test_zscore_monitor_carries_null_slots_and_ignores_redelivery(spark, paths):
-    """The default monitor (lookback 12, min_obs 8, 3 sigma): a spike is
-    flagged; a NULL value holds its frame slot across a restart (the dip
-    early in the second batch scores against 11 values, not 12, from the
-    carried state); the output equals the batch window, column types
-    included; and a duplicate delivery emits nothing and is counted
-    late."""
-    def at(i):
-        return T0 + dt.timedelta(hours=i)
-
-    case = Case("zscore", ZScoreMonitor, "value", ("user_id", "ts"), _zscore_view, None)
-    rows = [(1, at(i), 50.0 + (i % 3)) for i in range(30)]
-    rows[12] = (1, at(12), 300.0)  # spike
-    rows[14] = (1, at(14), None)
-    rows[25] = (1, at(25), 0.5)  # dip: its window, rows 13..24, holds the NULL
-    _run(spark, case, paths, rows[:20])
-    _run(spark, case, paths, rows[20:])
-
-    batch = rolling_zscore_anomalies(spark.createDataFrame(rows, SCHEMA), "value")
-    assert spark.read.parquet(paths[1]).dtypes == batch.dtypes
-    got = _out(spark, case, paths[1])
-    assert got == _zscore_view(batch.collect())
-    assert {t: v[1] for (_, t), v in got.items()} == {at(12): 12, at(25): 11}
-
-    fold = _run(spark, case, paths, rows)  # delivered again
-    assert _out(spark, case, paths[1]) == got
-    assert _late_by_batch(fold) == [0, 0, len(rows)]

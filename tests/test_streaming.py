@@ -213,10 +213,11 @@ def test_read_realtime_and_time_travel(spark, paths):
         m.read_tier(spark, "1h", version=77)
 
 
-def test_query_job_routes_store_plus_tail(spark, paths, tmp_path, capsys):
+@pytest.mark.parametrize("with_tail", [True, False], ids=["tail", "no_tail"])
+def test_query_job_routes_store_plus_tail(spark, paths, tmp_path, capsys, with_tail):
     """jobs/query_job.py: tiered range query over a maintained store plus
-    an unfolded tail equals direct aggregation over all observations in
-    the range."""
+    an unfolded tail (or none) equals direct aggregation over all
+    observations in the range."""
     import json
 
     from jobs.query_job import main as query_main
@@ -237,7 +238,7 @@ def test_query_job_routes_store_plus_tail(spark, paths, tmp_path, capsys):
         ("u0", dt.datetime(2023, 1, 5, 9, 5), 500.0),   # tier interior
         ("u7", dt.datetime(2023, 1, 2, 3, 40), 700.0),  # new key, fringe-ish
     ]
-    tail = spark.createDataFrame(tail_rows, sch)
+    tail = spark.createDataFrame(tail_rows if with_tail else [], sch)
     m = TierMaintainer(store_root)
     m.apply_delta(folded, batch_id=0)
     tail_dir = str(tmp_path / "tail")
@@ -246,8 +247,8 @@ def test_query_job_routes_store_plus_tail(spark, paths, tmp_path, capsys):
     t0, t1 = "2023-01-02 03:30:00", "2023-01-08 14:10:00"
     out_dir = str(tmp_path / "result")
     query_main([
-        "--store", store_root, "--from", t0, "--to", t1,
-        "--tail", tail_dir, "--output", out_dir,
+        "--store", store_root, "--from", t0, "--to", t1, "--output", out_dir,
+        *(["--tail", tail_dir] if with_tail else []),
     ])
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
@@ -268,7 +269,7 @@ def test_query_job_routes_store_plus_tail(spark, paths, tmp_path, capsys):
     got = spark.read.parquet(out_dir)
     w = {r["url"]: r for r in want.collect()}
     g = {r["url"]: r for r in got.collect()}
-    assert set(w) == set(g) and "u7" in g
+    assert set(w) == set(g) and ("u7" in g) == with_tail
     for k in w:
         assert g[k]["cnt"] == w[k]["cnt"], k
         assert g[k]["vmin"] == w[k]["vmin"] and g[k]["vmax"] == w[k]["vmax"], k

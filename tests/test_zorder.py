@@ -1,14 +1,18 @@
-"""Z-order layout (operators/zorder.py): bit-interleave correctness and
-measured row-group skipping vs a 1-D sort."""
+"""Z-order values (operators/zorder.py): bit-interleave correctness against
+a pure-Python reference."""
 
 from __future__ import annotations
 
-import glob
+from mintpy_spark.operators.zorder import zvalue
 
-import pyarrow.parquet as pq
-import pytest
 
-from mintpy_spark.operators.zorder import zorder_layout, zvalue, zvalue_py
+def zvalue_py(x: int, y: int, bits: int = 6) -> int:
+    """Pure-Python reference for ``zvalue``."""
+    z = 0
+    for i in range(bits):
+        z |= ((x >> i) & 1) << (2 * i)
+        z |= ((y >> i) & 1) << (2 * i + 1)
+    return z
 
 
 def test_zvalue_matches_python_reference(spark):
@@ -18,52 +22,3 @@ def test_zvalue_matches_python_reference(spark):
     )
     for r in df.collect():
         assert r.z == zvalue_py(r.x, r.y, 6), (r.x, r.y)
-
-
-def _groups_admitting(path_glob, x_lo, x_hi, y_lo, y_hi):
-    """Row groups whose (x, y) min/max stats intersect the box — the
-    set a footer-pruning reader must fetch."""
-    touched = total = 0
-    for f in glob.glob(path_glob):
-        md = pq.ParquetFile(f).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            sx = rg.column(idx["x"]).statistics
-            sy = rg.column(idx["y"]).statistics
-            total += 1
-            if sx.min <= x_hi and sx.max >= x_lo and sy.min <= y_hi and sy.max >= y_lo:
-                touched += 1
-    return touched, total
-
-
-@pytest.mark.parametrize("box", [(8, 15, 8, 15), (0, 7, 48, 55)])
-def test_zorder_skips_more_rowgroups_than_1d_sort(spark, tmp_path, box):
-    """Write the same (x, y) grid z-clustered and x-sorted with small row
-    groups; a 2-D box predicate must admit no MORE row groups under the
-    z layout, and strictly fewer for an off-diagonal box (the 1-D layout
-    cannot bound y at all)."""
-    n = 64
-    rows = [(i % n, (i * 7) % n) for i in range(n * n)]
-    df = spark.createDataFrame(rows, "x long, y long")
-
-    # partitions=1: a single globally-sorted file per layout. With >1
-    # range partition the boundaries come from RangePartitioner sampling
-    # whose seed derives from rdd.id — suite-order dependent, which made
-    # this test flaky in the full run; one partition skips sampling and
-    # the row-group boxes are fully content-determined.
-    zdir, xdir = str(tmp_path / "z"), str(tmp_path / "x")
-    zorder_layout(df, "x", "y", bits=6, partitions=1).write.option(
-        "parquet.block.size", 16 * 1024
-    ).parquet(zdir)
-    df.repartitionByRange(1, "x").sortWithinPartitions("x").write.option(
-        "parquet.block.size", 16 * 1024
-    ).parquet(xdir)
-
-    zt, ztot = _groups_admitting(f"{zdir}/*.parquet", *box)
-    xt, xtot = _groups_admitting(f"{xdir}/*.parquet", *box)
-    # sanity: both layouts produced multiple row groups to prune against
-    assert ztot >= 4 and xtot >= 4
-    assert zt <= xt
-    # the box covers 1/64 of the plane; the z layout must actually skip
-    assert zt < ztot

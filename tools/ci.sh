@@ -8,9 +8,12 @@
 # mintpy_spark/ or jobs/ outside the one runner (operators/seqstate.py
 # fold_groups, which batch and stream both call), no lineage row dict
 # ("row_count": under mintpy_spark/ or jobs/) outside the one lineage writer
-# (plans/checkpoint.py CheckpointTable.record), no module under mintpy_spark/
-# that only tests import (an import or a dotted path in mintpy_spark/, jobs/,
-# tools/, perfbench/, bench.py or __spark_entry__.py counts),
+# (plans/checkpoint.py CheckpointTable.record), no top-level def or class
+# under mintpy_spark/ (outside __init__.py and the fixture generator
+# datagen.py) that only tests reach: each must be @_q-registered or named
+# (a Name, an Attribute or an import alias) by reached code, which is all
+# module-level code, everything in jobs/, tools/, perfbench/, bench.py and
+# __spark_entry__.py, and transitively every definition these name; then
 # the full pytest suite, the cascade, ingest and serve benchmarks' smoke
 # self-tests (their output checks: sum(cnt) at 30d ==
 # pages; text_sha == sha1(text), cnt/vsum per tier, n over blocks; stored
@@ -21,9 +24,10 @@
 # tier_realtime_read_check, the dedup index's dedup_index_realtime_check and
 # the lineage table's checkpoint_lineage_audit; plus
 # tier_refresh_incremental_1d, the oracle of the one-aggregation tier fold,
-# and kalman_level_filter, holt_winters_weekly, welford_online_var and
+# kalman_level_filter, holt_winters_weekly, welford_online_var and
 # token_bucket_admission, the oracles of the batch operators that run the
-# one fold runner).
+# one fold runner, and kalman_level_adaptive, whose per-key filter is the
+# same LocalLevel recursion).
 # Run before stamping closing numbers in BASELINE.md — "N/N green" claims
 # must cite this script's output.
 #
@@ -60,28 +64,46 @@ if grep -rnE --include='*.py' '"row_count":' mintpy_spark/ jobs/ \
   exit 1
 fi
 
-echo "== every module under mintpy_spark/ is imported outside tests/ =="
+echo "== every definition under mintpy_spark/ is reached outside tests/ =="
 python3 - <<'PY'
+import ast
 import pathlib
-import re
 import sys
 
-files = [p for d in ("mintpy_spark", "jobs", "tools", "perfbench")
-         for p in pathlib.Path(d).glob("**/*.py")]
-text = {p: p.read_text() for p in files + [pathlib.Path("bench.py"), pathlib.Path("__spark_entry__.py")]}
-orphans = []
+roots = [p for d in ("jobs", "tools", "perfbench") for p in pathlib.Path(d).glob("**/*.py")]
+roots += [pathlib.Path("bench.py"), pathlib.Path("__spark_entry__.py")]
+defs, reached = {}, []  # defs: (module, name) -> node; reached: nodes whose names count
 for mod in sorted(pathlib.Path("mintpy_spark").glob("**/*.py")):
-    if mod.name == "__init__.py":
-        continue
-    pkg, _, name = ".".join(mod.with_suffix("").parts).rpartition(".")
-    # `import pkg.name`, any dotted `pkg.name`, or `from pkg import ..., name`
-    used = re.compile(rf"\b{re.escape(pkg)}\.{name}\b"
-                      rf"|from {re.escape(pkg)} import (?:\([^)]*|[^\n]*)\b{name}\b")
-    if not any(used.search(t) for p, t in text.items() if p != mod):
-        orphans.append(str(mod))
-if orphans:
-    print("\n".join(orphans))
-    sys.exit("only tests import the modules above; give each a production importer or delete it")
+    for node in ast.parse(mod.read_text()).body:
+        registered = any(isinstance(d, ast.Call) and getattr(d.func, "id", "") == "_q"
+                         for d in getattr(node, "decorator_list", []))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)) \
+                and not registered and mod.name not in ("__init__.py", "datagen.py"):
+            defs[(str(mod), node.name)] = node
+        else:
+            reached.append(node)
+reached += [ast.parse(p.read_text()) for p in roots]
+
+
+def names(node):
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield from n.name.split(".")
+
+
+seen = set()
+while reached:
+    seen.update(names(reached.pop()))
+    for key in [k for k in defs if k[1] in seen]:
+        reached.append(defs.pop(key))
+for mod, name in sorted(defs):
+    print(f"{mod}: {name}")
+if defs:
+    sys.exit(f"{len(defs)} definitions above are reached only from tests; give each a caller or delete it")
 PY
 
 echo "== pytest =="
@@ -102,7 +124,7 @@ if [[ "${1:-}" == "--fast" ]]; then
     holt_winters_realtime_check welford_realtime_check token_bucket_realtime_check \
     tier_realtime_read_check dedup_index_realtime_check checkpoint_lineage_audit \
     tier_refresh_incremental_1d kalman_level_filter holt_winters_weekly \
-    welford_online_var token_bucket_admission
+    welford_online_var token_bucket_admission kalman_level_adaptive
 else
   echo "== full-registry oracle sweep (sf0.01) =="
   python tools/check_oracle.py
