@@ -213,11 +213,19 @@ def test_read_realtime_and_time_travel(spark, paths):
         m.read_tier(spark, "1h", version=77)
 
 
-@pytest.mark.parametrize("with_tail", [True, False], ids=["tail", "no_tail"])
-def test_query_job_routes_store_plus_tail(spark, paths, tmp_path, capsys, with_tail):
+def test_query_job_routes_store_plus_tail(spark, paths, tmp_path, capsys):
     """jobs/query_job.py: tiered range query over a maintained store plus
-    an unfolded tail (or none) equals direct aggregation over all
-    observations in the range."""
+    an unfolded tail equals direct aggregation over all observations in
+    the range."""
+    _check_query_job_range(spark, paths, tmp_path, capsys, with_tail=True)
+
+
+def test_query_job_routes_store_without_tail(spark, paths, tmp_path, capsys):
+    """Same range query with no --tail: the store alone answers it."""
+    _check_query_job_range(spark, paths, tmp_path, capsys, with_tail=False)
+
+
+def _check_query_job_range(spark, paths, tmp_path, capsys, with_tail):
     import json
 
     from jobs.query_job import main as query_main
