@@ -4,7 +4,7 @@ The companion to jobs/rollup_job.py: instead of the full checkpointed
 rebuild, each invocation folds ONLY the observation files that arrived
 since the last run into the stored tier tables (streaming AvailableNow
 checkpoint tracks which files were consumed; the fold is one partial-merge
-aggregation per tier, refresh_tiers_incremental of operators/rollup.py).
+aggregation per tier, merge_tier_delta of operators/rollup.py).
 Schedule it as the per-interval refresh job — each run reads the stored
 tiers and the new data, never raw history.
 

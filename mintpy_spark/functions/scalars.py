@@ -29,6 +29,10 @@ UNIT_SCALE = {
     "year": 365.25 * 86400.0,
 }
 
+# The range of portable_hash60: 15 hex digits, ~2^60. KMV and theta
+# sketch estimators scale by it, in Spark and in their DuckDB oracles.
+HASH60_SPACE = 16**15
+
 
 def portable_hash60(col: Column) -> Column:
     """60-bit engine-portable uniform hash: first 15 hex chars of
@@ -36,10 +40,10 @@ def portable_hash60(col: Column) -> Column:
     DuckDB twin: ``('0x' || substring(md5(x), 1, 15))::BIGINT``.
 
     The ONE implementation of this recipe — dedup token hashing
-    (operators/dedup.token_hash), KMV sketches
-    (operators/sketch.portable_hash) and sampling buckets
-    (operators/sampling.stable_bucket) all delegate here, so the
-    cross-module hash identity can never silently fork."""
+    (operators/dedup), the sketches (operators/sketch), sampling buckets
+    (operators/sampling.stable_bucket) and the queries' fingerprints all
+    call it, so the cross-module hash identity can never silently fork
+    (tools/ci.sh fails on an inline copy)."""
     return F.conv(
         F.substring(F.md5(F.encode(col.cast("string"), "UTF-8")), 1, 15), 16, 10
     ).cast("long")

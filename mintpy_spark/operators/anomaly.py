@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mintpy_spark.functions.timefn import bucket_start
+
 
 def quantize_fixed(col: Column, scale: float = 100.0) -> Column:
     """Engine-portable fixed-point quantization of a FLOAT column:
@@ -230,7 +232,7 @@ def burst_ratio_daily(
     calendar gaps (days with zero events) age out of the baseline
     correctly, unlike a ROWS frame which would stretch across gaps.
     """
-    day = F.date_trunc("day", F.col(ts).cast("timestamp"))
+    day = bucket_start(F.col(ts).cast("timestamp"), "1d")
     c = (
         events.groupBy(F.col(key).alias(key), day.alias("bucket_day"))
         .agg(F.count(F.lit(1)).alias("c"))

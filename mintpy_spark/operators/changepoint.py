@@ -105,7 +105,7 @@ def trend_break(
     over ~days-per-key rows. Candidates are day boundaries with >= 2
     days on each side."""
     day_t = F.datediff(
-        F.date_trunc("day", F.col(ts).cast("timestamp")).cast("date"),
+        bucket_start(F.col(ts).cast("timestamp"), "1d").cast("date"),
         F.lit(epoch).cast("date"),
     ).cast("long")
     cents = F.round(F.col(value_col) * 100, 0).cast("long")

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mintpy_spark.functions.scalars import nonempty_tokens, portable_hash60
+
 # Cross-engine-exact hash constants (inlined into the DuckDB oracles too).
 HASH_P = 1_000_000_007
 
@@ -51,21 +53,10 @@ def perm_coeffs(num_perm: int = NUM_PERM) -> list[tuple[int, int]]:
     return [(1 + i * 1000003, i * 7919) for i in range(num_perm)]
 
 
-def token_hash(tok: Column) -> Column:
-    """60-bit integer from the md5 hex digest — identical in Spark
-    (conv(substring(md5), 16, 10)) and DuckDB (('0x' || substring)::BIGINT).
-    Delegates to the single recipe in functions/scalars.portable_hash60."""
-    from mintpy_spark.functions.scalars import portable_hash60
-
-    return portable_hash60(tok)
-
-
 def tokens(text_col: str) -> Column:
     """Distinct non-empty whitespace tokens (the unigram shingle set).
     Tokenization delegates to the ONE expression in
     functions/scalars.nonempty_tokens."""
-    from mintpy_spark.functions.scalars import nonempty_tokens
-
     return F.array_distinct(nonempty_tokens(text_col))
 
 
@@ -87,7 +78,7 @@ def minhash_signatures(
     # transform: a filter on size(_hm) would be predicate-pushed below the
     # projection, re-inlining the md5 transform into the Filter and
     # hashing every token twice
-    hm = F.transform(tokens(text_col), lambda t: token_hash(t) % HASH_P)
+    hm = F.transform(tokens(text_col), lambda t: portable_hash60(t) % HASH_P)
     staged = docs.where(F.size(tokens(text_col)) > 0).select(id_col, hm.alias("_hm"))
     mins = [
         F.array_min(
@@ -214,7 +205,7 @@ def simhash(
     long (bit 63 is the sign bit, representable; a ``1 << 63`` Python
     literal would overflow LongType at plan build)."""
     assert 0 < bits <= 64, "simhash supports at most 64 bits (LongType)"
-    hv = F.transform(tokens(text_col), lambda t: token_hash(t))
+    hv = F.transform(tokens(text_col), lambda t: portable_hash60(t))
     # cheap-filter-first, same reason as minhash_signatures
     staged = docs.where(F.size(tokens(text_col)) > 0).select(id_col, hv.alias("_hv"))
     votes = [
@@ -732,8 +723,6 @@ def window_hash_positions(
     never leaves the projection, so nothing wider than 16 bytes shuffles.
     size(toks) >= k is guarded explicitly: Spark's sequence(0, n-k)
     yields a DESCENDING sequence when n < k, not an empty one."""
-    from mintpy_spark.functions.scalars import nonempty_tokens
-
     t = docs.select(
         F.col(id_col), nonempty_tokens(text_col).alias("_toks")
     ).where(F.size("_toks") >= k)
@@ -742,7 +731,7 @@ def window_hash_positions(
         lambda i: F.concat_ws(" ", F.slice("_toks", i + F.lit(1), F.lit(k))),
     )
     pos = t.select(F.col(id_col), F.explode(wins).alias("_win"))
-    return pos.select(F.col(id_col), token_hash(F.col("_win")).alias("h"))
+    return pos.select(F.col(id_col), portable_hash60(F.col("_win")).alias("h"))
 
 
 def duplicated_window_fraction(
@@ -882,8 +871,6 @@ def cdc_chunk_positions(
 
     sequence(1, n-1) is guarded behind n >= 2 (Spark yields a
     DESCENDING [1, 0] for n = 1, not an empty array)."""
-    from mintpy_spark.functions.scalars import nonempty_tokens
-
     t = docs.select(
         F.col(id_col), nonempty_tokens(text_col).alias("_toks")
     ).where(F.size("_toks") >= 1)
@@ -893,7 +880,7 @@ def cdc_chunk_positions(
         F.filter(
             F.sequence(F.lit(1), n - 1),
             lambda i: F.pmod(
-                token_hash(F.element_at(F.col("_toks"), i + 1)),
+                portable_hash60(F.element_at(F.col("_toks"), i + 1)),
                 F.lit(window_mod),
             )
             == 0,
@@ -907,7 +894,7 @@ def cdc_chunk_positions(
         lambda s, e: F.concat_ws(" ", F.slice(F.col("_toks"), s + 1, e - s)),
     )
     pos = t.select(F.col(id_col), F.explode(chunks).alias("_chunk"))
-    return pos.select(F.col(id_col), token_hash(F.col("_chunk")).alias("h"))
+    return pos.select(F.col(id_col), portable_hash60(F.col("_chunk")).alias("h"))
 
 
 def cdc_chunk_dedup(

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mintpy_spark.functions.timefn import bucket_start
+
 
 def pair_deltas(
     obs: DataFrame,
@@ -210,7 +212,7 @@ def seq_closure_ml(
         )
     grp = F.floor(F.col(key) / F.lit(looks))
     e = (
-        obs.select(key, grp.alias("grp"), F.date_trunc("day", ts).alias("d"),
+        obs.select(key, grp.alias("grp"), bucket_start(F.col(ts), "1d").alias("d"),
                    F.col(value_col).alias("_v"))
         .groupBy(key, "grp", "d")
         .agg(F.avg("_v").alias("v"))

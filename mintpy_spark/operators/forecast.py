@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mintpy_spark.functions.timefn import bucket_start
+
 
 def snaive_mase_daily(
     events: DataFrame, key: str = "event_type", ts: str = "ts",
@@ -42,7 +44,7 @@ def snaive_mase_daily(
     NULL when either denominator is empty or err_1 = 0 (a metronomic
     series has no naive error to scale by). mase_bp < 10000 means the
     seasonal forecast beats naive-1."""
-    day = F.date_trunc("day", F.col(ts).cast("timestamp"))
+    day = bucket_start(F.col(ts).cast("timestamp"), "1d")
     c = (
         events.groupBy(F.col(key).alias(key), day.alias("bucket_day"))
         .agg(F.count(F.lit(1)).alias("c"))
@@ -128,7 +130,7 @@ def holt_linear_mase_daily(
 
     import pandas as pd
 
-    day = F.date_trunc("day", F.col(ts).cast("timestamp"))
+    day = bucket_start(F.col(ts).cast("timestamp"), "1d")
     daily = (
         events.groupBy(F.col(key).alias("key"), day.alias("bucket_day"))
         .agg(F.count(F.lit(1)).alias("y"))

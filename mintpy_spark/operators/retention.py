@@ -56,11 +56,15 @@ def compact_raw(
       compact after.
 
     Crash safety: the ledger rows, each naming its raw file, are
-    appended before the files are deleted, and each run first deletes
-    every raw file the ledger names (a name is never reused: Spark's
-    carry a uuid), which finishes a killed run before the gate. A ledger
-    without the file column names none. The tier store is never touched;
-    the run is recorded in the maintainer's lineage.
+    appended before the files are deleted, as ONE parquet file, so one
+    rename publishes all of a run's rows or none of them (a run that
+    published part of them would delete, on the rerun, a file the ledger
+    counts only in part, and the gate would refuse from then on). Each
+    run first deletes every raw file the ledger names (a name is never
+    reused: Spark's carry a uuid), which finishes a killed run before the
+    gate, so a killed run leaves at worst files the ledger already
+    counts. A ledger without the file column names none. The tier store
+    is never touched; the run is recorded in the maintainer's lineage.
     """
     from mintpy_spark.functions.timefn import TIER_SECONDS, bucket_start, iso_to_epoch_sec
 
@@ -140,13 +144,12 @@ def compact_raw(
     dropped = sum(r["n"] for r in files if r["drop"])
     kept = sum(r["n"] for r in files if not r["drop"])
     if drop_files:
-        # the ledger first: a kill before the deletes leaves files it
-        # names, which the next run deletes
-        bucket_counts(
+        # the ledger first, one file: a kill before the deletes leaves
+        # files it names, which the next run deletes
+        rows = bucket_counts(
             raw.where(F.col("_file").isin(drop_files)), F.col("_file").alias("file")
-        ).select("k", "b", F.col("raw_cnt").alias("dropped"), "file").write.mode(
-            "append"
-        ).parquet(ledger_path)
+        ).select("k", "b", F.col("raw_cnt").alias("dropped"), "file")
+        rows.coalesce(1).write.mode("append").parquet(ledger_path)
         _delete_files(spark, fs, drop_files)
     maintainer.metrics.record(
         f"compact_{cutoff}", raw_path, {f"compact_raw_{tier}": {0: kept}}

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mintpy_spark.functions.timefn import decimal_year
+from mintpy_spark.functions.timefn import bucket_start, decimal_year
 
 
 def pairwise_slopes(
@@ -155,7 +155,7 @@ def winsorized_daily_stats(
     bounded (one day of one metric per partition); skew across days is
     bounded by the crawl's own daily volume.
     """
-    day = F.date_trunc("day", F.col(ts).cast("timestamp"))
+    day = bucket_start(F.col(ts).cast("timestamp"), "1d")
     v = F.col(value)
     base = (
         events.where(v.isNotNull() & ~F.isnan(v))

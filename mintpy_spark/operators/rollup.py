@@ -36,10 +36,11 @@ def _partial_cols(df: DataFrame) -> list[str]:
     return cols
 
 
-def _merge_partials(df: DataFrame, key: str) -> DataFrame:
+def _merge_partials(df: DataFrame, *group: str) -> DataFrame:
     """The ONE partial-merge spec (cnt/vsum add, vmin/vmax combine,
-    vsumsq add when present) shared by cascade() and rollup_to_width();
-    df must carry (key, bucket_start, *PARTIAL_COLS[, vsumsq])."""
+    vsumsq add when present) shared by cascade(), merge_tier_delta(),
+    rollup_to_width() and route_range_agg(); df must carry (*group,
+    *PARTIAL_COLS[, vsumsq])."""
     aggs = [
         F.sum("cnt").alias("cnt"),
         F.sum("vsum").alias("vsum"),
@@ -48,7 +49,7 @@ def _merge_partials(df: DataFrame, key: str) -> DataFrame:
     ]
     if "vsumsq" in df.columns:
         aggs.append(F.sum("vsumsq").alias("vsumsq"))
-    return df.groupBy(key, "bucket_start").agg(*aggs)
+    return df.groupBy(*group).agg(*aggs)
 
 
 def rollup_from_obs(
@@ -93,7 +94,7 @@ def cascade(tier_df: DataFrame, to_tier: str, key: str = "url") -> DataFrame:
             bucket_start(F.col("bucket_start"), to_tier).alias("bucket_start"),
             *_partial_cols(tier_df),
         ),
-        key,
+        key, "bucket_start",
     )
 
 
@@ -197,7 +198,7 @@ def merge_tier_delta(
     d = unit_partials(delta_obs, value_col, tier, key=key, ts=ts, with_sq=with_sq)
     if stored is not None:
         d = stored.select(*d.columns).unionByName(d)
-    return _merge_partials(d, key)
+    return _merge_partials(d, key, "bucket_start")
 
 
 def parse_width(spec: str) -> int:
@@ -257,37 +258,8 @@ def rollup_to_width(
     )
     return _merge_partials(
         tier_df.select(key, anchored.alias("bucket_start"), *_partial_cols(tier_df)),
-        key,
+        key, "bucket_start",
     )
-
-
-def refresh_tiers_incremental(
-    stored: dict[str, DataFrame] | None,
-    delta_obs: DataFrame,
-    value_col: str,
-    tiers: tuple[str, ...] = ("1h", "1d", "30d"),
-    key: str = "url",
-    ts: str = "warc_ts",
-    with_sq: bool = False,
-) -> dict[str, DataFrame]:
-    """Full continuous-aggregate maintenance: fold a late/new observation
-    delta into EVERY stored tier — each tier's new version is ONE
-    aggregation, merge_tier_delta of its stored partials and the delta's
-    unit partials at its own bucket. Raw history is never re-read, and no
-    tier waits on (or materializes) another.
-
-    Trade-off: every fold shuffles each stored tier once. The coarser
-    tiers are never larger than the finest one, which every fold shuffles
-    anyway, and no fold computes a dirty-bucket set or holds a tier in
-    the block manager. ``stored`` None builds the tiers from the delta
-    alone (``with_sq`` as in merge_tier_delta)."""
-    return {
-        t: merge_tier_delta(
-            None if stored is None else stored[t], delta_obs, value_col, t,
-            key=key, ts=ts, with_sq=with_sq,
-        )
-        for t in tiers
-    }
 
 
 def histogram_tier(
@@ -438,12 +410,7 @@ def route_range_agg(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.groupBy(key).agg(
-        F.sum("cnt").alias("cnt"),
-        F.sum("vsum").alias("vsum"),
-        F.min("vmin").alias("vmin"),
-        F.max("vmax").alias("vmax"),
-    )
+    return _merge_partials(out, key)
 
 
 def rollup_openclose(

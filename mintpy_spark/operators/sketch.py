@@ -33,17 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-HASH_SPACE = float(16**15)  # md5 15-hex-digit prefix, ~2^60
-
-
-def portable_hash(col: Column) -> Column:
-    """Engine-portable uniform hash of a string column -> long in
-    [0, 16^15). Identical to DuckDB's
-    ``('0x' || substring(md5(x), 1, 15))::BIGINT``. Delegates to the
-    single recipe in functions/scalars.portable_hash60."""
-    from mintpy_spark.functions.scalars import portable_hash60
-
-    return portable_hash60(col)
+from mintpy_spark.functions.scalars import HASH60_SPACE, portable_hash60
+from mintpy_spark.functions.timefn import bucket_start
 
 
 def kmv_tier(
@@ -56,13 +47,11 @@ def kmv_tier(
 ) -> DataFrame:
     """Raw rows -> per-bucket KMV sketch: (key..., bucket_start, kmv
     array<long> of the <=k smallest distinct item hashes, ascending)."""
-    from mintpy_spark.functions.timefn import bucket_start
-
     staged = (
         obs.select(
             *key_cols,
             bucket_start(F.col(ts), tier).alias("bucket_start"),
-            portable_hash(F.col(item_col)).alias("_h"),
+            portable_hash60(F.col(item_col)).alias("_h"),
         )
         # NULL items hash to NULL; distinct-count semantics ignore NULL,
         # and a NULL must never occupy a rank slot (NULLS FIRST would
@@ -89,8 +78,6 @@ def kmv_merge(
     arrays, re-bucket, dedupe, keep the k smallest — the loss-free merge
     (see module docstring). Cost is O(k) rows per fine bucket, never the
     raw data."""
-    from mintpy_spark.functions.timefn import bucket_start
-
     exploded = sketch_df.select(
         *key_cols,
         bucket_start(F.col("bucket_start"), to_tier).alias("bucket_start"),
@@ -115,7 +102,7 @@ def kmv_estimate(sketch_df: DataFrame, k: int = 32) -> DataFrame:
     n_kept = F.size("kmv")
     kth = F.element_at("kmv", -1)
     est = F.when(n_kept < k, n_kept.cast("double")).otherwise(
-        F.round(F.lit(k - 1) * F.lit(HASH_SPACE) / kth.cast("double"), 2)
+        F.round(F.lit(k - 1) * F.lit(float(HASH60_SPACE)) / kth.cast("double"), 2)
     )
     return sketch_df.select(
         *[c for c in sketch_df.columns if c != "kmv"],
@@ -133,7 +120,7 @@ def kmv_set(
     sibling of kmv_tier — used for audience/segment sketches where the
     grouping is categorical rather than temporal."""
     staged = (
-        df.select(*key_cols, portable_hash(F.col(item_col)).alias("_h"))
+        df.select(*key_cols, portable_hash60(F.col(item_col)).alias("_h"))
         .where(F.col("_h").isNotNull())
         .dropDuplicates([*key_cols, "_h"])
     )
@@ -146,27 +133,33 @@ def kmv_set(
     )
 
 
+def kmv_theta(a_col: str, b_col: str, k: int) -> Column:
+    """The sampling threshold of a pair of KMV sketches (Dasgupta et al.,
+    "Theta sketch framework", public literature): theta_s = HASH60_SPACE
+    if the sketch is not full (it IS the distinct set) else its k-th
+    minimum; theta = least(theta_a, theta_b). Set operations keep the
+    hashes below theta and scale by the inverse density SPACE/theta."""
+    space = F.lit(HASH60_SPACE)
+    th_a = F.when(F.size(a_col) < k, space).otherwise(F.element_at(a_col, -1))
+    th_b = F.when(F.size(b_col) < k, space).otherwise(F.element_at(b_col, -1))
+    return F.least(th_a, th_b)
+
+
 def kmv_intersect_estimate(
     pairs: DataFrame, a_col: str = "kmv_a", b_col: str = "kmv_b", k: int = 32
 ) -> DataFrame:
     """Theta-style intersection estimate from two KMV sketches on one row.
 
-    theta_s = HASH_SPACE if the sketch is not full (it IS the distinct
-    set) else its k-th minimum; theta = least(theta_a, theta_b); the
-    sample is |{h in A cap B : h < theta}| and the estimate scales the
-    sample by the inverse sampling density SPACE/theta (Dasgupta et al.,
-    "Theta sketch framework", public literature). When both sketches are
-    small theta == SPACE and the 'estimate' is the exact intersection
-    size. All comparisons are long-long; ONE double division at the end,
-    identical expression order to the oracle."""
-    space = F.lit(int(HASH_SPACE)).cast("long")
-    th_a = F.when(F.size(a_col) < k, space).otherwise(F.element_at(a_col, -1))
-    th_b = F.when(F.size(b_col) < k, space).otherwise(F.element_at(b_col, -1))
-    theta = F.least(th_a, th_b)
+    The sample is |{h in A cap B : h < theta}| (theta from kmv_theta) and
+    the estimate scales it by SPACE/theta. When both sketches are small
+    theta == SPACE and the 'estimate' is the exact intersection size. All
+    comparisons are long-long; ONE double division at the end, identical
+    expression order to the oracle."""
+    theta = kmv_theta(a_col, b_col, k)
     inter = F.array_intersect(F.col(a_col), F.col(b_col))
     sample = F.size(F.filter(inter, lambda h: h < theta))
     est = F.round(
-        sample.cast("double") * F.lit(HASH_SPACE) / theta.cast("double"), 2
+        sample.cast("double") * F.lit(float(HASH60_SPACE)) / theta.cast("double"), 2
     )
     keep = [c for c in pairs.columns if c not in (a_col, b_col)]
     return pairs.select(
@@ -193,7 +186,7 @@ def cms_bucket(col: Column, row: Column, width: int = CMS_WIDTH) -> Column:
     DuckDB: ``('0x' || substring(md5(x || '|' || r), 1, 15))::BIGINT %
     width`` (the hash is non-negative, so % == pmod)."""
     return F.pmod(
-        portable_hash(
+        portable_hash60(
             F.concat(col.cast("string"), F.lit("|"), row.cast("string"))
         ),
         F.lit(int(width)),
@@ -413,9 +406,7 @@ def hll_tier(
     rho = trailing zeros of the top-54-bit remainder + 1 (the rest==0
     row saturates at 55).  The Exchange carries at most 64 rows per
     (key, bucket_start) — independent of item volume, the tier claim."""
-    from mintpy_spark.functions.timefn import bucket_start
-
-    h = portable_hash(F.col(item_col))
+    h = portable_hash60(F.col(item_col))
     rest = F.shiftright(h, HLL_BUCKET_BITS)
     rho = F.when(rest == 0, F.lit(HLL_MAX_RHO)).otherwise(
         F.bit_count(rest.bitwiseAND(-rest) - 1) + 1
@@ -439,8 +430,6 @@ def hll_merge(
     """Fold fine-tier registers into a coarser tier: MAX per register —
     associative, commutative AND idempotent (replaying a partial is a
     no-op), the strongest merge class in the sketch family."""
-    from mintpy_spark.functions.timefn import bucket_start
-
     return (
         sketch_df.select(
             *key_cols,
@@ -506,7 +495,7 @@ def bloom_positions(col: Column, k: int = BLOOM_K, words: int = BLOOM_WORDS) -> 
     portable_hash60 of the item string salted with '|i'."""
     m_bits = words * BLOOM_WORD_BITS
     return [
-        portable_hash(F.concat(col.cast("string"), F.lit(f"|{i}"))) % m_bits
+        portable_hash60(F.concat(col.cast("string"), F.lit(f"|{i}"))) % m_bits
         for i in range(k)
     ]
 

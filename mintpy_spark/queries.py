@@ -26,7 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mintpy_spark.functions.timefn import decimal_year
+from mintpy_spark.functions.timefn import bucket_start, decimal_year
 from mintpy_spark.operators.diff import pair_deltas, temporal_derivative
 from mintpy_spark.operators.gapfill import gapfill
 from mintpy_spark.operators.rollup import cascade, rollup_from_obs
@@ -165,7 +165,7 @@ def rollup_30d_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def spatial_avg_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").withColumn(
-        "bucket_start", F.date_trunc("day", "ts")
+        "bucket_start", bucket_start(F.col("ts"), "1d")
     )
     out = spatial_average(ev, "value", time_col="bucket_start")
     return out.select("bucket_start", _round4("spatial_avg").alias("spatial_avg"), "cnt")
@@ -204,7 +204,7 @@ def temporal_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def epoch_std_rms_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").withColumn(
-        "bucket_start", F.date_trunc("day", "ts")
+        "bucket_start", bucket_start(F.col("ts"), "1d")
     )
     out = epoch_std_rms(ev, "value", time_col="bucket_start")
     return out.select(
@@ -657,11 +657,11 @@ def rollup_1d_change_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tier_refresh_incremental_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full continuous-aggregate maintenance, end-to-end: tiers built from
-    the first 20 days, a late slice folded into each tier (1h, 1d) by one
-    partial-merge aggregation. The oracle is the direct full daily
-    aggregation — incremental maintenance must be indistinguishable from a
-    from-scratch build."""
-    from mintpy_spark.operators.rollup import build_tiers, refresh_tiers_incremental
+    the first 20 days, a late slice folded into the stored 1d tier by one
+    partial-merge aggregation (merge_tier_delta, the tier fold's step).
+    The oracle is the direct full daily aggregation — incremental
+    maintenance must be indistinguishable from a from-scratch build."""
+    from mintpy_spark.operators.rollup import build_tiers, merge_tier_delta
 
     ev = load(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-21").cast("timestamp")
@@ -669,11 +669,11 @@ def tier_refresh_incremental_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.where(F.col("ts") < cutoff), "value", tiers=("1h", "1d"),
         key="user_id", ts="ts",
     )
-    refreshed = refresh_tiers_incremental(
-        stored, ev.where(F.col("ts") >= cutoff), "value",
-        tiers=("1h", "1d"), key="user_id", ts="ts",
+    refreshed = merge_tier_delta(
+        stored["1d"], ev.where(F.col("ts") >= cutoff), "value", "1d",
+        key="user_id", ts="ts",
     )
-    return refreshed["1d"].select(
+    return refreshed.select(
         "user_id", "bucket_start", "cnt",
         F.round("vsum", 2).alias("vsum"), "vmin", "vmax",
     )

@@ -7,7 +7,8 @@ markers below (pure moves, zero semantic change — VERDICT r4 #10).
 from __future__ import annotations
 
 from mintpy_spark.functions.langid import classify, classify_oracle_sql
-from mintpy_spark.functions.scalars import nonempty_tokens
+from mintpy_spark.functions.scalars import nonempty_tokens, portable_hash60
+from mintpy_spark.functions.timefn import bucket_start
 from mintpy_spark.operators import curation as C
 from mintpy_spark.operators import dedup as D
 from mintpy_spark.operators.budget import waterfill, waterfill_oracle_sql
@@ -297,7 +298,7 @@ def index_postings_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = F.concat_ws(
         ",", F.transform(F.sort_array(F.collect_list("doc_id")), lambda x: x.cast("string"))
     )
-    fp = F.conv(F.substring(F.md5(F.encode(ids, "UTF-8")), 1, 15), 16, 10).cast("long")
+    fp = portable_hash60(ids)
     return (
         occ.groupBy("tok")
         .agg(
@@ -775,7 +776,7 @@ def share_of_day_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a second small Exchange on the day key."""
     ev = load(spark, sf_dir, "events")
     tier = ev.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("bucket_start"), "event_type"
+        bucket_start(F.col("ts"), "1d").alias("bucket_start"), "event_type"
     ).agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("bucket_start")
     total = F.sum("cnt").over(w)
@@ -843,7 +844,7 @@ def pivot_daily_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         for t in EVENT_TYPES
     ]
     return ev.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("bucket_start")
+        bucket_start(F.col("ts"), "1d").alias("bucket_start")
     ).agg(
         *aggs,
         F.sum(
@@ -916,7 +917,7 @@ def value_percentile_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning without a tiebreak column (row_number would not be).
     Plan: one Exchange on the day key, partition-local sort, zero joins."""
     ev = load(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.date_trunc("day", F.col("ts"))
+    day = bucket_start(F.col("ts"), "1d")
     w = Window.partitionBy(day).orderBy("value")
     return ev.select(
         "event_id",
@@ -1865,8 +1866,6 @@ def did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sum, distinct-user) partials; the estimator is one fixed-order
     double expression over them — every input to the division is exact,
     so the statistic is bit-identical cross-engine."""
-    from mintpy_spark.functions.scalars import portable_hash60
-
     ev = load(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull() & F.col("value").isNotNull()
     )
@@ -2226,7 +2225,7 @@ def event_pattern_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     seqs = (
         ev.groupBy(
-            "user_id", F.date_trunc("day", "ts").alias("day")
+            "user_id", bucket_start(F.col("ts"), "1d").alias("day")
         )
         .agg(
             F.concat_ws(
@@ -2511,7 +2510,7 @@ def tier_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def tier(df: DataFrame) -> DataFrame:
         return df.groupBy(
-            "user_id", F.date_trunc("day", F.col("ts")).alias("day")
+            "user_id", bucket_start(F.col("ts"), "1d").alias("day")
         ).agg(
             F.count("*").alias("cnt"),
             F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))

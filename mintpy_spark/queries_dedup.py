@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mintpy_spark.functions.scalars import nonempty_tokens
 from mintpy_spark.operators import dedup as D
 from mintpy_spark.operators import similarity as S
 from mintpy_spark.queries import _q, load
@@ -134,7 +135,7 @@ def text_shingle3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct word-3-gram shingle count per doc (the MinHash shingling
     stage as a standalone, fully JVM-side higher-order-function plan)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = nonempty_tokens(F.col("text"))
     t = d.select("doc_id", toks.alias("toks"))
     shingles = F.transform(
         F.sequence(F.lit(0), F.size("toks") - 3),

@@ -818,7 +818,7 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification formulation (block-bounded, small-scale only; see
     VERIFICATION_ONLY in queries.py for the policy)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.array_distinct(F.filter(F.split("text", " "), lambda x: x != ""))
+    toks = D.tokens("text")
     t = d.select("doc_id", "source", toks.alias("toks"))
     a, b = t.alias("a"), t.alias("b")
     inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))

@@ -6,6 +6,7 @@ markers below (pure moves, zero semantic change — VERDICT r4 #10).
 
 from __future__ import annotations
 
+from mintpy_spark.functions.timefn import bucket_start
 from mintpy_spark.operators import similarity as S
 from mintpy_spark.queries import _q, load
 from pyspark.sql import DataFrame, SparkSession
@@ -99,7 +100,7 @@ def sax_motif_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").where(F.col("value").isNotNull())
     daily = (
         ev.groupBy(
-            "user_id", F.date_trunc("day", F.col("ts")).alias("day")
+            "user_id", bucket_start(F.col("ts"), "1d").alias("day")
         )
         .agg(
             F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))

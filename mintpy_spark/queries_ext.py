@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mintpy_spark.functions.langid import classify_oracle_sql
+from mintpy_spark.functions.scalars import nonempty_tokens
+from mintpy_spark.operators.dedup import tokens
 from mintpy_spark.queries import _q, load
 
 
@@ -193,7 +195,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: per-lang token stats (whitespace tokenizer with
     empty-token filtering, same semantics both sides)."""
     d = load(spark, sf_dir, "documents")
-    ntok = F.size(F.filter(F.split("text", " "), lambda x: x != ""))
+    ntok = F.size(nonempty_tokens(F.col("text")))
     return (
         d.select("lang", "n_chars", ntok.alias("ntok"))
         .groupBy("lang")
@@ -264,7 +266,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source acts as the blocking key, the scale pattern — candidate pairs
     come from a block join, never a global cross join)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.array_distinct(F.filter(F.split("text", " "), lambda x: x != ""))
+    toks = tokens("text")
     t = d.select("doc_id", "source", toks.alias("toks"))
     a, b = t.alias("a"), t.alias("b")
     inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
@@ -482,7 +484,7 @@ def text_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break — explode + partial/final count + TakeOrdered; the shape of
     every vocabulary/stopword pass a data pipeline runs."""
     d = load(spark, sf_dir, "documents")
-    toks = F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("tok")
+    toks = F.explode(nonempty_tokens(F.col("text"))).alias("tok")
     return (
         d.select(toks)
         .groupBy("tok")
@@ -563,7 +565,7 @@ def text_stopword_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     conventions diverge)."""
     d = load(spark, sf_dir, "documents")
     sw = F.array([F.lit(w) for w in _STOPWORDS])
-    toks = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
+    toks = nonempty_tokens(F.lower("text"))
     t = d.select("doc_id", toks.alias("toks"))
     nsw = F.size(F.filter("toks", lambda t_: F.array_contains(sw, t_)))
     ntok = F.size("toks")

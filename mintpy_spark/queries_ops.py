@@ -11,6 +11,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mintpy_spark.functions.timefn import bucket_start
+from mintpy_spark.operators.rollup import rollup_from_obs
+from mintpy_spark.operators.sessionize import sessionize_oracle_sql
+from mintpy_spark.operators.stats import epoch_std_rms
 from mintpy_spark.queries import _q, load
 
 
@@ -35,15 +39,14 @@ def diff_series_vs_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic) rather than value - mean, which would divide and reopen
     the half-way rounding trap."""
     ev = load(spark, sf_dir, "events")
-    d = (
-        ev.groupBy("user_id", F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.round(F.sum("value"), 2).alias("dsum"),
-            F.count("value").alias("dcnt"),
-        )
+    d = rollup_from_obs(ev, "value", "1d", key="user_id", ts="ts").select(
+        "user_id",
+        F.col("bucket_start").alias("day"),
+        F.round("vsum", 2).alias("dsum"),
+        F.col("cnt").alias("dcnt"),
     )
     return (
-        ev.withColumn("day", F.date_trunc("day", "ts"))
+        ev.withColumn("day", bucket_start(F.col("ts"), "1d"))
         .join(d, ["user_id", "day"])
         .select(
             "user_id",
@@ -82,7 +85,7 @@ def add_series_nan_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     def daily(etype: str) -> DataFrame:
         return (
             ev.where(F.col("event_type") == etype)
-            .groupBy("user_id", F.date_trunc("day", "ts").alias("day"))
+            .groupBy("user_id", bucket_start(F.col("ts"), "1d").alias("day"))
             .agg(F.sum("value").alias("v"))
         )
 
@@ -204,8 +207,9 @@ def auto_reference_epoch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Automatic reference-epoch selection: argmin of per-epoch RMS
     (timeseries_rms.py:35-72) via min_by — no sort, no collect."""
     ev = load(spark, sf_dir, "events")
-    rms = ev.groupBy(F.date_trunc("day", "ts").alias("bucket_start")).agg(
-        F.sqrt(F.avg(F.col("value") * F.col("value"))).alias("rms")
+    rms = epoch_std_rms(
+        ev.withColumn("bucket_start", bucket_start(F.col("ts"), "1d")),
+        "value", time_col="bucket_start",
     )
     return rms.agg(
         F.min_by("bucket_start", "rms").alias("ref_epoch"),
@@ -318,8 +322,7 @@ def mask_threshold_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(vsum, 2) AS vsum
     FROM (
     """
-    + __import__("mintpy_spark.operators.sessionize", fromlist=["x"])
-    .sessionize_oracle_sql(gap_seconds=7 * 86400)
+    + sessionize_oracle_sql(gap_seconds=7 * 86400)
     + ")",
 )
 def sessionize_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,7 +641,7 @@ def pair_reconstruct_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(
-        "user_id", F.date_trunc("day", "ts").alias("day")
+        "user_id", bucket_start(F.col("ts"), "1d").alias("day")
     ).agg(
         F.max_by("value", "ts").alias("last_v"),
         F.sum("value").alias("sum_v"),

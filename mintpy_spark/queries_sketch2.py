@@ -6,7 +6,7 @@ markers below (pure moves, zero semantic change — VERDICT r4 #10).
 
 from __future__ import annotations
 
-from mintpy_spark.functions.scalars import nonempty_tokens
+from mintpy_spark.functions.scalars import HASH60_SPACE, nonempty_tokens, portable_hash60
 from mintpy_spark.functions.timefn import bucket_start
 from mintpy_spark.operators.bitmap import (
     active_days,
@@ -22,26 +22,20 @@ from mintpy_spark.operators.sketch import (
     HLL_BUCKETS,
     HLL_EST_NUM,
     HLL_MAX_RHO,
+    bloom_probe,
+    bloom_tier,
     cms_estimate,
     cms_merge,
     cms_tier,
+    hdr_merge,
+    hdr_quantiles,
+    hdr_tier,
     hll_estimate,
     hll_merge,
     hll_tier,
     kmv_set,
+    kmv_theta,
 )
-from mintpy_spark.operators.sketch import (
-    HLL_BUCKETS,
-    HLL_EST_NUM,
-    HLL_MAX_RHO,
-    bloom_probe,
-    bloom_tier,
-    hll_estimate,
-    hll_merge,
-    hll_tier,
-)
-from mintpy_spark.operators.sketch import cms_estimate, cms_tier
-from mintpy_spark.operators.sketch import hdr_merge, hdr_quantiles, hdr_tier
 from mintpy_spark.queries import _q, load
 from mintpy_spark.queries_tiers import KMV_K
 from pyspark.sql import DataFrame, SparkSession
@@ -378,8 +372,8 @@ def rollup_1d_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch Exchange carries at most days*24*512 rows."""
     ev = load(spark, sf_dir, "events").where(F.col("value").isNotNull())
     obs = ev.select(
-        F.date_trunc("day", F.col("ts")).alias("day"),
-        F.date_trunc("hour", F.col("ts")).alias("hour"),
+        bucket_start(F.col("ts"), "1d").alias("day"),
+        bucket_start(F.col("ts"), "1h").alias("hour"),
         F.floor(F.col("value") * 100 + F.lit(0.5))
         .cast("long")
         .alias("cents"),
@@ -885,7 +879,7 @@ def rollup_1d_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = hll_merge(even.unionByName(odd), "1d")
     est = hll_estimate(merged)
     exact = ev.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("bucket_start")
+        bucket_start(F.col("ts"), "1d").alias("bucket_start")
     ).agg(F.count_distinct("user_id").cast("long").alias("exact_distinct"))
     return est.join(exact, "bucket_start").select(
         "bucket_start", "n_regs", "sum_scaled", "est_distinct", "exact_distinct"
@@ -950,7 +944,7 @@ def bloom_presence_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keep it, forking n_probes (review finding)
     ev = load(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     present = ev.select(
-        F.date_trunc("day", F.col("ts")).alias("d"), "user_id"
+        bucket_start(F.col("ts"), "1d").alias("d"), "user_id"
     ).distinct()
     bloom = bloom_tier(present, "user_id", key_cols=("d",))
     users = ev.select("user_id").distinct()
@@ -1078,7 +1072,7 @@ def rollup_7d_sliding_p99_hdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket) merge agg -> cumulative window over <=512 buckets."""
     ev = load(spark, sf_dir, "events").where(F.col("value").isNotNull())
     obs = ev.select(
-        F.date_trunc("day", F.col("ts")).alias("day"),
+        bucket_start(F.col("ts"), "1d").alias("day"),
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
     )
     day_sk = hdr_tier(obs, "cents", key_cols=("day",))
@@ -1151,7 +1145,6 @@ oracle-identical cross-engine.
 """
 
 
-_SPACE = 16**15
 _B30_SQL = (
     "TIMESTAMP '1970-01-01'"
     " + (CAST(floor(epoch(ts)) AS BIGINT)"
@@ -1229,9 +1222,9 @@ def hll_merge_30d_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), p AS (
       SELECT a.event_type AS type_a, b.event_type AS type_b,
              a.kmv AS ka, b.kmv AS kb,
-             LEAST(CASE WHEN len(a.kmv) < {KMV_K} THEN {_SPACE}
+             LEAST(CASE WHEN len(a.kmv) < {KMV_K} THEN {HASH60_SPACE}
                         ELSE a.kmv[-1] END,
-                   CASE WHEN len(b.kmv) < {KMV_K} THEN {_SPACE}
+                   CASE WHEN len(b.kmv) < {KMV_K} THEN {HASH60_SPACE}
                         ELSE b.kmv[-1] END) AS theta
       FROM s a JOIN s b ON a.event_type <> b.event_type
     )
@@ -1245,7 +1238,7 @@ def hll_merge_30d_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(CAST(len(list_filter(ka,
                    h -> h < theta AND NOT list_contains(kb, h)))
                  AS DOUBLE)
-                 * {_SPACE}.0::DOUBLE / CAST(theta AS DOUBLE), 2)
+                 * {HASH60_SPACE}.0::DOUBLE / CAST(theta AS DOUBLE), 2)
              AS est_anotb
     FROM p
     """,
@@ -1262,13 +1255,7 @@ def kmv_anotb_audience(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = s.select(F.col("event_type").alias("type_a"), F.col("kmv").alias("ka"))
     b = s.select(F.col("event_type").alias("type_b"), F.col("kmv").alias("kb"))
     p = a.join(F.broadcast(b), F.col("type_a") != F.col("type_b"))
-    theta_a = F.when(F.size("ka") < KMV_K, F.lit(_SPACE)).otherwise(
-        F.element_at("ka", -1)
-    )
-    theta_b = F.when(F.size("kb") < KMV_K, F.lit(_SPACE)).otherwise(
-        F.element_at("kb", -1)
-    )
-    p = p.withColumn("theta", F.least(theta_a, theta_b))
+    p = p.withColumn("theta", kmv_theta("ka", "kb", KMV_K))
     sample = F.size(
         F.filter(
             "ka",
@@ -1282,7 +1269,8 @@ def kmv_anotb_audience(spark: SparkSession, sf_dir: str) -> DataFrame:
         "theta",
         sample.cast("long").alias("n_anotb"),
         F.round(
-            sample.cast("double") * F.lit(float(_SPACE)) / F.col("theta").cast("double"),
+            sample.cast("double") * F.lit(float(HASH60_SPACE))
+            / F.col("theta").cast("double"),
             2,
         ).alias("est_anotb"),
     )
@@ -1406,8 +1394,6 @@ def robust_mom_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     -independent and NULL-free), integer bucket partials, exact median of
     the bucket means. Outliers corrupt at most their own bucket; the
     median ignores it."""
-    from mintpy_spark.functions.scalars import portable_hash60
-
     ev = load(spark, sf_dir, "events").where(F.col("value").isNotNull())
     b = ev.select(
         F.datediff(F.to_date("ts"), F.lit("1970-01-01")).alias("ed"),
@@ -1602,15 +1588,13 @@ def bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def positions(df: DataFrame) -> DataFrame:
-        from mintpy_spark.operators.sketch import portable_hash
-
         return df.select(
             "*",
             F.explode(
                 F.array(
                     *[
                         (
-                            portable_hash(
+                            portable_hash60(
                                 F.concat(
                                     F.col("key").cast("string"), F.lit(f"|{i}")
                                 )
@@ -1694,7 +1678,7 @@ def conversion_rate_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
     reimplementation).  Plan: one day agg, then row-local arithmetic."""
     ev = load(spark, sf_dir, "events")
     d = ev.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("bucket_start")
+        bucket_start(F.col("ts"), "1d").alias("bucket_start")
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum((F.col("event_type") == "purchase").cast("long"))

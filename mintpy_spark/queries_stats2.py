@@ -6,6 +6,7 @@ markers below (pure moves, zero semantic change — VERDICT r4 #10).
 
 from __future__ import annotations
 
+from mintpy_spark.functions.scalars import nonempty_tokens, portable_hash60
 from mintpy_spark.operators import curation as C
 from mintpy_spark.queries import _DY_SQL, _q, load
 from mintpy_spark.queries import _q, load
@@ -319,7 +320,7 @@ def corr_len_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     x = F.length("text").cast("long")
-    y = F.size(F.filter(F.split("text", " "), lambda t: t != "")).cast("long")
+    y = F.size(nonempty_tokens(F.col("text"))).cast("long")
     return exact_group_corr(d, x, y, group="source", min_n=3)
 
 
@@ -527,8 +528,6 @@ def velocity_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     caller's std over b is the reference's bootstrap sigma; emitting the
     replicates keeps the driver comparison exact instead of trusting a
     cross-engine STDDEV fold."""
-    from mintpy_spark.functions.scalars import portable_hash60
-
     ev = load(spark, sf_dir, "events").where(
         F.col("value").isNotNull() & F.col("user_id").isNotNull()
     )
@@ -784,8 +783,6 @@ def srm_chi2_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample-ratio-mismatch statistic per day for the 50/50 md5 hash
     split: chi-square collapses to (n0-n1)^2 / n — integer numerator
     emitted so the one double division is checkable."""
-    from mintpy_spark.functions.scalars import portable_hash60
-
     ev = load(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     t = ev.select(
         F.datediff(F.to_date("ts"), F.lit("1970-01-01")).alias("ed"),
@@ -1316,7 +1313,7 @@ def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal; same tokenizer as text_stopword_ratio)."""
     d = load(spark, sf_dir, "documents")
     sw = F.array([F.lit(x) for x in _STOPWORDS])
-    toks = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
+    toks = nonempty_tokens(F.lower("text"))
     t = d.select("doc_id", "lang", toks.alias("toks")).where(F.size("toks") > 0)
     nsw = F.size(F.filter("toks", lambda x: F.array_contains(sw, x)))
     binc = F.least(F.lit(9), F.expr("(10 * nsw) DIV ntok"))

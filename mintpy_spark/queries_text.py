@@ -6,7 +6,7 @@ markers below (pure moves, zero semantic change — VERDICT r4 #10).
 
 from __future__ import annotations
 
-from mintpy_spark.functions.scalars import nonempty_tokens
+from mintpy_spark.functions.scalars import nonempty_tokens, portable_hash60
 from mintpy_spark.operators import pii as P
 from mintpy_spark.operators.tfidf import bm25_oracle_sql
 from mintpy_spark.queries import _DY_SQL, _q, load
@@ -440,9 +440,7 @@ def text_pii_scrub_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", _aug_col().alias("t")
     )
     det = P.pii_scrub(P.pii_counts(d, "t"), "t", "ts")
-    fp = F.conv(F.substring(F.md5(F.encode(F.col("ts"), "UTF-8")), 1, 15), 16, 10).cast(
-        "long"
-    )
+    fp = portable_hash60(F.col("ts"))
     return det.groupBy("source").agg(
         F.count("*").alias("docs"),
         F.sum("n_email").alias("emails"),
@@ -717,8 +715,6 @@ def text_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     id dumps — both filter targets). One explode, then two aggregations
     co-keyed on doc_id (the (doc, term) agg shuffles on the same prefix
     the doc_id agg consumes — one Exchange)."""
-    from mintpy_spark.functions.scalars import nonempty_tokens
-
     d = load(spark, sf_dir, "documents")
     tc = d.select(
         "doc_id", F.explode(nonempty_tokens("text")).alias("term")
@@ -765,8 +761,6 @@ def vocab_frequency_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     The (lang, term) agg is the only shuffle; Zipf-hot terms are
     map-side partial-combined before it. The per-lang fold is
     vocabulary-sized input, not corpus-sized."""
-    from mintpy_spark.functions.scalars import nonempty_tokens
-
     d = load(spark, sf_dir, "documents")
     tc = d.select(
         "lang", F.explode(nonempty_tokens("text")).alias("term")

@@ -6,8 +6,10 @@ markers below (pure moves, zero semantic change — VERDICT r4 #10).
 
 from __future__ import annotations
 
-from mintpy_spark.functions.timefn import decimal_year
+from mintpy_spark.functions.scalars import HASH60_SPACE
+from mintpy_spark.functions.timefn import bucket_start, decimal_year
 from mintpy_spark.operators import dedup as D
+from mintpy_spark.operators.sessionize import sessionize_oracle_sql
 from mintpy_spark.queries import _DY_SQL, _q, _round4, load
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -33,7 +35,6 @@ allows — see the memory'd parity recipes cited inline).
 
 
 KMV_K = 32
-KMV_SPACE = 16**15  # md5 15-hex-digit prefix space
 
 
 @_q(
@@ -86,7 +87,7 @@ def downsample_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_kept,
            MAX(hv)                  AS kth_min,
            CASE WHEN COUNT(*) < {KMV_K} THEN CAST(COUNT(*) AS DOUBLE)
-                ELSE ROUND({KMV_K - 1}.0::DOUBLE * {KMV_SPACE}.0::DOUBLE
+                ELSE ROUND({KMV_K - 1}.0::DOUBLE * {HASH60_SPACE}.0::DOUBLE
                            / CAST(MAX(hv) AS DOUBLE), 2)
            END AS est_distinct
     FROM r WHERE rn <= {KMV_K} GROUP BY 1
@@ -335,24 +336,18 @@ def tier_realtime_read_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mintpy_spark.streaming.tier_maintenance import TierMaintainer
 
     ev = load(spark, sf_dir, "events")
-    days = sorted(
-        r["d"]
-        for r in ev.select(F.date_trunc("day", "ts").alias("d")).distinct().collect()
-    )
+    day = bucket_start(F.col("ts"), "1d")
+    days = sorted(r["d"] for r in ev.select(day.alias("d")).distinct().collect())
     cut1 = days[len(days) // 3]
     cut2 = days[(2 * len(days)) // 3]
 
     store = tempfile.mkdtemp(prefix="tier_rt_check_")
     m = TierMaintainer(store, value_col="value", key="user_id", ts="ts")
-    m.apply_delta(ev.where(F.date_trunc("day", "ts") < F.lit(cut1)), batch_id=0)
+    m.apply_delta(ev.where(day < F.lit(cut1)), batch_id=0)
     m.apply_delta(
-        ev.where(
-            (F.date_trunc("day", "ts") >= F.lit(cut1))
-            & (F.date_trunc("day", "ts") < F.lit(cut2))
-        ),
-        batch_id=1,
+        ev.where((day >= F.lit(cut1)) & (day < F.lit(cut2))), batch_id=1
     )
-    tail = ev.where(F.date_trunc("day", "ts") >= F.lit(cut2))
+    tail = ev.where(day >= F.lit(cut2))
     rt = m.read_realtime(spark, "1d", tail)
     # materialize off the store (localCheckpoint), then remove it — the
     # returned DataFrame must not depend on the temp directory
@@ -408,7 +403,7 @@ def residual_rms_deramped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mintpy_spark.operators.stats import deramp_epoch
 
     ev = load(spark, sf_dir, "events").withColumn(
-        "day", F.date_trunc("day", "ts")
+        "day", bucket_start(F.col("ts"), "1d")
     )
     der = deramp_epoch(ev, "value", coord_col="user_id", time_col="day")
     q = der.select(
@@ -1155,7 +1150,7 @@ def holt_winters_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         ev.where(F.col("value").isNotNull())
         .groupBy(
-            "user_id", F.date_trunc("day", "ts").alias("bucket_start")
+            "user_id", bucket_start(F.col("ts"), "1d").alias("bucket_start")
         )
         .agg(
             F.sum(F.floor(F.col("value") * 100).cast("long"))
@@ -1310,7 +1305,7 @@ def checkpoint_lineage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(
             (F.col("user_id") % 8).alias("part_id"),
             "user_id",
-            F.date_trunc("day", "ts").alias("d"),
+            bucket_start(F.col("ts"), "1d").alias("d"),
         )
         .distinct()
         .groupBy("part_id")
@@ -1732,8 +1727,7 @@ def kalman_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     WITH sessions AS (
     """
-    + __import__("mintpy_spark.operators.sessionize", fromlist=["x"])
-    .sessionize_oracle_sql(gap_seconds=86400)
+    + sessionize_oracle_sql(gap_seconds=86400)
     + """
     ), ranked AS (
       SELECT *, row_number() OVER (
@@ -1832,7 +1826,7 @@ def holt_winters_realtime_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     daily = (
         ev.where(F.col("value").isNotNull())
-        .groupBy("user_id", F.date_trunc("day", "ts").alias("bucket_start"))
+        .groupBy("user_id", bucket_start(F.col("ts"), "1d").alias("bucket_start"))
         .agg(
             F.sum(F.floor(F.col("value") * 100).cast("long"))
             .cast("double")

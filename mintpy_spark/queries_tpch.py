@@ -6,6 +6,8 @@ markers below (pure moves, zero semantic change — VERDICT r4 #10).
 
 from __future__ import annotations
 
+from mintpy_spark.functions.scalars import HASH60_SPACE
+from mintpy_spark.functions.timefn import bucket_start
 from mintpy_spark.operators.sketch import kmv_intersect_estimate, kmv_set
 from mintpy_spark.operators.zorder import zvalue, zvalue_sql
 from mintpy_spark.queries import _q, load
@@ -195,7 +197,7 @@ def rollup_1d_wow_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier — broadcastable at any horizon (10 years = 3653 rows)."""
     ev = load(spark, sf_dir, "events")
     t = (
-        ev.groupBy(F.date_trunc("day", F.col("ts")).alias("bucket_start"))
+        ev.groupBy(bucket_start(F.col("ts"), "1d").alias("bucket_start"))
         .agg(
             F.count("value").cast("long").alias("cnt"),
             F.round(F.sum("value"), 2).alias("vsum"),
@@ -240,8 +242,6 @@ and the TPC-H Q17 small-quantity join shape.
   pure integer (5*qty*cnt < sum_qty), never a double average.
 """
 
-
-_SPACE = 16**15
 
 _Z_X = "(user_id % 64)"
 _Z_Y_DUCK = "(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) % 64)"
@@ -304,9 +304,9 @@ def zorder_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), p AS (
       SELECT a.event_type AS type_a, b.event_type AS type_b,
              a.kmv AS ka, b.kmv AS kb,
-             LEAST(CASE WHEN len(a.kmv) < {KMV_K} THEN {_SPACE}
+             LEAST(CASE WHEN len(a.kmv) < {KMV_K} THEN {HASH60_SPACE}
                         ELSE a.kmv[-1] END,
-                   CASE WHEN len(b.kmv) < {KMV_K} THEN {_SPACE}
+                   CASE WHEN len(b.kmv) < {KMV_K} THEN {HASH60_SPACE}
                         ELSE b.kmv[-1] END) AS theta
       FROM s a JOIN s b ON a.event_type < b.event_type
     )
@@ -318,7 +318,7 @@ def zorder_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 h -> h < theta)) AS BIGINT) AS n_sample,
            ROUND(CAST(len(list_filter(list_intersect(ka, kb),
                                       h -> h < theta)) AS DOUBLE)
-                 * {_SPACE}.0::DOUBLE / CAST(theta AS DOUBLE), 2)
+                 * {HASH60_SPACE}.0::DOUBLE / CAST(theta AS DOUBLE), 2)
              AS est_common
     FROM p
     """,

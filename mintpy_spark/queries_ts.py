@@ -11,7 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mintpy_spark.functions.timefn import bucket_start
 from mintpy_spark.operators.asof import asof_join
+from mintpy_spark.operators.stats import spatial_average
 from mintpy_spark.queries import _DY_SQL, _q, load
 
 
@@ -133,7 +135,7 @@ def ref_cross_section(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-series mean (reference_point spatial referencing, reference_point.py:
     28-167; also the deramp-order-0 analog, objects/ramp.py:24)."""
     ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy(F.date_trunc("day", "ts"))
+    w = Window.partitionBy(bucket_start(F.col("ts"), "1d"))
     return ev.select(
         "user_id",
         "ts",
@@ -150,15 +152,16 @@ def ref_cross_section(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def epoch_median_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact median per epoch (ifgramStack.spatial_average median mode,
-    stack.py:871-919) — Spark's exact `percentile`, not approx."""
+    """Exact median per epoch: operators/stats.spatial_average in its
+    median mode (ifgramStack.spatial_average, stack.py:871-919) — Spark's
+    exact `median`, not approx."""
     ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.date_trunc("day", "ts").alias("bucket_start"))
-        .agg(
-            F.round(F.expr("percentile(value, 0.5)"), 4).alias("med"),
-            F.count("value").alias("cnt"),
-        )
+    med = spatial_average(
+        ev.withColumn("bucket_start", bucket_start(F.col("ts"), "1d")),
+        "value", time_col="bucket_start", use_median=True,
+    )
+    return med.select(
+        "bucket_start", F.round("spatial_med", 4).alias("med"), "cnt"
     )
 
 
@@ -176,7 +179,7 @@ def dates_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date-list set algebra (exclude_date, ptime.py:406-446): active days
     per user minus days with any error event."""
     ev = load(spark, sf_dir, "events")
-    day = F.date_trunc("day", "ts").alias("day")
+    day = bucket_start(F.col("ts"), "1d").alias("day")
     all_days = ev.select("user_id", day).distinct()
     err_days = ev.where(F.col("event_type") == "error").select("user_id", day).distinct()
     return all_days.exceptAll(err_days)
@@ -240,7 +243,7 @@ def deramp_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mintpy_spark.operators.stats import deramp_epoch
 
     ev = load(spark, sf_dir, "events").withColumn(
-        "day", F.date_trunc("day", "ts")
+        "day", bucket_start(F.col("ts"), "1d")
     )
     out = deramp_epoch(ev, "value", coord_col="user_id", time_col="day")
     return out.select("user_id", "ts", F.round("deramped", 3).alias("deramped"))
@@ -538,7 +541,7 @@ def deramp2_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mintpy_spark.operators.stats import deramp_epoch
 
     ev = load(spark, sf_dir, "events").withColumn(
-        "day", F.date_trunc("day", "ts")
+        "day", bucket_start(F.col("ts"), "1d")
     )
     out = deramp_epoch(ev, "value", coord_col="user_id", time_col="day", order=2)
     return out.select("user_id", "ts", F.round("deramped", 3).alias("deramped"))
@@ -615,7 +618,7 @@ def mad_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch_rms DataFrame for exactly that reason."""
     from mintpy_spark.operators.stats import epoch_std_rms, mad_outlier_epochs
 
-    ev = load(spark, sf_dir, "events").withColumn("day", F.date_trunc("day", "ts"))
+    ev = load(spark, sf_dir, "events").withColumn("day", bucket_start(F.col("ts"), "1d"))
     rms = epoch_std_rms(ev, "value", time_col="day").select("day", "rms")
     out = mad_outlier_epochs(rms, cutoff=1.0, time_col="day")
     return out.select("day", F.round("rms", 4).alias("rms"))
@@ -964,8 +967,6 @@ def rollup_1d_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales (each level is a map-side-combining hash aggregation; no
     count-distinct expand over the raw table, and the deduped grain is
     what a stored distinct tier would persist)."""
-    from mintpy_spark.functions.timefn import bucket_start
-
     ev = load(spark, sf_dir, "events")
     return (
         ev.select(
@@ -1152,8 +1153,6 @@ def rollup_1d_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch for per-bucket extremes). Collect-then-sort is deterministic
     regardless of collect order; missing ranks yield NULL identically in
     both engines."""
-    from mintpy_spark.functions.timefn import bucket_start
-
     ev = load(spark, sf_dir, "events")
     arr = F.sort_array(F.collect_list("value"), asc=False)
     return (

@@ -37,8 +37,8 @@ store's latest version is never above the checkpoint's highest batch id.
 
 The value tiers: each batch is merged into the STORED tiers by one
 aggregation per tier, the stored partials unioned with the batch's unit
-partials at that tier's bucket (refresh_tiers_incremental in
-operators/rollup.py), so they equal a batch rebuild over everything ever
+partials at that tier's bucket (merge_tier_delta in operators/rollup.py,
+once per tier), so they equal a batch rebuild over everything ever
 ingested (tests/test_streaming.py, with a replay test).
 
 Why foreachBatch and not a streaming aggregation: a watermarked window
@@ -62,7 +62,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from mintpy_spark.operators.rollup import merge_tier_delta, refresh_tiers_incremental
+from mintpy_spark.operators.rollup import merge_tier_delta
 from mintpy_spark.plans.checkpoint import CheckpointTable
 from mintpy_spark.sources.tables import TableStore
 
@@ -236,12 +236,13 @@ class TierMaintainer(StoreFold):
         recorded as ``maintain_<tier>``; an empty delta folds nothing."""
         if delta.isEmpty():
             return None
-        new = refresh_tiers_incremental(
-            stored, delta, self.value_col, tiers=self.tiers,
-            key=self.key, ts=self.ts, with_sq=self.with_sq,
-        )
-        tables = {self.table(t): self.store.stage(new[t], self.table(t))
-                  for t in self.tiers}
+        tables = {}
+        for t in self.tiers:
+            new = merge_tier_delta(
+                None if stored is None else stored[t], delta, self.value_col, t,
+                key=self.key, ts=self.ts, with_sq=self.with_sq,
+            )
+            tables[self.table(t)] = self.store.stage(new, self.table(t))
         counts = {f"maintain_{t}": written_rows(tables[self.table(t)])
                   for t in self.tiers}
         return tables, counts, None

@@ -36,13 +36,14 @@ def test_merge_tier_delta_null_bucket_merges(spark):
 
 
 def test_refresh_tiers_null_bucket(spark):
-    from mintpy_spark.operators.rollup import build_tiers, refresh_tiers_incremental
+    from mintpy_spark.operators.rollup import build_tiers, merge_tier_delta
 
     base = _obs(spark, [("u", None, 5.0), ("u", T0, 1.0)])
     stored = build_tiers(base, "value")
-    refreshed = refresh_tiers_incremental(stored, _obs(spark, [("u", None, 7.0)]), "value")
-    for t, df in refreshed.items():
-        got = {r.bucket_start: (r.cnt, r.vsum) for r in df.collect()}
+    late = _obs(spark, [("u", None, 7.0)])
+    for t, df in stored.items():
+        refreshed = merge_tier_delta(df, late, "value", t)
+        got = {r.bucket_start: (r.cnt, r.vsum) for r in refreshed.collect()}
         # the NULL cell of every tier was refreshed (stale value would be
         # (1, 5.0)), and T0's cell is untouched
         assert got.pop(None) == (2, 12.0), t

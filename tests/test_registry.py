@@ -35,6 +35,24 @@ def test_registry_matches_frozen_manifest():
     )
 
 
+def test_oracle_text_matches_frozen_digests():
+    """Every oracle's SQL is FROZEN as the registry names are:
+    tests/oracle_frozen.txt holds one ``name sha1(sql)`` line per oracle.
+    A refactor of the Spark side must leave each oracle byte for byte, so
+    the sweep keeps certifying against the same truth; an oracle edit is
+    deliberate and updates this file in the same commit."""
+    import hashlib
+    import os
+
+    import __spark_entry__ as E
+
+    manifest = os.path.join(os.path.dirname(__file__), "oracle_frozen.txt")
+    frozen = dict(l.split() for l in open(manifest) if l.strip())
+    got = {k: hashlib.sha1(v.encode()).hexdigest() for k, v in E.oracle_sql().items()}
+    changed = sorted(k for k in got.keys() | frozen.keys() if got.get(k) != frozen.get(k))
+    assert not changed, f"oracle SQL drifted from tests/oracle_frozen.txt: {changed}"
+
+
 def test_registry_shape():
     import __spark_entry__ as E
 

@@ -204,16 +204,16 @@ def test_refresh_tiers_incremental_equals_full_rebuild(spark, obs):
     tier) reproduces the from-scratch tier stack."""
     from pyspark.sql import functions as F
 
-    from mintpy_spark.operators.rollup import build_tiers, refresh_tiers_incremental
+    from mintpy_spark.operators.rollup import build_tiers, merge_tier_delta
 
     cut = obs.agg(F.percentile_approx("warc_ts", 0.6).alias("c")).first()["c"]
     base_obs = obs.where(F.col("warc_ts") < F.lit(cut))
     late_obs = obs.where(F.col("warc_ts") >= F.lit(cut))
     stored = build_tiers(base_obs, "text_length")
-    refreshed = refresh_tiers_incremental(stored, late_obs, "text_length")
     full = build_tiers(obs, "text_length")
     for t in ("1h", "1d", "30d"):
-        j = refreshed[t].alias("r").join(
+        refreshed = merge_tier_delta(stored[t], late_obs, "text_length", t)
+        j = refreshed.alias("r").join(
             full[t].alias("f"), ["url", "bucket_start"], "full"
         )
         assert j.where(F.col("r.cnt").isNull() | F.col("f.cnt").isNull()).count() == 0, t
@@ -231,16 +231,16 @@ def test_refresh_tiers_passes_untouched_cells_through(spark, obs):
     bit): a refresh with a delta touching a few cells leaves every other
     cell of every tier bit-identical to the stored tier."""
     from mintpy_spark.functions.timefn import bucket_start
-    from mintpy_spark.operators.rollup import build_tiers, refresh_tiers_incremental
+    from mintpy_spark.operators.rollup import build_tiers, merge_tier_delta
 
     stored = build_tiers(obs, "text_length")
     one_day = obs.orderBy("warc_ts").limit(5)
-    refreshed = refresh_tiers_incremental(stored, one_day, "text_length")
     for t in ("1h", "1d", "30d"):
+        refreshed = merge_tier_delta(stored[t], one_day, "text_length", t)
         dirty = one_day.select(
             "url", bucket_start(F.col("warc_ts"), t).alias("bucket_start")
         ).distinct()
-        clean_ref = refreshed[t].join(dirty, ["url", "bucket_start"], "left_anti")
+        clean_ref = refreshed.join(dirty, ["url", "bucket_start"], "left_anti")
         clean_old = stored[t].join(dirty, ["url", "bucket_start"], "left_anti")
         assert clean_ref.exceptAll(clean_old).count() == 0, t
         assert clean_old.exceptAll(clean_ref).count() == 0, t

@@ -423,6 +423,43 @@ def test_compact_raw_killed_midway_is_finished_by_the_rerun(
     assert (res2["dropped"], res2["kept"]) == (8, 4)
 
 
+def test_compact_raw_publishes_its_ledger_rows_as_one_file(spark, paths, land_days):
+    """One run's ledger rows land in ONE data file, so a single rename
+    publishes them all: a run that published its rows as several part
+    files could be killed between two of the committer's moves, and the
+    rerun would delete a raw file the ledger counts only in part. Forced
+    here by turning off AQE's partition coalescing, which would otherwise
+    merge the small shuffle output into one partition."""
+    import glob
+
+    from mintpy_spark.operators.retention import compact_raw
+    from mintpy_spark.streaming.tier_maintenance import TierMaintainer
+
+    inp, store_root, _ = paths
+    sch = "url string, warc_ts timestamp, text_length long"
+    rows = [(f"u{u}", dt.datetime(2023, 1, d, h, 30), 10 * u + d + h)
+            for u in range(4) for d in range(1, 6) for h in (3, 15)]
+    land_days(inp, rows, sch)
+    m = TierMaintainer(store_root)
+    m.apply_delta(spark.read.parquet(inp), batch_id=0)
+
+    def ledger_files():
+        return glob.glob(inp + ".__compaction_ledger/*.parquet")
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        res = compact_raw(spark, inp, "2023-01-03 00:00:00", m, tier="1h")
+        assert res["dropped"] == 2 * 4 * 2
+        assert len(ledger_files()) == 1
+        res = compact_raw(spark, inp, "2023-01-05 00:00:00", m, tier="1h")
+        assert res["dropped"] == 2 * 4 * 2
+        assert len(ledger_files()) == 2
+    finally:
+        spark.conf.set(key, prior)
+
+
 def test_compaction_then_maintenance_does_not_refold(spark, paths, land_days):
     """Compaction deletes whole raw files and rewrites none, so the next
     maintenance pass sees no new file: the tiers still count each row
